@@ -1557,11 +1557,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     segmentation, streaming dedup), so that
     CORRECTNESS_r04.json + CORRECTNESS_r05.json together carry
     driver-recorded evidence for every registered query.  Positions
-    51-81 hold queries already driver-verified green in round 4 (tier
+    51-83 hold queries already driver-verified green in round 4 (tier
     2's last four entries — dup_clusters, embedding_neardup,
     ann_cosine_topk, ann_ivf_batch_topk — now sit past the cap; all
     four r4-recorded, so no evidence is lost); the local gate replica
-    (tools/check_correctness.py) runs all 81 regardless.
+    (tools/check_correctness.py) runs all 83 regardless.
     """
     return {
         # -- tier 1: not sampled by the round-4 driver (cap=50) -------------

@@ -160,9 +160,6 @@ class Dom:
     def text_bytes(self, idx: int) -> bytes:
         return self.source[self.start[idx]:self.end[idx]]
 
-    def n_elements(self) -> int:
-        return sum(1 for k in self.kind if k == ELEMENT)
-
 
 def find_tag_end(source: bytes, start: int) -> Optional[Tuple[int, int]]:
     """Next unquoted ``>`` from ``start``; returns (gt_index, attr_end).

@@ -187,25 +187,24 @@ def table_rows(dom: Dom, idx: int, depth: int = 0) -> List[List[str]]:
     Shared by the Markdown pipe-table renderer and the
     ``table_cells_udf`` relational extractor."""
     rows: List[List[str]] = []
-
-    def walk(i: int) -> None:
-        for c in _children(dom, i):
-            if dom.kind[c] != ELEMENT:
-                continue
-            nm = dom.name_lower[c]
-            if nm in (b"thead", b"tbody", b"tfoot"):
-                walk(c)
-            elif nm == b"tr":
-                cells: List[str] = []
-                for cc in _children(dom, c):
-                    if dom.kind[cc] == ELEMENT and dom.name_lower[cc] in (b"td", b"th"):
-                        buf: List[str] = []
-                        for g in _children(dom, cc):
-                            _inline(dom, g, buf, depth + 1)
-                        cells.append(_collapse(buf).replace("\n", " "))
-                rows.append(cells)
-
-    walk(idx)
+    # explicit preorder stack: wrapper nesting depth is input-controlled
+    stack = _children(dom, idx)[::-1]
+    while stack:
+        c = stack.pop()
+        if dom.kind[c] != ELEMENT:
+            continue
+        nm = dom.name_lower[c]
+        if nm in (b"thead", b"tbody", b"tfoot"):
+            stack.extend(reversed(_children(dom, c)))
+        elif nm == b"tr":
+            cells: List[str] = []
+            for cc in _children(dom, c):
+                if dom.kind[cc] == ELEMENT and dom.name_lower[cc] in (b"td", b"th"):
+                    buf: List[str] = []
+                    for g in _children(dom, cc):
+                        _inline(dom, g, buf, depth + 1)
+                    cells.append(_collapse(buf).replace("\n", " "))
+            rows.append(cells)
     return rows
 
 

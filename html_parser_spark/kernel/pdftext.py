@@ -146,7 +146,7 @@ def _iter_objects(data: bytes):
 
 #: decompression output cap — the deflate-bomb guard (deflate can
 #: expand ~1000:1, so a 16 MB stream could otherwise demand ~16 GB and
-#: OOM the executor; the analog of extraction's ``max_doc_bytes``
+#: OOM the executor; the analog of the HTML operators' ``MAX_DOC_BYTES``
 #: poison-pill truncation).  Beyond the cap the stream truncates and
 #: the permissive contract continues with what decoded.
 MAX_STREAM_BYTES = 64 * 1024 * 1024

@@ -40,9 +40,8 @@ whitespace-normalized, empty blocks dropped.
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -53,7 +52,7 @@ from ..kernel.htmlparse import parse
 from ..kernel.matcher import query_all
 from ..kernel.selector import compile_selector
 from ..kernel.text import inner_text
-from .html_ops import _series_map
+from .html_ops import doc_udf
 
 #: block-level elements considered candidate boilerplate units.  td is
 #: excluded on purpose (tables fragment into per-cell false positives);
@@ -71,11 +70,12 @@ BLOCKS_TYPE = ArrayType(
 def text_blocks_udf(selector: str = BLOCK_SELECTOR):
     """Outermost ``selector`` matches' innerText in document order as
     ``array<struct<pos,text>>`` — one kernel parse per document,
-    map-only.  ``pos`` numbers surviving (non-empty) blocks."""
+    map-only, truncated at ``html_ops.MAX_DOC_BYTES``.  ``pos`` numbers
+    surviving (non-empty) blocks."""
     sel = compile_selector(selector)
 
-    def one(h: str):
-        dom = parse(h.encode("utf-8"))
+    def one(data: bytes):
+        dom = parse(data)
         idxs = query_all(dom, sel)
         matched = set(idxs)
         out: List[tuple] = []
@@ -91,10 +91,7 @@ def text_blocks_udf(selector: str = BLOCK_SELECTOR):
                 out.append((len(out), t))
         return out
 
-    @F.pandas_udf(BLOCKS_TYPE)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(BLOCKS_TYPE, one)
 
 
 def block_frame(df: DataFrame, html_col: str = "html",

@@ -1,8 +1,8 @@
 """Vectorized Spark operators over HTML columns.
 
-Every operator is an Arrow-batched pandas UDF (``Iterator[pd.Series]``
-form so per-batch state — the compiled selector — is set up once per
-executor task, not per row).  No row-at-a-time Python UDFs anywhere:
+Every operator is an Arrow-batched pandas UDF built by ``doc_udf``
+(``Iterator`` form so per-batch state — the compiled selector — is set
+up once per executor task, not per row).  No row-at-a-time Python UDFs anywhere:
 the per-row work happens inside the kernel on ``bytes`` with C-speed
 scanning, and batches move JVM↔Python as Arrow buffers.
 
@@ -14,7 +14,7 @@ equivalent of the reference's "compile once, query cached" API
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, partial
 from typing import Iterator, Optional, Tuple
 
 import pandas as pd
@@ -24,7 +24,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.extract import DEFAULT_REMOVE_SELECTOR, extract_main
-from ..kernel.htmlparse import parse
+from ..kernel.htmlparse import INVALID, parse
 from ..kernel.matcher import query_all, query_one
 from ..kernel.selector import Selector, compile_selector
 from ..kernel.text import inner_text
@@ -45,9 +45,40 @@ EXTRACT_SCHEMA = StructType([
 ])
 
 
-def _series_map(it: Iterator[pd.Series], fn) -> Iterator[pd.Series]:
-    for s in it:
-        yield s.map(lambda v: None if v is None else fn(v))
+#: Poison-pill guard that ``doc_udf`` applies to every HTML operator: a
+#: pathological multi-hundred-MB document must not blow up executor
+#: memory (outputs are ~input-sized; an Arrow batch holds thousands of
+#: rows).  Truncation is safe because the permissive parser treats it
+#: as EOF: open elements close, a cut UTF-8 character becomes U+FFFD.
+MAX_DOC_BYTES = 16 * 1024 * 1024
+
+
+def doc_udf(schema, fn):
+    """The one Arrow-batched pandas UDF shape behind every HTML
+    operator.  ``fn(data, *args)`` runs once per row on the document's
+    UTF-8 bytes truncated to ``MAX_DOC_BYTES``, followed by that row's
+    values of any further argument columns (the SQL functions' selector
+    and attribute columns).  A null in any input column gives a null
+    result.  For a ``StructType`` schema ``fn`` returns a dict keyed by
+    field name, and a null row becomes a struct of all-null fields."""
+    if isinstance(schema, StructType):
+        null = dict.fromkeys(schema.fieldNames())
+        assemble = partial(pd.DataFrame, columns=list(null))
+    else:
+        null, assemble = None, pd.Series
+
+    @F.pandas_udf(schema)
+    def udf(it: Iterator[Tuple[pd.Series, ...]]) -> Iterator[pd.Series]:
+        for batch in it:
+            if isinstance(batch, tuple):  # SQL functions: argument columns
+                out = [null if None in row
+                       else fn(row[0].encode("utf-8")[:MAX_DOC_BYTES], *row[1:])
+                       for row in zip(*batch)]
+            else:  # one column: keep the per-row hot path minimal
+                out = [null if h is None else fn(h.encode("utf-8")[:MAX_DOC_BYTES])
+                       for h in batch]
+            yield assemble(out)
+    return udf
 
 
 def _compiled(selector) -> Selector:
@@ -60,30 +91,29 @@ def _compile_cached(source: str) -> Selector:
     return compile_selector(source)
 
 
+def _first_text(dom, sel) -> Optional[str]:
+    """Normalized innerText of the first ``sel`` match, or None."""
+    idx = query_one(dom, sel)
+    return None if idx is None else inner_text(dom, idx, True).decode("utf-8", errors="replace")
+
+
+def _first_attr(dom, sel, attr_name: str) -> Optional[str]:
+    """Decoded ``attr_name`` of the first ``sel`` match, or None."""
+    idx = query_one(dom, sel)
+    v = None if idx is None else get_attr(dom, idx, attr_name)
+    return None if v is None else v.decode("utf-8", errors="replace")
+
+
 def node_count_udf():
     """Parsed node count per document (document node included) —
     mirrors ParseInstrumentationStats.node_count."""
-    @F.pandas_udf(LongType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, lambda h: len(parse(h.encode("utf-8"))))
-    return udf
-
-
-def element_count_udf():
-    @F.pandas_udf(LongType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, lambda h: parse(h.encode("utf-8")).n_elements())
-    return udf
+    return doc_udf(LongType(), lambda data: len(parse(data)))
 
 
 def query_count_udf(selector):
     """count(queryAll(selector)) per document."""
     sel = _compiled(selector)
-
-    @F.pandas_udf(LongType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, lambda h: len(query_all(parse(h.encode("utf-8")), sel)))
-    return udf
+    return doc_udf(LongType(), lambda data: len(query_all(parse(data), sel)))
 
 
 def inner_text_udf(selector, normalize_whitespace: bool = True, joiner: str = "\x1f"):
@@ -91,18 +121,13 @@ def inner_text_udf(selector, normalize_whitespace: bool = True, joiner: str = "\
     no match) — queryAll → innerText composition."""
     sel = _compiled(selector)
 
-    def one(h: str) -> str:
-        dom = parse(h.encode("utf-8"))
-        parts = [
+    def one(data: bytes) -> str:
+        dom = parse(data)
+        return joiner.join(
             inner_text(dom, i, normalize_whitespace).decode("utf-8", errors="replace")
-            for i in query_all(dom, sel)
-        ]
-        return joiner.join(parts)
+            for i in query_all(dom, sel))
 
-    @F.pandas_udf(StringType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(StringType(), one)
 
 
 def attr_value_udf(selector, attr_name: str):
@@ -110,19 +135,7 @@ def attr_value_udf(selector, attr_name: str):
     selector misses or the attribute is absent) — queryOne →
     getAttributeValue composition."""
     sel = _compiled(selector)
-
-    def one(h: str) -> Optional[str]:
-        dom = parse(h.encode("utf-8"))
-        idx = query_one(dom, sel)
-        if idx is None:
-            return None
-        v = get_attr(dom, idx, attr_name)
-        return None if v is None else v.decode("utf-8", errors="replace")
-
-    @F.pandas_udf(StringType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(StringType(), lambda data: _first_attr(parse(data), sel, attr_name))
 
 
 def to_markdown_udf(selector=None):
@@ -135,17 +148,12 @@ def to_markdown_udf(selector=None):
 
     sel = _compiled(selector) if selector is not None else None
 
-    def one(h: str) -> Optional[str]:
-        dom = parse(h.encode("utf-8"))
-        if sel is None:
-            return to_markdown(dom, 0)
-        idx = query_one(dom, sel)
+    def one(data: bytes) -> Optional[str]:
+        dom = parse(data)
+        idx = 0 if sel is None else query_one(dom, sel)
         return None if idx is None else to_markdown(dom, idx)
 
-    @F.pandas_udf(StringType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(StringType(), one)
 
 
 TABLE_CELL_TYPE = ArrayType(
@@ -176,19 +184,14 @@ def table_cells_udf(selector: str = "table"):
 
     sel = _compiled(selector)
 
-    def one(h: str):
-        dom = parse(h.encode("utf-8"))
-        out = []
-        for t, idx in enumerate(query_all(dom, sel)):
-            for r, row in enumerate(table_rows(dom, idx)):
-                for c, cell in enumerate(row):
-                    out.append((t, r, c, cell))
-        return out
+    def one(data: bytes):
+        dom = parse(data)
+        return [(t, r, c, cell)
+                for t, idx in enumerate(query_all(dom, sel))
+                for r, row in enumerate(table_rows(dom, idx))
+                for c, cell in enumerate(row)]
 
-    @F.pandas_udf(TABLE_CELL_TYPE)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(TABLE_CELL_TYPE, one)
 
 
 def fields_udf(fields):
@@ -206,35 +209,18 @@ def fields_udf(fields):
                          "(Arrow cannot ship an empty struct)")
     compiled = []
     for name, spec in fields.items():
-        if isinstance(spec, str):
-            sel, attr = spec, None
-        else:
-            sel, attr = spec
+        sel, attr = (spec, None) if isinstance(spec, str) else spec
         compiled.append((name, _compiled(sel), attr))
-    names = [n for n, _, _ in compiled]
-    schema = StructType([StructField(n, StringType(), True) for n in names])
+    schema = StructType([StructField(n, StringType(), True) for n, _, _ in compiled])
 
-    def one(h: str):
-        dom = parse(h.encode("utf-8"))
-        out = {}
-        for name, sel, attr in compiled:
-            idx = query_one(dom, sel)
-            if idx is None:
-                out[name] = None
-            elif attr is None:
-                out[name] = inner_text(dom, idx, True).decode("utf-8", "replace")
-            else:
-                v = get_attr(dom, idx, attr)
-                out[name] = None if v is None else v.decode("utf-8", "replace")
-        return out
+    def one(data: bytes):
+        dom = parse(data)
+        return {
+            name: _first_text(dom, sel) if attr is None else _first_attr(dom, sel, attr)
+            for name, sel, attr in compiled
+        }
 
-    @F.pandas_udf(schema)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        empty = {n: None for n in names}
-        for s in it:
-            yield pd.DataFrame(
-                [empty if v is None else one(v) for v in s], columns=names)
-    return udf
+    return doc_udf(schema, one)
 
 
 def extract_struct_udf(
@@ -243,24 +229,15 @@ def extract_struct_udf(
     use_link_density: bool = True,
     link_density_threshold: float = 0.5,
     min_text_density: Optional[float] = None,
-    max_doc_bytes: Optional[int] = 16 * 1024 * 1024,
 ):
     """Main-content extraction returning struct(main_text, spans,
     n_nodes, n_removed).  The flagship operator of the pipeline.
-
-    ``max_doc_bytes`` is the poison-pill guard for web-scale corpora: a
-    single pathological multi-hundred-MB document must not blow up
-    executor memory (output buffers are ~input-sized, and an Arrow
-    batch holds thousands of rows).  Oversized documents are truncated
-    to the limit before parsing — safe because the parser is permissive
-    (truncation ≡ EOF: open elements close, raw text runs out) — and
-    ``n_removed`` is reported as usual; pass ``None`` to disable."""
+    Documents over ``MAX_DOC_BYTES`` are truncated before parsing, as
+    for every operator built on ``doc_udf``, and ``n_removed`` is
+    reported as usual."""
     sel = compile_selector(remove_selector)
 
-    def one(h: str):
-        data = h.encode("utf-8")
-        if max_doc_bytes is not None and len(data) > max_doc_bytes:
-            data = data[:max_doc_bytes]
+    def one(data: bytes):
         r = extract_main(
             data,
             remove_selector=sel,
@@ -276,16 +253,7 @@ def extract_struct_udf(
             "n_removed": r.n_removed,
         }
 
-    @F.pandas_udf(EXTRACT_SCHEMA)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in it:
-            rows = [
-                {"main_text": None, "spans": None, "n_nodes": None, "n_removed": None}
-                if v is None else one(v)
-                for v in s
-            ]
-            yield pd.DataFrame(rows, columns=["main_text", "spans", "n_nodes", "n_removed"])
-    return udf
+    return doc_udf(EXTRACT_SCHEMA, one)
 
 
 LINKS_SCHEMA = ArrayType(StructType([
@@ -302,13 +270,12 @@ def links_udf(selector: str = "a[href], img[src], script[src], link[href]",
     crawl-frontier extraction of a web pipeline, expressed as
     queryAll → getAttributeValue → innerText over the kernel."""
     sel = _compiled(selector)
-    names = list(attrs)
 
-    def one(h: str):
-        dom = parse(h.encode("utf-8"))
+    def one(data: bytes):
+        dom = parse(data)
         out = []
         for idx in query_all(dom, sel):
-            for a in names:
+            for a in attrs:
                 v = get_attr(dom, idx, a)
                 if v is not None:
                     out.append({
@@ -319,10 +286,7 @@ def links_udf(selector: str = "a[href], img[src], script[src], link[href]",
                     break
         return out
 
-    @F.pandas_udf(LINKS_SCHEMA)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(LINKS_SCHEMA, one)
 
 
 EXPLAIN_SCHEMA = StructType([
@@ -341,12 +305,11 @@ def explain_udf(selector):
     ``first_failure_kind`` is the classified failure of the first
     near-miss (tag|id|class|attr|pseudo|not_simple|combinator|scope)."""
     from ..kernel.matcher_debug import explain_first_match
-    from ..kernel.htmlparse import INVALID
 
     sel = _compiled(selector)
 
-    def one(h: str):
-        rpt = explain_first_match(parse(h.encode("utf-8")), sel)
+    def one(data: bytes):
+        rpt = explain_first_match(parse(data), sel)
         return {
             "matched_index": None if rpt.matched_index == INVALID else rpt.matched_index,
             "matched_group": None if rpt.matched_index == INVALID else rpt.matched_group,
@@ -355,14 +318,7 @@ def explain_udf(selector):
             "first_failure_kind": rpt.near_misses[0].reason.kind if rpt.near_misses else None,
         }
 
-    cols = [f.name for f in EXPLAIN_SCHEMA.fields]
-
-    @F.pandas_udf(EXPLAIN_SCHEMA)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in it:
-            rows = [dict.fromkeys(cols) if v is None else one(v) for v in s]
-            yield pd.DataFrame(rows, columns=cols)
-    return udf
+    return doc_udf(EXPLAIN_SCHEMA, one)
 
 
 PARSE_STATS_SCHEMA = StructType([
@@ -379,20 +335,12 @@ def parse_stats_udf():
     pipeline writes to its control table."""
     from ..kernel.instrumentation import parse_with_hooks
 
-    def one(h: str):
+    def one(data: bytes):
         box = {}
-        parse_with_hooks(h, on_parse_end=lambda st: box.update(
-            input_len=st.input_len, node_count=st.node_count, elapsed_ns=st.elapsed_ns))
+        parse_with_hooks(data, on_parse_end=lambda st: box.update(vars(st)))
         return box
 
-    cols = [f.name for f in PARSE_STATS_SCHEMA.fields]
-
-    @F.pandas_udf(PARSE_STATS_SCHEMA)
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in it:
-            rows = [dict.fromkeys(cols) if v is None else one(v) for v in s]
-            yield pd.DataFrame(rows, columns=cols)
-    return udf
+    return doc_udf(PARSE_STATS_SCHEMA, one)
 
 
 def register_sql_functions(spark) -> None:
@@ -407,59 +355,14 @@ def register_sql_functions(spark) -> None:
     Selector arguments are ordinary columns, so they may vary per row;
     compilation is lru-cached per worker (the reference's runtime
     compile is likewise cheap and cacheable, document.zig:439-462)."""
-    @F.pandas_udf(LongType())
-    def _node_count(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            yield s.map(lambda v: None if v is None else len(parse(v.encode("utf-8"))))
-
-    @F.pandas_udf(LongType())
-    def _query_count(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for html, sel in it:
-            yield pd.Series([
-                None if h is None or q is None
-                else len(query_all(parse(h.encode("utf-8")), _compile_cached(q)))
-                for h, q in zip(html, sel)
-            ])
-
-    @F.pandas_udf(StringType())
-    def _inner_text(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        def one(h, q):
-            if h is None or q is None:
-                return None
-            dom = parse(h.encode("utf-8"))
-            idx = query_one(dom, _compile_cached(q))
-            if idx is None:
-                return None
-            return inner_text(dom, idx, True).decode("utf-8", errors="replace")
-        for html, sel in it:
-            yield pd.Series([one(h, q) for h, q in zip(html, sel)])
-
-    @F.pandas_udf(StringType())
-    def _attr(it: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        def one(h, q, a):
-            if h is None or q is None or a is None:
-                return None
-            dom = parse(h.encode("utf-8"))
-            idx = query_one(dom, _compile_cached(q))
-            if idx is None:
-                return None
-            v = get_attr(dom, idx, a)
-            return None if v is None else v.decode("utf-8", errors="replace")
-        for html, sel, attr in it:
-            yield pd.Series([one(h, q, a) for h, q, a in zip(html, sel, attr)])
-
-    @F.pandas_udf(StringType())
-    def _markdown(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from ..kernel.markdown import to_markdown
-        for s in it:
-            yield s.map(lambda v: None if v is None
-                        else to_markdown(parse(v.encode("utf-8")), 0))
-
-    spark.udf.register("html_node_count", _node_count)
-    spark.udf.register("html_query_count", _query_count)
-    spark.udf.register("html_inner_text", _inner_text)
-    spark.udf.register("html_attr", _attr)
-    spark.udf.register("html_markdown", _markdown)
+    spark.udf.register("html_node_count", node_count_udf())
+    spark.udf.register("html_query_count", doc_udf(
+        LongType(), lambda data, q: len(query_all(parse(data), _compile_cached(q)))))
+    spark.udf.register("html_inner_text", doc_udf(
+        StringType(), lambda data, q: _first_text(parse(data), _compile_cached(q))))
+    spark.udf.register("html_attr", doc_udf(
+        StringType(), lambda data, q, a: _first_attr(parse(data), _compile_cached(q), a)))
+    spark.udf.register("html_markdown", to_markdown_udf())
 
 
 def serialize_html_udf(selector):
@@ -468,14 +371,9 @@ def serialize_html_udf(selector):
     sel = _compiled(selector)
     from ..kernel.serialize import write_html
 
-    def one(h: str) -> Optional[str]:
-        dom = parse(h.encode("utf-8"))
+    def one(data: bytes) -> Optional[str]:
+        dom = parse(data)
         idx = query_one(dom, sel)
-        if idx is None:
-            return None
-        return write_html(dom, idx).decode("utf-8", errors="replace")
+        return None if idx is None else write_html(dom, idx).decode("utf-8", errors="replace")
 
-    @F.pandas_udf(StringType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, one)
-    return udf
+    return doc_udf(StringType(), one)

@@ -53,8 +53,8 @@ def synth_pdf_udf(compress: bool = True):
 def pdf_extract_udf(max_doc_bytes: int = 64 * 1024 * 1024):
     """PDF payload → struct(text, n_lines, n_objects, n_streams).
 
-    ``max_doc_bytes`` is the same poison-pill guard as the HTML path:
-    pathological payloads are truncated before parsing (safe — the
+    ``max_doc_bytes`` is the analog of the HTML path's ``MAX_DOC_BYTES``
+    guard: pathological payloads are truncated before parsing (safe — the
     extractor is permissive and never raises)."""
 
     @F.pandas_udf(PDF_EXTRACT_SCHEMA)

@@ -59,9 +59,6 @@ class PipelineConfig:
     shuffle_before_extract: bool = False
     # Opt-in sparse-link-grid strip (text bytes per descendant element).
     min_text_density: Optional[float] = None
-    # Poison-pill guard: truncate pathological giant documents before
-    # parsing (permissive parser => truncation == EOF).  None disables.
-    max_doc_bytes: int = 16 * 1024 * 1024
     # Extract each UNIQUE page once and join results back (exact web
     # corpora run 30-60% duplicate pages): trades two shuffles of the
     # (hash, extracted) pairs for kernel time proportional to the dup
@@ -91,7 +88,6 @@ def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
         drop_whitespace_text_nodes=cfg.drop_whitespace_text_nodes,
         use_link_density=cfg.use_link_density,
         min_text_density=cfg.min_text_density,
-        max_doc_bytes=cfg.max_doc_bytes,
     )
     if cfg.dedup_before_extract:
         # kernel runs once per unique page; results join back on the

@@ -84,26 +84,42 @@ def test_arrow_batching_is_used(spark):
 
 
 def test_max_doc_bytes_poison_pill_guard(spark):
-    """A pathological giant document is truncated before parsing
-    (permissive parser: truncation == EOF) instead of blowing memory;
-    normal rows are untouched; a cut multi-byte UTF-8 char is safe."""
-    from html_parser_spark.operators.html_ops import extract_struct_udf
+    """A pathological giant document is truncated at MAX_DOC_BYTES
+    before parsing (permissive parser: truncation == EOF) instead of
+    blowing memory; normal rows are untouched; a multi-byte UTF-8 char
+    cut by the limit decodes as U+FFFD."""
+    from html_parser_spark.operators.html_ops import MAX_DOC_BYTES, extract_struct_udf
 
-    giant = "<main id='main'><p>" + ("word " * 100) + "é" * 10
-    rows = [("<main id='main'><p>small</p></main>",), (giant,)]
-    df = spark.createDataFrame(rows, "html string")
-    ex = extract_struct_udf(max_doc_bytes=64)
-    out = df.select(F.col("html"), ex(F.col("html")).alias("e")).collect()
-    small = next(r for r in out if "small" in r["html"])
-    big = next(r for r in out if "small" not in r["html"])
-    assert small["e"]["main_text"] == "small"
-    # truncated at 64 bytes: only the prefix text survives, no crash
-    assert big["e"]["n_nodes"] >= 3
-    assert len(big["e"]["main_text"]) <= 64
-    # unguarded call still processes everything
-    ex_off = extract_struct_udf(max_doc_bytes=None)
-    full = df.select(ex_off(F.col("html")).alias("e")).collect()
-    assert any(len(r["e"]["main_text"]) > 400 for r in full)
+    head = "<main id='main'><p>"
+    n_x = MAX_DOC_BYTES - len(head) - 1  # the cut falls inside the 2-byte 'é'
+    giant = F.concat(F.lit(head), F.repeat(F.lit("x"), n_x),
+                     F.lit("é<b id='tail'>tail</b></p></main>"))
+    df = spark.range(2).select(
+        "id", F.when(F.col("id") == 0, F.lit("<main id='main'><p>small</p></main>"))
+        .otherwise(giant).alias("html"))
+    out = (df.withColumn("e", extract_struct_udf()(F.col("html")))
+             .select("id", "e.n_nodes",
+                     F.length("e.main_text").alias("len"),
+                     F.instr("e.main_text", "tail").alias("tail_at"),
+                     F.substring("e.main_text", -2, 2).alias("end"),
+                     F.when(F.col("id") == 0, F.col("e.main_text")).alias("small"))
+             .orderBy("id").collect())
+    assert out[0]["small"] == "small"
+    assert (out[1]["n_nodes"], out[1]["len"], out[1]["tail_at"], out[1]["end"]) == (
+        4, n_x + 1, 0, "x\ufffd")
+
+
+def test_deep_tbody_nesting_is_not_a_poison_pill(spark):
+    """3000 nested <tbody> wrappers (far past the recursion limit)
+    flatten through table_cells_udf and html_markdown."""
+    html_ops.register_sql_functions(spark)
+    html = ("<table>" + "<tbody>" * 3000 + "<tr><td>deep</td></tr>"
+            + "</tbody>" * 3000 + "</table>")
+    row = spark.createDataFrame([(html,)], "html string").select(
+        html_ops.table_cells_udf()(F.col("html")).alias("c"),
+        F.expr("html_markdown(html)").alias("m")).collect()[0]
+    assert [tuple(x) for x in row["c"]] == [(0, 0, 0, "deep")]
+    assert row["m"] == "| deep |\n| --- |"
 
 
 def test_sql_registered_functions(spark):
