@@ -118,12 +118,8 @@ def main() -> int:
             print(f"[FAIL] {name}: spark error: {e}")
             failures += 1
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"[rows-only] {name}: {len(srows)} rows")
-            continue
         try:
-            cur = con.sql(sql)
+            cur = con.sql(oracles[name])
             ocols = [c for c in cur.columns]
             odf = cur.df()  # pandas path — mirrors the driver's dtype decay
             orows = [tuple(rec) for rec in odf.itertuples(index=False, name=None)]
