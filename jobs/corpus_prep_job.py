@@ -16,11 +16,14 @@ downstream here is the distributed corpus work)::
 Stages (all deterministic — two runs over the same input byte-match):
 
 1. extract  — map-only kernel pass over turns (plans/pipeline.py's
-   extract_turns; zero pre-kernel shuffle);
+   extract_turns; zero pre-kernel shuffle).  Null input text is
+   filtered before the kernel, at the scan;
 2. curate   — exact-dup / too-short / low-quality / wrong-lang with
-   ordered drop reasons (operators/curate.py);
-3. scrub    — PII redaction + per-doc counts (operators/pii.py,
-   map-only);
+   ordered drop reasons (operators/curate.py).  The curated frame is
+   persisted once (MEMORY_AND_DISK) and feeds every later stage, the
+   stats table and the input count, so the kernel runs once per turn;
+3. scrub    — PII redaction + per-doc ``n_pii`` (operators/pii.py;
+   one projection, map-only);
 4. split    — deterministic hash holdout (operators/corpusprep.py;
    a document's split never changes as the corpus grows);
 5. pack     — concatenate-and-chop token packing plan per split
@@ -66,75 +69,85 @@ def parse_args(argv):
 
 
 def run(spark, args) -> dict:
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from html_parser_spark.operators.corpusprep import (
         pack_sequences, split_assign,
     )
     from html_parser_spark.operators.curate import curate_corpus, curation_stats
-    from html_parser_spark.operators.pii import pii_scrub
+    from html_parser_spark.operators.pii import pii_counts, redact_pii
     from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
     from html_parser_spark.sources.catalog import read_transcripts
 
     t = read_transcripts(spark, args.input)
 
-    # 1. extract (map-only; doc identity = conv:turn)
-    ex = extract_turns(t, PipelineConfig())
+    # 1. extract (map-only; doc identity = conv:turn).  main_text is
+    # null exactly when the input text is, so the null filter goes on
+    # the input (down to the scan): a filter on the UDF output would be
+    # pushed under the projection and evaluate the kernel twice.
+    ex = extract_turns(t.where(F.col("text").isNotNull()), PipelineConfig())
     docs = ex.select(
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
         .alias("doc_id"),
         "conv_id", "turn_idx", "role",
         F.col("main_text").alias("text"),
-    ).where(F.col("text").isNotNull())
+    )
 
-    # 2. curate (quality/lang/dup/short with ordered reasons)
+    # 2. curate (quality/lang/dup/short with ordered reasons).  The
+    # lineage branches here (stats vs kept; kept again per split), so
+    # it is persisted once: the kernel and the dedup window run once.
     curated = curate_corpus(
         docs, quality_threshold=args.quality,
         langs=tuple(s for s in args.langs.split(",") if s),
-        min_tokens=args.min_tokens)
-    stats = curation_stats(curated)
-    kept = curated.where(F.col("drop_reason").isNull())
+        min_tokens=args.min_tokens).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        stats = curation_stats(curated)
+        kept = curated.where(F.col("drop_reason").isNull())
 
-    # 3. PII scrub — redacted text replaces the raw extraction
-    scrubbed = (
-        kept.drop("text")
-        .join(pii_scrub(kept), "doc_id")
-        .withColumnRenamed("redacted", "text"))
+        # 3. PII scrub — redacted text replaces the raw extraction
+        scrubbed = kept.select(
+            *[c for c in kept.columns if c != "text"],
+            pii_counts("text")[-1],
+            redact_pii("text").alias("text"))
 
-    # 4. deterministic holdout
-    split = split_assign(
-        scrubbed,
-        splits=(("train", args.train), ("val", args.val),
-                ("test", args.test)))
+        # 4. deterministic holdout
+        split = split_assign(
+            scrubbed,
+            splits=(("train", args.train), ("val", args.val),
+                    ("test", args.test)))
 
-    # 5. packing plan PER SPLIT — a training sequence must never mix
-    # train and holdout documents, so each split gets its own streams
-    plans = None
-    for name in ("train", "val", "test"):
-        one = pack_sequences(
-            split.where(F.col("split") == name).select("doc_id", "text"),
-            budget=args.budget, n_buckets=args.pack_buckets)
-        plans = one if plans is None else plans.unionByName(one)
-    out = split.join(plans, "doc_id")
+        # 5. packing plan PER SPLIT — a training sequence must never mix
+        # train and holdout documents, so each split gets its own streams
+        plans = None
+        for name in ("train", "val", "test"):
+            one = pack_sequences(
+                split.where(F.col("split") == name).select("doc_id", "text"),
+                budget=args.budget, n_buckets=args.pack_buckets)
+            plans = one if plans is None else plans.unionByName(one)
+        out = split.join(plans, "doc_id")
 
-    (out.select(
-        "doc_id", "conv_id", "turn_idx", "role", "text", "quality",
-        "lang_used", "n_pii", "split", "bucket", "n_tokens",
-        "start_offset", "seq_id", "crosses_cut")
-     .write.mode("overwrite").partitionBy("split")
-     .parquet(args.output + "/docs"))
-    stats.write.mode("overwrite").parquet(args.output + "/stats")
+        (out.select(
+            "doc_id", "conv_id", "turn_idx", "role", "text", "quality",
+            "lang_used", "n_pii", "split", "bucket", "n_tokens",
+            "start_offset", "seq_id", "crosses_cut")
+         .write.mode("overwrite").partitionBy("split")
+         .parquet(args.output + "/docs"))
+        stats.write.mode("overwrite").parquet(args.output + "/stats")
+        n_in = curated.count()
+    finally:
+        curated.unpersist()
 
-    done = spark.read.parquet(args.output + "/docs")
-    n_kept = done.count()
-    n_in = docs.count()
+    # split_assign never emits a null split, so the per-split counts
+    # sum to the kept rows
+    splits = {r["split"]: r["n"] for r in
+              spark.read.parquet(args.output + "/docs")
+              .groupBy("split").agg(F.count("*").alias("n")).collect()}
     return {
         "metric": "corpus_prep",
         "rows_in": n_in,
-        "rows_kept": n_kept,
-        "splits": {r["split"]: r["n"] for r in
-                   done.groupBy("split").agg(F.count("*").alias("n"))
-                   .collect()},
+        "rows_kept": sum(splits.values()),
+        "splits": splits,
     }
 
 

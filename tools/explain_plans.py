@@ -72,6 +72,9 @@ CHECKS = {
         "no_exchange_before_kernel": lambda p: _no_exchange_before_arrow(p),
         "arrow_eval": lambda p: "ArrowEvalPython" in p,
         "pruned_scan": lambda p: "expected_main_text" not in p,
+        # a filter on the kernel output inside extract_turns would be
+        # pushed under the projection and evaluate the kernel twice
+        "single_arrow_pass": lambda p: _single_arrow_pass(p),
     },
     "ann_cosine_topk": {
         "takeordered": lambda p: "TakeOrderedAndProject" in p,
@@ -312,11 +315,7 @@ CHECKS = {
     # resolution + canonicalization stay Catalyst; fan-out is a JVM
     # posexplode; never a shuffle
     "link_resolve": {
-        # count in the operator tree only (the details + codegen dumps
-        # repeat the node name)
-        "single_arrow_pass": lambda p:
-            p.split("== Physical Plan ==")[1].split("\n\n")[0]
-            .count("ArrowEvalPython") == 1 and "BatchEvalPython" not in p,
+        "single_arrow_pass": lambda p: _single_arrow_pass(p),
         "map_only": lambda p: "Exchange" not in p,
         "jvm_explode": lambda p: "Generate" in p,
     },
@@ -343,6 +342,13 @@ CHECKS = {
             _window_group_limit_before_exchange(p),
     },
 }
+
+
+def _single_arrow_pass(p: str) -> bool:
+    """Exactly one ArrowEvalPython in the operator tree (the details
+    and codegen dumps repeat the node name) and no per-row Python."""
+    tree = p.split("== Physical Plan ==")[1].split("\n\n")[0]
+    return tree.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in p
 
 
 def _window_group_limit_before_exchange(p: str) -> bool:
