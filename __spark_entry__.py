@@ -2766,11 +2766,11 @@ def q_boilerplate_removal(spark, sf_dir):
     cross-document frequency signal a single-node parser cannot
     compute — blocks repeating across ≥50% of a host's pages are
     chrome.  Each page carries one host-constant FOOTER block, the
-    body text and a unique tail; survivors keep document order.  Two shuffles total: the
-    (host, fp) doc-frequency aggregate and the doc_id reassembly; the
-    boilerplate table joins back as the small side.  The oracle derives
-    each block's per-host document frequency from the page construction
-    and applies the same drop rule."""
+    body text and a unique tail; survivors keep document order.  One
+    kernel pass; the (host, fp) doc frequency is a window over the
+    blocks, and the doc_id reassembly is the other shuffle.  The oracle
+    derives each block's per-host document frequency from the page
+    construction and applies the same drop rule."""
     from html_parser_spark.operators.boilerplate import remove_boilerplate
 
     did = F.col("doc_id").cast("string")

@@ -25,4 +25,41 @@ stack:
                    stage with watermarked windowed metrics.
 """
 
+import os
+import zipimport
+
 __version__ = "0.1.0"
+
+
+# PySpark's worker calls importlib.invalidate_caches() at the start of
+# every task; before Python 3.13 that makes every zipimporter re-read
+# its archive's central directory (pyspark.zip, the spark-core jar,
+# py4j: ~0.15 s a task).  Every Python worker imports this package
+# when it unpickles one of its UDFs, so from then on a zipimporter
+# re-reads only an archive whose (inode, size, mtime) changed since its
+# last read.  Python >= 3.13 re-reads lazily already (``_get_files``).
+# Process-wide and permanent: an archive rewritten in place with the
+# same inode and size within one mtime tick (coarse-mtime filesystems:
+# some NFS, FAT) stays stale after invalidate_caches(), where the
+# stdlib would re-read it.  Replace archives by rename, not in place.
+def _reread_changed_archives_only(cls=zipimport.zipimporter):
+    eager, stamps = cls.invalidate_caches, {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is None or files is None or stamps.get(self.archive) != stamp:
+            eager(self)
+            stamps[self.archive] = stamp
+        else:
+            self._files = files
+
+    if not hasattr(cls, "_get_files"):
+        cls.invalidate_caches = invalidate_caches
+
+
+_reread_changed_archives_only()

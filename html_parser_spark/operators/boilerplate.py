@@ -11,12 +11,14 @@ pipeline, Spark-first:
 
 1. ``text_blocks_udf`` (map-only Arrow kernel pass): outermost
    block-level elements' innerText in document order — one parse per
-   document, one array out, fan-out via JVM ``posexplode``.
+   document, one array out, fan-out via JVM ``explode``.
 2. block fingerprint = ``md5`` of the whitespace-collapsed text
    (JVM-side column).
-3. per-``(host, fingerprint)`` document frequency — ONE hash-aggregate
-   shuffle of the exploded blocks (map-side partial:
-   ``countDistinct`` expands to two-phase distinct aggregation).
+3. per-``(host, fingerprint)`` document frequency — two windows over
+   ONE ``(host, fp)`` exchange and sort: the dense rank of each block's
+   doc inside its group, then the group's top rank.  Windows rather
+   than an aggregate joined back, because that self-join reads the
+   block frame twice and so runs the kernel UDF on both sides.
 4. per-host page counts — an aggregate over the DOC frame (one row
    per host; tiny, broadcast back).
 5. blocks whose doc-frequency ratio ≥ ``threshold`` (and absolute
@@ -25,12 +27,17 @@ pipeline, Spark-first:
    second and last shuffle, on ``doc_id``.
 
 Scale notes: both shuffles key on high-cardinality columns
-((host, fp) and doc_id) so they salt-free rebalance; the boilerplate
-table is ~(hosts x frequent-blocks) — orders of magnitude smaller
-than the corpus — and joins back to blocks by (host, fp) equi-join
-(AQE broadcasts it when small).  Hot hosts concentrate a (host, fp)
-key only as far as one row per distinct block after partial
-aggregation, so a 10^8-page host is still fine.
+((host, fp) and doc_id) so they salt-free rebalance.  The (host, fp)
+shuffle carries the block text; the self-join form avoided it when AQE
+broadcast its frequency table in time, but paid a second kernel pass
+and two distinct-aggregate shuffles of the (host, fp, doc) keys.
+Skew: a block that repeats on every page of a hot host is one
+(host, fp) window group of one row per page, sorted and scanned in one
+task (the window buffer spills, so it is slow, not an OOM), and AQE
+skew handling does not split window partitions.  On a 4-core box, one
+host with 2x10^5 pages and a footer on every page ran in 0.56x the
+self-join's time (BENCH.md); past ~10^6 pages a host, run it on a
+per-host sample.
 
 Block definition (pinned by tests): elements matching
 ``BLOCK_SELECTOR`` with NO matching ancestor (outermost wins — a
@@ -42,7 +49,7 @@ from __future__ import annotations
 
 from typing import List
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
@@ -107,21 +114,6 @@ def block_frame(df: DataFrame, html_col: str = "html",
     )
 
 
-def boilerplate_blocks(blocks: DataFrame, doc_totals: DataFrame,
-                       doc_col: str = "doc_id", host_col: str = "host",
-                       threshold: float = 0.5,
-                       min_docs: int = 2) -> DataFrame:
-    """Per-host block fingerprints whose document frequency crosses
-    the boilerplate bar: df_docs ≥ min_docs AND df_docs/host_docs ≥
-    threshold.  ``doc_totals`` must be (host, host_docs)."""
-    per_fp = (blocks.groupBy(host_col, "fp")
-              .agg(F.countDistinct(doc_col).alias("df_docs")))
-    return (per_fp.join(doc_totals, host_col)
-            .where((F.col("df_docs") >= min_docs)
-                   & (F.col("df_docs") >= F.col("host_docs") * threshold))
-            .select(host_col, "fp", "df_docs", "host_docs"))
-
-
 def remove_boilerplate(df: DataFrame, html_col: str = "html",
                        doc_col: str = "doc_id", host_col: str = "host",
                        threshold: float = 0.5, min_docs: int = 2,
@@ -147,15 +139,20 @@ def remove_boilerplate(df: DataFrame, html_col: str = "html",
     blocks = block_frame(df, html_col, doc_col, host_col, selector)
     totals = (df.groupBy(host_col)
               .agg(F.countDistinct(doc_col).alias("host_docs")))
-    boiler = boilerplate_blocks(blocks, totals, doc_col, host_col,
-                                threshold, min_docs)
-    tagged = (blocks.join(boiler.select(host_col, "fp")
-                          .withColumn("is_boiler", F.lit(True)),
-                          [host_col, "fp"], "left"))
+    # df_docs = countDistinct(doc) per (host, fp): docs rank nulls last,
+    # and a null doc counts for nothing
+    by_fp = Window.partitionBy(host_col, "fp")
+    rank = F.dense_rank().over(by_fp.orderBy(F.col(doc_col).asc_nulls_last()))
+    df_docs = F.max(F.when(F.col(doc_col).isNotNull(), F.col("_rank"))).over(by_fp)
+    tagged = (blocks.withColumn("_rank", rank)
+              .withColumn("df_docs", df_docs)
+              .join(totals, host_col, "left"))
+    boiler = F.coalesce((F.col("df_docs") >= min_docs)
+                        & (F.col("df_docs") >= F.col("host_docs") * threshold),
+                        F.lit(False))
     kept = F.filter(
         F.array_sort(F.collect_list(
-            F.when(F.col("is_boiler").isNull(),
-                   F.struct(F.col("pos"), F.col("text"))))),
+            F.when(~boiler, F.struct(F.col("pos"), F.col("text"))))),
         lambda s: s.isNotNull())
     return (
         tagged.groupBy(doc_col, host_col)

@@ -70,15 +70,21 @@ def doc_udf(schema, fn):
     @F.pandas_udf(schema)
     def udf(it: Iterator[Tuple[pd.Series, ...]]) -> Iterator[pd.Series]:
         for batch in it:
-            if isinstance(batch, tuple):  # SQL functions: argument columns
-                out = [null if None in row
-                       else fn(row[0].encode("utf-8")[:MAX_DOC_BYTES], *row[1:])
-                       for row in zip(*batch)]
-            else:  # one column: keep the per-row hot path minimal
-                out = [null if h is None else fn(h.encode("utf-8")[:MAX_DOC_BYTES])
-                       for h in batch]
-            yield assemble(out)
+            yield assemble(_apply(fn, null, batch))
     return udf
+
+
+def _apply(fn, null, batch) -> list:
+    """``doc_udf``'s row loop.  Module level, so it pickles by reference:
+    a worker imports this package (and its zip-importer hook, see
+    ``html_parser_spark/__init__``) with the first ``doc_udf`` it runs."""
+    if isinstance(batch, tuple):  # SQL functions: argument columns
+        return [null if None in row
+                else fn(row[0].encode("utf-8")[:MAX_DOC_BYTES], *row[1:])
+                for row in zip(*batch)]
+    # one column: keep the per-row hot path minimal
+    return [null if h is None else fn(h.encode("utf-8")[:MAX_DOC_BYTES])
+            for h in batch]
 
 
 def _compiled(selector) -> Selector:

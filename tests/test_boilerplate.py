@@ -154,3 +154,27 @@ def test_language_mix_profile_and_tiebreak(spark):
     assert (t["lang_dominant"], t["n_dominant"]) == ("de", 1)
     u = out["unknown"]
     assert (u["n_langs"], u["lang_dominant"]) == (1, "und")
+
+
+def test_kernel_runs_once(spark):
+    """The (host, fp) document frequency comes from the one block
+    frame: one ``ArrowEvalPython`` node, so one parse per document."""
+    rows = [("a0", "A", "<p>X</p>"), ("a1", "A", "<p>X</p>")]
+    plan = remove_boilerplate(_corpus(spark, rows))._jdf.queryExecution()
+    assert plan.executedPlan().toString().count("ArrowEvalPython") == 1
+
+
+def test_null_doc_ids_count_for_nothing(spark):
+    # host_docs = 3 (a0, a1, a2).  "X" is on one identified doc and two
+    # null-id rows: df_docs = 1 < min_docs, so it is kept everywhere
+    rows = [
+        ("a0", "A", "<p>X</p><p>u0</p>"),
+        (None, "A", "<p>X</p><p>n1</p>"),
+        (None, "A", "<p>X</p><p>n2</p>"),
+        ("a1", "A", "<p>u1</p>"),
+        ("a2", "A", "<p>u2</p>"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, host string, html string")
+    out = {r["doc_id"]: r for r in remove_boilerplate(df).collect()}
+    assert out["a0"]["main_text"] == "X\nu0"
+    assert out[None]["n_blocks_dropped"] == 0

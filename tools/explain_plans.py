@@ -299,12 +299,14 @@ CHECKS = {
         "arrow_eval": lambda p: "ArrowEvalPython" in p
         and "BatchEvalPython" not in p,
     },
-    # corpus-frequency boilerplate: one Arrow block pass; the
-    # (host, fp) doc-frequency aggregate must be two-phase (partial
-    # map-side), never a single-partition collapse; no cartesian shape
+    # corpus-frequency boilerplate: ONE Arrow block pass (the (host, fp)
+    # doc frequency is a window over the blocks, not a self-join that
+    # re-runs the kernel); aggregates partial map-side, never a
+    # single-partition collapse; no cartesian shape
     "boilerplate_removal": {
         "arrow_eval": lambda p: "ArrowEvalPython" in p
         and "BatchEvalPython" not in p,
+        "single_arrow_pass": lambda p: _single_arrow_pass(p),
         "partial_agg": lambda p: "HashAggregate" in p
         or "ObjectHashAggregate" in p,
         "no_single_partition": lambda p: "SinglePartition" not in p,
