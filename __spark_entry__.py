@@ -330,16 +330,16 @@ def q_extract_main_text(spark, sf_dir):
     group by 1 order by 1
 """)
 def q_transcripts_extract_by_role(spark, sf_dir):
-    t = transcripts_from_documents(spark, sf_dir, n_convs=N_CONVS)
-    ex = html_ops.extract_struct_udf()
-    out = t.withColumn("_ex", ex(F.col("text")))
+    from html_parser_spark.plans.pipeline import extract_turns
+
+    out = extract_turns(transcripts_from_documents(spark, sf_dir, n_convs=N_CONVS))
     return (
         out.groupBy("role")
         .agg(
             F.count("*").alias("n_turns"),
             # final cast pins the result to int64 — DuckDB's HUGEINT sum
             # decays to float64 on the pandas/Arrow path otherwise
-            F.sum(F.octet_length(F.col("_ex.main_text"))).cast("long").alias("n_chars_main"),
+            F.sum(F.octet_length("main_text")).cast("long").alias("n_chars_main"),
         )
         .orderBy("role")
     )
@@ -1425,10 +1425,11 @@ def q_streaming_conv_rollup(spark, sf_dir):
     import shutil
     import tempfile
 
+    from html_parser_spark.plans.pipeline import extract_turns
     from html_parser_spark.streaming.stateful import (
         conversation_rollup_stream, run_rollup_to_parquet,
     )
-    from html_parser_spark.streaming.stream import extract_stream, read_transcript_stream
+    from html_parser_spark.streaming.stream import read_transcript_stream
 
     d = tempfile.mkdtemp(prefix="stream_rollup_")
     try:
@@ -1437,7 +1438,7 @@ def q_streaming_conv_rollup(spark, sf_dir):
         )
         t.repartition(4).write.mode("overwrite").parquet(f"{d}/in")
         stream = read_transcript_stream(spark, f"{d}/in", max_files_per_trigger=1)
-        ex = extract_stream(stream).select(
+        ex = extract_turns(stream).select(
             "conv_id", "turn_idx", F.col("main_text").alias("text")
         )
         rolled = conversation_rollup_stream(ex)
@@ -3014,8 +3015,7 @@ def entry(spark: SparkSession) -> DataFrame:
     t = transcripts_from_documents(spark, "/root/testdata/sf0.001", n_convs=N_CONVS)
     from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
 
-    out = extract_turns(t.drop("doc_id", "expected_main_text"),
-                        PipelineConfig(n_buckets=8, n_salts=2))
+    out = extract_turns(t.drop("doc_id", "expected_main_text"), PipelineConfig(n_buckets=8))
     return out.select("conv_id", "turn_idx", "role", "main_text", "n_nodes", "n_removed")
 
 

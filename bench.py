@@ -161,8 +161,7 @@ def extraction_throughput(spark, input_dir: str, n_turns: int, timed_runs: int =
 
     from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
 
-    cfg = PipelineConfig(n_buckets=4 * max(spark.sparkContext.defaultParallelism, 8),
-                         n_salts=4)
+    cfg = PipelineConfig(n_buckets=4 * max(spark.sparkContext.defaultParallelism, 8))
 
     def run_once():
         out = extract_turns(spark.read.parquet(input_dir), cfg)

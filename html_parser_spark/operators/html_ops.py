@@ -23,7 +23,7 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from ..kernel.extract import DEFAULT_REMOVE_SELECTOR, extract_main
+from ..kernel.extract import extract_main
 from ..kernel.htmlparse import INVALID, parse
 from ..kernel.matcher import query_all, query_one
 from ..kernel.selector import Selector, compile_selector
@@ -229,37 +229,23 @@ def fields_udf(fields):
     return doc_udf(schema, one)
 
 
-def extract_struct_udf(
-    remove_selector: str = DEFAULT_REMOVE_SELECTOR,
-    drop_whitespace_text_nodes: bool = False,
-    use_link_density: bool = True,
-    link_density_threshold: float = 0.5,
-    min_text_density: Optional[float] = None,
-):
-    """Main-content extraction returning struct(main_text, spans,
-    n_nodes, n_removed).  The flagship operator of the pipeline.
-    Documents over ``MAX_DOC_BYTES`` are truncated before parsing, as
-    for every operator built on ``doc_udf``, and ``n_removed`` is
-    reported as usual."""
-    sel = compile_selector(remove_selector)
+def _extract_row(data: bytes) -> dict:
+    r = extract_main(data)
+    return {
+        "main_text": r.main_text,
+        "spans": [{"start": s, "end": e} for s, e in r.spans],
+        "n_nodes": r.n_nodes,
+        "n_removed": r.n_removed,
+    }
 
-    def one(data: bytes):
-        r = extract_main(
-            data,
-            remove_selector=sel,
-            drop_whitespace_text_nodes=drop_whitespace_text_nodes,
-            use_link_density=use_link_density,
-            link_density_threshold=link_density_threshold,
-            min_text_density=min_text_density,
-        )
-        return {
-            "main_text": r.main_text,
-            "spans": [{"start": s, "end": e} for s, e in r.spans],
-            "n_nodes": r.n_nodes,
-            "n_removed": r.n_removed,
-        }
 
-    return doc_udf(EXTRACT_SCHEMA, one)
+def extract_struct_udf():
+    """Main-content extraction with the kernel's default profile,
+    returning struct(main_text, spans, n_nodes, n_removed).  The
+    flagship operator of the pipeline.  Documents over ``MAX_DOC_BYTES``
+    are truncated before parsing, as for every operator built on
+    ``doc_udf``, and ``n_removed`` is reported as usual."""
+    return doc_udf(EXTRACT_SCHEMA, _extract_row)
 
 
 LINKS_SCHEMA = ArrayType(StructType([

@@ -199,8 +199,11 @@ def build_ivf_index(
         raise ValueError("build_ivf_index: input DataFrame is empty")
     cmat = np.asarray([c[1] for c in cents], dtype=np.float64)
     cnorm = np.linalg.norm(cmat, axis=1)
-    assign = _assign_udf(df, cmat, cnorm)
-    return df.withColumn("cell", assign(F.col(vec_col).cast("array<double>"))), cents
+    assign = _assign_udf(df, cmat, cnorm)(F.col(vec_col).cast("array<double>"))
+    # The UDF never returns null; the coalesce tells Catalyst so.  With a
+    # nullable ``cell``, a join on it infers ``cell IS NOT NULL``, and
+    # that filter, pushed under this projection, evaluates the UDF twice.
+    return df.withColumn("cell", F.coalesce(assign, F.lit(-1))), cents
 
 
 def _probe_udf(df: DataFrame, cmat: "np.ndarray", cnorm: "np.ndarray", nprobe: int):

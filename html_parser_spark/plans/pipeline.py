@@ -19,13 +19,14 @@ Design for the 10^12-turn target (north_rule):
   pages and shuffling the ~20 TB of main text.  (Measured on this box:
   pre-kernel shuffle capped 4→16-core scaling efficiency at 0.62;
   map-only extraction restores 0.87.)
-* **Skew salting.**  When the input layout is pathological (a few
-  monster files clustering one conversation), ``shuffle_before_extract``
-  re-enables the old input redistribution on ``(bucket, salt)`` where
+* **Skew salting (opt-in).**  When the input layout is pathological (a
+  few monster files clustering one conversation), ``n_salts > 0``
+  redistributes the input on ``(bucket, salt)`` before the kernel, where
   ``salt = pmod(xxhash64(conv_id, turn_idx), n_salts)`` — a single
   monster conversation spreads over ``n_salts`` tasks instead of
   stalling one.  For ordinary appends-of-many-files layouts the scan
-  partitioning already balances, and AQE skew handling is the backstop.
+  partitioning already balances, and AQE skew handling is the backstop,
+  so the default ``n_salts = 0`` stays map-only.
 * **Ordering assertion.**  Correctness is defined under stable turn
   ordering; ``assert_turn_ordering`` verifies per-conversation
   turn_idx density (count == distinct == max-min+1) with one
@@ -42,32 +43,25 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.html_ops import extract_struct_udf
 
 
-@dataclass
+@dataclass(frozen=True)
 class PipelineConfig:
     n_buckets: int = 32
-    n_salts: int = 4
-    drop_whitespace_text_nodes: bool = False
-    use_link_density: bool = True
-    shuffle_before_extract: bool = False
-    # Opt-in sparse-link-grid strip (text bytes per descendant element).
-    min_text_density: Optional[float] = None
-    # Extract each UNIQUE page once and join results back (exact web
-    # corpora run 30-60% duplicate pages): trades two shuffles of the
-    # (hash, extracted) pairs for kernel time proportional to the dup
-    # rate.  Worth it when kernel cost/page >> shuffle cost/row, i.e.
-    # big pages or high dup rates; off by default because the map-only
-    # plan is strictly better on near-unique corpora.  Measured (this
-    # box, 40x dup rate): 2.24x faster at 200k rows, 0.82x (slower) at
-    # 20k rows where fixed join overhead dominates.
-    dedup_before_extract: bool = False
+    # 0: map-only extraction; > 0: salted (bucket, salt) shuffle before the kernel
+    n_salts: int = 0
+
+    def __post_init__(self):
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
+        if self.n_salts < 0:
+            raise ValueError(f"n_salts must be >= 0, got {self.n_salts}")
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -77,35 +71,17 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     """The kernel stage: text → (main_text, spans, n_nodes, n_removed).
 
-    Row-parallel; when ``shuffle_before_extract`` the input is
-    redistributed on (bucket, salt) to even out skewed conversations.
+    Row-parallel and map-only by default; with ``n_salts > 0`` the input
+    is first redistributed on (bucket, salt) to even out skewed
+    conversations.
+    Works on batch and streaming frames alike; a null ``text`` gives
+    null extraction columns.
     """
     df = with_bucket(df, cfg.n_buckets)
-    if cfg.shuffle_before_extract:
+    if cfg.n_salts:
         salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(cfg.n_salts)).cast("int")
         df = df.repartition(F.col("bucket"), salt)
-    ex = extract_struct_udf(
-        drop_whitespace_text_nodes=cfg.drop_whitespace_text_nodes,
-        use_link_density=cfg.use_link_density,
-        min_text_density=cfg.min_text_density,
-    )
-    if cfg.dedup_before_extract:
-        # kernel runs once per unique page; results join back on the
-        # 16-byte hash (shuffled hash join on both sides — the join key
-        # is uniform by construction, no skew handling needed).
-        # md5(NULL) is NULL, so the join must be null-safe or rows with
-        # null text would silently vanish (the map-only path keeps them
-        # with a null extraction struct).
-        hashed = df.withColumn("_h", F.md5("text"))
-        uniq = hashed.select("_h", "text").dropDuplicates(["_h"])
-        extracted = uniq.withColumn("_ex", ex(F.col("text"))).drop("text")
-        out = (
-            hashed.drop("text").alias("l")
-            .join(extracted.alias("r"), F.col("l._h").eqNullSafe(F.col("r._h")))
-            .drop("_h")
-        )
-    else:
-        out = df.withColumn("_ex", ex(F.col("text")))
+    out = df.withColumn("_ex", extract_struct_udf()(F.col("text")))
     return out.select(
         "conv_id", "turn_idx", "role", "tool", "ts", "bucket",
         F.col("_ex.main_text").alias("main_text"),
@@ -147,13 +123,23 @@ CONTROL_COLUMNS = [
 ]
 
 
+# A control table in one of these states holds no committed rows: it
+# does not exist yet, or (a crash during its first append) its directory
+# has no data files.  Any other read failure must propagate — treating a
+# corrupt control table as "nothing done" would silently recompute the
+# whole run and append duplicate control rows.
+_NO_CONTROL_TABLE = {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+
+
 def completed_buckets(spark: SparkSession, control_dir: str, run_id: str):
     from ..sources.catalog import read_table
 
     try:
         ctl = read_table(spark, control_dir)
-    except Exception:
-        return set()
+    except AnalysisException as e:
+        if e.getCondition() in _NO_CONTROL_TABLE:
+            return set()
+        raise
     rows = ctl.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
     return {r[0] for r in rows}
 

@@ -1,7 +1,7 @@
 """Structured Streaming variant of the extraction stage.
 
-``readStream`` over a transcript directory → the same Arrow-batched
-extraction kernel (pandas UDFs work identically under streaming) →
+``readStream`` over a transcript directory → ``plans.pipeline.extract_turns``,
+the batch extraction plan (pandas UDFs work identically under streaming) →
 watermarked tumbling-window metrics → sink.  Late turns beyond the
 watermark are dropped from the metric windows (not from extraction,
 which is stateless per row).
@@ -50,18 +50,6 @@ def read_transcript_stream(spark: SparkSession, src_dir: str,
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
-    )
-
-
-def extract_stream(stream_df: DataFrame) -> DataFrame:
-    """Stateless streaming extraction — same kernel as batch."""
-    from ..operators.html_ops import extract_struct_udf
-
-    ex = extract_struct_udf()
-    return stream_df.withColumn("_ex", ex(F.col("text"))).select(
-        "conv_id", "turn_idx", "role", "tool", "ts",
-        F.col("_ex.main_text").alias("main_text"),
-        F.col("_ex.n_nodes").alias("n_nodes"),
     )
 
 

@@ -10,7 +10,7 @@ Deployment shape required by the north rule::
         --output <extracted table dir> \
         --control <control table dir> \
         --run-id  <stable id for resume> \
-        [--buckets 4096] [--no-resume] [--salts 4] [--pre-shuffle]
+        [--buckets 4096] [--salts N] [--no-resume] [--no-ordering-check]
 
 The job is idempotent per (run-id, bucket): re-submitting after a
 partial failure skips completed buckets (anti-join against the control
@@ -35,15 +35,12 @@ def parse_args(argv):
     ap.add_argument("--run-id", required=True, help="stable run id for resume")
     ap.add_argument("--buckets", type=int, default=256,
                     help="stable conv_id hash buckets (output partitions)")
-    ap.add_argument("--salts", type=int, default=4)
+    ap.add_argument("--salts", type=int, default=0,
+                    help="N > 0 redistributes the input on (bucket, salt) over N "
+                         "salts before the kernel (only for pathological input "
+                         "layouts); 0, the default, keeps extraction map-only")
     ap.add_argument("--no-resume", action="store_true",
                     help="reprocess all buckets even if control rows exist")
-    ap.add_argument("--pre-shuffle", action="store_true",
-                    help="redistribute input on (bucket, salt) before the kernel "
-                         "(only for pathological input layouts; extraction is "
-                         "map-only by default)")
-    ap.add_argument("--drop-ws-text", action="store_true",
-                    help="'fastest' parse profile: drop whitespace-only text nodes")
     ap.add_argument("--no-ordering-check", action="store_true")
     return ap.parse_args(argv)
 
@@ -62,12 +59,7 @@ def main(argv=None) -> int:
     # schema-enforced read; resolves Iceberg table identifiers too,
     # matching the --input help text and the pipeline's output handling
     transcripts = read_transcripts(spark, args.input)
-    cfg = PipelineConfig(
-        n_buckets=args.buckets,
-        n_salts=args.salts,
-        drop_whitespace_text_nodes=args.drop_ws_text,
-        shuffle_before_extract=args.pre_shuffle,
-    )
+    cfg = PipelineConfig(n_buckets=args.buckets, n_salts=args.salts)
     metrics = run_extraction(
         spark,
         transcripts,

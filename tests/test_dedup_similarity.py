@@ -708,7 +708,7 @@ def test_ivf_index_cell_partition_pruning(spark, sf_dir, tmp_path):
          emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]]
 
     # (a) a cell filter only scans the matching cells' files
-    # (input_file_name() must be read pre-shuffle — it is empty after
+    # (input_file_name() must be read before any shuffle — it is empty after
     # an exchange, which is also why it can't be read off the top-k)
     pruned = disk.where(F.col("cell").isin([0, 3]))
     files = [r[0] for r in

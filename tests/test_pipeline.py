@@ -25,7 +25,7 @@ def test_per_turn_text_equality(spark, transcripts):
 
     expected = transcripts.select("conv_id", "turn_idx", "expected_main_text")
     out = extract_turns(transcripts.drop("expected_main_text", "doc_id"),
-                        PipelineConfig(n_buckets=8, n_salts=2))
+                        PipelineConfig(n_buckets=8))
     joined = out.join(expected, ["conv_id", "turn_idx"])
     total = joined.count()
     mismatches = joined.where(F.col("main_text") != F.col("expected_main_text")).count()
@@ -44,7 +44,7 @@ def test_ordering_assertion_passes_and_detects_violations(spark, transcripts):
 def test_run_and_resume(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out")
     ctl_dir = str(tmp_path / "control")
-    cfg = PipelineConfig(n_buckets=4, n_salts=2)
+    cfg = PipelineConfig(n_buckets=4)
 
     m1 = run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
                         out_dir, ctl_dir, run_id="r1", cfg=cfg)
@@ -70,7 +70,7 @@ def test_run_and_resume(spark, transcripts, tmp_path):
 def test_partial_resume_processes_only_missing_buckets(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out2")
     ctl_dir = str(tmp_path / "control2")
-    cfg = PipelineConfig(n_buckets=4, n_salts=1)
+    cfg = PipelineConfig(n_buckets=4)
     src = transcripts.drop("doc_id", "expected_main_text")
 
     # Simulate a crashed run: process buckets {0,1} only, with control rows.
@@ -96,7 +96,7 @@ def test_mid_bucket_crash_overwrites_partial_output(spark, transcripts, tmp_path
     from html_parser_spark.sources.catalog import write_table
 
     out_dir, ctl_dir = str(tmp_path / "out3"), str(tmp_path / "ctl3")
-    cfg = PipelineConfig(n_buckets=4, n_salts=1)
+    cfg = PipelineConfig(n_buckets=4)
     src = transcripts.drop("doc_id", "expected_main_text")
 
     # bucket 0 committed cleanly (data + control row)
@@ -130,10 +130,10 @@ def test_skewed_conversations_are_salted(spark, sf_dir):
     from html_parser_spark.plans.pipeline import extract_turns, with_bucket
 
     out = extract_turns(t.drop("doc_id", "expected_main_text"),
-                        PipelineConfig(n_buckets=4, n_salts=4))
+                        PipelineConfig(n_buckets=4))
     assert out.count() == t.count()
 
-    # The salted pre-shuffle really spreads a monster conversation over
+    # The salted shuffle really spreads a monster conversation over
     # multiple tasks: its rows land in >1 physical partition, while the
     # unsalted repartition(bucket) would pin each conv to exactly one.
     # Explicit partition count: plain repartition(cols) lets AQE
@@ -153,52 +153,56 @@ def test_skewed_conversations_are_salted(spark, sf_dir):
     # And the salted path produces byte-identical extraction output.
     out_salted = extract_turns(
         t.drop("doc_id", "expected_main_text"),
-        PipelineConfig(n_buckets=4, n_salts=4, shuffle_before_extract=True))
+        PipelineConfig(n_buckets=4, n_salts=4))
     a = out.select("conv_id", "turn_idx", "main_text")
     b = out_salted.select("conv_id", "turn_idx", "main_text")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_dedup_before_extract_equivalence(spark, sf_dir):
-    """Extract-once-per-unique-page returns row-for-row identical
-    results to the map-only path on a corpus with duplicate pages."""
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
-    from html_parser_spark.sources.transcripts import transcripts_from_documents
-
-    # replicate=3 duplicates every page text across conversations
-    t = transcripts_from_documents(spark, sf_dir, n_convs=10, replicate=3)
-    t = t.drop("doc_id", "expected_main_text")
-    base = PipelineConfig(n_buckets=4)
-    dd = PipelineConfig(n_buckets=4, dedup_before_extract=True)
-    cols = ["conv_id", "turn_idx", "main_text", "n_nodes", "n_removed"]
-    a = {tuple(r) for r in extract_turns(t, base).select(cols).collect()}
-    b = {tuple(r) for r in extract_turns(t, dd).select(cols).collect()}
-    assert a == b and len(a) == t.count()
-
-
-def test_dedup_before_extract_keeps_null_text_rows(spark):
-    """Rows with null text must survive the dedup-first path with a
-    null extraction struct, exactly like the map-only path."""
+def test_null_text_rows_survive_extraction(spark):
+    """Rows with null text keep their place in the output with null
+    extraction columns, on the map-only and the salted plan alike."""
     import datetime
 
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+    from html_parser_spark.plans.pipeline import extract_turns
 
     ts = datetime.datetime(2026, 1, 1)
     rows = [
         ("c1", 0, "user", "<p>hello</p>", "", ts),
         ("c1", 1, "assistant", None, "", ts),
-        ("c2", 0, "user", "<p>hello</p>", "", ts),   # duplicate page
+        ("c2", 0, "user", "<p>hello</p>", "", ts),
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, "
                                      "text string, tool string, ts timestamp")
-    for cfg in (PipelineConfig(n_buckets=2),
-                PipelineConfig(n_buckets=2, dedup_before_extract=True)):
-        out = extract_turns(df, cfg)
-        got = {(r["conv_id"], r["turn_idx"]): r["main_text"] for r in out.collect()}
+    for cfg in (PipelineConfig(n_buckets=2), PipelineConfig(n_buckets=2, n_salts=2)):
+        got = {(r["conv_id"], r["turn_idx"]): r for r in extract_turns(df, cfg).collect()}
         assert len(got) == 3, cfg
-        assert got[("c1", 1)] is None
-        assert got[("c1", 0)] == "hello" and got[("c2", 0)] == "hello"
+        null_row = got[("c1", 1)]
+        assert null_row["main_text"] is None and null_row["n_nodes"] is None, cfg
+        assert got[("c1", 0)]["main_text"] == "hello" and got[("c2", 0)]["main_text"] == "hello"
+
+
+def test_pipeline_config_rejects_bad_values():
+    assert PipelineConfig() == PipelineConfig(n_buckets=32, n_salts=0)
+    PipelineConfig(n_buckets=1, n_salts=3)
+    for bad in ({"n_buckets": 0}, {"n_buckets": -4}, {"n_salts": -1}):
+        with pytest.raises(ValueError):
+            PipelineConfig(**bad)
+
+
+def test_resume_raises_on_corrupt_control_table(spark, transcripts, tmp_path):
+    """Only a missing control table means "nothing done"; an unreadable
+    one must stop the run, not trigger a full recompute that appends
+    duplicate control rows."""
+    ctl_dir = tmp_path / "ctl_corrupt"
+    ctl_dir.mkdir()
+    (ctl_dir / "part-0.parquet").write_bytes(b"not a parquet file" * 8)
+    assert completed_buckets(spark, str(tmp_path / "no_such_ctl"), "r") == set()
+    # a crash during the first control append leaves no data files
+    (tmp_path / "ctl_uncommitted" / "_temporary" / "0").mkdir(parents=True)
+    assert completed_buckets(spark, str(tmp_path / "ctl_uncommitted"), "r") == set()
+    with pytest.raises(Exception):
+        run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
+                       str(tmp_path / "out_corrupt"), str(ctl_dir), run_id="r",
+                       cfg=PipelineConfig(n_buckets=4), resume=True)
+    assert not (tmp_path / "out_corrupt").exists()

@@ -39,6 +39,23 @@ def test_extraction_has_no_exchange_before_kernel(spark, sf_dir):
         assert not (idx["ArrowEvalPython"] < idx["Exchange"] < idx["Scan parquet"])
 
 
+def test_salted_extraction_runs_kernel_once(spark, sf_dir):
+    """The opt-in salted plan: exactly one kernel pass, fed by exactly
+    one Exchange (the (bucket, salt) shuffle) over the scan."""
+    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+    from html_parser_spark.sources.transcripts import transcripts_from_documents
+
+    t = transcripts_from_documents(spark, sf_dir, n_convs=20)
+    p = plan_of(extract_turns(t.drop("doc_id", "expected_main_text"),
+                              PipelineConfig(n_salts=4)))
+    tree = p.split("== Physical Plan ==")[1].split("\n\n")[0].splitlines()
+    arrow = [i for i, ln in enumerate(tree) if "ArrowEvalPython" in ln]
+    exchange = [i for i, ln in enumerate(tree) if "Exchange" in ln]
+    assert len(arrow) == 1 and len(exchange) == 1
+    # the tree lists operators top-down: the Exchange sits below the kernel
+    assert arrow[0] < exchange[0]
+
+
 def test_dimension_joins_broadcast(spark, sf_dir):
     import __spark_entry__ as m
 
@@ -68,3 +85,14 @@ def test_column_pruning(spark, sf_dir):
 
     p = plan_of(m.queries()["tpch_pricing_summary"](spark, sf_dir))
     assert "l_comment" not in p
+
+
+def test_ivf_batch_topk_runs_each_udf_once(spark, sf_dir):
+    """Batched IVF search: one Arrow pass for the corpus assign UDF and
+    one for the query probe UDF; the join on ``cell`` must not re-run
+    assign through an inferred ``cell IS NOT NULL`` filter."""
+    import __spark_entry__ as m
+    from tools.explain_plans import _single_arrow_pass
+
+    p = plan_of(m.queries()["ann_ivf_batch_topk"](spark, sf_dir))
+    assert _single_arrow_pass(p, n_udfs=2)

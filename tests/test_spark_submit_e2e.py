@@ -35,7 +35,7 @@ def _submit(tmp_path, run_id):
         "--input", str(tmp_path / "input"),
         "--output", str(tmp_path / "out"),
         "--control", str(tmp_path / "ctl"),
-        "--run-id", run_id, "--buckets", "8", "--salts", "2",
+        "--run-id", run_id, "--buckets", "8",
     ]
     p = subprocess.run(cmd, capture_output=True, text=True, timeout=300, cwd=REPO)
     lines = [ln for ln in p.stdout.strip().splitlines() if ln.startswith("{")]

@@ -337,6 +337,9 @@ CHECKS = {
         "no_cartesian": lambda p: "CartesianProduct" not in p
         and "BroadcastNestedLoopJoin" not in p,
         "arrow_probe": lambda p: "ArrowEvalPython" in p,
+        # two UDFs (corpus assign, query probe), one Arrow pass each: the
+        # join's inferred ``cell IS NOT NULL`` must not re-run assign
+        "single_arrow_pass": lambda p: _single_arrow_pass(p, n_udfs=2),
         # rank-limit pushdown: partial per-partition top-k BEFORE the
         # query_id exchange, so the shuffle carries ≤ k rows per
         # (partition, query), not every scored candidate
@@ -346,11 +349,12 @@ CHECKS = {
 }
 
 
-def _single_arrow_pass(p: str) -> bool:
-    """Exactly one ArrowEvalPython in the operator tree (the details
-    and codegen dumps repeat the node name) and no per-row Python."""
+def _single_arrow_pass(p: str, n_udfs: int = 1) -> bool:
+    """Exactly one ArrowEvalPython per Python UDF in the operator tree
+    (the details and codegen dumps repeat the node name) and no per-row
+    Python."""
     tree = p.split("== Physical Plan ==")[1].split("\n\n")[0]
-    return tree.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in p
+    return tree.count("ArrowEvalPython") == n_udfs and "BatchEvalPython" not in p
 
 
 def _window_group_limit_before_exchange(p: str) -> bool:
