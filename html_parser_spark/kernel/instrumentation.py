@@ -1,31 +1,25 @@
-"""Parse/query instrumentation hooks.
+"""Parse instrumentation hooks.
 
-Reimplements the observable behavior of the reference's hook wrappers
-(src/debug/instrumentation.zig:72-188): ``parse_with_hooks`` times a
-parse and emits ``ParseStats{elapsed_ns, input_len, node_count}``;
-``query_with_hooks`` times a query and emits
-``QueryStats{elapsed_ns, selector_len, kind, matched}`` with kind one
-of ``one_runtime | one_cached | all_runtime | all_cached`` — "cached"
-means a precompiled :class:`Selector` was supplied, "runtime" means a
-source string was compiled inside the timed region, exactly the
-cached/runtime split of the reference API (document.zig:406-462).
+Reimplements the observable behavior of the reference's parse hook
+wrapper (src/debug/instrumentation.zig:72-188): ``parse_with_hooks``
+times a parse and emits ``ParseStats{elapsed_ns, input_len,
+node_count}``.  The query-hook twins (``QueryStats`` with the
+reference's cached/runtime split) have no caller outside the tests and
+live in ``tests/support.py``.
 
 Hooks are plain callables (``on_parse_start(input_len)``,
-``on_parse_end(stats)``, ``on_query_end(stats)``); in the Spark
-pipeline the same payloads feed per-partition metric rows in the
+``on_parse_end(stats)``); in the Spark pipeline the same payloads feed
+``html_ops.parse_stats_udf`` and per-partition metric rows in the
 control table (plans/pipeline.py) — the distributed analog of these
 single-process hooks.
 """
-
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Callable, List, Optional, Union
+from typing import Callable, Optional
 
 from .htmlparse import Dom, parse
-from .matcher import query_all, query_one
-from .selector import Selector, compile_selector
 
 
 @dataclass(frozen=True)
@@ -33,14 +27,6 @@ class ParseStats:
     elapsed_ns: int
     input_len: int
     node_count: int
-
-
-@dataclass(frozen=True)
-class QueryStats:
-    elapsed_ns: int
-    selector_len: int
-    kind: str                   # one_runtime|one_cached|all_runtime|all_cached
-    matched: Optional[bool] = None
 
 
 def parse_with_hooks(
@@ -61,51 +47,3 @@ def parse_with_hooks(
             node_count=len(dom),
         ))
     return dom
-
-
-def _resolve(selector: Union[str, Selector]):
-    """(compiled, cached?) — compiling inside the timed region is the
-    'runtime' kind, a precompiled selector the 'cached' kind."""
-    if isinstance(selector, Selector):
-        return selector, True
-    return None, False
-
-
-def query_one_with_hooks(
-    dom: Dom,
-    selector: Union[str, Selector],
-    scope_root: Optional[int] = None,
-    on_query_end: Optional[Callable[[QueryStats], None]] = None,
-) -> Optional[int]:
-    pre, cached = _resolve(selector)
-    t0 = time.perf_counter_ns()
-    sel = pre if cached else compile_selector(selector)
-    idx = query_one(dom, sel, scope_root)
-    if on_query_end is not None:
-        on_query_end(QueryStats(
-            elapsed_ns=max(time.perf_counter_ns() - t0, 0),
-            selector_len=len(sel.source),
-            kind="one_cached" if cached else "one_runtime",
-            matched=idx is not None,
-        ))
-    return idx
-
-
-def query_all_with_hooks(
-    dom: Dom,
-    selector: Union[str, Selector],
-    scope_root: Optional[int] = None,
-    on_query_end: Optional[Callable[[QueryStats], None]] = None,
-) -> List[int]:
-    pre, cached = _resolve(selector)
-    t0 = time.perf_counter_ns()
-    sel = pre if cached else compile_selector(selector)
-    out = query_all(dom, sel, scope_root)
-    if on_query_end is not None:
-        on_query_end(QueryStats(
-            elapsed_ns=max(time.perf_counter_ns() - t0, 0),
-            selector_len=len(sel.source),
-            kind="all_cached" if cached else "all_runtime",
-            matched=True,
-        ))
-    return out

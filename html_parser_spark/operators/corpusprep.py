@@ -122,23 +122,6 @@ def pack_sequences(
     )
 
 
-def split_counts(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    splits: Sequence[Tuple[str, float]] = (
-        ("train", 0.90), ("val", 0.05), ("test", 0.05),
-    ),
-    buckets: int = 1000,
-) -> DataFrame:
-    """Per-split document/token accounting (the sanity table every
-    split job prints): counts and whitespace-token totals."""
-    s = split_assign(docs, id_col, splits, buckets)
-    return s.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count("text").cast("long")).alias("n_tokens"),
-    )
-
-
 def chunk_documents(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -54,13 +54,15 @@ MAX_DOC_BYTES = 16 * 1024 * 1024
 
 
 def doc_udf(schema, fn):
-    """The one Arrow-batched pandas UDF shape behind every HTML
-    operator.  ``fn(data, *args)`` runs once per row on the document's
-    UTF-8 bytes truncated to ``MAX_DOC_BYTES``, followed by that row's
-    values of any further argument columns (the SQL functions' selector
-    and attribute columns).  A null in any input column gives a null
-    result.  For a ``StructType`` schema ``fn`` returns a dict keyed by
-    field name, and a null row becomes a struct of all-null fields."""
+    """The one Arrow-batched pandas UDF shape behind every document
+    operator (HTML, PDF, image decode, media probe).  ``fn(data,
+    *args)`` runs once per row on the document's bytes truncated to
+    ``MAX_DOC_BYTES`` (a string column UTF-8 encoded, a binary column
+    as is), followed by that row's values of any further argument
+    columns (the SQL functions' selector and attribute columns).  A
+    null in any input column gives a null result.  For a ``StructType``
+    schema ``fn`` returns a dict keyed by field name, and a null row
+    becomes a struct of all-null fields."""
     if isinstance(schema, StructType):
         null = dict.fromkeys(schema.fieldNames())
         assemble = partial(pd.DataFrame, columns=list(null))
@@ -79,10 +81,12 @@ def _apply(fn, null, batch) -> list:
     a worker imports this package (and its zip-importer hook, see
     ``html_parser_spark/__init__``) with the first ``doc_udf`` it runs."""
     if isinstance(batch, tuple):  # SQL functions: argument columns
-        return [null if None in row
-                else fn(row[0].encode("utf-8")[:MAX_DOC_BYTES], *row[1:])
-                for row in zip(*batch)]
-    # one column: keep the per-row hot path minimal
+        docs = _apply(lambda data: data, None, batch[0])
+        return [null if None in row else fn(*row) for row in zip(docs, *batch[1:])]
+    # one column: keep the per-row hot path minimal.  Whether it holds
+    # bytes (a binary column) or str is judged once per batch.
+    if isinstance(next((v for v in batch if v is not None), None), bytes):
+        return [null if b is None else fn(b[:MAX_DOC_BYTES]) for b in batch]
     return [null if h is None else fn(h.encode("utf-8")[:MAX_DOC_BYTES])
             for h in batch]
 

@@ -19,8 +19,11 @@ asset.
 Hardening follows the decoder family's contract: strict structural
 validation (a bad sync word, an undersized box, or a truncated frame
 raises ValueError → NULL features upstream, never garbage), walks are
-linear in the payload with strictly increasing offsets (no hang), and
-nothing is allocated proportional to declared-but-absent sizes.
+linear in the payload with strictly increasing offsets (no hang),
+nothing is allocated proportional to declared-but-absent sizes, and
+``probe_media`` runs on ``html_ops.doc_udf``, so it reads at most the
+first ``MAX_DOC_BYTES`` of a payload (a container cut there probes as
+truncated: NULL features).
 
 The synthesizers emit real containers whose every header field derives
 from the asset id, so a SQL oracle reconstructs frame counts, duration
@@ -30,13 +33,13 @@ and dimensions in closed form (``media_probe`` driver twin).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from .html_ops import doc_udf
 
 # ISO/IEC 11172-3 Annex B bitrate tables, kbit/s (index 0 = free format,
 # rejected below; index 15 is invalid)
@@ -449,9 +452,8 @@ def probe_flac(payload: bytes) -> dict:
     }
 
 
+#: the probed features; ``probe_media`` adds ``asset_id`` and ``kind``
 PROBE_SCHEMA = StructType([
-    StructField("asset_id", LongType(), False),
-    StructField("kind", StringType(), False),
     StructField("container", StringType(), True),
     StructField("n_units", LongType(), True),
     StructField("duration_ms", LongType(), True),
@@ -463,46 +465,34 @@ PROBE_SCHEMA = StructType([
 ])
 
 
+def _probe_row(b: bytes) -> dict:
+    try:
+        if len(b) >= 12 and b[4:8] == b"ftyp":
+            return probe_mp4(b)
+        if b[:4] == b"fLaC":
+            return probe_flac(b)
+        if b[:4] == b"\x1a\x45\xdf\xa3":
+            return probe_webm(b)
+        if b[:4] == b"OggS":
+            return probe_ogg(b)
+        if b[:3] == b"\x00\x00\x01" or b[:4] == b"\x00\x00\x00\x01":
+            return probe_h264(b)
+        if b[:3] == b"ID3" or (len(b) >= 2 and b[0] == 0xFF and b[1] & 0xE0 == 0xE0):
+            return probe_mp3(b)
+    except Exception:
+        pass  # hostile payload → NULLs
+    return {}
+
+
 def probe_media(assets: DataFrame) -> DataFrame:
-    """mapInPandas structural probe over binary payloads — same Arrow
-    batch shape as multimodal.extract_features; unknown/broken
-    containers yield NULL features, never a task failure."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, kind, payload in zip(
-                    pdf["asset_id"], pdf["kind"], pdf["payload"]):
-                meta = dict.fromkeys(
-                    ("container", "n_units", "duration_ms", "sample_rate",
-                     "channels", "bit_rate_kbps", "width", "height"))
-                if payload is not None:
-                    b = bytes(payload)
-                    try:
-                        if len(b) >= 12 and b[4:8] == b"ftyp":
-                            meta.update(probe_mp4(b))
-                        elif b[:4] == b"fLaC":
-                            meta.update(probe_flac(b))
-                        elif b[:4] == b"\x1a\x45\xdf\xa3":
-                            meta.update(probe_webm(b))
-                        elif b[:4] == b"OggS":
-                            meta.update(probe_ogg(b))
-                        elif b[:3] == b"\x00\x00\x01" \
-                                or b[:4] == b"\x00\x00\x00\x01":
-                            meta.update(probe_h264(b))
-                        elif b[:3] == b"ID3" or (
-                                len(b) >= 2 and b[0] == 0xFF and b[1] & 0xE0 == 0xE0):
-                            meta.update(probe_mp3(b))
-                    except Exception:
-                        meta = dict.fromkeys(meta)  # hostile payload → NULLs
-                rows.append((
-                    asset_id, kind, meta["container"], meta["n_units"],
-                    meta["duration_ms"], meta["sample_rate"], meta["channels"],
-                    meta["bit_rate_kbps"], meta["width"], meta["height"],
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in PROBE_SCHEMA.fields])
-
-    return assets.mapInPandas(run, PROBE_SCHEMA)
+    """Structural probe over binary payloads: one ``doc_udf`` struct
+    column over the first ``MAX_DOC_BYTES`` of each payload, the same
+    Arrow batch shape as multimodal.extract_features.  Unknown or
+    broken containers and null payloads yield NULL features, never a
+    task failure."""
+    meta = doc_udf(PROBE_SCHEMA, _probe_row)("payload")
+    return assets.select("asset_id", "kind", meta.alias("_m")).select(
+        "asset_id", "kind", "_m.*")
 
 
 def synth_mp3(asset_id: int) -> bytes:

@@ -10,10 +10,11 @@ and raises
 ``NotImplementedError`` for formats that genuinely need codecs this
 container doesn't ship (arithmetic-coded JPEG, MP3, H.264).  A
 deterministic ``fake_decode`` remains for opaque test payloads.
-Everything Spark-side — schema, Arrow batch shape, ``mapInPandas``
-signatures, partitioning — is shared by both paths; the real-decode
-path is value-checked end-to-end by the driver oracle on synthesized
-ASCII-pixel PPMs (``multimodal_real_decode``).
+Everything Spark-side — schema, the ``html_ops.doc_udf`` Arrow batch
+shape with its ``MAX_DOC_BYTES`` bound, partitioning — is shared by
+both paths; the real-decode path is value-checked end-to-end by the
+driver oracle on synthesized ASCII-pixel PPMs
+(``multimodal_real_decode``).
 """
 
 from __future__ import annotations
@@ -23,15 +24,16 @@ import io
 import struct
 import wave
 import zlib
-from typing import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, MapType,
     StringType, StructField, StructType,
 )
+
+from .html_ops import doc_udf
 
 ASSET_SCHEMA = StructType([
     StructField("asset_id", LongType(), False),
@@ -40,11 +42,9 @@ ASSET_SCHEMA = StructType([
     StructField("meta", MapType(StringType(), StringType()), True),
 ])
 
-FEATURE_SCHEMA = StructType([
-    StructField("asset_id", LongType(), False),
-    StructField("kind", StringType(), False),
-    StructField("n_bytes", LongType(), True),
-    StructField("content_hash", StringType(), True),
+#: the decode-derived features; ``extract_features`` adds ``asset_id``,
+#: ``kind``, ``n_bytes`` and ``content_hash`` around them
+DECODE_SCHEMA = StructType([
     StructField("width", IntegerType(), True),
     StructField("height", IntegerType(), True),
     StructField("histogram", ArrayType(DoubleType()), True),
@@ -297,124 +297,29 @@ def fake_decode(payload: bytes, kind: str):
     return width, height, hist
 
 
+def _decoded(decode, data: bytes, kind: str) -> dict:
+    try:
+        w, h, hist = decode(data, kind)
+    except Exception:
+        # undecodable payload (unknown/compressed format or truncated
+        # data): permissive contract — decode-derived features are NULL
+        w = h = hist = None
+    return {"width": w, "height": h, "histogram": hist}
+
+
 def extract_features(assets: DataFrame, use_real_codec: bool = False) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads (Arrow
-    batches; no per-row Python UDF overhead)."""
+    """Feature extraction over binary payloads: one ``doc_udf`` struct
+    column decoded from the first ``MAX_DOC_BYTES`` of each payload,
+    beside ``n_bytes`` and ``content_hash`` computed JVM-side over the
+    whole payload.  A null payload gives null features."""
     decode = decode_real if use_real_codec else fake_decode
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
-                if payload is None:
-                    rows.append((asset_id, kind, None, None, None, None, None))
-                    continue
-                payload = bytes(payload)
-                try:
-                    w, h, hist = decode(payload, kind)
-                except Exception:
-                    # undecodable payload (unknown/compressed format or
-                    # truncated data): permissive contract — size + hash
-                    # survive, decode-derived features are NULL
-                    w = h = hist = None
-                rows.append((
-                    asset_id, kind, len(payload),
-                    hashlib.md5(payload).hexdigest(), w, h, hist,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "kind", "n_bytes", "content_hash", "width", "height", "histogram"],
-            )
-
-    return assets.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def synth_ppm(asset_id: int) -> bytes:
-    """Deterministic P6 PPM whose pixel bytes are the ASCII md5
-    hexdigest of the id, repeated — a real decodable image that a SQL
-    oracle can reconstruct character-for-character (the driver's
-    ``multimodal_real_decode`` twin)."""
-    w = 4 + asset_id % 5
-    h = 3 + asset_id % 4
-    npix = w * h * 3
-    digest = hashlib.md5(str(asset_id).encode()).hexdigest().encode()
-    pixels = (digest * (npix // len(digest) + 1))[:npix]
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels
-
-
-def synth_bmp(asset_id: int) -> bytes:
-    """Deterministic 24bpp BMP (BI_RGB, bottom-up, padded rows)."""
-    w = 2 + asset_id % 4
-    h = 2 + asset_id % 3
-    stride = (w * 3 + 3) & ~3
-    pix = bytearray()
-    for r in range(h):
-        row = bytes((asset_id + r * w * 3 + c) % 256 for c in range(w * 3))
-        pix += row + b"\x00" * (stride - w * 3)
-    data_offset = 54
-    size = data_offset + len(pix)
-    header = struct.pack("<2sIHHI", b"BM", size, 0, 0, data_offset)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0)
-    return header + dib + bytes(pix)
-
-
-def synth_png(asset_id: int, color: int = 2, filter_type: int = 0) -> bytes:
-    """Deterministic 8-bit PNG with every scanline forward-filtered
-    with ``filter_type`` (0-4) — exercises the decoder's filter
-    reconstruction for real."""
-    w = 3 + asset_id % 5
-    h = 2 + asset_id % 4
-    ch = _PNG_CHANNELS[color]
-    stride = w * ch
-    pixels = bytes((asset_id * 13 + i) % 256 for i in range(stride * h))
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    raw = bytearray()
-    prev = bytes(stride)
-    for r in range(h):
-        line = pixels[r * stride:(r + 1) * stride]
-        raw.append(filter_type)
-        for i in range(stride):
-            left = line[i - ch] if i >= ch else 0
-            up = prev[i]
-            ul = prev[i - ch] if i >= ch else 0
-            if filter_type == 0:
-                v = line[i]
-            elif filter_type == 1:
-                v = line[i] - left
-            elif filter_type == 2:
-                v = line[i] - up
-            elif filter_type == 3:
-                v = line[i] - ((left + up) >> 1)
-            else:
-                v = line[i] - paeth(left, up, ul)
-            raw.append(v & 0xFF)
-        prev = line
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (_PNG_SIG + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-
-
-def synth_wav(asset_id: int) -> bytes:
-    """Deterministic 8-bit mono PCM WAV."""
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wv:
-        wv.setnchannels(1)
-        wv.setsampwidth(1)
-        wv.setframerate(8000)
-        frames = bytes((asset_id * 7 + i) % 256 for i in range(64))
-        wv.writeframes(frames)
-    return buf.getvalue()
+    feats = doc_udf(DECODE_SCHEMA, partial(_decoded, decode))("payload", "kind")
+    return assets.select(
+        "asset_id", "kind",
+        F.length("payload").cast("long").alias("n_bytes"),
+        F.md5("payload").alias("content_hash"),
+        feats.alias("_f"),
+    ).select("asset_id", "kind", "n_bytes", "content_hash", "_f.*")
 
 
 def synth_assets(spark, n: int = 64) -> DataFrame:
@@ -423,7 +328,7 @@ def synth_assets(spark, n: int = 64) -> DataFrame:
     Payload bytes are the ASCII sha256 hexdigest of the asset id,
     repeated — opaque binary to the pipeline, but reproducible by a
     SQL oracle (``repeat(sha256(cast(i as varchar)), 1 + i % 7)``) so
-    the whole mapInPandas feature path is value-checked end to end.
+    the whole ``doc_udf`` feature path is value-checked end to end.
     """
     kinds = ["image", "audio", "video"]
     rows = []

@@ -2,9 +2,9 @@
 
 ``readStream`` over a transcript directory → ``plans.pipeline.extract_turns``,
 the batch extraction plan (pandas UDFs work identically under streaming) →
-watermarked tumbling-window metrics → sink.  Late turns beyond the
-watermark are dropped from the metric windows (not from extraction,
-which is stateless per row).
+sink; event streams get watermarked tumbling-window rollups and
+watermarked dedup.  Late rows beyond the watermark are dropped from the
+windows (never from extraction, which is stateless per row).
 """
 
 from __future__ import annotations
@@ -50,24 +50,6 @@ def read_transcript_stream(spark: SparkSession, src_dir: str,
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
-    )
-
-
-def windowed_metrics(extracted: DataFrame, window: str = "1 hour",
-                     watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window throughput/volume metrics."""
-    return (
-        extracted.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("role"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.octet_length("main_text")).alias("n_chars"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "role", "n_turns", "n_chars",
-        )
     )
 
 

@@ -1,0 +1,213 @@
+"""Helpers only the tests call: synthetic image/audio encoders for the
+stdlib decoders, thin compositions over production operators, and the
+query-hook twins of ``kernel.instrumentation.parse_with_hooks``.  The
+encoders that feed gated queries (JPEG, GIF, media, PDF) live in the
+package."""
+
+from __future__ import annotations
+
+import hashlib
+import io
+import struct
+import time
+import wave
+import zlib
+from dataclasses import dataclass
+from typing import Callable, List, Optional, Sequence, Tuple, Union
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from html_parser_spark.kernel.htmlparse import Dom
+from html_parser_spark.kernel.matcher import query_all, query_one
+from html_parser_spark.kernel.selector import Selector, compile_selector
+from html_parser_spark.operators.corpusprep import split_assign
+from html_parser_spark.operators.multimodal import _PNG_CHANNELS, _PNG_SIG
+from html_parser_spark.operators.textstats import token_count
+
+
+# -- multimodal: encoders for the stdlib decoders ----------------------
+
+def synth_ppm(asset_id: int) -> bytes:
+    """Deterministic P6 PPM whose pixel bytes are the ASCII md5
+    hexdigest of the id, repeated — a real decodable image that a SQL
+    oracle can reconstruct character-for-character (the driver's
+    ``multimodal_real_decode`` twin)."""
+    w = 4 + asset_id % 5
+    h = 3 + asset_id % 4
+    npix = w * h * 3
+    digest = hashlib.md5(str(asset_id).encode()).hexdigest().encode()
+    pixels = (digest * (npix // len(digest) + 1))[:npix]
+    return b"P6\n%d %d\n255\n" % (w, h) + pixels
+
+
+def synth_bmp(asset_id: int) -> bytes:
+    """Deterministic 24bpp BMP (BI_RGB, bottom-up, padded rows)."""
+    w = 2 + asset_id % 4
+    h = 2 + asset_id % 3
+    stride = (w * 3 + 3) & ~3
+    pix = bytearray()
+    for r in range(h):
+        row = bytes((asset_id + r * w * 3 + c) % 256 for c in range(w * 3))
+        pix += row + b"\x00" * (stride - w * 3)
+    data_offset = 54
+    size = data_offset + len(pix)
+    header = struct.pack("<2sIHHI", b"BM", size, 0, 0, data_offset)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0)
+    return header + dib + bytes(pix)
+
+
+def synth_png(asset_id: int, color: int = 2, filter_type: int = 0) -> bytes:
+    """Deterministic 8-bit PNG with every scanline forward-filtered
+    with ``filter_type`` (0-4) — exercises the decoder's filter
+    reconstruction for real."""
+    w = 3 + asset_id % 5
+    h = 2 + asset_id % 4
+    ch = _PNG_CHANNELS[color]
+    stride = w * ch
+    pixels = bytes((asset_id * 13 + i) % 256 for i in range(stride * h))
+
+    def paeth(a, b, c):
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+
+    raw = bytearray()
+    prev = bytes(stride)
+    for r in range(h):
+        line = pixels[r * stride:(r + 1) * stride]
+        raw.append(filter_type)
+        for i in range(stride):
+            left = line[i - ch] if i >= ch else 0
+            up = prev[i]
+            ul = prev[i - ch] if i >= ch else 0
+            if filter_type == 0:
+                v = line[i]
+            elif filter_type == 1:
+                v = line[i] - left
+            elif filter_type == 2:
+                v = line[i] - up
+            elif filter_type == 3:
+                v = line[i] - ((left + up) >> 1)
+            else:
+                v = line[i] - paeth(left, up, ul)
+            raw.append(v & 0xFF)
+        prev = line
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", zlib.crc32(ctype + data)))
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
+    return (_PNG_SIG + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + chunk(b"IEND", b""))
+
+
+def synth_wav(asset_id: int) -> bytes:
+    """Deterministic 8-bit mono PCM WAV."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wv:
+        wv.setnchannels(1)
+        wv.setsampwidth(1)
+        wv.setframerate(8000)
+        frames = bytes((asset_id * 7 + i) % 256 for i in range(64))
+        wv.writeframes(frames)
+    return buf.getvalue()
+
+
+# -- corpusprep ------------------------------------------------------
+
+def split_counts(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    splits: Sequence[Tuple[str, float]] = (
+        ("train", 0.90), ("val", 0.05), ("test", 0.05),
+    ),
+    buckets: int = 1000,
+) -> DataFrame:
+    """Per-split document/token accounting (the sanity table every
+    split job prints): counts and whitespace-token totals."""
+    s = split_assign(docs, id_col, splits, buckets)
+    return s.groupBy("split").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(token_count("text").cast("long")).alias("n_tokens"),
+    )
+
+
+# -- streaming -------------------------------------------------------
+
+def windowed_metrics(extracted: DataFrame, window: str = "1 hour",
+                     watermark: str = "2 hours") -> DataFrame:
+    """Watermarked tumbling-window throughput/volume metrics."""
+    return (
+        extracted.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("win"), F.col("role"))
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum(F.octet_length("main_text")).alias("n_chars"),
+        )
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "role", "n_turns", "n_chars",
+        )
+    )
+
+
+# -- instrumentation: query hooks (reference instrumentation.zig) --
+
+@dataclass(frozen=True)
+class QueryStats:
+    elapsed_ns: int
+    selector_len: int
+    kind: str                   # one_runtime|one_cached|all_runtime|all_cached
+    matched: Optional[bool] = None
+
+
+def _resolve(selector: Union[str, Selector]):
+    """(compiled, cached?) — compiling inside the timed region is the
+    'runtime' kind, a precompiled selector the 'cached' kind."""
+    if isinstance(selector, Selector):
+        return selector, True
+    return None, False
+
+
+def query_one_with_hooks(
+    dom: Dom,
+    selector: Union[str, Selector],
+    scope_root: Optional[int] = None,
+    on_query_end: Optional[Callable[[QueryStats], None]] = None,
+) -> Optional[int]:
+    pre, cached = _resolve(selector)
+    t0 = time.perf_counter_ns()
+    sel = pre if cached else compile_selector(selector)
+    idx = query_one(dom, sel, scope_root)
+    if on_query_end is not None:
+        on_query_end(QueryStats(
+            elapsed_ns=max(time.perf_counter_ns() - t0, 0),
+            selector_len=len(sel.source),
+            kind="one_cached" if cached else "one_runtime",
+            matched=idx is not None,
+        ))
+    return idx
+
+
+def query_all_with_hooks(
+    dom: Dom,
+    selector: Union[str, Selector],
+    scope_root: Optional[int] = None,
+    on_query_end: Optional[Callable[[QueryStats], None]] = None,
+) -> List[int]:
+    pre, cached = _resolve(selector)
+    t0 = time.perf_counter_ns()
+    sel = pre if cached else compile_selector(selector)
+    out = query_all(dom, sel, scope_root)
+    if on_query_end is not None:
+        on_query_end(QueryStats(
+            elapsed_ns=max(time.perf_counter_ns() - t0, 0),
+            selector_len=len(sel.source),
+            kind="all_cached" if cached else "all_runtime",
+            matched=True,
+        ))
+    return out

@@ -3,9 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from html_parser_spark.operators.corpusprep import (
-    pack_sequences, split_assign, split_counts,
-)
+from html_parser_spark.operators.corpusprep import pack_sequences, split_assign
+from support import split_counts
 
 
 def _docs(spark, rows):

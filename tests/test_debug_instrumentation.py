@@ -5,15 +5,13 @@ reference src/selector/matcher_debug.zig) and instrumentation hooks
 import pytest
 
 from html_parser_spark.kernel.htmlparse import INVALID, parse
-from html_parser_spark.kernel.instrumentation import (
-    ParseStats, QueryStats, parse_with_hooks, query_all_with_hooks,
-    query_one_with_hooks,
-)
+from html_parser_spark.kernel.instrumentation import ParseStats, parse_with_hooks
 from html_parser_spark.kernel.matcher import query_one
 from html_parser_spark.kernel.matcher_debug import (
     MAX_NEAR_MISSES, explain_first_match,
 )
 from html_parser_spark.kernel.selector import compile_selector
+from support import QueryStats, query_all_with_hooks, query_one_with_hooks
 
 FIXTURE = (
     b"<div id='a' class='x y'>"

@@ -253,9 +253,9 @@ def test_multimodal_real_stdlib_decoders(spark):
     WAV with stdlib only; undecodable payloads yield NULL features (not
     a task failure) through the Spark path."""
     from html_parser_spark.operators.multimodal import (
-        ASSET_SCHEMA, decode_real, extract_features, synth_bmp, synth_ppm,
-        synth_wav,
+        ASSET_SCHEMA, decode_real, extract_features,
     )
+    from support import synth_bmp, synth_ppm, synth_wav
 
     # PPM: dims from the synth formula; histogram = digit/letter bins only
     w, h, hist = decode_real(synth_ppm(5), "image")
@@ -279,7 +279,7 @@ def test_multimodal_real_stdlib_decoders(spark):
     # PNG: all five filter types and all four color types must
     # reconstruct the SAME pixels (identical histogram), proving the
     # filter reconstruction is real, not pass-through
-    from html_parser_spark.operators.multimodal import synth_png
+    from support import synth_png
 
     for color in (0, 2, 4, 6):
         base = decode_real(synth_png(9, color=color, filter_type=0), "image")
@@ -593,7 +593,8 @@ def test_multimodal_hardening_round4():
     import struct as _s
     import zlib as _z
 
-    from html_parser_spark.operators.multimodal import decode_real, synth_ppm
+    from html_parser_spark.operators.multimodal import decode_real
+    from support import synth_ppm
 
     # CRLF after maxval (Windows-written Netpbm): one delimiter, pixels
     # must not shift — decode equals the LF-delimited twin

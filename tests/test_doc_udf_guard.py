@@ -1,19 +1,33 @@
-"""Every HTML operator is built on ``html_ops.doc_udf``, so every one
-truncates its input at ``MAX_DOC_BYTES`` and maps a null input to a
-null result.  One case per operator; the case table must list every
-public ``*_udf`` of ``html_ops`` and every ``html_*`` SQL function."""
+"""Every document operator (HTML, PDF, image decode, media probe) is
+built on ``html_ops.doc_udf``, so every one truncates its input at
+``MAX_DOC_BYTES`` and maps a null input to a null result.  One case
+per operator; the case table must list every public ``*_udf`` of
+``html_ops`` and ``layout`` and every ``html_*`` SQL function."""
+
+import hashlib
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import IntegerType, StringType
 
-from html_parser_spark.operators import html_ops
+from html_parser_spark.kernel.pdftext import synth_pdf
+from html_parser_spark.operators import html_ops, layout
 from html_parser_spark.operators.boilerplate import text_blocks_udf
 from html_parser_spark.operators.html_ops import MAX_DOC_BYTES
+from html_parser_spark.operators.mediaprobe import probe_media, synth_mp4
+from html_parser_spark.operators.multimodal import extract_features, fake_decode
 
 HEAD = '<p id="head">'
 #: everything here lies past the cut; the table feeds table_cells_udf
 TAIL = '</p><table><tr><td><b id="tail">tail</b></td></tr></table>'
+GIANT_LEN = len(HEAD) + MAX_DOC_BYTES + len(TAIL)
+#: a PDF whose only text is the marker, appended past the cut
+TAIL_PDF = synth_pdf(["tail"])
+#: ftyp + moov of a valid MP4; the giant document becomes one mdat box
+#: between them, so the moov lies past the cut
+MP4 = synth_mp4(1)
+FTYP, MOOV = MP4[:24], MP4[24:]
 
 
 def _ident(c):
@@ -27,6 +41,18 @@ def _no_tail(c):
 
 def _sql(expr):
     return lambda html: F.expr(expr)
+
+
+def _binary(c):
+    return c.cast("binary")
+
+
+def _pdf_has_tail(pdf):
+    """1 when the PDF's (FlateDecode) content stream holds the marker."""
+    def one(data):
+        stream = data.split(b"stream\n", 1)[1].rsplit(b"\nendstream", 1)[0]
+        return int(b"tail" in zlib.decompress(stream))
+    return html_ops.doc_udf(IntegerType(), one)(pdf)
 
 
 # name -> (build: html column -> output column, probe, expected probe)
@@ -55,6 +81,36 @@ CASES = {
     "html_inner_text": (_sql("html_inner_text(html, '#tail')"), _no_tail, 0),
     "html_attr": (_sql("html_attr(html, '#tail', 'id')"), _no_tail, 0),
     "html_markdown": (_sql("html_markdown(html)"), _no_tail, 0),
+    "pdf_extract_udf": (lambda h: layout.pdf_extract_udf()(
+        F.concat(_binary(h), F.lit(TAIL_PDF))), lambda c: c["n_objects"], 0),
+    "synth_pdf_udf": (lambda h: layout.synth_pdf_udf()(h), _pdf_has_tail, 0),
+}
+
+
+def _assets(docs, payload=_binary):
+    """The test documents as an asset frame with ``payload(html)``."""
+    return docs.select(F.col("id").alias("asset_id"), F.lit("video").alias("kind"),
+                       payload(F.col("html")).alias("payload"))
+
+
+def _features(op, payload=_binary):
+    """Build a DataFrame operator's output as struct column ``out``
+    beside ``id``."""
+    def build(docs):
+        out = op(_assets(docs, payload))
+        feats = [c for c in out.columns if c not in ("asset_id", "kind")]
+        return out.select(F.col("asset_id").alias("id"), F.struct(*feats).alias("out"))
+    return build
+
+
+# name -> (build: docs -> frame of (id, out), probe, expected probe)
+FRAME_CASES = {
+    # the decode's truncation is checked on the whole payload below
+    "extract_features": (_features(extract_features), lambda c: c["n_bytes"], GIANT_LEN),
+    # untruncated, the mdat box is skipped and the moov found
+    "probe_media": (_features(probe_media, lambda h: F.concat(
+        F.lit(FTYP + (8 + GIANT_LEN).to_bytes(4, "big") + b"mdat"),
+        _binary(h), F.lit(MOOV))), lambda c: c["container"], None),
 }
 
 
@@ -70,19 +126,35 @@ def docs(spark):
 
 def test_case_table_lists_every_html_udf(spark):
     html_ops.register_sql_functions(spark)
-    udfs = {n for n in dir(html_ops) if n.endswith("_udf") and not n.startswith("_")}
+    udfs = {n for mod in (html_ops, layout) for n in dir(mod)
+            if n.endswith("_udf") and not n.startswith("_")}
     sql = {f.name for f in spark.catalog.listFunctions(pattern="html_*")}
     assert udfs | {"text_blocks_udf"} | sql == set(CASES)
 
 
-@pytest.mark.parametrize("name", sorted(CASES))
+@pytest.mark.parametrize("name", sorted(CASES) + sorted(FRAME_CASES))
 def test_truncates_at_max_doc_bytes_and_propagates_null(docs, name):
-    build, probe, expected = CASES[name]
+    if name in CASES:
+        build, probe, expected = CASES[name]
+        out = docs.withColumn("out", build(F.col("html")))
+    else:
+        build, probe, expected = FRAME_CASES[name]
+        out = build(docs)
     is_giant = F.col("id") == 0
-    rows = (docs.withColumn("out", build(F.col("html")))
-                .select("id",
-                        F.when(is_giant, probe(F.col("out"))).alias("probe"),
-                        F.when(~is_giant, F.to_json(F.array("out"))).alias("null_out"))
-                .orderBy("id").collect())
+    rows = (out.select("id",
+                       F.when(is_giant, probe(F.col("out"))).alias("probe"),
+                       F.when(~is_giant, F.to_json(F.array("out"))).alias("null_out"))
+               .orderBy("id").collect())
     assert rows[0]["probe"] == expected
     assert rows[1]["null_out"] in ("[null]", "[{}]")
+
+
+def test_extract_features_hashes_whole_payload_decodes_prefix(docs):
+    """``n_bytes`` and ``content_hash`` describe the whole payload;
+    the decoded features come from its first ``MAX_DOC_BYTES``."""
+    row = extract_features(_assets(docs)).where("asset_id = 0").first()
+    full = (HEAD + "x" * MAX_DOC_BYTES + TAIL).encode()
+    assert row["n_bytes"] == GIANT_LEN
+    assert row["content_hash"] == hashlib.md5(full).hexdigest()
+    w, h, hist = fake_decode(full[:MAX_DOC_BYTES], "image")
+    assert (row["width"], row["height"], row["histogram"]) == (w, h, hist)

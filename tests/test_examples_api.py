@@ -91,9 +91,8 @@ def test_strict_vs_fastest_parse():
 
 # examples/instrumentation_hooks.zig
 def test_instrumentation_hooks():
-    from html_parser_spark.kernel.instrumentation import (
-        parse_with_hooks, query_one_with_hooks,
-    )
+    from html_parser_spark.kernel.instrumentation import parse_with_hooks
+    from support import query_one_with_hooks
 
     calls = {"parse_start": 0, "parse_end": 0, "query_end": 0}
     dom = parse_with_hooks(

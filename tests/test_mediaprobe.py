@@ -1,7 +1,7 @@
 """Structural media probe tests: MP3 frame walking (ISO 11172-3
 headers, ID3 tags, padding, VBR) and MP4 box walking (14496-12 —
 version-1 boxes, largesize, size-0, depth/zero-timescale hostility),
-plus the Spark mapInPandas path's NULL-on-hostile contract."""
+plus the Spark ``doc_udf`` path's NULL-on-hostile contract."""
 
 import struct
 

@@ -7,8 +7,9 @@ from pyspark.sql import functions as F
 from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 from html_parser_spark.streaming.stream import (
-    read_transcript_stream, run_available_now, windowed_metrics,
+    read_transcript_stream, run_available_now,
 )
+from support import windowed_metrics
 
 
 @pytest.fixture(scope="module")

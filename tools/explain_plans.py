@@ -117,6 +117,18 @@ CHECKS = {
         "no_exchange_before_kernel": lambda p: _no_exchange_before_arrow(p),
         "arrow_eval": lambda p: "ArrowEvalPython" in p,
         "pruned_scan": lambda p: re.search(r"ReadSchema:[^\n]*text", p),
+        # synth + extract, chained into one Arrow pass
+        "single_arrow_pass": lambda p: _single_arrow_pass(p, n_udfs=2),
+    },
+    # document kernels over binary payloads run on ``doc_udf``: one
+    # Arrow UDF, never a ``mapInPandas`` row loop
+    "multimodal_real_decode": {
+        "single_arrow_pass": lambda p: _single_arrow_pass(p),
+        "no_map_in_pandas": lambda p: "MapInPandas" not in p,
+    },
+    "media_probe": {
+        "single_arrow_pass": lambda p: _single_arrow_pass(p),
+        "no_map_in_pandas": lambda p: "MapInPandas" not in p,
     },
     "ann_ivf_topk": {
         "takeordered": lambda p: "TakeOrderedAndProject" in p,
@@ -350,11 +362,13 @@ CHECKS = {
 
 
 def _single_arrow_pass(p: str, n_udfs: int = 1) -> bool:
-    """Exactly one ArrowEvalPython per Python UDF in the operator tree
-    (the details and codegen dumps repeat the node name) and no per-row
-    Python."""
-    tree = p.split("== Physical Plan ==")[1].split("\n\n")[0]
-    return tree.count("ArrowEvalPython") == n_udfs and "BatchEvalPython" not in p
+    """Each of the plan's ``n_udfs`` Python UDFs is evaluated exactly
+    once, in an Arrow pass, and no per-row Python.  Counted as UDF
+    applications (``name(args)#id``) in the ArrowEvalPython details:
+    Spark chains ``f(g(x))`` into one node that applies both."""
+    args = re.findall(r"\(\d+\) ArrowEvalPython\n(?:[^\n]*\n)*?Arguments: \[([^\n]*?)\], \[", p)
+    applied = sum(len(re.findall(r"\)#\d+", a)) for a in args)
+    return applied == n_udfs and "BatchEvalPython" not in p
 
 
 def _window_group_limit_before_exchange(p: str) -> bool:
