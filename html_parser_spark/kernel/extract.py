@@ -25,7 +25,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import List, Optional, Tuple
 
-from .attrs import attrs_of  # noqa: F401  (re-export convenience)
 from .entities import decode_entities
 from .htmlparse import Dom, ELEMENT, TEXT, parse
 from .matcher import iter_query

@@ -38,7 +38,7 @@ from typing import List
 from .attrs import get_attr
 from .entities import decode_entities
 from .htmlparse import DOCUMENT, ELEMENT, TEXT, Dom
-from .text import normalize_ws
+from .text import inner_text, normalize_ws
 
 # Tags whose subtree is dropped entirely.
 _DROP = frozenset((b"script", b"style", b"template", b"head", b"title",
@@ -69,12 +69,6 @@ _EM = frozenset((b"em", b"i"))
 MAX_RENDER_DEPTH = 200
 
 
-def _flat_text(dom: Dom, idx: int) -> str:
-    """Iterative innerText fallback for beyond-cap subtrees."""
-    from .text import inner_text
-    return inner_text(dom, idx, True).decode("utf-8", "replace")
-
-
 def _children(dom: Dom, parent_idx: int) -> List[int]:
     """Direct-child node indexes (same walk the serializer uses)."""
     out: List[int] = []
@@ -91,20 +85,16 @@ def _children(dom: Dom, parent_idx: int) -> List[int]:
     return out
 
 
+def _text(dom: Dom, idx: int, normalize: bool = False) -> str:
+    """Entity-decoded text of node ``idx``'s subtree (of the node itself
+    for a text node), whitespace-collapsed when ``normalize``."""
+    return inner_text(dom, idx, normalize).decode("utf-8", "replace")
+
+
 def _decoded_attr(dom: Dom, idx: int, name: str) -> str:
+    """Attribute value as text; ``get_attr`` has already decoded it."""
     v = get_attr(dom, idx, name)
-    if v is None:
-        return ""
-    return decode_entities(v).decode("utf-8", "replace")
-
-
-def _raw_text(dom: Dom, idx: int) -> str:
-    """Entity-decoded, non-collapsed subtree text (for <pre> bodies)."""
-    lo = idx + 1
-    hi = min(dom.subtree_end[idx] + 1, len(dom.kind))
-    segs = [decode_entities(dom.text_bytes(j))
-            for j in range(lo, hi) if dom.kind[j] == TEXT]
-    return b"".join(segs).decode("utf-8", "replace")
+    return "" if v is None else v.decode("utf-8", "replace")
 
 
 def _inline(dom: Dom, idx: int, out: List[str], depth: int = 0) -> None:
@@ -119,7 +109,7 @@ def _inline(dom: Dom, idx: int, out: List[str], depth: int = 0) -> None:
     if name in _DROP:
         return
     if depth >= MAX_RENDER_DEPTH:
-        out.append(_flat_text(dom, idx))
+        out.append(_text(dom, idx, True))
         return
     if name == b"br":
         out.append("\x00")  # placeholder: survives collapse, becomes \n
@@ -230,7 +220,7 @@ def _render_blocks(dom: Dom, child_idxs: List[int],
 
     if depth >= MAX_RENDER_DEPTH:
         for c in child_idxs:
-            t = _collapse([_flat_text(dom, c)])
+            t = _collapse([_text(dom, c, True)])
             if t:
                 blocks.append(t)
         return blocks
@@ -277,7 +267,7 @@ def _render_blocks(dom: Dom, child_idxs: List[int],
                 blocks.append("\n".join(
                     ("> " + ln).rstrip() for ln in sub.split("\n")))
         elif name == b"pre":
-            body = _raw_text(dom, c).strip("\n")
+            body = _text(dom, c).strip("\n")
             blocks.append("```\n" + body + "\n```")
         elif name == b"hr":
             blocks.append("---")
@@ -297,13 +287,11 @@ def to_markdown(dom: Dom, idx: int = 0) -> str:
     trailing newline."""
     k = dom.kind[idx]
     if k == TEXT:
-        return _collapse([decode_entities(dom.text_bytes(idx)).decode("utf-8", "replace")])
+        return _collapse([_text(dom, idx)])
     if k == DOCUMENT:
         kids = _children(dom, idx)
+    elif dom.name_lower[idx] in _DROP:
+        return ""
     else:
-        name = dom.name_lower[idx]
-        if name in _DROP:
-            return ""
         kids = [idx]  # let the block dispatcher classify the node itself
-        return "\n\n".join(_render_blocks(dom, kids))
     return "\n\n".join(_render_blocks(dom, kids))

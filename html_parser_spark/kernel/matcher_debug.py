@@ -12,7 +12,9 @@ are kept.
 Failure classification (matcher_debug.zig:73-121):
 * evaluate the rightmost compound's predicates in the canonical order
   tag → id → class → attr → pseudo → :not, counting successful
-  predicates in ``predicate_index``;
+  predicates in ``predicate_index``.  Each step asks
+  ``matcher.matches_compound`` about the compound cut after that
+  predicate, so the report cannot disagree with the matcher;
 * if the rightmost compound fully matches but the group still failed:
   a single-compound group with a leading combinator that misses its
   scope anchor fails with ``scope``; a multi-compound group fails with
@@ -21,15 +23,12 @@ Failure classification (matcher_debug.zig:73-121):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import List, Optional
+from dataclasses import dataclass, field, replace
+from functools import lru_cache
+from typing import List, Optional, Tuple
 
-from .attrs import attrs_of
 from .htmlparse import Dom, ELEMENT, INVALID
-from .matcher import (
-    _attr_op_matches, _match_chain, _matches_scope_anchor, _token_includes,
-    next_element_sibling, parent_element, prev_element_sibling,
-)
+from .matcher import _match_chain, _matches_scope_anchor, matches_compound
 from .selector import Compound, Selector
 
 MAX_NEAR_MISSES = 8
@@ -72,78 +71,41 @@ class QueryDebugReport:
             self.near_misses.append(NearMiss(node_index, reason))
 
 
+#: (failure kind, Compound field) in the matcher's canonical predicate
+#: order tag → id → class → attr → pseudo → :not (matcher.zig:242-305).
+_CANONICAL_ORDER = (
+    ("tag", "tag"), ("id", "id"), ("class", "classes"), ("attr", "attrs"),
+    ("pseudo", "pseudos"), ("not_simple", "nots"),
+)
+
+
+@lru_cache(maxsize=512)
+def _predicate_prefixes(comp: Compound) -> Tuple[Tuple[str, Compound], ...]:
+    """One ``(kind, prefix)`` step per predicate of ``comp``: ``prefix``
+    is ``comp`` cut just after that predicate, in canonical order."""
+    steps = []
+    prefix = Compound()
+    for kind, name in _CANONICAL_ORDER:
+        value = getattr(comp, name)
+        if isinstance(value, tuple):
+            for k in range(1, len(value) + 1):
+                prefix = replace(prefix, **{name: value[:k]})
+                steps.append((kind, prefix))
+        elif value is not None:
+            prefix = replace(prefix, **{name: value})
+            steps.append((kind, prefix))
+    return tuple(steps)
+
+
 def _classify_compound_failure(
     dom: Dom, comp: Compound, idx: int, g: int, c: int
 ) -> Failure:
-    """First failing predicate of one compound at one node, in the
-    canonical predicate order (matcher_debug.zig:105-188)."""
-    predicate_index = 0
-
-    if comp.tag is not None:
-        if dom.name_lower[idx] != comp.tag:
-            return Failure("tag", g, c, predicate_index)
-        predicate_index += 1
-
-    attrs = attrs_of(dom, idx)
-
-    if comp.id is not None:
-        v = attrs.get(b"id")
-        if v is None or v != comp.id:
-            return Failure("id", g, c, predicate_index)
-        predicate_index += 1
-
-    if comp.classes:
-        cv = attrs.get(b"class")
-        if cv is None:
-            return Failure("class", g, c, predicate_index)
-        for cls in comp.classes:
-            if not _token_includes(cv, cls):
-                return Failure("class", g, c, predicate_index)
-            predicate_index += 1
-
-    for a in comp.attrs:
-        raw = attrs.get(a.name)
-        if raw is None or not _attr_op_matches(a.op, raw, a.value):
-            return Failure("attr", g, c, predicate_index)
-        predicate_index += 1
-
-    for p in comp.pseudos:
-        ok = True
-        if p.kind == "first_child":
-            ok = prev_element_sibling(dom, idx) is None
-        elif p.kind == "last_child":
-            ok = next_element_sibling(dom, idx) is None
-        else:  # nth_child
-            if parent_element(dom, idx) is None:
-                ok = False
-            else:
-                position = 1
-                prev = dom.prev_sibling[idx]
-                while prev != INVALID:
-                    position += 1
-                    prev = dom.prev_sibling[prev]
-                ok = p.nth_matches(position)
-        if not ok:
-            return Failure("pseudo", g, c, predicate_index)
-        predicate_index += 1
-
-    for item in comp.nots:
-        matched = False
-        if item.kind == "tag":
-            matched = dom.name_lower[idx] == item.text
-        elif item.kind == "id":
-            v = attrs.get(b"id")
-            matched = v is not None and v == item.text
-        elif item.kind == "class":
-            v = attrs.get(b"class")
-            matched = v is not None and _token_includes(v, item.text)
-        else:
-            raw = attrs.get(item.attr.name)
-            matched = raw is not None and _attr_op_matches(item.attr.op, raw, item.attr.value)
-        if matched:
-            return Failure("not_simple", g, c, predicate_index)
-        predicate_index += 1
-
+    """First failing predicate of one compound at one node
+    (matcher_debug.zig:105-188): the first prefix ``matches_compound``
+    rejects; ``predicate_index`` counts the predicates before it."""
+    for i, (kind, prefix) in enumerate(_predicate_prefixes(comp)):
+        if not matches_compound(dom, prefix, idx):
+            return Failure(kind, g, c, i)
     return Failure()
 
 

@@ -89,6 +89,7 @@ class Selector:
 _WS_RE = re.compile(r"[ \t\n\r\x0c]+")
 _IDENT_RE = re.compile(r"[A-Za-z_:][A-Za-z0-9_\-]*")
 _HTML_WS = " \t\n\r\x0c"
+_COMBINATORS = {">": "child", "+": "adjacent", "~": "sibling"}
 
 
 class _Parser:
@@ -123,54 +124,33 @@ class _Parser:
         self.i = m.end()
         return m.group(0)
 
+    def parse_combinator(self, default: str) -> str:
+        """Consume a ``>``/``+``/``~`` and the whitespace after it and
+        return its combinator; with none there, return ``default``."""
+        comb = _COMBINATORS.get(self.src[self.i]) if self.i < self.n else None
+        if comb is None:
+            return default
+        self.i += 1
+        self.skip_ws()
+        return comb
+
     def parse(self) -> Selector:
         self.skip_ws()
         if self.i >= self.n:
             raise self.error("empty")
         groups = []
         while True:
-            compounds = []
-            first_comb = "none"
-            if self.i < self.n:
-                c = self.peek()
-                if c == ">":
-                    self.i += 1
-                    self.skip_ws()
-                    first_comb = "child"
-                elif c == "+":
-                    self.i += 1
-                    self.skip_ws()
-                    first_comb = "adjacent"
-                elif c == "~":
-                    self.i += 1
-                    self.skip_ws()
-                    first_comb = "sibling"
-            compounds.append(self.parse_compound(first_comb))
+            compounds = [self.parse_compound(self.parse_combinator("none"))]
 
             while True:
                 saw_ws = self.skip_ws()
                 if self.i >= self.n or self.peek() == ",":
                     break
-                comb = "descendant" if saw_ws else "none"
-                c = self.peek()
-                if c == ">":
-                    self.i += 1
-                    self.skip_ws()
-                    comb = "child"
-                elif c == "+":
-                    self.i += 1
-                    self.skip_ws()
-                    comb = "adjacent"
-                elif c == "~":
-                    self.i += 1
-                    self.skip_ws()
-                    comb = "sibling"
+                comb = self.parse_combinator("descendant" if saw_ws else "none")
                 if comb == "none":
                     raise self.error("expected combinator")
                 compounds.append(self.parse_compound(comb))
 
-            if not compounds:
-                raise self.error("empty group")
             groups.append(tuple(compounds))
 
             self.skip_ws()

@@ -1,4 +1,4 @@
-"""Text extraction: entity decode + whitespace normalization + spans.
+"""Text extraction: entity decode + whitespace normalization.
 
 Models reference src/html/node.zig:77-171 (innerText/innerTextOwned)
 and node.zig:203-227 (normalizeWhitespaceInPlace):
@@ -18,7 +18,7 @@ and node.zig:203-227 (normalizeWhitespaceInPlace):
 from __future__ import annotations
 
 import re
-from typing import List, Tuple
+from typing import List
 
 from .entities import decode_entities
 from .htmlparse import Dom, TEXT, WS_BYTES
@@ -50,15 +50,3 @@ def inner_text(dom: Dom, idx: int, normalize_whitespace: bool = True) -> bytes:
     if not normalize_whitespace:
         return raw
     return normalize_ws(raw)
-
-
-def inner_text_with_spans(
-    dom: Dom, idx: int, normalize_whitespace: bool = True
-) -> Tuple[bytes, List[Tuple[int, int]]]:
-    """Like :func:`inner_text` plus the raw byte spans (into the
-    original source) of every contributing text node."""
-    nodes = _gather(dom, idx)
-    spans = [(dom.start[j], dom.end[j]) for j in nodes]
-    raw = b"".join(decode_entities(dom.text_bytes(j)) for j in nodes)
-    text = normalize_ws(raw) if normalize_whitespace else raw
-    return text, spans

@@ -12,18 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType, TimestampType,
+    DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
-TRANSCRIPT_SCHEMA = StructType([
-    StructField("conv_id", StringType(), True),
-    StructField("turn_idx", IntegerType(), True),
-    StructField("role", StringType(), True),
-    StructField("text", StringType(), True),
-    StructField("tool", StringType(), True),
-    StructField("ts", TimestampType(), True),
-])
+from ..sources.catalog import TRANSCRIPT_DDL
 
 EVENTS_SCHEMA = StructType([
     StructField("event_id", LongType(), True),
@@ -47,7 +39,7 @@ def read_events_stream(spark: SparkSession, src_dir: str,
 def read_transcript_stream(spark: SparkSession, src_dir: str,
                            max_files_per_trigger: int = 4) -> DataFrame:
     return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        spark.readStream.schema(TRANSCRIPT_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
     )

@@ -4,9 +4,7 @@ from html_parser_spark.kernel.entities import decode_entities
 from html_parser_spark.kernel.htmlparse import parse
 from html_parser_spark.kernel.matcher import query_one
 from html_parser_spark.kernel.selector import compile_selector
-from html_parser_spark.kernel.text import (
-    inner_text, inner_text_with_spans, normalize_ws,
-)
+from html_parser_spark.kernel.text import inner_text, normalize_ws
 
 
 def q1(dom, sel):
@@ -81,14 +79,6 @@ def test_inner_text_on_text_node():
     p = q1(dom, "p")
     assert inner_text(dom, p + 1) == b"hi & bye"
     assert inner_text(dom, p + 1, False) == b" hi & bye "
-
-
-def test_spans_are_raw_byte_offsets():
-    html = "<div id='x'>AB<b>CD</b>EF</div>"
-    dom = parse(html)
-    text, spans = inner_text_with_spans(dom, q1(dom, "#x"))
-    assert text == b"ABCDEF"
-    assert [html[s:e] for s, e in spans] == ["AB", "CD", "EF"]
 
 
 def test_multibyte_utf8_text():

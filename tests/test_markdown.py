@@ -45,6 +45,13 @@ def test_links_and_images():
     assert md("<p><img src='i.png'></p>") == "![](i.png)"
 
 
+def test_attribute_values_decode_once():
+    # the parser decodes attribute values; a second decode would turn
+    # the literal "&amp;lt;" into "<"
+    assert md('<a href="/x?a=1&amp;amp;lt;b">t</a>') == "[t](/x?a=1&amp;lt;b)"
+    assert md('<img src="i&amp;amp;.png" alt="&amp;amp;gt;">') == "![&amp;gt;](i&amp;.png)"
+
+
 def test_blockquote_prefixes_every_line():
     assert md("<blockquote><p>a</p><p>b</p></blockquote>") == "> a\n>\n> b"
 

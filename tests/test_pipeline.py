@@ -15,7 +15,11 @@ from html_parser_spark.sources.transcripts import transcripts_from_documents
 
 @pytest.fixture(scope="module")
 def transcripts(spark, sf_dir):
-    return transcripts_from_documents(spark, sf_dir, n_convs=50).cache()
+    # unpersisted at module end: a cached copy would stand in for this
+    # plan in later tests' physical plans (test_plans' pruning check)
+    t = transcripts_from_documents(spark, sf_dir, n_convs=50).cache()
+    yield t
+    t.unpersist()
 
 
 def test_per_turn_text_equality(spark, transcripts):

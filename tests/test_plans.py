@@ -1,42 +1,18 @@
-"""Physical-plan regression tests: the scale-critical plan properties
-(PLANS.md is the full audit; these pin the load-bearing ones so a
-refactor that silently loses them fails CI)."""
+"""Physical-plan regression tests: every check of the plan audit
+(``tools/explain_plans.py``, whose output is PLANS.md) runs here too, so
+a refactor that silently loses a scale-critical plan property fails
+CI."""
 
-import io
-from contextlib import redirect_stdout
+import pytest
 
-from pyspark.sql import functions as F
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-        df.explain("codegen")
-    return buf.getvalue()
+from tools.explain_plans import CHECKS, plan_frame, plan_of
 
 
-def test_extraction_has_no_exchange_before_kernel(spark, sf_dir):
-    """Map-only extraction: the Python kernel must consume scan output
-    directly (the single most important plan property at 100 TB)."""
-    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
-    from html_parser_spark.sources.transcripts import transcripts_from_documents
-
-    t = transcripts_from_documents(spark, sf_dir, n_convs=20)
-    p = plan_of(extract_turns(t.drop("doc_id", "expected_main_text"),
-                              PipelineConfig()))
-    assert "ArrowEvalPython" in p
-    tree = p.split("== Physical Plan ==")[1].splitlines()
-    idx = {}
-    for i, ln in enumerate(tree):
-        for key in ("ArrowEvalPython", "Exchange", "Scan parquet"):
-            if key in ln and key not in idx:
-                idx[key] = i
-    assert "ArrowEvalPython" in idx and "Scan parquet" in idx
-    # formatted tree lists operators top-down: any Exchange between the
-    # kernel and its scan means a shuffle feeds the kernel
-    if "Exchange" in idx:
-        assert not (idx["ArrowEvalPython"] < idx["Exchange"] < idx["Scan parquet"])
+@pytest.mark.parametrize("name", list(CHECKS))
+def test_plan_audit(spark, sf_dir, name):
+    p = plan_of(plan_frame(spark, name, sf_dir))
+    failed = [check for check, fn in CHECKS[name].items() if not fn(p)]
+    assert not failed, f"{name}: {failed}"
 
 
 def test_salted_extraction_runs_kernel_once(spark, sf_dir):
@@ -54,45 +30,3 @@ def test_salted_extraction_runs_kernel_once(spark, sf_dir):
     assert len(arrow) == 1 and len(exchange) == 1
     # the tree lists operators top-down: the Exchange sits below the kernel
     assert arrow[0] < exchange[0]
-
-
-def test_dimension_joins_broadcast(spark, sf_dir):
-    import __spark_entry__ as m
-
-    p = plan_of(m.queries()["join_region_revenue"](spark, sf_dir))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-
-
-def test_filter_pushdown_reaches_scan(spark, sf_dir):
-    import __spark_entry__ as m
-
-    p = plan_of(m.queries()["window_top_order"](spark, sf_dir))
-    assert "PushedFilters" in p and "o_custkey" in p.split("PushedFilters")[1][:200]
-
-
-def test_topk_is_take_ordered(spark, sf_dir):
-    import __spark_entry__ as m
-
-    p = plan_of(m.queries()["topk_orders"](spark, sf_dir))
-    assert "TakeOrderedAndProject" in p
-
-
-def test_column_pruning(spark, sf_dir):
-    """A two-column aggregate over lineitem must not read the wide
-    comment column."""
-    import __spark_entry__ as m
-
-    p = plan_of(m.queries()["tpch_pricing_summary"](spark, sf_dir))
-    assert "l_comment" not in p
-
-
-def test_ivf_batch_topk_runs_each_udf_once(spark, sf_dir):
-    """Batched IVF search: one Arrow pass for the corpus assign UDF and
-    one for the query probe UDF; the join on ``cell`` must not re-run
-    assign through an inferred ``cell IS NOT NULL`` filter."""
-    import __spark_entry__ as m
-    from tools.explain_plans import _single_arrow_pass
-
-    p = plan_of(m.queries()["ann_ivf_batch_topk"](spark, sf_dir))
-    assert _single_arrow_pass(p, n_udfs=2)

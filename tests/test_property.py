@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis).
 
-Two layers:
+Three layers:
 
 1. **Structured oracle** — generate random well-formed trees from a
    neutral tag alphabet (no void/raw-text/implicit-close quirks),
@@ -12,6 +12,8 @@ Two layers:
    equal, parents precede children, subtree intervals properly
    nested), matching the reference's permissive never-fail contract
    (README.md:9-11 "never rejects input").
+3. **Debug agreement** — ``explain_first_match`` reports the match
+   ``query_one`` finds, and no near-miss it records is a match.
 """
 
 from __future__ import annotations
@@ -21,7 +23,8 @@ from hypothesis import given, settings, strategies as st
 from html_parser_spark.kernel.htmlparse import (
     DOCUMENT, ELEMENT, INVALID, TEXT, parse,
 )
-from html_parser_spark.kernel.matcher import matches_at, query_all
+from html_parser_spark.kernel.matcher import matches_at, query_all, query_one
+from html_parser_spark.kernel.matcher_debug import explain_first_match
 from html_parser_spark.kernel.selector import compile_selector
 from html_parser_spark.kernel.serialize import write_html
 from html_parser_spark.kernel.text import inner_text
@@ -122,6 +125,29 @@ def test_query_all_agrees_with_matches_at(t, tag):
     via_match = [i for i in range(1, len(dom.kind)) if matches_at(dom, sel, i)]
     assert via_query == via_match
     assert via_query == sorted(via_query)  # document preorder
+
+
+DEBUG_SELECTORS = (
+    "div", "span:first-child", "b:last-child", "*:nth-child(2n+1)",
+    "em:not(b)", "div > span", "section i", "u + b", "div ~ code",
+    "> div", "+ em", "article span:nth-child(-n+2), code",
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(tree(), st.sampled_from(DEBUG_SELECTORS), st.integers(min_value=0))
+def test_debug_report_agrees_with_matcher(t, source, pick):
+    """The debug matcher's first match is ``query_one``'s, unscoped and
+    scoped, and none of its near-misses matches."""
+    dom = parse(render(t).encode())
+    sel = compile_selector(source)
+    elements = [i for i in range(len(dom.kind)) if dom.kind[i] == ELEMENT]
+    for scope in (None, elements[pick % len(elements)]):
+        report = explain_first_match(dom, sel, scope)
+        hit = query_one(dom, sel, scope)
+        assert report.matched_index == (INVALID if hit is None else hit)
+        for miss in report.near_misses:
+            assert not matches_at(dom, sel, miss.node_index, scope)
 
 
 SOUP_ALPHABET = "<>/='\"! ?-&#;abcdiv spn\t\n\x0c\x00撃"

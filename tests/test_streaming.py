@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+from html_parser_spark.sources.catalog import read_transcripts
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 from html_parser_spark.streaming.stream import (
     read_transcript_stream, run_available_now,
@@ -25,6 +26,9 @@ def test_stream_extraction_equals_batch(spark, stream_src, tmp_path):
     """The batch extraction plan runs unchanged on a stream, map-only
     and with the salted shuffle before the kernel."""
     src_dir, batch_df = stream_src
+    # one transcript schema for the batch and the streaming readers
+    assert (read_transcript_stream(spark, src_dir).schema
+            == read_transcripts(spark, src_dir).schema)
     batch = extract_turns(batch_df).select("conv_id", "turn_idx", "main_text")
     for n_salts in (0, 2):
         stream = read_transcript_stream(spark, src_dir, max_files_per_trigger=2)

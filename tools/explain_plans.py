@@ -39,6 +39,22 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def plan_frame(spark, name: str, sf_dir: str):
+    """The frame whose plan ``CHECKS[name]`` audits: the gated query of
+    that name, or for ``extract_pipeline`` the extraction plan over
+    transcripts built from the documents table."""
+    if name == "extract_pipeline":
+        from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+        from html_parser_spark.sources.transcripts import transcripts_from_documents
+
+        t = transcripts_from_documents(spark, sf_dir, n_convs=50)
+        return extract_turns(t.drop("doc_id", "expected_main_text"),
+                             PipelineConfig())
+    import __spark_entry__ as m
+
+    return m.queries()[name](spark, sf_dir)
+
+
 CHECKS = {
     "tpch_pricing_summary": {
         "pruned_scan": lambda p: re.search(r"ReadSchema:[^\n]*l_returnflag", p)
@@ -413,8 +429,6 @@ def _no_exchange_before_arrow(p: str) -> bool:
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as m
-
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -424,7 +438,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = m.queries()
     print("# PLANS — physical-plan audit of the headline queries")
     print()
     print(f"Generated by `python tools/explain_plans.py {SF_DIR}`.")
@@ -434,16 +447,7 @@ def main() -> None:
 
     failures = 0
     for name, checks in CHECKS.items():
-        if name == "extract_pipeline":
-            from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
-            from html_parser_spark.sources.transcripts import transcripts_from_documents
-
-            t = transcripts_from_documents(spark, SF_DIR, n_convs=50)
-            df = extract_turns(t.drop("doc_id", "expected_main_text"),
-                               PipelineConfig())
-        else:
-            df = qs[name](spark, SF_DIR)
-        p = plan_of(df)
+        p = plan_of(plan_frame(spark, name, SF_DIR))
         print(f"## {name}")
         print()
         for cname, fn in checks.items():
