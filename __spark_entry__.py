@@ -1246,7 +1246,7 @@ def q_curate_corpus(spark, sf_dir):
     cur = curate_corpus(
         d, quality_threshold=0.6, langs=("en", "fr"), min_tokens=20, lang_col="lang"
     )
-    return curation_stats(cur)
+    return curation_stats(cur).orderBy("reason")
 
 
 def _lang_id_oracle_sql() -> str:

@@ -63,9 +63,11 @@ def split_assign(
 ) -> DataFrame:
     """Deterministic holdout assignment: hash-bucket each id and map
     contiguous bucket ranges to the named splits (fractions must sum
-    to 1; ranges are [floor(cum*buckets) boundaries, so every bucket
-    lands in exactly one split).  Map-only, no shuffle; a document's
-    split never changes as the corpus grows."""
+    to 1, each in [0, 1]; ranges are [floor(cum*buckets) boundaries,
+    so every bucket lands in exactly one split).  Map-only, no shuffle;
+    a document's split never changes as the corpus grows."""
+    if any(not 0.0 <= f <= 1.0 for _, f in splits):
+        raise ValueError(f"split fractions must each be in [0, 1]: {splits}")
     total = sum(f for _, f in splits)
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"split fractions sum to {total}, expected 1")
@@ -80,6 +82,31 @@ def split_assign(
     last = splits[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(last)
     return docs.withColumn(out_col, expr)
+
+
+def with_packing(
+    docs: DataFrame,
+    by: Sequence[str] = (),
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    budget: int = 2048,
+    n_buckets: int = 8,
+) -> DataFrame:
+    """``docs`` plus the :func:`pack_sequences` columns, one packing
+    stream per ``(*by, bucket)`` ordered by id, so a sequence never
+    mixes two values of a ``by`` column.  One shuffle on that key."""
+    w = Window.partitionBy(*by, "bucket").orderBy(id_col).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    start, n = F.col("start_offset"), F.col("n_tokens")
+    seq = (start - start % budget) / budget
+    end_seq = ((start + n - 1) - (start + n - 1) % budget) / budget
+    return docs.withColumns({
+        "bucket": hash_bucket(id_col, n_buckets),
+        "n_tokens": token_count(text_col).cast("long"),
+    }).withColumn("start_offset", F.sum(n).over(w) - n).withColumns({
+        "seq_id": seq.cast("long"),
+        "crosses_cut": F.when(n > 0, (end_seq > seq).cast("int")).otherwise(0),
+    })
 
 
 def pack_sequences(
@@ -100,26 +127,8 @@ def pack_sequences(
     lands in), and ``crosses_cut`` (1 when the document straddles a
     sequence boundary and the loader must span two sequences).
     """
-    b = hash_bucket(id_col, n_buckets).alias("bucket")
-    toks = token_count(text_col).cast("long").alias("n_tokens")
-    base = docs.select(b, F.col(id_col), toks)
-    w = (
-        Window.partitionBy("bucket").orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias(
-        "start_offset")
-    out = base.select("bucket", id_col, "n_tokens", start)
-    seq = (F.col("start_offset") - F.col("start_offset") % budget) / budget
-    end_seq = ((F.col("start_offset") + F.col("n_tokens") - 1)
-               - (F.col("start_offset") + F.col("n_tokens") - 1) % budget) \
-        / budget
-    return out.select(
-        "bucket", id_col, "n_tokens", "start_offset",
-        seq.cast("long").alias("seq_id"),
-        F.when(F.col("n_tokens") > 0,
-               (end_seq > seq).cast("int")).otherwise(0).alias("crosses_cut"),
-    )
+    return with_packing(docs, (), id_col, text_col, budget, n_buckets).select(
+        "bucket", id_col, "n_tokens", "start_offset", "seq_id", "crosses_cut")
 
 
 def chunk_documents(

@@ -69,12 +69,12 @@ def curate_corpus(
     return out.drop("_lang") if lang_col is None else out
 
 
-def curation_stats(curated: DataFrame) -> DataFrame:
-    """Per-reason accounting: (reason, n_docs), kept rows as 'kept'."""
+def curation_stats(curated: DataFrame, *by: str) -> DataFrame:
+    """Per-reason accounting (reason, *by, n_docs), kept rows as 'kept';
+    unordered, since a sort adds a range-sampling job to every use."""
     return (
-        curated.groupBy(F.coalesce(F.col("drop_reason"), F.lit("kept")).alias("reason"))
+        curated.groupBy(F.coalesce(F.col("drop_reason"), F.lit("kept")).alias("reason"), *by)
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("reason")
     )
 
 

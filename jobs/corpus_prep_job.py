@@ -19,15 +19,20 @@ Stages (all deterministic — two runs over the same input byte-match):
    extract_turns; zero pre-kernel shuffle).  Null input text is
    filtered before the kernel, at the scan;
 2. curate   — exact-dup / too-short / low-quality / wrong-lang with
-   ordered drop reasons (operators/curate.py).  The curated frame is
-   persisted once (MEMORY_AND_DISK) and feeds every later stage, the
-   stats table and the input count, so the kernel runs once per turn;
-3. scrub    — PII redaction + per-doc ``n_pii`` (operators/pii.py;
-   one projection, map-only);
-4. split    — deterministic hash holdout (operators/corpusprep.py;
-   a document's split never changes as the corpus grows);
-5. pack     — concatenate-and-chop token packing plan per split
-   (seq_id/start_offset/crosses_cut for the loader).
+   ordered drop reasons (operators/curate.py);
+3. split    — deterministic hash holdout of ``doc_id`` alone
+   (operators/corpusprep.py), so it runs before the branch: the
+   curated frame is persisted once (MEMORY_AND_DISK) already carrying
+   ``split``, and feeds the (reason, split) counts and the kept rows;
+4. scrub    — PII redaction + per-doc ``n_pii`` on the kept rows
+   (operators/pii.py; one projection, map-only);
+5. pack     — concatenate-and-chop token packing plan, ONE window over
+   (split, bucket), so a training sequence never mixes splits.
+
+Three Spark actions: collect the (reason, split) counts (the stats
+rows; ``rows_in`` is their sum, ``splits`` the kept rows), write the
+docs, and write the stats from the collected rows as a one-task local
+relation.  The kernel runs once per turn; nothing is re-read.
 
 Output: ``<output>/docs`` parquet partitioned by ``split`` with
 ``(doc_id, conv_id, turn_idx, role, text, quality, lang_used,
@@ -48,6 +53,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from collections import Counter
 
 
 def parse_args(argv):
@@ -72,9 +78,7 @@ def run(spark, args) -> dict:
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
-    from html_parser_spark.operators.corpusprep import (
-        pack_sequences, split_assign,
-    )
+    from html_parser_spark.operators.corpusprep import split_assign, with_packing
     from html_parser_spark.operators.curate import curate_corpus, curation_stats
     from html_parser_spark.operators.pii import pii_counts, redact_pii
     from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
@@ -94,58 +98,45 @@ def run(spark, args) -> dict:
         F.col("main_text").alias("text"),
     )
 
-    # 2. curate (quality/lang/dup/short with ordered reasons).  The
-    # lineage branches here (stats vs kept; kept again per split), so
-    # it is persisted once: the kernel and the dedup window run once.
-    curated = curate_corpus(
+    # 2. curate (quality/lang/dup/short with ordered reasons) + 3. split.
+    # The lineage branches here (counts vs kept), so it is persisted
+    # once: the kernel and the dedup window run once.
+    holdout = (("train", args.train), ("val", args.val), ("test", args.test))
+    curated = split_assign(curate_corpus(
         docs, quality_threshold=args.quality,
         langs=tuple(s for s in args.langs.split(",") if s),
-        min_tokens=args.min_tokens).persist(StorageLevel.MEMORY_AND_DISK)
+        min_tokens=args.min_tokens), splits=holdout).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        stats = curation_stats(curated)
+        counts = curation_stats(curated, "split").collect()
         kept = curated.where(F.col("drop_reason").isNull())
 
-        # 3. PII scrub — redacted text replaces the raw extraction
+        # 4. PII scrub — redacted text replaces the raw extraction
         scrubbed = kept.select(
             *[c for c in kept.columns if c != "text"],
             pii_counts("text")[-1],
             redact_pii("text").alias("text"))
 
-        # 4. deterministic holdout
-        split = split_assign(
-            scrubbed,
-            splits=(("train", args.train), ("val", args.val),
-                    ("test", args.test)))
-
-        # 5. packing plan PER SPLIT — a training sequence must never mix
-        # train and holdout documents, so each split gets its own streams
-        plans = None
-        for name in ("train", "val", "test"):
-            one = pack_sequences(
-                split.where(F.col("split") == name).select("doc_id", "text"),
-                budget=args.budget, n_buckets=args.pack_buckets)
-            plans = one if plans is None else plans.unionByName(one)
-        out = split.join(plans, "doc_id")
-
-        (out.select(
+        # 5. packing plan, one stream per (split, bucket)
+        (with_packing(scrubbed, ("split",), budget=args.budget, n_buckets=args.pack_buckets)
+         .select(
             "doc_id", "conv_id", "turn_idx", "role", "text", "quality",
             "lang_used", "n_pii", "split", "bucket", "n_tokens",
             "start_offset", "seq_id", "crosses_cut")
          .write.mode("overwrite").partitionBy("split")
          .parquet(args.output + "/docs"))
-        stats.write.mode("overwrite").parquet(args.output + "/stats")
-        n_in = curated.count()
     finally:
         curated.unpersist()
 
-    # split_assign never emits a null split, so the per-split counts
-    # sum to the kept rows
-    splits = {r["split"]: r["n"] for r in
-              spark.read.parquet(args.output + "/docs")
-              .groupBy("split").agg(F.count("*").alias("n")).collect()}
+    by_reason = sum((Counter({r["reason"]: r["n_docs"]}) for r in counts), Counter())
+    # JVM-side rows, no Python RDD; the cast also types an empty array
+    rows = F.array(*[F.struct(F.lit(k), F.lit(n)) for k, n in sorted(by_reason.items())])
+    (spark.range(1, numPartitions=1)
+     .select(F.inline(rows.cast("array<struct<reason:string,n_docs:bigint>>")))
+     .write.mode("overwrite").parquet(args.output + "/stats"))
+    splits = {r["split"]: r["n_docs"] for r in counts if r["reason"] == "kept"}
     return {
         "metric": "corpus_prep",
-        "rows_in": n_in,
+        "rows_in": sum(by_reason.values()),
         "rows_kept": sum(splits.values()),
         "splits": splits,
     }

@@ -1,12 +1,13 @@
 """End-to-end corpus-prep job (jobs/corpus_prep_job.py): the composed
-extract → curate → scrub → split → pack pipeline, run in-process.
+extract → curate → split → scrub → pack pipeline, run in-process.
 
 Pins: output schema/partitioning, packing-stream contiguity per
 (split, bucket), splits never share a packing stream, bit-level
 determinism across reruns (the job's documented overwrite contract
-rests on it), one kernel pass per input turn, null-text turns never
-reaching the kernel or the output, and no persisted frame outliving
-the job.
+rests on it), one kernel pass per input turn, at most three Spark
+actions per run, a summary that agrees with the written tables,
+null-text turns never reaching the kernel or the output, runs that
+keep no document, and no persisted frame outliving the job.
 """
 
 import pandas as pd
@@ -17,23 +18,40 @@ from html_parser_spark.sources.transcripts import transcripts_from_documents
 from jobs.corpus_prep_job import parse_args, run
 
 
+def _last_execution_id(spark):
+    """Id of the newest SQL execution the status store has seen.  Ids
+    are sequential, so the difference across a call is the number of
+    executions it started; the store's ``executionsCount()`` stops
+    growing once it holds ``spark.sql.ui.retainedExecutions`` entries,
+    which a long test session reaches."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _args(base, inp, out, *extra):
+    return parse_args([
+        "--input", str(base / inp), "--output", str(base / out),
+        "--quality", "0.0", "--min-tokens", "1", "--langs", "en,und",
+        "--budget", "64", "--pack-buckets", "4", *extra,
+    ])
+
+
 @pytest.fixture(scope="module")
 def prep(spark, sf_dir, tmp_path_factory):
     base = tmp_path_factory.mktemp("prep")
     t = transcripts_from_documents(spark, sf_dir, n_convs=40).drop(
         "doc_id", "expected_main_text")
     t.write.mode("overwrite").parquet(str(base / "input"))
-    args = parse_args([
-        "--input", str(base / "input"), "--output", str(base / "out"),
-        "--quality", "0.0", "--min-tokens", "1", "--langs", "en,und",
-        "--budget", "64", "--pack-buckets", "4",
-    ])
+    args = _args(base, "input", "out")
+    before = _last_execution_id(spark)
     summary = run(spark, args)
-    return base, args, summary
+    n_exec = _last_execution_id(spark) - before
+    return base, args, summary, n_exec
 
 
 def test_summary_and_output_schema(spark, prep):
-    base, _, summary = prep
+    base, _, summary, _ = prep
     assert summary["rows_kept"] > 0
     assert summary["rows_kept"] <= summary["rows_in"]
     docs = spark.read.parquet(str(base / "out" / "docs"))
@@ -48,8 +66,21 @@ def test_summary_and_output_schema(spark, prep):
     assert stats.count() >= 1
 
 
+def test_three_actions_and_summary_matches_tables(spark, prep):
+    base, _, summary, n_exec = prep
+    # one collect of the (reason, split) counts, the docs write and the
+    # stats write; nothing is counted or re-read afterwards
+    assert 1 <= n_exec <= 3
+    stats = spark.read.parquet(str(base / "out" / "stats"))
+    assert summary["rows_in"] == stats.agg(F.sum("n_docs")).first()[0]
+    docs = spark.read.parquet(str(base / "out" / "docs"))
+    assert summary["splits"] == {
+        r["split"]: r["n"]
+        for r in docs.groupBy("split").agg(F.count("*").alias("n")).collect()}
+
+
 def test_packing_streams_contiguous_and_split_isolated(spark, prep):
-    base, _, _ = prep
+    base, _, _, _ = prep
     docs = spark.read.parquet(str(base / "out" / "docs"))
     # per (split, bucket) stream: offsets start at 0 and tile the
     # stream exactly (no gaps, no overlap) -> max(end) == sum(tokens)
@@ -60,13 +91,13 @@ def test_packing_streams_contiguous_and_split_isolated(spark, prep):
     assert agg
     for r in agg:
         assert r["lo"] == 0 and r["hi"] == r["tot"], r
-    # each doc packed exactly once (streams never mix splits: the
-    # per-split plans are disjoint by doc_id construction)
+    # each doc packed exactly once (streams never mix splits: split is
+    # part of the packing window's partition)
     assert docs.select("doc_id").distinct().count() == docs.count()
 
 
 def test_rerun_is_bit_deterministic(spark, prep):
-    base, args, summary = prep
+    base, args, summary, _ = prep
     before = sorted(map(tuple, spark.read.parquet(
         str(base / "out" / "docs")).collect()))
     summary2 = run(spark, args)
@@ -80,7 +111,7 @@ def test_rerun_is_bit_deterministic(spark, prep):
 def null_run(spark, prep):
     """The prep input plus null-text turns, run with the kernel output
     passed through a pandas UDF that counts the rows it sees."""
-    base, args, _ = prep
+    base, _, _, _ = prep
     t = spark.read.parquet(str(base / "input"))
     nulls = (t.limit(3)
              .withColumn("conv_id", F.concat(F.lit("null-"), "conv_id"))
@@ -103,12 +134,7 @@ def null_run(spark, prep):
 
     # a frame cached by another module must not mask a leak from run()
     spark.catalog.clearCache()
-    out_args = parse_args([
-        "--input", str(base / "input_nulls"),
-        "--output", str(base / "out_nulls"),
-        "--quality", "0.0", "--min-tokens", "1", "--langs", "en,und",
-        "--budget", "64", "--pack-buckets", "4",
-    ])
+    out_args = _args(base, "input_nulls", "out_nulls")
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(pipeline, "extract_turns", counted)
         summary = run(spark, out_args)
@@ -120,13 +146,13 @@ def null_run(spark, prep):
 def test_one_kernel_pass_per_turn(null_run):
     _, _, passes, n_text, _ = null_run
     # null-text turns are filtered before the kernel, and the lineage
-    # branches (stats, PII, per-split packing, counts) reuse one pass
+    # branches (counts, PII, packing) reuse one pass
     assert passes == n_text
 
 
 def test_null_text_turns_and_cache_hygiene(spark, prep, null_run):
     base, summary, _, n_text, cache_empty = null_run
-    _, _, plain = prep
+    _, _, plain, _ = prep
     assert summary["rows_in"] == n_text
     stats = spark.read.parquet(str(base / "out_nulls" / "stats"))
     assert stats.agg(F.sum("n_docs")).first()[0] == n_text
@@ -139,3 +165,32 @@ def test_null_text_turns_and_cache_hygiene(spark, prep, null_run):
                 str(base / "out" / "docs")).collect())))
     # the persisted lineage does not outlive the job
     assert cache_empty
+
+
+def _no_docs_kept(spark, base, out, summary, rows_in):
+    assert summary == {"metric": "corpus_prep", "rows_in": rows_in,
+                       "rows_kept": 0, "splits": {}}
+    stats = spark.read.parquet(str(base / out / "stats"))
+    assert stats.schema.simpleString() == "struct<reason:string,n_docs:bigint>"
+    assert stats.where(F.col("reason") == "kept").count() == 0
+    return {r["reason"]: r["n_docs"] for r in stats.collect()}
+
+
+def test_no_document_kept(spark, prep):
+    """A quality floor no document reaches: every turn is accounted for
+    under a drop reason and the job still returns."""
+    base, _, plain, _ = prep
+    summary = run(spark, _args(base, "input", "out_none", "--quality", "1.1"))
+    stats = _no_docs_kept(spark, base, "out_none", summary, plain["rows_in"])
+    assert stats and sum(stats.values()) == plain["rows_in"]
+
+
+def test_all_text_null(spark, prep):
+    """No turn reaches curation: the stats table is written empty, with
+    its schema."""
+    base, _, _, _ = prep
+    (spark.read.parquet(str(base / "input"))
+     .withColumn("text", F.lit(None).cast("string"))
+     .write.mode("overwrite").parquet(str(base / "input_allnull")))
+    summary = run(spark, _args(base, "input_allnull", "out_allnull"))
+    assert _no_docs_kept(spark, base, "out_allnull", summary, 0) == {}

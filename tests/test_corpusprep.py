@@ -1,9 +1,13 @@
 """Holdout-split determinism and sequence-packing arithmetic."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
-from html_parser_spark.operators.corpusprep import pack_sequences, split_assign
+from html_parser_spark.operators.corpusprep import (
+    pack_sequences, split_assign, with_packing,
+)
 from support import split_counts
 
 
@@ -37,6 +41,12 @@ class TestSplitAssign:
         assert set(r["split"] for r in two.collect()) <= {"a", "b"}
         with pytest.raises(ValueError, match="sum to"):
             split_assign(d, splits=(("a", 0.5), ("b", 0.4)))
+        # sums to 1, but "b" could never receive a document
+        with pytest.raises(ValueError, match=r"each be in \[0, 1\]"):
+            split_assign(d, splits=(("a", 1.5), ("b", -0.5)))
+        with pytest.raises(ValueError, match=r"each be in \[0, 1\]"):
+            split_assign(d, splits=(("train", 0.95), ("val", 0.1),
+                                    ("test", -0.05)))
 
     def test_no_exchange_in_plan(self, spark):
         d = _docs(spark, [(1, "x")])
@@ -91,3 +101,42 @@ class TestPackSequences:
         plan = pack_sequences(d)._jdf.queryExecution() \
             .executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 1
+
+
+class TestWithPacking:
+    COLS = ["bucket", "doc_id", "n_tokens", "start_offset", "seq_id",
+            "crosses_cut"]
+
+    @pytest.fixture(scope="class")
+    def docs(self, spark):
+        rng = random.Random(7)
+        rows = [(f"d{i:04d}", rng.choice(["train", "val", "test"]),
+                 " ".join(["w"] * rng.randrange(0, 40)))
+                for i in range(400)]
+        return spark.createDataFrame(rows, "doc_id string, split string, text string")
+
+    def test_split_streams_equal_per_split_plans(self, spark, docs):
+        """One window over (split, bucket) equals packing each split on
+        its own, unioned and joined back on the id."""
+        plans = None
+        for name in ("train", "val", "test"):
+            one = pack_sequences(
+                docs.where(F.col("split") == name).select("doc_id", "text"),
+                budget=32, n_buckets=4)
+            plans = one if plans is None else plans.unionByName(one)
+        cols = ["split", "text"] + self.COLS
+        old = docs.join(plans, "doc_id").select(*cols).collect()
+        new = with_packing(docs, ("split",), budget=32, n_buckets=4) \
+            .select(*cols).collect()
+        assert len(new) == 400
+        assert {r["split"] for r in new} == {"train", "val", "test"}
+        assert len({(r["split"], r["bucket"]) for r in new}) == 12
+        assert sorted(map(tuple, new)) == sorted(map(tuple, old))
+
+    def test_no_extra_partition_equals_pack_sequences(self, spark, docs):
+        new = with_packing(docs, budget=32, n_buckets=4)
+        assert new.columns == docs.columns + [
+            c for c in self.COLS if c != "doc_id"]
+        assert (sorted(map(tuple, new.select(*self.COLS).collect()))
+                == sorted(map(tuple, pack_sequences(
+                    docs, budget=32, n_buckets=4).collect())))
