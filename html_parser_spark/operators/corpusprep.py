@@ -34,12 +34,20 @@ the pipeline's bucket count).  Nothing is collected to the driver.
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import token_count
+from ..sql import ident
+from .textstats import token_count_sql
+
+
+def hash_bucket_sql(id_col: str, buckets: int) -> str:
+    """SQL text of :func:`hash_bucket`."""
+    h = f"md5(CAST(CAST({ident(id_col)} AS STRING) AS BINARY))"
+    return f"CAST(conv(substring({h}, 1, 8), 16, 10) AS BIGINT) % {int(buckets)}"
 
 
 def hash_bucket(id_col: str, buckets: int) -> Column:
@@ -47,9 +55,7 @@ def hash_bucket(id_col: str, buckets: int) -> Column:
     chars of md5(id-as-string) as an integer, mod ``buckets``.
     DuckDB twin: ``('0x' || substr(md5(cast(id as varchar)),1,8))
     ::bigint % buckets``."""
-    h = F.md5(F.col(id_col).cast("string").cast("binary"))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-            % F.lit(buckets))
+    return F.expr(hash_bucket_sql(id_col, buckets))
 
 
 def split_assign(
@@ -71,17 +77,12 @@ def split_assign(
     total = sum(f for _, f in splits)
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"split fractions sum to {total}, expected 1")
-    b = hash_bucket(id_col, buckets)
-    expr = None
-    cum = 0.0
-    for name, frac in splits[:-1]:
-        cum += frac
-        bound = int(round(cum * buckets))
-        cond = b < F.lit(bound)
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last = splits[-1][0]
-    expr = F.lit(last) if expr is None else expr.otherwise(last)
-    return docs.withColumn(out_col, expr)
+    b = hash_bucket_sql(id_col, buckets)
+    idx = "".join(f" WHEN {b} < {int(round(cum * buckets))} THEN {i}"
+                  for i, cum in enumerate(accumulate(f for _, f in splits[:-1]), 1))
+    # the names are caller-supplied: literals, indexed by SQL text
+    return docs.withColumn(out_col, F.element_at(F.array(*[F.lit(name) for name, _ in splits]),
+                                                 F.expr(f"CASE{idx} ELSE {len(splits)} END" if idx else "1")))
 
 
 def with_packing(
@@ -95,17 +96,21 @@ def with_packing(
     """``docs`` plus the :func:`pack_sequences` columns, one packing
     stream per ``(*by, bucket)`` ordered by id, so a sequence never
     mixes two values of a ``by`` column.  One shuffle on that key."""
-    w = Window.partitionBy(*by, "bucket").orderBy(id_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    start, n = F.col("start_offset"), F.col("n_tokens")
-    seq = (start - start % budget) / budget
-    end_seq = ((start + n - 1) - (start + n - 1) % budget) / budget
+    key = ", ".join(ident(c) for c in (*by, "bucket"))
+    budget = int(budget)
+    end = "start_offset + n_tokens - 1"
+    seq = f"(start_offset - start_offset % {budget}) / {budget}"
+    end_seq = f"(({end}) - ({end}) % {budget}) / {budget}"
     return docs.withColumns({
-        "bucket": hash_bucket(id_col, n_buckets),
-        "n_tokens": token_count(text_col).cast("long"),
-    }).withColumn("start_offset", F.sum(n).over(w) - n).withColumns({
-        "seq_id": seq.cast("long"),
-        "crosses_cut": F.when(n > 0, (end_seq > seq).cast("int")).otherwise(0),
+        "bucket": F.expr(hash_bucket_sql(id_col, n_buckets)),
+        "n_tokens": F.expr(f"CAST({token_count_sql(text_col)} AS BIGINT)"),
+    }).withColumn("start_offset", F.expr(
+        f"sum(n_tokens) OVER (PARTITION BY {key} ORDER BY {ident(id_col)}"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens",
+    )).withColumns({
+        "seq_id": F.expr(f"CAST({seq} AS BIGINT)"),
+        "crosses_cut": F.expr(
+            f"CASE WHEN n_tokens > 0 THEN CAST({end_seq} > {seq} AS INT) ELSE 0 END"),
     })
 
 

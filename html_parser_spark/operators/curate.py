@@ -22,10 +22,11 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import lang_id, quality_score
+from ..sql import ident
+from .textstats import lang_id, quality_score_sql, token_count_sql
 
 
 def curate_corpus(
@@ -40,7 +41,7 @@ def curate_corpus(
     """df + ``quality`` + ``lang_used`` + ``drop_reason`` (null = kept).
 
     ``langs`` must be non-empty.  A NULL value in ``lang_col`` makes the
-    ``isin`` test NULL, so the row classifies as KEPT rather than
+    allow-list test NULL, so the row classifies as KEPT rather than
     ``wrong_lang`` (matching the DuckDB oracle's SQL three-valued
     logic); callers passing a nullable metadata column who want NULL to
     drop should ``coalesce(lang, '')`` before calling.
@@ -49,33 +50,26 @@ def curate_corpus(
         raise ValueError("curate_corpus: langs must be a non-empty sequence")
     if lang_col is None:
         df = lang_id(df, text_col, out_col="_lang")
-        lang = F.col("_lang")
-    else:
-        lang = F.col(lang_col)
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
-    ntok = F.size(F.split(F.col(text_col), " "))
-    q = F.floor(quality_score(text_col, round_decimals=None) * 10000) / 10000
-    reason = (
-        F.when(F.row_number().over(w) > 1, F.lit("duplicate"))
-        .when(ntok < min_tokens, F.lit("too_short"))
-        .when(q < quality_threshold, F.lit("low_quality"))
-        .when(~lang.isin(*[str(x) for x in langs]), F.lit("wrong_lang"))
-    )
-    out = (
-        df.withColumn("quality", q)
-        .withColumn("lang_used", lang)
-        .withColumn("drop_reason", reason)
-    )
-    return out.drop("_lang") if lang_col is None else out
+    lang = ident(lang_col or "_lang")
+    out = df.withColumns({
+        "quality": F.expr(f"floor({quality_score_sql(text_col, None)} * 10000) / 10000"),
+        "lang_used": F.expr(lang),
+        # caller-supplied codes go in as literals, never as SQL text
+        "_allowed": F.array_contains(F.array(*[F.lit(str(x)) for x in langs]), F.expr(lang)),
+    }).withColumn("drop_reason", F.expr(
+        f"CASE WHEN row_number() OVER (PARTITION BY md5({ident(text_col)})"
+        f" ORDER BY {ident(id_col)}) > 1 THEN 'duplicate'"
+        f" WHEN {token_count_sql(text_col)} < {int(min_tokens)} THEN 'too_short'"
+        f" WHEN quality < {float(quality_threshold)!r}D THEN 'low_quality'"
+        " WHEN NOT _allowed THEN 'wrong_lang' END"))
+    return out.drop("_allowed", *(["_lang"] if lang_col is None else []))
 
 
 def curation_stats(curated: DataFrame, *by: str) -> DataFrame:
     """Per-reason accounting (reason, *by, n_docs), kept rows as 'kept';
     unordered, since a sort adds a range-sampling job to every use."""
-    return (
-        curated.groupBy(F.coalesce(F.col("drop_reason"), F.lit("kept")).alias("reason"), *by)
-        .agg(F.count("*").alias("n_docs"))
-    )
+    return curated.groupBy(F.expr("coalesce(drop_reason, 'kept') AS reason"), *by).agg(
+        F.expr("count(1) AS n_docs"))
 
 
 def _quantile_col_name(prob: float) -> str:

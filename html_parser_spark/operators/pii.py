@@ -14,7 +14,8 @@ patterns deliberately use only the regex subset shared by Java
 (Spark) and RE2 (DuckDB — the correctness oracle): character
 classes, bounded quantifiers, non-capturing groups, ASCII ``\\b``
 word boundaries; no lookaround, no backreferences.  That keeps the
-operator portable and the oracle twin bit-exact.
+operator portable and the oracle twin bit-exact.  The patterns'
+backslashes keep them out of Spark SQL text: they go in as literals.
 
 Redaction order is fixed (email, IPv4, SSN, phone): earlier classes
 consume their text before later, more general numeric patterns can
@@ -31,10 +32,14 @@ JVM, not per row.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..sql import ident
 
 # (class name, pattern, placeholder) in redaction order.  Patterns are
 # the Java/RE2 shared subset — see module docstring.
@@ -51,13 +56,18 @@ def pii_counts(text_col: str = "text") -> Sequence[Column]:
     ``n_<class>`` int column per pattern plus ``n_pii`` (their sum).
     Leftmost non-overlapping matches — identical semantics in Java
     and RE2."""
-    cols = []
-    total = None
-    for name, pat, _ in PII_PATTERNS:
-        c = F.regexp_count(F.col(text_col), F.lit(pat))
-        cols.append(c.alias(f"n_{name}"))
-        total = c if total is None else total + c
-    return [*cols, total.alias("n_pii")]
+    return [*(c.alias(f"n_{name}") for c, (name, _, _) in zip(_counts(text_col), PII_PATTERNS)),
+            pii_total(text_col).alias("n_pii")]
+
+
+def _counts(text_col: str) -> Sequence[Column]:
+    t = F.expr(ident(text_col))
+    return [F.regexp_count(t, F.lit(pat)) for _, pat, _ in PII_PATTERNS]
+
+
+def pii_total(text_col: str = "text") -> Column:
+    """``n_pii`` of :func:`pii_counts`, unnamed."""
+    return reduce(operator.add, _counts(text_col))
 
 
 def redact_pii(text_col: str = "text") -> Column:
@@ -65,7 +75,7 @@ def redact_pii(text_col: str = "text") -> Column:
     placeholder, applied in the fixed ``PII_PATTERNS`` order.
     Spark's ``regexp_replace`` is global; the DuckDB twin needs the
     ``'g'`` flag."""
-    out = F.col(text_col)
+    out = F.expr(ident(text_col))
     for _, pat, repl in PII_PATTERNS:
         out = F.regexp_replace(out, pat, repl)
     return out

@@ -1,9 +1,9 @@
 """Text-analysis operators: token counting, quality scoring, language
 ID, document fingerprinting.
 
-Everything except language-ID is a pure JVM-side column expression
-(whole-stage codegen, no Python).  Language-ID is a deterministic
-stopword-hit heuristic, also expressed as pure columns.
+Everything but NFC is a pure JVM-side column expression (whole-stage
+codegen, no Python); language-ID is a stopword-hit heuristic.  The
+token, quality and language rules are Spark SQL text (``*_sql``).
 """
 
 from __future__ import annotations
@@ -15,6 +15,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..sql import ident
 
 # Deterministic, pinned stopword profiles for the n-gram/stopword
 # language heuristic (tiny on purpose — this is a heuristic operator,
@@ -29,14 +31,28 @@ STOPWORDS = {
 _PUNCT_RE = r"[^A-Za-z0-9 ]"
 
 
+def _words_sql(text_col: str) -> str:
+    return f"split({ident(text_col)}, ' ')"
+
+
+def _hits_sql(text_col: str, code: str) -> str:
+    """Number of ``text_col``'s words in ``STOPWORDS[code]``."""
+    stop = ", ".join(f"'{s}'" for s in STOPWORDS[code])
+    return f"size(filter({_words_sql(text_col)}, x -> array_contains(array({stop}), x)))"
+
+
+def token_count_sql(text_col: str) -> str:
+    return f"size({_words_sql(text_col)})"
+
+
 def words_col(text_col: str = "text") -> Column:
-    return F.split(F.col(text_col), " ")
+    return F.expr(_words_sql(text_col))
 
 
 def token_count(text_col: str = "text") -> Column:
     """Whitespace token count (BPE-ish subword estimate available via
     ``subword_estimate``)."""
-    return F.size(words_col(text_col))
+    return F.expr(token_count_sql(text_col))
 
 
 def subword_estimate(text_col: str = "text", chars_per_token: float = 4.0) -> Column:
@@ -68,42 +84,35 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def quality_score_sql(text_col: str, round_decimals: int | None) -> str:
+    """SQL text of :func:`quality_score`."""
+    n_tokens, n_chars = token_count_sql(text_col), f"octet_length({ident(text_col)})"
+    stripped = f"octet_length(regexp_replace({ident(text_col)}, '{_PUNCT_RE}', ''))"
+    raw = (f"(0.5D * least({n_tokens} / 64.0D, 1.0D)"
+           f" + 0.3D * least({_hits_sql(text_col, 'en')} / {n_tokens} * 4, 1.0D)"
+           f" + 0.2D * (1.0D - least(({n_chars} - {stripped}) / {n_chars} * 5, 1.0D)))")
+    return raw if round_decimals is None else f"round({raw}, {int(round_decimals)})"
+
+
 def quality_score(text_col: str = "text", round_decimals: int | None = 4) -> Column:
     """Single deterministic 0..1 quality score used as a filter gate.
     ``round_decimals=None`` returns the raw double (callers needing
     engine-portable comparison should floor-quantize instead: decimal
     half-way rounding differs between engines)."""
-    w = words_col(text_col)
-    n_tokens = F.size(w)
-    n_chars = F.octet_length(F.col(text_col))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
-    stop_ratio = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))) / n_tokens
-    len_score = F.least(n_tokens / F.lit(64.0), F.lit(1.0))
-    punct_ratio = (n_chars - F.octet_length(F.regexp_replace(F.col(text_col), _PUNCT_RE, ""))) / n_chars
-    raw = (
-        F.lit(0.5) * len_score + F.lit(0.3) * F.least(stop_ratio * 4, F.lit(1.0))
-        + F.lit(0.2) * (F.lit(1.0) - F.least(punct_ratio * 5, F.lit(1.0)))
-    )
-    return raw if round_decimals is None else F.round(raw, round_decimals)
+    return F.expr(quality_score_sql(text_col, round_decimals))
 
 
 def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Stopword-profile language guess (deterministic; ties break by
     language-code order).  A heuristic operator, pinned by unit tests.
     """
-    w = words_col(text_col)
     # struct ordering compares fields left-to-right: (hits, -position)
     # makes greatest() pick the highest hit count, breaking ties toward
     # the alphabetically-first language code.
-    def _hits(arr):
-        return F.size(F.filter(w, lambda x: F.array_contains(arr, x)))
-
-    scored = []
-    for i, code in enumerate(sorted(STOPWORDS)):
-        arr = F.array(*[F.lit(s) for s in STOPWORDS[code]])
-        scored.append(F.struct(_hits(arr).alias("h"), F.lit(-i).alias("ord"), F.lit(code).alias("code")))
-    best = F.greatest(*scored)
-    return df.withColumn(out_col, F.when(best["h"] > 0, best["code"]).otherwise(F.lit("und")))
+    best = "greatest({})".format(", ".join(
+        f"struct({_hits_sql(text_col, code)} AS h, {-i} AS ord, '{code}' AS code)"
+        for i, code in enumerate(sorted(STOPWORDS))))
+    return df.withColumn(out_col, F.expr(f"CASE WHEN {best}.h > 0 THEN {best}.code ELSE 'und' END"))
 
 
 def language_mix(df: DataFrame, html_col: str = "html",

@@ -65,7 +65,7 @@ class PipelineConfig:
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
+    return df.withColumn("bucket", F.expr(f"CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)"))
 
 
 def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
@@ -79,16 +79,12 @@ def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
     """
     df = with_bucket(df, cfg.n_buckets)
     if cfg.n_salts:
-        salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(cfg.n_salts)).cast("int")
-        df = df.repartition(F.col("bucket"), salt)
-    out = df.withColumn("_ex", extract_struct_udf()(F.col("text")))
-    return out.select(
+        df = df.repartition(
+            "bucket", F.expr(f"CAST(pmod(xxhash64(conv_id, turn_idx), {cfg.n_salts}) AS INT)"))
+    out = df.withColumn("_ex", extract_struct_udf()("text"))
+    return out.selectExpr(
         "conv_id", "turn_idx", "role", "tool", "ts", "bucket",
-        F.col("_ex.main_text").alias("main_text"),
-        F.col("_ex.spans").alias("spans"),
-        F.col("_ex.n_nodes").alias("n_nodes"),
-        F.col("_ex.n_removed").alias("n_removed"),
-    )
+        *[f"_ex.{c} AS {c}" for c in ("main_text", "spans", "n_nodes", "n_removed")])
 
 
 def assert_turn_ordering(df: DataFrame, strict: bool = False) -> int:
@@ -162,7 +158,6 @@ def run_extraction(
     exists, and the control row is appended only after the bucket's
     data write completed.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
 
     df = with_bucket(transcripts, cfg.n_buckets)

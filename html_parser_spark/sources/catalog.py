@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sql import ident
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg catalog/runtime is on the classpath."""
@@ -117,14 +119,18 @@ def read_transcripts(spark: SparkSession, src: str, fmt: str = "parquet") -> Dat
     a column).  ``fmt``: parquet (default, also Iceberg idents via
     :func:`read_table`) | orc | json (newline-delimited) | csv (with
     header) | xml (Spark 4 built-in source, ``rowTag=turn``).
+    Parquet/ORC: a column missing or typed unlike ``TRANSCRIPT_DDL``
+    raises ``ValueError`` (``turn_idx`` may be a narrower integer).
     """
     if fmt in ("parquet", "orc"):
         df = read_table(spark, src) if fmt == "parquet" else spark.read.orc(src)
+        found = {n.lower(): t for n, t in df.dtypes}
+        cols = [c.split() for c in TRANSCRIPT_DDL.split(",")]
+        for n, t in cols:
+            if found.get(n) != t and not (n == "turn_idx" and found.get(n) in ("tinyint", "smallint")):
+                raise ValueError(f"transcripts column {n}: expected {t}, found {found.get(n)}")
         # project + cast to the canonical schema (order + types)
-        names = [c.split()[0] for c in TRANSCRIPT_DDL.split(",")]
-        types = [c.split()[1] for c in TRANSCRIPT_DDL.split(",")]
-        from pyspark.sql import functions as F
-        return df.select(*[F.col(n).cast(t).alias(n) for n, t in zip(names, types)])
+        return df.selectExpr(*[f"CAST({ident(n)} AS {t}) AS {ident(n)}" for n, t in cols])
     if fmt == "json":
         return spark.read.schema(TRANSCRIPT_DDL).json(src)
     if fmt == "csv":

@@ -76,11 +76,10 @@ def parse_args(argv):
 
 def run(spark, args) -> dict:
     from pyspark import StorageLevel
-    from pyspark.sql import functions as F
 
     from html_parser_spark.operators.corpusprep import split_assign, with_packing
     from html_parser_spark.operators.curate import curate_corpus, curation_stats
-    from html_parser_spark.operators.pii import pii_counts, redact_pii
+    from html_parser_spark.operators.pii import pii_total, redact_pii
     from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
     from html_parser_spark.sources.catalog import read_transcripts
 
@@ -90,13 +89,10 @@ def run(spark, args) -> dict:
     # null exactly when the input text is, so the null filter goes on
     # the input (down to the scan): a filter on the UDF output would be
     # pushed under the projection and evaluate the kernel twice.
-    ex = extract_turns(t.where(F.col("text").isNotNull()), PipelineConfig())
-    docs = ex.select(
-        F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
-        .alias("doc_id"),
-        "conv_id", "turn_idx", "role",
-        F.col("main_text").alias("text"),
-    )
+    ex = extract_turns(t.where("text IS NOT NULL"), PipelineConfig())
+    docs = ex.selectExpr(
+        "concat_ws(':', conv_id, CAST(turn_idx AS STRING)) AS doc_id",
+        "conv_id", "turn_idx", "role", "main_text AS text")
 
     # 2. curate (quality/lang/dup/short with ordered reasons) + 3. split.
     # The lineage branches here (counts vs kept), so it is persisted
@@ -108,17 +104,14 @@ def run(spark, args) -> dict:
         min_tokens=args.min_tokens), splits=holdout).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         counts = curation_stats(curated, "split").collect()
-        kept = curated.where(F.col("drop_reason").isNull())
+        kept = curated.where("drop_reason IS NULL")
 
         # 4. PII scrub — redacted text replaces the raw extraction
-        scrubbed = kept.select(
-            *[c for c in kept.columns if c != "text"],
-            pii_counts("text")[-1],
-            redact_pii("text").alias("text"))
+        scrubbed = kept.withColumns({"n_pii": pii_total("text"), "text": redact_pii("text")})
 
         # 5. packing plan, one stream per (split, bucket)
         (with_packing(scrubbed, ("split",), budget=args.budget, n_buckets=args.pack_buckets)
-         .select(
+         .selectExpr(
             "doc_id", "conv_id", "turn_idx", "role", "text", "quality",
             "lang_used", "n_pii", "split", "bucket", "n_tokens",
             "start_offset", "seq_id", "crosses_cut")
@@ -128,10 +121,11 @@ def run(spark, args) -> dict:
         curated.unpersist()
 
     by_reason = sum((Counter({r["reason"]: r["n_docs"]}) for r in counts), Counter())
-    # JVM-side rows, no Python RDD; the cast also types an empty array
-    rows = F.array(*[F.struct(F.lit(k), F.lit(n)) for k, n in sorted(by_reason.items())])
+    # JVM-side rows, no Python RDD; the cast also types an empty array.
+    # The reasons are curate_corpus's constants, so they go in as text.
+    rows = ", ".join(f"struct('{k}', {n})" for k, n in sorted(by_reason.items()))
     (spark.range(1, numPartitions=1)
-     .select(F.inline(rows.cast("array<struct<reason:string,n_docs:bigint>>")))
+     .selectExpr(f"inline(CAST(array({rows}) AS array<struct<reason:string,n_docs:bigint>>))")
      .write.mode("overwrite").parquet(args.output + "/stats"))
     splits = {r["split"]: r["n_docs"] for r in counts if r["reason"] == "kept"}
     return {

@@ -12,10 +12,12 @@ import struct
 import time
 import wave
 import zlib
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import DataFrame
+import pytest
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from html_parser_spark.kernel.htmlparse import Dom
@@ -23,7 +25,8 @@ from html_parser_spark.kernel.matcher import query_all, query_one
 from html_parser_spark.kernel.selector import Selector, compile_selector
 from html_parser_spark.operators.corpusprep import split_assign
 from html_parser_spark.operators.multimodal import _PNG_CHANNELS, _PNG_SIG
-from html_parser_spark.operators.textstats import token_count
+from html_parser_spark.operators.pii import PII_PATTERNS
+from html_parser_spark.operators.textstats import _PUNCT_RE, STOPWORDS, token_count
 
 
 # -- multimodal: encoders for the stdlib decoders ----------------------
@@ -133,6 +136,135 @@ def split_counts(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count("text").cast("long")).alias("n_tokens"),
     )
+
+
+# -- driver round trips ----------------------------------------------
+
+@contextmanager
+def jvm_round_trips():
+    """Count the py4j commands the driver sends inside the block
+    (``n[0]``), object releases from py4j's collector thread included."""
+    from py4j.clientserver import ClientServerConnection
+
+    n = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        n[0] += 1
+        return send(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counted)
+        yield n
+
+
+# -- Column-API reference forms of the SQL-text builders -------------
+#
+# The operators write their per-row expressions as Spark SQL text.
+# These are the same rules written with Column methods, kept as the
+# reference that tests/test_sql_text.py compares them against.
+
+def ref_quality_score(text_col: str = "text", round_decimals: Optional[int] = 4) -> Column:
+    w = F.split(F.col(text_col), " ")
+    n_tokens = F.size(w)
+    n_chars = F.octet_length(F.col(text_col))
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
+    stop_ratio = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))) / n_tokens
+    len_score = F.least(n_tokens / F.lit(64.0), F.lit(1.0))
+    punct_ratio = (n_chars - F.octet_length(F.regexp_replace(F.col(text_col), _PUNCT_RE, ""))) / n_chars
+    raw = (
+        F.lit(0.5) * len_score + F.lit(0.3) * F.least(stop_ratio * 4, F.lit(1.0))
+        + F.lit(0.2) * (F.lit(1.0) - F.least(punct_ratio * 5, F.lit(1.0)))
+    )
+    return raw if round_decimals is None else F.round(raw, round_decimals)
+
+
+def ref_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+    w = F.split(F.col(text_col), " ")
+    scored = []
+    for i, code in enumerate(sorted(STOPWORDS)):
+        arr = F.array(*[F.lit(s) for s in STOPWORDS[code]])
+        hits = F.size(F.filter(w, lambda x: F.array_contains(arr, x)))
+        scored.append(F.struct(hits.alias("h"), F.lit(-i).alias("ord"), F.lit(code).alias("code")))
+    best = F.greatest(*scored)
+    return df.withColumn(out_col, F.when(best["h"] > 0, best["code"]).otherwise(F.lit("und")))
+
+
+def ref_curate_corpus(df: DataFrame, quality_threshold: float = 0.6,
+                      langs: Sequence[str] = ("en",), min_tokens: int = 20,
+                      id_col: str = "doc_id", text_col: str = "text",
+                      lang_col: Optional[str] = None) -> DataFrame:
+    if lang_col is None:
+        df = ref_lang_id(df, text_col, out_col="_lang")
+        lang = F.col("_lang")
+    else:
+        lang = F.col(lang_col)
+    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
+    ntok = F.size(F.split(F.col(text_col), " "))
+    q = F.floor(ref_quality_score(text_col, round_decimals=None) * 10000) / 10000
+    reason = (
+        F.when(F.row_number().over(w) > 1, F.lit("duplicate"))
+        .when(ntok < min_tokens, F.lit("too_short"))
+        .when(q < quality_threshold, F.lit("low_quality"))
+        .when(~lang.isin(*[str(x) for x in langs]), F.lit("wrong_lang"))
+    )
+    out = (df.withColumn("quality", q).withColumn("lang_used", lang)
+           .withColumn("drop_reason", reason))
+    return out.drop("_lang") if lang_col is None else out
+
+
+def ref_hash_bucket(id_col: str, buckets: int) -> Column:
+    h = F.md5(F.col(id_col).cast("string").cast("binary"))
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % F.lit(buckets)
+
+
+def ref_split_assign(docs: DataFrame, id_col: str = "doc_id",
+                     splits: Sequence[Tuple[str, float]] = (
+                         ("train", 0.90), ("val", 0.05), ("test", 0.05)),
+                     buckets: int = 1000, out_col: str = "split") -> DataFrame:
+    b = ref_hash_bucket(id_col, buckets)
+    expr = None
+    cum = 0.0
+    for name, frac in splits[:-1]:
+        cum += frac
+        cond = b < F.lit(int(round(cum * buckets)))
+        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
+    last = splits[-1][0]
+    return docs.withColumn(out_col, F.lit(last) if expr is None else expr.otherwise(last))
+
+
+def ref_with_packing(docs: DataFrame, by: Sequence[str] = (), id_col: str = "doc_id",
+                     text_col: str = "text", budget: int = 2048,
+                     n_buckets: int = 8) -> DataFrame:
+    w = Window.partitionBy(*by, "bucket").orderBy(id_col).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    start, n = F.col("start_offset"), F.col("n_tokens")
+    seq = (start - start % budget) / budget
+    end_seq = ((start + n - 1) - (start + n - 1) % budget) / budget
+    return docs.withColumns({
+        "bucket": ref_hash_bucket(id_col, n_buckets),
+        "n_tokens": F.size(F.split(F.col(text_col), " ")).cast("long"),
+    }).withColumn("start_offset", F.sum(n).over(w) - n).withColumns({
+        "seq_id": seq.cast("long"),
+        "crosses_cut": F.when(n > 0, (end_seq > seq).cast("int")).otherwise(0),
+    })
+
+
+def ref_pii_counts(text_col: str = "text") -> Sequence[Column]:
+    cols = []
+    total = None
+    for name, pat, _ in PII_PATTERNS:
+        c = F.regexp_count(F.col(text_col), F.lit(pat))
+        cols.append(c.alias(f"n_{name}"))
+        total = c if total is None else total + c
+    return [*cols, total.alias("n_pii")]
+
+
+def ref_redact_pii(text_col: str = "text") -> Column:
+    out = F.col(text_col)
+    for _, pat, repl in PII_PATTERNS:
+        out = F.regexp_replace(out, pat, repl)
+    return out
 
 
 # -- streaming -------------------------------------------------------

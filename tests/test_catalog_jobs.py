@@ -178,3 +178,51 @@ def test_read_transcripts_all_formats_agree(spark, sf_dir, tmp_path):
     import pytest
     with pytest.raises(ValueError):
         read_transcripts(spark, "x", fmt="avro")
+
+
+def _transcript_file(path, **columns):
+    """One-row transcripts parquet written by pyarrow (no Spark job),
+    with the perfbench generator's types unless overridden; a column
+    given as None is left out."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "conv_id": pa.array(["c0"]), "turn_idx": pa.array([0], pa.int32()),
+        "role": pa.array(["user"]), "text": pa.array(["<p>hi</p>"]),
+        "tool": pa.array([""]),
+        "ts": pa.array([datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)],
+                       pa.timestamp("us", tz="UTC")),
+    }
+    cols.update(columns)
+    os.makedirs(path)
+    pq.write_table(pa.table({k: v for k, v in cols.items() if v is not None}),
+                   os.path.join(path, "part-0.parquet"))
+    return path
+
+
+def test_read_transcripts_enforces_the_declared_types(spark, tmp_path):
+    """int32 ``turn_idx`` (what perfbench writes) and narrower integers
+    read as declared; a retyped or missing column fails at the read
+    instead of being cast or nulled."""
+    import pyarrow as pa
+    import pytest
+
+    from html_parser_spark.sources.catalog import TRANSCRIPT_DDL, read_transcripts
+
+    declared = [tuple(c.split()) for c in TRANSCRIPT_DDL.split(",")]
+    for name, typ in (("int32", pa.int32()), ("int16", pa.int16()), ("int8", pa.int8())):
+        df = read_transcripts(spark, _transcript_file(
+            str(tmp_path / name), turn_idx=pa.array([0], typ)))
+        assert df.dtypes == declared
+        assert df.first()["turn_idx"] == 0
+    with pytest.raises(ValueError, match="turn_idx: expected int, found string"):
+        read_transcripts(spark, _transcript_file(
+            str(tmp_path / "retyped"), turn_idx=pa.array(["0"])))
+    with pytest.raises(ValueError, match="turn_idx: expected int, found bigint"):
+        read_transcripts(spark, _transcript_file(
+            str(tmp_path / "wider"), turn_idx=pa.array([0], pa.int64())))
+    with pytest.raises(ValueError, match="tool: expected string, found None"):
+        read_transcripts(spark, _transcript_file(str(tmp_path / "missing"), tool=None))

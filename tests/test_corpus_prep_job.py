@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 from jobs.corpus_prep_job import parse_args, run
+from support import jvm_round_trips
 
 
 def _last_execution_id(spark):
@@ -194,3 +195,20 @@ def test_all_text_null(spark, prep):
      .write.mode("overwrite").parquet(str(base / "input_allnull")))
     summary = run(spark, _args(base, "input_allnull", "out_allnull"))
     assert _no_docs_kept(spark, base, "out_allnull", summary, 0) == {}
+
+
+def test_round_trip_budget(spark, prep):
+    """Per-row expressions are handed to the JVM as SQL text: a run
+    sends ~500 py4j commands (~3,400 when each was a chain of Column
+    methods, ~12 commands per method through PySpark's call-site
+    capture), and building the extraction plan ~70 (~420)."""
+    from html_parser_spark.plans.pipeline import extract_turns
+    from html_parser_spark.sources.catalog import read_transcripts
+
+    base, _, _, _ = prep
+    with jvm_round_trips() as n:
+        run(spark, _args(base, "input", "out_rt"))
+    assert 0 < n[0] <= 600
+    with jvm_round_trips() as n:
+        extract_turns(read_transcripts(spark, str(base / "input")))
+    assert 0 < n[0] <= 100

@@ -71,6 +71,17 @@ def test_run_and_resume(spark, transcripts, tmp_path):
     assert ctl.where(F.col("run_id") == "r1").agg(F.sum("n_rows")).collect()[0][0] >= m1["rows_total"]
 
 
+def test_run_extraction_leaves_session_conf_unchanged(spark, transcripts, tmp_path):
+    """Dynamic partition overwrite is a per-write option of write_table;
+    a run must not switch the caller's session to it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
+                   str(tmp_path / "out"), str(tmp_path / "control"), run_id="conf",
+                   cfg=PipelineConfig(n_buckets=2), check_ordering=False)
+    assert spark.conf.get(key) == before
+
+
 def test_partial_resume_processes_only_missing_buckets(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out2")
     ctl_dir = str(tmp_path / "control2")
