@@ -6,6 +6,7 @@ package."""
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import io
 import struct
@@ -143,9 +144,12 @@ def split_counts(
 @contextmanager
 def jvm_round_trips():
     """Count the py4j commands the driver sends inside the block
-    (``n[0]``), object releases from py4j's collector thread included."""
+    (``n[0]``), object releases from py4j's collector thread included.
+    Garbage left by earlier work is released before the count starts."""
     from py4j.clientserver import ClientServerConnection
 
+    gc.collect()
+    time.sleep(0.5)  # let the collector thread send those releases
     n = [0]
     send = ClientServerConnection.send_command
 
