@@ -1,6 +1,8 @@
 """Helpers only the tests call: synthetic image/audio encoders for the
-stdlib decoders, thin compositions over production operators, and the
-query-hook twins of ``kernel.instrumentation.parse_with_hooks``.  The
+stdlib decoders, thin compositions over production operators, a py4j
+round-trip counter, the Column-API reference forms of the operators'
+SQL-text rules, and the query-hook twins of
+``kernel.instrumentation.parse_with_hooks``.  The
 encoders that feed gated queries (JPEG, GIF, media, PDF) live in the
 package."""
 

@@ -7,7 +7,8 @@ determinism across reruns (the job's documented overwrite contract
 rests on it), one kernel pass per input turn, at most three Spark
 actions per run, a summary that agrees with the written tables,
 null-text turns never reaching the kernel or the output, runs that
-keep no document, and no persisted frame outliving the job.
+keep no document, no persisted frame outliving the job, and a cap on
+the driver's py4j round trips per run.
 """
 
 import pandas as pd
