@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 from ..sql import ident
 from .textstats import lang_id, quality_score_sql, token_count_sql
 
+# The drop reasons in rule order: a document gets the first that holds.
+DROP_REASONS = ("duplicate", "too_short", "low_quality", "wrong_lang")
+
 
 def curate_corpus(
     df: DataFrame,
@@ -51,24 +54,26 @@ def curate_corpus(
     if lang_col is None:
         df = lang_id(df, text_col, out_col="_lang")
     lang = ident(lang_col or "_lang")
+    rules = (  # one per DROP_REASONS entry, in its order
+        f"row_number() OVER (PARTITION BY md5({ident(text_col)}) ORDER BY {ident(id_col)}) > 1",
+        f"{token_count_sql(text_col)} < {int(min_tokens)}",
+        f"quality < {float(quality_threshold)!r}D",
+        "NOT _allowed",
+    )
     out = df.withColumns({
         "quality": F.expr(f"floor({quality_score_sql(text_col, None)} * 10000) / 10000"),
         "lang_used": F.expr(lang),
         # caller-supplied codes go in as literals, never as SQL text
         "_allowed": F.array_contains(F.array(*[F.lit(str(x)) for x in langs]), F.expr(lang)),
-    }).withColumn("drop_reason", F.expr(
-        f"CASE WHEN row_number() OVER (PARTITION BY md5({ident(text_col)})"
-        f" ORDER BY {ident(id_col)}) > 1 THEN 'duplicate'"
-        f" WHEN {token_count_sql(text_col)} < {int(min_tokens)} THEN 'too_short'"
-        f" WHEN quality < {float(quality_threshold)!r}D THEN 'low_quality'"
-        " WHEN NOT _allowed THEN 'wrong_lang' END"))
+    }).withColumn("drop_reason", F.expr("CASE{} END".format("".join(
+        f" WHEN {rule} THEN '{reason}'" for reason, rule in zip(DROP_REASONS, rules)))))
     return out.drop("_allowed", *(["_lang"] if lang_col is None else []))
 
 
-def curation_stats(curated: DataFrame, *by: str) -> DataFrame:
-    """Per-reason accounting (reason, *by, n_docs), kept rows as 'kept';
+def curation_stats(curated: DataFrame) -> DataFrame:
+    """Per-reason accounting (reason, n_docs), kept rows as 'kept';
     unordered, since a sort adds a range-sampling job to every use."""
-    return curated.groupBy(F.expr("coalesce(drop_reason, 'kept') AS reason"), *by).agg(
+    return curated.groupBy(F.expr("coalesce(drop_reason, 'kept') AS reason")).agg(
         F.expr("count(1) AS n_docs"))
 
 

@@ -86,7 +86,8 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quality_score_sql(text_col: str, round_decimals: int | None) -> str:
     """SQL text of :func:`quality_score`."""
-    n_tokens, n_chars = token_count_sql(text_col), f"octet_length({ident(text_col)})"
+    # an empty text has no punctuation ratio: NULL, which ``least`` skips
+    n_tokens, n_chars = token_count_sql(text_col), f"nullif(octet_length({ident(text_col)}), 0)"
     stripped = f"octet_length(regexp_replace({ident(text_col)}, '{_PUNCT_RE}', ''))"
     raw = (f"(0.5D * least({n_tokens} / 64.0D, 1.0D)"
            f" + 0.3D * least({_hits_sql(text_col, 'en')} / {n_tokens} * 4, 1.0D)"

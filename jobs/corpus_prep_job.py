@@ -19,30 +19,35 @@ Stages (all deterministic — two runs over the same input byte-match):
    extract_turns; zero pre-kernel shuffle).  Null input text is
    filtered before the kernel, at the scan;
 2. curate   — exact-dup / too-short / low-quality / wrong-lang with
-   ordered drop reasons (operators/curate.py);
+   ordered drop reasons (operators/curate.py ``DROP_REASONS``);
 3. split    — deterministic hash holdout of ``doc_id`` alone
-   (operators/corpusprep.py), so it runs before the branch: the
-   curated frame is persisted once (MEMORY_AND_DISK) already carrying
-   ``split``, and feeds the (reason, split) counts and the kept rows;
-4. scrub    — PII redaction + per-doc ``n_pii`` on the kept rows
-   (operators/pii.py; one projection, map-only);
+   (operators/corpusprep.py).  Dropped rows stay in the lineage with
+   their text nulled, so they cost no scrub or tokens downstream;
+4. scrub    — PII redaction + per-doc ``n_pii`` (operators/pii.py; one
+   projection, map-only);
 5. pack     — concatenate-and-chop token packing plan, ONE window over
-   (split, bucket), so a training sequence never mixes splits.
+   (split, bucket), so a training sequence never mixes splits; a
+   NULL text adds no tokens to its stream.
 
-Three Spark actions: collect the (reason, split) counts (the stats
-rows; ``rows_in`` is their sum, ``splits`` the kept rows), write the
-docs, and write the stats from the collected rows as a one-task local
-relation.  The kernel runs once per turn; nothing is re-read.
+Two Spark actions and nothing persisted or collected: the docs write,
+which observes each drop reason's count and the kept rows per split
+(a ``DataFrame.observe`` above the packing shuffle, in the write's
+result stage, so a retried task or a resubmitted map stage cannot count
+twice) and keeps the rows with no drop reason; then the stats write,
+from the observed counts, as a one-task local relation.  ``rows_in``
+is the counts' sum and ``splits`` the kept rows; a reason or split
+with no row is left out of both.  The kernel runs once per turn;
+nothing is re-read.
 
-Output: ``<output>/docs`` parquet partitioned by ``split`` with
-``(doc_id, conv_id, turn_idx, role, text, quality, lang_used,
-n_pii, split, bucket, n_tokens, start_offset, seq_id, crosses_cut)``,
-and ``<output>/stats`` with the per-reason curation accounting the
-mixture designer reads.  The job is a pure function of its input:
-re-running OVERWRITES both tables (use extract_job.py's control-table
-pattern when incremental resume matters — this job's value is the
-composition, and every stage is deterministic, so a rerun is always
-safe).
+Output: ``<output>/docs`` parquet partitioned by ``split``, with the
+schema ``DOCS_DDL``, and ``<output>/stats`` ``(reason, n_docs)`` with
+the per-reason curation accounting the mixture designer reads.  A run
+that keeps no document leaves no parquet file under ``docs``, so a
+reader passes the schema: ``spark.read.schema(DOCS_DDL).parquet(...)``.
+The job is a pure function of its input: re-running OVERWRITES both
+tables (use extract_job.py's control-table pattern when incremental
+resume matters — this job's value is the composition, and every stage
+is deterministic, so a rerun is always safe).
 
 A JSON line with headline counts is printed on success (the same
 contract bench.py uses).
@@ -53,7 +58,13 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-from collections import Counter
+
+# The docs table's schema as a reader sees it (``split``, the partition
+# column, comes last); readers pass it (see the module docstring).
+DOCS_DDL = ("doc_id STRING, conv_id STRING, turn_idx INT, role STRING, text STRING, "
+            "quality DOUBLE, lang_used STRING, n_pii INT, bucket BIGINT, n_tokens BIGINT, "
+            "start_offset BIGINT, seq_id BIGINT, crosses_cut INT, split STRING")
+DOCS_COLUMNS = tuple(c.split(" ")[0] for c in DOCS_DDL.split(", "))
 
 
 def parse_args(argv):
@@ -75,10 +86,11 @@ def parse_args(argv):
 
 
 def run(spark, args) -> dict:
-    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
     from html_parser_spark.operators.corpusprep import split_assign, with_packing
-    from html_parser_spark.operators.curate import curate_corpus, curation_stats
+    from html_parser_spark.operators.curate import DROP_REASONS, curate_corpus
     from html_parser_spark.operators.pii import pii_total, redact_pii
     from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
     from html_parser_spark.sources.catalog import read_transcripts
@@ -95,39 +107,45 @@ def run(spark, args) -> dict:
         "conv_id", "turn_idx", "role", "main_text AS text")
 
     # 2. curate (quality/lang/dup/short with ordered reasons) + 3. split.
-    # The lineage branches here (counts vs kept), so it is persisted
-    # once: the kernel and the dedup window run once.
+    # Dropped rows stay in the lineage for the counts below, with their
+    # text nulled: they are neither scrubbed nor packed (a NULL text
+    # adds no tokens) and ride the packing shuffle with little payload.
     holdout = (("train", args.train), ("val", args.val), ("test", args.test))
     curated = split_assign(curate_corpus(
         docs, quality_threshold=args.quality,
         langs=tuple(s for s in args.langs.split(",") if s),
-        min_tokens=args.min_tokens), splits=holdout).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        counts = curation_stats(curated, "split").collect()
-        kept = curated.where("drop_reason IS NULL")
+        min_tokens=args.min_tokens), splits=holdout).withColumn(
+        "text", F.expr("CASE WHEN drop_reason IS NULL THEN text END"))
 
-        # 4. PII scrub — redacted text replaces the raw extraction
-        scrubbed = kept.withColumns({"n_pii": pii_total("text"), "text": redact_pii("text")})
+    # 4. PII scrub — redacted text replaces the raw extraction
+    scrubbed = curated.withColumns({"n_pii": pii_total("text"), "text": redact_pii("text")})
 
-        # 5. packing plan, one stream per (split, bucket)
-        (with_packing(scrubbed, ("split",), budget=args.budget, n_buckets=args.pack_buckets)
-         .selectExpr(
-            "doc_id", "conv_id", "turn_idx", "role", "text", "quality",
-            "lang_used", "n_pii", "split", "bucket", "n_tokens",
-            "start_offset", "seq_id", "crosses_cut")
-         .write.mode("overwrite").partitionBy("split")
-         .parquet(args.output + "/docs"))
-    finally:
-        curated.unpersist()
+    # 5. packing plan, one stream per (split, bucket); the counts are
+    # observed above its shuffle, in the write's result stage, where a
+    # retried or resubmitted task's updates are applied once
+    counts = Observation("corpus_prep")
+    kept_split = F.expr("CASE WHEN drop_reason IS NULL THEN split END")
+    (with_packing(scrubbed, ("split",), budget=args.budget, n_buckets=args.pack_buckets)
+     .observe(counts, *[F.expr(f"count_if(drop_reason = '{r}') AS {r}") for r in DROP_REASONS],
+              # caller-supplied split names go in as literals, never as SQL text
+              F.array(*[F.count_if(F.equal_null(kept_split, F.lit(name)))
+                        for name, _ in holdout]).alias("kept"))
+     .where("drop_reason IS NULL")
+     .selectExpr(*DOCS_COLUMNS)
+     .write.mode("overwrite").partitionBy("split")
+     .parquet(args.output + "/docs"))
 
-    by_reason = sum((Counter({r["reason"]: r["n_docs"]}) for r in counts), Counter())
+    observed = counts.get
+    splits = {name: k for (name, _), k in zip(holdout, observed["kept"]) if k}
+    by_reason = {r: observed[r] for r in DROP_REASONS if observed[r]}
+    if splits:
+        by_reason["kept"] = sum(splits.values())
     # JVM-side rows, no Python RDD; the cast also types an empty array.
     # The reasons are curate_corpus's constants, so they go in as text.
     rows = ", ".join(f"struct('{k}', {n})" for k, n in sorted(by_reason.items()))
     (spark.range(1, numPartitions=1)
      .selectExpr(f"inline(CAST(array({rows}) AS array<struct<reason:string,n_docs:bigint>>))")
      .write.mode("overwrite").parquet(args.output + "/stats"))
-    splits = {r["split"]: r["n_docs"] for r in counts if r["reason"] == "kept"}
     return {
         "metric": "corpus_prep",
         "rows_in": sum(by_reason.values()),

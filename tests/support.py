@@ -173,7 +173,7 @@ def jvm_round_trips():
 def ref_quality_score(text_col: str = "text", round_decimals: Optional[int] = 4) -> Column:
     w = F.split(F.col(text_col), " ")
     n_tokens = F.size(w)
-    n_chars = F.octet_length(F.col(text_col))
+    n_chars = F.nullif(F.octet_length(F.col(text_col)), F.lit(0))
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
     stop_ratio = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))) / n_tokens
     len_score = F.least(n_tokens / F.lit(64.0), F.lit(1.0))
@@ -249,7 +249,7 @@ def ref_with_packing(docs: DataFrame, by: Sequence[str] = (), id_col: str = "doc
     end_seq = ((start + n - 1) - (start + n - 1) % budget) / budget
     return docs.withColumns({
         "bucket": ref_hash_bucket(id_col, n_buckets),
-        "n_tokens": F.size(F.split(F.col(text_col), " ")).cast("long"),
+        "n_tokens": F.array_size(F.split(F.col(text_col), " ")).cast("long"),
     }).withColumn("start_offset", F.sum(n).over(w) - n).withColumns({
         "seq_id": seq.cast("long"),
         "crosses_cut": F.when(n > 0, (end_seq > seq).cast("int")).otherwise(0),
