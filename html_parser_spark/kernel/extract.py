@@ -9,12 +9,10 @@ logic, deterministic and pinned by tests):
 3. structural strip: subtrees matching ``remove_selector`` (default:
    script/style/title/textarea raw-text containers + classic chrome
    nav/header/footer/aside/form + opaque svg) are masked out;
-4. heuristic strip (optional): candidate block containers whose
-   *link density* (text under ``<a>`` descendants / total text) exceeds
-   ``link_density_threshold``, or whose *text density* (text bytes per
-   descendant element) falls below ``min_text_density`` while being
-   link-heavy, are masked — catches link-farms the structural pass
-   missed;
+4. link-density strip: block containers with text whose *link
+   density* (text under ``<a>`` descendants / total text) exceeds
+   ``LINK_DENSITY_THRESHOLD`` are masked — catches link-farms the
+   structural pass missed;
 5. surviving TEXT nodes under root are gathered in preorder, entity
    decoded, whitespace-normalized across node boundaries; their raw
    byte spans (into the original document bytes) are reported.
@@ -35,8 +33,10 @@ DEFAULT_REMOVE_SELECTOR = (
     "script, style, title, textarea, nav, header, footer, aside, form, svg"
 )
 
-# Containers eligible for the link-density heuristic.
+# Containers eligible for the link-density strip, and the share of
+# their text under ``<a>`` above which they are stripped.
 _BLOCK_TAGS = frozenset((b"div", b"section", b"ul", b"ol", b"table", b"p", b"article"))
+LINK_DENSITY_THRESHOLD = 0.5
 
 
 @dataclass
@@ -73,26 +73,14 @@ def _link_text_lengths(dom: Dom, root: int, removed: List[bool]) -> Tuple[List[i
     return text_len, link_len
 
 
-def extract_main(
-    source,
-    remove_selector: Optional[Selector] = None,
-    drop_whitespace_text_nodes: bool = False,
-    use_link_density: bool = True,
-    link_density_threshold: float = 0.5,
-    min_block_text: int = 0,
-    min_text_density: Optional[float] = None,
-) -> ExtractResult:
+def extract_main(source, remove_selector: Optional[Selector] = None) -> ExtractResult:
     """Extract main content text + contributing raw text spans.
 
-    ``min_text_density`` (opt-in): additionally strip block containers
-    whose text bytes per descendant element fall below the threshold
-    AND that contain at least one link — the sparse-link-grid shape
-    (tag clouds, related-article tiles) that link density alone can
-    miss when each tile has enough text relative to its one link.
-    """
+    ``remove_selector`` replaces the structural strip's default
+    selector (step 3 of the module docstring)."""
     if remove_selector is None:
         remove_selector = _DEFAULT_REMOVE_COMPILED
-    dom = parse(source, drop_whitespace_text_nodes=drop_whitespace_text_nodes)
+    dom = parse(source)
     n = len(dom.kind)
     removed = [False] * n
 
@@ -110,52 +98,23 @@ def extract_main(
         for j in range(idx, dom.subtree_end[idx] + 1):
             removed[j] = True
 
-    if use_link_density or min_text_density is not None:
-        text_len, link_len = _link_text_lengths(dom, root, removed)
-        elem_count = None
-        if min_text_density is not None:
-            # Descendant-element counts by the same reverse preorder
-            # accumulation trick (children precede parents from the
-            # right).
-            n_all = len(dom.kind)
-            elem_count = [0] * n_all
-            lo_, hi_ = root, dom.subtree_end[root]
-            for idx in range(hi_, lo_, -1):
-                p = dom.parent[idx]
-                if p != 0xFFFFFFFF and p >= lo_:
-                    # skip selector-removed nodes, mirroring
-                    # _link_text_lengths — text_len already excludes
-                    # them, so counting them here would deflate the
-                    # density of containers whose boilerplate children
-                    # are gone and over-strip the remainder
-                    own = 1 if (dom.kind[idx] == ELEMENT and not removed[idx]) else 0
-                    elem_count[p] += elem_count[idx] + own
-        lo, hi = root, dom.subtree_end[root]
-        idx = lo + 1 if root else 1
-        while idx <= hi:
-            strip = False
-            if (
-                not removed[idx]
-                and dom.kind[idx] == ELEMENT
-                and dom.name_lower[idx] in _BLOCK_TAGS
-                and text_len[idx] > min_block_text
-            ):
-                if use_link_density and link_len[idx] / text_len[idx] > link_density_threshold:
-                    strip = True
-                elif (
-                    min_text_density is not None
-                    and link_len[idx] > 0
-                    and elem_count[idx] > 0
-                    and text_len[idx] / elem_count[idx] < min_text_density
-                ):
-                    strip = True
-            if strip:
-                n_removed += 1
-                for j in range(idx, dom.subtree_end[idx] + 1):
-                    removed[j] = True
-                idx = dom.subtree_end[idx] + 1
-                continue
-            idx += 1
+    text_len, link_len = _link_text_lengths(dom, root, removed)
+    hi = dom.subtree_end[root]
+    idx = root + 1
+    while idx <= hi:
+        if (
+            not removed[idx]
+            and dom.kind[idx] == ELEMENT
+            and dom.name_lower[idx] in _BLOCK_TAGS
+            and text_len[idx] > 0
+            and link_len[idx] / text_len[idx] > LINK_DENSITY_THRESHOLD
+        ):
+            n_removed += 1
+            for j in range(idx, dom.subtree_end[idx] + 1):
+                removed[j] = True
+            idx = dom.subtree_end[idx] + 1
+            continue
+        idx += 1
 
     spans: List[Tuple[int, int]] = []
     segs: List[bytes] = []

@@ -7,11 +7,11 @@ node_count}``.  The query-hook twins (``QueryStats`` with the
 reference's cached/runtime split) have no caller outside the tests and
 live in ``tests/support.py``.
 
-Hooks are plain callables (``on_parse_start(input_len)``,
-``on_parse_end(stats)``); in the Spark pipeline the same payloads feed
-``html_ops.parse_stats_udf`` and per-partition metric rows in the
-control table (plans/pipeline.py) — the distributed analog of these
-single-process hooks.
+The one hook is a plain callable, ``on_parse_end(stats)``: the
+reference's parse-start hook and its whitespace-dropping parse profile
+are left out, since no caller sets them (``htmlparse.parse`` and
+``api.Document.parse`` keep the profile).  In Spark the same payload is
+``html_ops.parse_stats_udf``'s per-document struct.
 """
 from __future__ import annotations
 
@@ -30,16 +30,13 @@ class ParseStats:
 
 
 def parse_with_hooks(
-    source,
-    drop_whitespace_text_nodes: bool = False,
-    on_parse_start: Optional[Callable[[int], None]] = None,
-    on_parse_end: Optional[Callable[[ParseStats], None]] = None,
+    source, on_parse_end: Optional[Callable[[ParseStats], None]] = None,
 ) -> Dom:
+    """Parse ``source`` and pass its :class:`ParseStats` to
+    ``on_parse_end``."""
     data = source.encode("utf-8") if isinstance(source, str) else source
-    if on_parse_start is not None:
-        on_parse_start(len(data))
     t0 = time.perf_counter_ns()
-    dom = parse(data, drop_whitespace_text_nodes=drop_whitespace_text_nodes)
+    dom = parse(data)
     if on_parse_end is not None:
         on_parse_end(ParseStats(
             elapsed_ns=max(time.perf_counter_ns() - t0, 0),

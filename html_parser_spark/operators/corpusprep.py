@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sql import ident
+from .textstats import token_count_sql
 
 
 def hash_bucket_sql(id_col: str, buckets: int) -> str:
@@ -102,9 +103,7 @@ def with_packing(
     end_seq = f"(({end}) - ({end}) % {budget}) / {budget}"
     return docs.withColumns({
         "bucket": F.expr(hash_bucket_sql(id_col, n_buckets)),
-        # NULL for a NULL text under both ANSI settings (``size`` gives -1
-        # with ANSI off), so such a row adds nothing to its stream's sum
-        "n_tokens": F.expr(f"CAST(array_size(split({ident(text_col)}, ' ')) AS BIGINT)"),
+        "n_tokens": F.expr(f"CAST({token_count_sql(text_col)} AS BIGINT)"),
     }).withColumn("start_offset", F.expr(
         f"sum(n_tokens) OVER (PARTITION BY {key} ORDER BY {ident(id_col)}"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens",

@@ -145,7 +145,6 @@ def dup_clusters(
     max_iter: int = 20,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    round_log: list | None = None,
 ) -> DataFrame:
     """Connected components over candidate-pair edges → duplicate
     clusters: returns (id, cluster_id) with ``cluster_id`` = the
@@ -168,11 +167,6 @@ def dup_clusters(
     see module docstring).  ``localCheckpoint`` after every round
     truncates the lineage so the plan doesn't grow exponentially —
     required at any scale, not an optimization.
-
-    ``round_log`` (optional): a list the loop appends one entry per
-    completed round to — lets callers/monitoring observe convergence
-    (rounds taken) from a single run without re-running under a
-    max_iter bisect.
     """
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges.union(
@@ -211,8 +205,6 @@ def dup_clusters(
             .limit(1).count()
         )
         labels = new_labels
-        if round_log is not None:
-            round_log.append({"changed": bool(changed)})
         if changed == 0:
             break
     else:
@@ -524,7 +516,6 @@ def incremental_new_docs(
     history: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_history: bool = False,
 ) -> DataFrame:
     """Snapshot-delta dedup: which documents in a new ``batch`` are
     genuinely new relative to an already-ingested ``history`` corpus?
@@ -545,17 +536,14 @@ def incremental_new_docs(
     the internal window + one hash anti-join against history.  At
     10^12 history rows the anti-join is a shuffled hash join on
     uniform md5 keys (bucketed history storage makes it co-located);
-    when the history hash set is small (early corpus, per-source
-    slices) ``broadcast_history=True`` pins a BroadcastHashJoin and
-    the batch never shuffles for the join at all.
+    AQE turns it into a BroadcastHashJoin when the history hash set is
+    under the broadcast threshold (early corpus, per-source slices).
     """
     if "content_hash" in history.columns:
         seen = history.select("content_hash").distinct()
     else:
         seen = history.select(
             F.md5(F.col(text_col)).alias("content_hash")).distinct()
-    if broadcast_history:
-        seen = F.broadcast(seen)
     h = F.md5(F.col(text_col)).alias("content_hash")
     w = Window.partitionBy("content_hash").orderBy(F.col(id_col).asc())
     batch_first = (

@@ -85,100 +85,19 @@ def _assign_udf(df: DataFrame, cmat: "np.ndarray", cnorm: "np.ndarray"):
     return assign
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    num_cells: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> List:
-    """Deterministic spherical k-means for IVF coarse centroids.
-
-    Init = the ``num_cells`` lowest-id vectors (RNG-free; ``num_cells``
-    is clamped to the corpus size, and an empty corpus raises).  Each
-    round assigns via the broadcast-GEMM argmax (map-only) and
-    recomputes centroids from per-cell vector sums accumulated as ONE
-    ``array<double>`` state per (partition, cell) inside a
-    ``mapInPandas`` partial-sum (numpy scatter-add per Arrow batch),
-    then reduced per cell — the shuffle is ``partitions × cells`` rows
-    of one array column regardless of corpus size OR dimensionality.
-    (The round-2 form shuffled ``dim`` named ``sum()`` columns: fine at
-    dim ≤ ~256, codegen bloat at 1–4k dims; this form is dim-robust —
-    tested at dim 512.)  Empty cells keep their previous centroid.
-    Returns [(cell_index, centroid_vector)].  Float-sum ordering makes
-    low bits run-dependent, so this is an index-build quality knob, not
-    an oracle-checked operator — recall correctness is independent of
-    centroid choice (probe=all ⇒ exact, tested)."""
-    init = df.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(num_cells).collect()
-    if not init:
-        raise ValueError("kmeans_centroids: input DataFrame is empty")
-    num_cells = min(num_cells, len(init))
-    cents = [[float(x) for x in r[1]] for r in init]
-    dim = len(cents[0])
-    v = F.col(vec_col).cast("array<double>")
-    k = num_cells
-
-    def partial_sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sums = np.zeros((k, dim), dtype=np.float64)
-        counts = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vm = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            cells = pdf["cell"].to_numpy()
-            np.add.at(sums, cells, vm)
-            np.add.at(counts, cells, 1)
-        nz = np.flatnonzero(counts)
-        if len(nz):
-            yield pd.DataFrame({"cell": nz.astype("int32"), "n": counts[nz],
-                                "s": list(sums[nz])})
-
-    def reduce_cell(key, pdf):
-        s = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["s"]]).sum(axis=0)
-        return pd.DataFrame({"cell": [key[0]], "n": [int(pdf["n"].sum())], "s": [s]})
-
-    partial_schema = "cell int, n long, s array<double>"
-    for _ in range(iters):
-        cmat = np.asarray(cents, dtype=np.float64)
-        cnorm = np.linalg.norm(cmat, axis=1)
-        assign = _assign_udf(df, cmat, cnorm)
-        assigned = df.select(assign(v).alias("cell"), v.alias("v"))
-        agg = (
-            assigned.mapInPandas(partial_sums, schema=partial_schema)
-            .groupBy("cell")
-            .applyInPandas(reduce_cell, schema=partial_schema)
-        )
-        rows = {int(r["cell"]): r for r in agg.collect()}
-        new_cents = []
-        for ci in range(num_cells):
-            r = rows.get(ci)
-            if r is None or r["n"] == 0:
-                new_cents.append(cents[ci])
-                continue
-            mean = np.asarray(r["s"], dtype=np.float64) / r["n"]
-            nrm = np.linalg.norm(mean)
-            new_cents.append((mean / nrm if nrm > 0 else mean).tolist())
-        cents = new_cents
-    return [(ci, cents[ci]) for ci in range(num_cells)]
-
-
 def build_ivf_index(
     df: DataFrame,
     num_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "first",
-    kmeans_iters: int = 5,
-) -> DataFrame:
+) -> tuple[DataFrame, List]:
     """Assign each vector to its nearest deterministic coarse centroid.
 
-    ``strategy="first"`` (default): centroids = the ``num_cells``
-    vectors with the smallest ids — deterministic, RNG-free, and
-    reproducible by the DuckDB oracle.  ``strategy="kmeans"``: refine
-    that init with :func:`kmeans_centroids` for balanced cells on
-    clustered corpora (index-build quality knob; not oracle-checked —
-    see kmeans_centroids).  Returns df + ``cell`` column; write
-    partitioned by ``cell`` for pruning.
+    Centroids are the ``num_cells`` vectors with the smallest ids —
+    deterministic, RNG-free, and reproducible by the DuckDB oracle; an
+    empty input raises ``ValueError``.  Returns (df + ``cell`` column,
+    [(id, vector)] of the centroids in cell order); write partitioned
+    by ``cell`` for pruning.
 
     Assignment is a map-only Arrow-batched argmax over a broadcast
     centroid matrix: one numpy matmul per batch, no shuffle, and no
@@ -188,13 +107,10 @@ def build_ivf_index(
     Ties break as round(cosine, 9) then lowest centroid index, matching
     the DuckDB oracle's rank expression.
     """
-    if strategy == "kmeans":
-        cents = kmeans_centroids(df, num_cells, kmeans_iters, id_col, vec_col)
-    else:
-        cents = [
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in df.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(num_cells).collect()
-        ]
+    cents = [
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in df.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(num_cells).collect()
+    ]
     if not cents:
         raise ValueError("build_ivf_index: input DataFrame is empty")
     cmat = np.asarray([c[1] for c in cents], dtype=np.float64)

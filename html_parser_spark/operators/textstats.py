@@ -42,7 +42,9 @@ def _hits_sql(text_col: str, code: str) -> str:
 
 
 def token_count_sql(text_col: str) -> str:
-    return f"size({_words_sql(text_col)})"
+    """Whitespace token count; NULL for a NULL text under both ANSI
+    settings (``size`` would give -1 with ANSI off)."""
+    return f"array_size({_words_sql(text_col)})"
 
 
 def words_col(text_col: str = "text") -> Column:
@@ -273,7 +275,6 @@ def contamination_check(
     min_hits: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination detection: for every corpus document,
     count the distinct word ``ngram_n``-grams it shares with ANY
@@ -281,11 +282,10 @@ def contamination_check(
     of a pretraining pipeline.  Returns (id, n_hits, contaminated).
 
     Scale shape: the benchmark side collapses to a distinct n-gram set
-    and is broadcast (``broadcast_benchmark=True``, the normal case —
-    eval sets are tiny next to a training corpus), so the check is a
-    map-side hash semi-join on the exploded corpus: no corpus shuffle
-    except the per-doc hit count, which keys on the doc id.  For a huge
-    "benchmark" set pass False and let AQE pick the join.
+    and is always broadcast (eval sets are tiny next to a training
+    corpus), so the check is a map-side hash semi-join on the exploded
+    corpus: no corpus shuffle except the per-doc hit count, which keys
+    on the doc id.
     """
     from .dedup import word_shingles
 
@@ -296,9 +296,7 @@ def contamination_check(
     b = benchmark.select(
         F.explode(F.array_distinct(word_shingles(text_col, ngram_n))).alias("g")
     ).distinct()
-    if broadcast_benchmark:
-        b = F.broadcast(b)
-    hits = c.join(b, "g").groupBy("id").agg(F.count_distinct("g").alias("n_hits"))
+    hits = c.join(F.broadcast(b), "g").groupBy("id").agg(F.count_distinct("g").alias("n_hits"))
     return (
         corpus.select(F.col(id_col).alias("id"))
         .join(hits, "id", "left")
@@ -397,7 +395,6 @@ def doc_neg_logprob(
     text_col: str = "text",
     alpha: float = 1.0,
     model: DataFrame | None = None,
-    broadcast_model: bool = False,
 ) -> DataFrame:
     """Per-document mean negative log-probability under an add-alpha
     smoothed corpus unigram model — the codec-free stand-in for the
@@ -418,16 +415,12 @@ def doc_neg_logprob(
     Scale shape: token frequencies aggregate map-side first, so hot
     stopwords arrive pre-combined; the scoring join keys on the token
     — the model side has ONE row per token, so hot probe keys hash
-    against a single build row and AQE's skew split handles the rest.
-    ``broadcast_model=True`` pins a broadcast join for moderate
-    vocabularies (the per-token scalars are ~24 B/row, so a 10M-token
-    vocab broadcasts in ~240 MB); leave False at web-corpus vocabulary
-    sizes.  The two scalar totals ride along via a broadcast 1-row
+    against a single build row and AQE's skew split handles the rest;
+    AQE broadcasts the model side when it is under the broadcast
+    threshold.  The two scalar totals ride along via a broadcast 1-row
     cross join — nothing collects to the driver.
     """
     freq = unigram_counts(docs, text_col) if model is None else model
-    if broadcast_model:
-        freq = F.broadcast(freq)
     tot = freq.agg(
         F.sum("n").cast("double").alias("_N"),
         F.count(F.lit(1)).cast("double").alias("_V"),

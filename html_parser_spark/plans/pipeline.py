@@ -29,10 +29,8 @@ Design for the 10^12-turn target (north_rule):
   so the default ``n_salts = 0`` stays map-only.
 * **Ordering assertion.**  Correctness is defined under stable turn
   ordering; ``assert_turn_ordering`` verifies per-conversation
-  turn_idx density (count == distinct == max-min+1) with one
-  aggregation — the windowed ``row_number`` variant is available via
-  ``strict=True`` and is the only window use in the pipeline, exactly
-  as the north star limits it.
+  turn_idx density (count == distinct == max-min+1, min == 0) with
+  one aggregation and no window.
 * **Control table.**  One lineage/metric row per completed bucket
   ``(run_id, bucket, n_rows, n_convs, n_chars_out, started_at,
   finished_at, wall_sec)``; resume = anti-join of buckets against
@@ -45,7 +43,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.html_ops import extract_struct_udf
@@ -87,21 +85,11 @@ def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
         *[f"_ex.{c} AS {c}" for c in ("main_text", "spans", "n_nodes", "n_removed")])
 
 
-def assert_turn_ordering(df: DataFrame, strict: bool = False) -> int:
-    """Return number of conversations violating dense turn ordering.
-
-    Cheap path: one groupBy checking count == countDistinct ==
-    max-min+1 and min == 0.  Strict path: window row_number must equal
-    the rank of turn_idx (the pipeline's single sanctioned window use).
-    """
-    if strict:
-        w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc())
-        bad = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") - 1 != F.col("turn_idx"))
-            .select("conv_id").distinct().count()
-        )
-        return bad
+def assert_turn_ordering(df: DataFrame) -> int:
+    """Return number of conversations violating dense turn ordering:
+    one groupBy checking count == countDistinct == max-min+1 and
+    min == 0, so a duplicated turn, a gap and a non-zero start all
+    count."""
     agg = df.groupBy("conv_id").agg(
         F.count("*").alias("n"),
         F.countDistinct("turn_idx").alias("nd"),

@@ -172,7 +172,7 @@ def jvm_round_trips():
 
 def ref_quality_score(text_col: str = "text", round_decimals: Optional[int] = 4) -> Column:
     w = F.split(F.col(text_col), " ")
-    n_tokens = F.size(w)
+    n_tokens = F.array_size(w)
     n_chars = F.nullif(F.octet_length(F.col(text_col)), F.lit(0))
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
     stop_ratio = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))) / n_tokens
@@ -206,7 +206,7 @@ def ref_curate_corpus(df: DataFrame, quality_threshold: float = 0.6,
     else:
         lang = F.col(lang_col)
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
-    ntok = F.size(F.split(F.col(text_col), " "))
+    ntok = F.array_size(F.split(F.col(text_col), " "))
     q = F.floor(ref_quality_score(text_col, round_decimals=None) * 10000) / 10000
     reason = (
         F.when(F.row_number().over(w) > 1, F.lit("duplicate"))

@@ -21,8 +21,6 @@ ALLOWED = {
     ("operators/html_ops.py", "doc_udf", "pandas_udf"),
     ("operators/similarity.py", "_assign_udf", "pandas_udf"),
     ("operators/similarity.py", "_probe_udf", "pandas_udf"),
-    ("operators/similarity.py", "kmeans_centroids", "mapInPandas"),
-    ("operators/similarity.py", "kmeans_centroids", "applyInPandas"),
     ("operators/textstats.py", "nfc_normalize_udf", "pandas_udf"),
     ("streaming/stateful.py", "conversation_rollup_stream",
      "applyInPandasWithState"),

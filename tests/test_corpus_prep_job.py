@@ -25,6 +25,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from html_parser_spark.operators.curate import curate_corpus
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 from jobs.corpus_prep_job import DOCS_DDL, parse_args, run
 from support import jvm_round_trips
@@ -241,15 +242,24 @@ def test_ansi_settings_and_empty_text(spark, prep):
     array is -1, not NULL; the kept rows' offsets must not see it.  With
     ANSI on, a turn whose text extracts to "" must be classified
     (``too_short``) instead of failing the run on the quality score's
-    division."""
+    division.  Under both settings a NULL text has NULL tokens, so a
+    direct ``curate_corpus`` call keeps it (the job itself filters NULL
+    texts before the kernel)."""
     base, _, _, _ = prep
     t = spark.read.parquet(str(base / "input"))
     empty_turn = (t.limit(1).withColumn("conv_id", F.lit("empty-0"))
                   .withColumn("text", F.lit("<p></p>")))
     t.unionByName(empty_turn).write.mode("overwrite").parquet(str(base / "input_empty"))
+    null_doc = spark.createDataFrame([("n", None)], "doc_id string, text string")
+    curate_null = {}
     key = "spark.sql.ansi.enabled"
     old = spark.conf.get(key)
     try:
+        for ansi in ("false", "true"):
+            spark.conf.set(key, ansi)
+            curate_null[ansi] = curate_corpus(
+                null_doc, langs=("en", "und"), min_tokens=3,
+                quality_threshold=0.0).first()["drop_reason"]
         spark.conf.set(key, "false")
         plain = run(spark, parse_args(["--input", str(base / "input"),
                                        "--output", str(base / "out_noansi")]))
@@ -258,6 +268,7 @@ def test_ansi_settings_and_empty_text(spark, prep):
                                        "--output", str(base / "out_empty")]))
     finally:
         spark.conf.set(key, old)
+    assert curate_null == {"false": None, "true": None}
     stats = {out: {r["reason"]: r["n_docs"] for r in spark.read.parquet(
         str(base / out / "stats")).collect()} for out in ("out_noansi", "out_empty")}
     assert plain["rows_kept"] < plain["rows_in"]

@@ -125,14 +125,9 @@ def test_scoped_visit_range():
 
 def test_parse_with_hooks_stats():
     seen = {}
-    dom = parse_with_hooks(
-        FIXTURE,
-        on_parse_start=lambda n: seen.update(start_len=n),
-        on_parse_end=lambda st: seen.update(stats=st),
-    )
+    dom = parse_with_hooks(FIXTURE, on_parse_end=lambda st: seen.update(stats=st))
     st = seen["stats"]
     assert isinstance(st, ParseStats)
-    assert seen["start_len"] == len(FIXTURE)
     assert st.input_len == len(FIXTURE)
     assert st.node_count == len(dom)
     assert st.elapsed_ns >= 0

@@ -93,6 +93,9 @@ def test_cosine_topk_and_ivf(spark, sf_dir):
     # pruned probe still returns k results
     got = ivf_topk(indexed, cents, q, k=5, nprobe=2).collect()
     assert len(got) == 5
+    # empty input: a clear error, not an IndexError on the centroids
+    with pytest.raises(ValueError, match="empty"):
+        build_ivf_index(emb.where(F.lit(False)), num_cells=4)
 
 
 def test_dup_clusters_connected_components(spark):
@@ -162,26 +165,6 @@ def test_embedding_neardup_banded_lsh(spark):
     assert (0, 1) in pairs
     for r in out:
         assert r["cosine"] >= 0.95
-
-
-def test_ivf_kmeans_strategy(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(F.col("vec_id") < 200)
-    q = [float(x) for x in emb.where(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    indexed, cents = build_ivf_index(emb, num_cells=4, strategy="kmeans", kmeans_iters=3)
-    assert len(cents) == 4 and all(len(c[1]) == 64 for c in cents)
-    # centroids are unit-normalized after refinement
-    import math
-
-    for _, cv in cents:
-        assert abs(math.sqrt(sum(x * x for x in cv)) - 1.0) < 1e-9
-    # probe=all is exact regardless of centroid quality
-    brute = [r["vec_id"] for r in cosine_topk(emb, q, k=5).collect()]
-    approx = [r["vec_id"] for r in ivf_topk(indexed, cents, q, k=5, nprobe=4).collect()]
-    assert approx == brute
-    # every cell is non-degenerate on this corpus
-    assert indexed.groupBy("cell").count().count() >= 2
 
 
 def test_repetition_stats(spark):
@@ -409,16 +392,9 @@ def test_dup_clusters_raises_on_nonconvergence(spark):
     pairs = spark.createDataFrame(chain, ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
         dup_clusters(pairs, max_iter=2)
-    rounds = []
     got = {r["id"]: r["cluster_id"]
-           for r in dup_clusters(pairs, max_iter=10, round_log=rounds).collect()}
-    assert set(got.values()) == {0}
-    # round_log observability: one entry per executed round, pointer
-    # jumping needs ~log2(9)+1 rounds on a diameter-8 path, and the
-    # final (convergence-confirming) round reports changed=False
-    assert 3 <= len(rounds) <= 6
-    assert rounds[-1] == {"changed": False}
-    assert all(r == {"changed": True} for r in rounds[:-1])
+           for r in dup_clusters(pairs, max_iter=10).collect()}
+    assert got == {i: 0 for i in range(9)}
 
 
 def test_dup_clusters_converges_exactly_at_budget(spark):
@@ -554,35 +530,6 @@ def test_embedding_lsh_dim_probe_is_mode_not_max(spark):
     sigs = embedding_lsh_signatures(emb, bands=2, band_bits=4)
     ids = {r["id"] for r in sigs.collect()}
     assert ids == set(range(10))               # majority kept, glitch excluded
-
-
-def test_kmeans_dim_robust_and_degenerate_inputs(spark):
-    """Round-3: per-cell vector sums travel as ONE array<double> per
-    (partition, cell) — works at dim 512 with no 512-wide aggregate;
-    empty input raises; num_cells clamps to the corpus size."""
-    import math
-
-    from html_parser_spark.operators.similarity import (
-        build_ivf_index, kmeans_centroids,
-    )
-
-    rows = [(i, md5_vec(f"v{i}", dim=512)) for i in range(24)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(4)
-    cents = kmeans_centroids(emb, num_cells=4, iters=2)
-    assert len(cents) == 4 and all(len(c[1]) == 512 for c in cents)
-    for _, cv in cents:
-        assert abs(math.sqrt(sum(x * x for x in cv)) - 1.0) < 1e-9
-
-    # fewer vectors than requested cells: clamp, don't crash
-    small = spark.createDataFrame(rows[:3], ["vec_id", "embedding"])
-    assert len(kmeans_centroids(small, num_cells=8, iters=1)) == 3
-
-    # empty input: a clear error, not a TypeError on first()[0]
-    empty = emb.where(F.lit(False))
-    with pytest.raises(ValueError, match="empty"):
-        kmeans_centroids(empty, num_cells=4)
-    with pytest.raises(ValueError, match="empty"):
-        build_ivf_index(empty, num_cells=4)
 
 
 def test_multimodal_hardening_round4():

@@ -94,13 +94,12 @@ def test_instrumentation_hooks():
     from html_parser_spark.kernel.instrumentation import parse_with_hooks
     from support import query_one_with_hooks
 
-    calls = {"parse_start": 0, "parse_end": 0, "query_end": 0}
+    calls = {"parse_end": 0, "query_end": 0}
     dom = parse_with_hooks(
         "<div><span id='x'></span></div>",
-        on_parse_start=lambda n: calls.__setitem__("parse_start", calls["parse_start"] + 1),
         on_parse_end=lambda st: calls.__setitem__("parse_end", calls["parse_end"] + 1),
     )
-    assert calls["parse_start"] == 1 and calls["parse_end"] == 1
+    assert calls["parse_end"] == 1
     idx = query_one_with_hooks(
         dom, "span#x",
         on_query_end=lambda st: calls.__setitem__("query_end", calls["query_end"] + 1))

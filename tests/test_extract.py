@@ -1,4 +1,4 @@
-"""Main-content extraction: structural strip + density heuristics."""
+"""Main-content extraction: structural strip + link-density strip."""
 
 from html_parser_spark.kernel.extract import extract_main
 from html_parser_spark.sources.transcripts import (
@@ -43,10 +43,7 @@ def test_link_density_strips_link_farms():
         "<a href='/1'>one link</a> <a href='/2'>two link</a> <a href='/3'>three link</a>"
         "</div><p>real content sentence here</p></body>"
     )
-    with_h = extract_main(page, use_link_density=True)
-    without_h = extract_main(page, use_link_density=False)
-    assert with_h.main_text == "real content sentence here"
-    assert "one link" in without_h.main_text
+    assert extract_main(page).main_text == "real content sentence here"
 
 
 def test_link_density_keeps_text_dominant_blocks():
@@ -54,7 +51,7 @@ def test_link_density_keeps_text_dominant_blocks():
         "<body><div>mostly prose with a tiny <a href='/x'>link</a> inside "
         "a much longer paragraph of ordinary text</div></body>"
     )
-    r = extract_main(page, use_link_density=True)
+    r = extract_main(page)
     assert "mostly prose" in r.main_text and "link" in r.main_text
 
 
@@ -66,42 +63,15 @@ def test_transcript_page_template():
     assert r.spans == [(MAIN_TEXT_START, MAIN_TEXT_START + len(text))]
 
 
-def test_fastest_profile_equivalent_for_page_template():
-    text = "profile invariant words"
-    page = PAGE_PREFIX + text + PAGE_SUFFIX
-    a = extract_main(page, drop_whitespace_text_nodes=False)
-    b = extract_main(page, drop_whitespace_text_nodes=True)
-    assert a.main_text == b.main_text == text
-
-
 def test_entities_decoded_in_main_text():
     page = "<body><main><p>a &amp; b &lt;c&gt;</p></main></body>"
     assert extract_main(page).main_text == "a & b <c>"
 
 
-def test_text_density_heuristic_strips_sparse_link_grids():
-    """Opt-in text-density pass: a grid of short-text link tiles (each
-    tile under the link-density bar because of its caption text) is
-    stripped when text-per-element is low; real paragraphs survive."""
-    from html_parser_spark.kernel.extract import extract_main
-
-    tiles = "".join(
-        f"<div><a href='/t{i}'>t{i}</a><span>cap</span></div>" for i in range(8)
-    )
-    html = (
-        "<body><p>This is the actual long-form article body text that "
-        "carries the page's information content in a single block.</p>"
-        f"<div id='grid'>{tiles}</div></body>"
-    ).encode()
-
-    base = extract_main(html, use_link_density=False)
-    assert "cap" in base.main_text  # without the heuristic, tiles leak
-
-    dens = extract_main(html, use_link_density=False, min_text_density=4.0)
-    assert "actual long-form article" in dens.main_text
-    assert "cap" not in dens.main_text
-    assert dens.n_removed >= 1
-
-    # the pass is opt-in: defaults unchanged (oracle stability)
-    assert extract_main(html).main_text == extract_main(
-        html, min_text_density=None).main_text
+def test_link_density_threshold_is_exclusive():
+    # half the block's text under <a> stays; more than half is stripped
+    half = "<body><div><a href='/x'>abcd</a>efgh</div></body>"
+    assert extract_main(half).main_text == "abcdefgh"
+    more = "<body><div><a href='/x'>abcde</a>efgh</div><p>kept</p></body>"
+    r = extract_main(more)
+    assert (r.main_text, r.n_removed) == ("kept", 1)

@@ -181,13 +181,6 @@ class TestIncrementalDedup:
                incremental_new_docs(batch, hashes).collect()}
         assert out == {11}
 
-    def test_broadcast_history_plan_and_result(self, spark):
-        hist = _docs(spark, [(1, "aa")])
-        batch = _docs(spark, [(10, "aa"), (11, "bb")])
-        bdf = incremental_new_docs(batch, hist, broadcast_history=True)
-        assert "BroadcastHashJoin" in _plan(bdf)
-        assert {r["doc_id"] for r in bdf.collect()} == {11}
-
     def test_empty_history(self, spark):
         hist = _docs(spark, []).where(F.lit(False))
         batch = _docs(spark, [(10, "aa"), (11, "aa")])
@@ -234,14 +227,6 @@ class TestUnigramNll:
         d = _docs(spark, [(1, "a"), (2, "")])
         ids = {r["doc_id"] for r in doc_neg_logprob(d).collect()}
         assert ids == {1}
-
-    def test_broadcast_model_plan(self, spark):
-        from html_parser_spark.operators.textstats import doc_neg_logprob
-
-        d = _docs(spark, [(1, "a b"), (2, "b c")])
-        p = _plan(doc_neg_logprob(d, broadcast_model=True))
-        assert "BroadcastHashJoin" in p
-        assert "SortMergeJoin" not in p
 
 
 class TestQuantileFloor:

@@ -39,10 +39,15 @@ def test_per_turn_text_equality(spark, transcripts):
 
 def test_ordering_assertion_passes_and_detects_violations(spark, transcripts):
     assert assert_turn_ordering(transcripts) == 0
-    assert assert_turn_ordering(transcripts, strict=True) == 0
     # break it: duplicate a turn
     broken = transcripts.union(transcripts.limit(1))
     assert assert_turn_ordering(broken) >= 1
+    # a turn gap (c2) and non-zero starts (c3, and c4, which only the
+    # min == 0 clause catches); c1 is dense
+    turns = [("c1", 0), ("c1", 1), ("c2", 0), ("c2", 1), ("c2", 3),
+             ("c3", 1), ("c3", 2), ("c4", -1), ("c4", 1)]
+    assert assert_turn_ordering(
+        spark.createDataFrame(turns, "conv_id string, turn_idx int")) == 3
 
 
 def test_run_and_resume(spark, transcripts, tmp_path):
