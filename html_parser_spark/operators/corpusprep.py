@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sql import ident
-from .textstats import token_count_sql
+from .textstats import token_count_sql, words_sql
 
 
 def hash_bucket_sql(id_col: str, buckets: int) -> str:
@@ -160,25 +160,18 @@ def chunk_documents(
     """
     if not 0 <= overlap < chunk:
         raise ValueError(f"need 0 <= overlap({overlap}) < chunk({chunk})")
-    step = chunk - overlap
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
-    n_chunks = F.greatest(
-        F.lit(1),
-        F.ceil((n.cast("double") - F.lit(float(overlap))) / F.lit(float(step))),
-    )
-    base = docs.select(
+    step, n = chunk - overlap, token_count_sql(text_col)
+    n_chunks = f"greatest(1, ceil((CAST({n} AS DOUBLE) - {float(overlap)!r}D) / {float(step)!r}D))"
+    piece = f"slice(_toks, chunk_idx * {step} + 1, {chunk})"
+    return docs.select(
         F.col(id_col),
-        toks.alias("_toks"),
-        n.cast("long").alias("n_tokens"),
-        F.explode(F.sequence(F.lit(0), (n_chunks - 1).cast("int")))
-            .alias("chunk_idx"),
-    )
-    piece = F.slice(F.col("_toks"), F.col("chunk_idx") * step + 1, chunk)
-    return base.select(
+        F.expr(f"{words_sql(text_col)} AS _toks"),
+        F.expr(f"CAST({n} AS BIGINT) AS n_tokens"),
+        F.expr(f"explode(sequence(0, CAST({n_chunks} - 1 AS INT))) AS chunk_idx"),
+    ).select(
         id_col,
         "n_tokens",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.size(piece).cast("int").alias("chunk_len"),
-        F.array_join(piece, " ").alias("chunk_text"),
+        F.expr("CAST(chunk_idx AS INT) AS chunk_idx"),
+        F.expr(f"CAST(array_size({piece}) AS INT) AS chunk_len"),
+        F.expr(f"array_join({piece}, ' ') AS chunk_text"),
     )

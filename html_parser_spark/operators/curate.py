@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sql import ident
+from .dedup import copy_rank_sql
 from .textstats import lang_id, quality_score_sql, token_count_sql
 
 # The drop reasons in rule order: a document gets the first that holds.
@@ -55,7 +56,7 @@ def curate_corpus(
         df = lang_id(df, text_col, out_col="_lang")
     lang = ident(lang_col or "_lang")
     rules = (  # one per DROP_REASONS entry, in its order
-        f"row_number() OVER (PARTITION BY md5({ident(text_col)}) ORDER BY {ident(id_col)}) > 1",
+        f"{copy_rank_sql(text_col, id_col)} > 1",
         f"{token_count_sql(text_col)} < {int(min_tokens)}",
         f"quality < {float(quality_threshold)!r}D",
         "NOT _allowed",

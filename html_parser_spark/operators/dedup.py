@@ -36,31 +36,35 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sql import ident
+from .similarity import cosine_sql, dot_sql, double_array_sql
+from .textstats import token_count_sql, words_sql
+
+
+def _same_text_sql(text_col: str) -> str:
+    return f"PARTITION BY md5({ident(text_col)})"
+
+
+def copy_rank_sql(text_col: str, id_col: str) -> str:
+    """A row's rank among the rows whose text has its md5, lowest id
+    first: exact dedup keeps rank 1."""
+    return f"row_number() OVER ({_same_text_sql(text_col)} ORDER BY {ident(id_col)})"
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id row per exact text hash; adds ``dup_count``."""
-    h = F.md5(F.col(text_col)).alias("_h")
-    w = Window.partitionBy("_h").orderBy(F.col(id_col).asc())
-    return (
-        df.withColumn("_h", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("dup_count", F.count("*").over(Window.partitionBy("_h")))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_h")
-    )
+    return df.withColumns({
+        "_rn": F.expr(copy_rank_sql(text_col, id_col)),
+        "dup_count": F.expr(f"count(1) OVER ({_same_text_sql(text_col)})"),
+    }).where("_rn = 1").drop("_rn")
 
 
 def word_shingles(text_col: str = "text", n: int = 3) -> Column:
     """Array of word n-gram shingles (space-joined); empty-safe."""
-    words = F.split(F.col(text_col), " ")
-    k = F.size(words) - (n - 1)
-    return F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(n)]),
-        ),
-    ).otherwise(F.array(F.col(text_col)))
+    words, k = words_sql(text_col), f"{token_count_sql(text_col)} - {n - 1}"
+    gram = ", ".join(f"element_at({words}, i + {j})" for j in range(n))
+    return F.expr(f"CASE WHEN {k} > 0 THEN transform(sequence(1, greatest({k}, 1)),"
+                  f" i -> concat_ws(' ', {gram})) ELSE array({ident(text_col)}) END")
 
 
 def minhash_signatures(
@@ -265,21 +269,13 @@ def simhash64(
     sign(word) bit b votes +1/-1; fingerprint bit b = 1 iff the vote
     sum is positive.  Engine-portable: DuckDB reproduces it exactly.
     """
-    wh = (
-        df.select(F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("w"))
-        .withColumn("h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long"))
-    )
-    votes = [
-        F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    agg = wh.groupBy("id").agg(*votes)
-    fp = None
-    for b in range(bits):
-        bit = F.when(F.col(f"v{b}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = bit * F.lit(1 << b).cast("long")
-        fp = term if fp is None else fp + term
-    return agg.select("id", fp.alias("simhash"))
+    wh = (df.select(F.col(id_col).alias("id"), F.expr(f"explode({words_sql(text_col)}) AS w"))
+          .withColumn("h", F.expr("CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT)")))
+    votes = wh.groupBy("id").agg(*[
+        F.expr(f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END) AS v{b}")
+        for b in range(bits)])
+    fp = " + ".join(f"(CASE WHEN v{b} > 0 THEN {1 << b}L ELSE 0L END)" for b in range(bits))
+    return votes.select("id", F.expr(f"{fp} AS simhash"))
 
 
 def hamming64(col_a: Column, col_b: Column) -> Column:
@@ -437,11 +433,11 @@ def embedding_lsh_signatures(
     every malformed row to band key 0, pairing them all with each
     other).  Empty/all-NULL input returns an empty frame.
     """
-    v = F.col(vec_col).cast("array<double>")
+    v = f"CAST({ident(vec_col)} AS ARRAY<DOUBLE>)"
     if dim is None:
         probe = (
             emb.where(F.col(vec_col).isNotNull())
-            .groupBy(F.size(v).alias("d")).count()
+            .groupBy(F.expr(f"size({v}) AS d")).count()
             .orderBy(F.col("count").desc(), F.col("d").asc())
             .first()
         )
@@ -452,26 +448,15 @@ def embedding_lsh_signatures(
                 F.lit(0).alias("key"),
             ).where(F.lit(False))
         dim = int(probe["d"])
-    emb = emb.where(F.size(v) == dim)
     signs = plane_sign_matrix(bands * band_bits, dim)
-
-    def plane_sign(k: int) -> Column:
-        return F.array(*[F.lit(s) for s in signs[k]])
-
-    def bit(k: int) -> Column:
-        proj = F.aggregate(F.zip_with(v, plane_sign(k), lambda x, s: x * s), F.lit(0.0), lambda acc, x: acc + x)
-        return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    band_structs = []
-    for b in range(bands):
-        key = None
-        for j in range(band_bits):
-            term = bit(b * band_bits + j) * F.lit(1 << j)
-            key = term if key is None else key + term
-        band_structs.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
+    keys = [" + ".join(
+        f"(CASE WHEN {dot_sql(v, double_array_sql(signs[b * band_bits + j]))} >= 0"
+        f" THEN 1 ELSE 0 END) * {1 << j}" for j in range(band_bits)) for b in range(bands)]
+    bands_sql = ", ".join(f"struct({b} AS band, {key} AS key)" for b, key in enumerate(keys))
     return (
-        emb.select(F.col(id_col).alias("id"), F.explode(F.array(*band_structs)).alias("bk"))
-        .select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        emb.where(f"size({v}) = {int(dim)}")
+        .select(F.col(id_col).alias("id"), F.expr(f"explode(array({bands_sql})) AS bk"))
+        .select("id", "bk.band", "bk.key")
     )
 
 
@@ -500,12 +485,10 @@ def embedding_near_dups(
     sigs = embedding_lsh_signatures(emb, id_col, vec_col, bands, band_bits, dim=dim)
     pairs = _banded_candidate_pairs(sigs, max_bucket_size=max_bucket_size)
     vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    dot = F.aggregate(F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))  # noqa: E731
     return (
         pairs.join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a")
         .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
-        .withColumn("cosine", dot / (norm(F.col("va")) * norm(F.col("vb"))))
+        .withColumn("cosine", F.expr(cosine_sql("va", "vb")))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -544,12 +527,8 @@ def incremental_new_docs(
     else:
         seen = history.select(
             F.md5(F.col(text_col)).alias("content_hash")).distinct()
-    h = F.md5(F.col(text_col)).alias("content_hash")
-    w = Window.partitionBy("content_hash").orderBy(F.col(id_col).asc())
-    batch_first = (
-        batch.withColumn("content_hash", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch_first = batch.withColumns({
+        "content_hash": F.md5(F.col(text_col)),
+        "_rn": F.expr(copy_rank_sql(text_col, id_col)),
+    }).where("_rn = 1").drop("_rn")
     return batch_first.join(seen, on="content_hash", how="left_anti")

@@ -29,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import token_count_sql, words_sql
+
 
 def bm25_scores(
     docs: DataFrame,
@@ -45,16 +47,12 @@ def bm25_scores(
         raise ValueError("query_terms must be non-empty")
     terms = [t for t in query_terms]
 
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.size(F.split(F.col(text_col), " ")).cast("double").alias("dl"),
-        F.explode(F.split(F.col(text_col), " ")).alias("token"),
-    )
+    dl = f"CAST({token_count_sql(text_col)} AS DOUBLE)"
+    toks = docs.select(F.col(id_col).alias("id"), F.expr(f"{dl} AS dl"),
+                       F.expr(f"explode({words_sql(text_col)}) AS token"))
     # corpus stats: N docs, average doc length — two scalar aggregates
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(F.size(F.split(F.col(text_col), " ")).cast("double")).alias("avgdl"),
-    )
+    stats = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
+                     F.expr(f"avg({dl}) AS avgdl"))
     # only query-term postings survive past this map-side filter
     hits = toks.where(F.col("token").isin(terms))
     tf = hits.groupBy("id", "token").agg(

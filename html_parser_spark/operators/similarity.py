@@ -16,29 +16,41 @@
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, List, Sequence
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+from ..sql import ident
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+def double_array_sql(xs: Sequence[float]) -> str:
+    """``xs`` as an ``array<double>`` of literals (a non-finite value by
+    cast: SQL has no literal for it)."""
+    return "array({})".format(", ".join(
+        f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)" for x in map(float, xs)))
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two ``array<double>`` expressions, summed left to
+    right from 0.0; a NULL element, or a length mismatch, gives NULL."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Cosine similarity of two ``array<double>`` expressions."""
+    return f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
 
 
 def with_cosine(df: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding",
                 out_col: str = "cosine", decimals: int = 6) -> DataFrame:
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
-    cos = _dot(v, q) / (_norm(v) * _norm(q))
-    return df.withColumn(out_col, F.round(cos, decimals))
+    v = f"CAST({ident(vec_col)} AS ARRAY<DOUBLE>)"
+    return df.withColumn(out_col, F.expr(
+        f"round({cosine_sql(v, double_array_sql(query_vec))}, {int(decimals)})"))
 
 
 def cosine_topk(
@@ -194,9 +206,8 @@ def ivf_topk_batch(
         F.explode(probe(qv)).alias("cell"),
     )
     joined = indexed.join(F.broadcast(qcells), "cell")
-    v = F.col(vec_col).cast("array<double>")
-    scored = joined.withColumn(
-        "cosine", F.round(_dot(v, F.col("_qv")) / (_norm(v) * _norm(F.col("_qv"))), 6))
+    v = f"CAST({ident(vec_col)} AS ARRAY<DOUBLE>)"
+    scored = joined.withColumn("cosine", F.expr(f"round({cosine_sql(v, '_qv')}, 6)"))
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine").desc(), F.col(id_col).asc())
     return (

@@ -31,24 +31,37 @@ STOPWORDS = {
 _PUNCT_RE = r"[^A-Za-z0-9 ]"
 
 
-def _words_sql(text_col: str) -> str:
+def words_sql(text_col: str) -> str:
+    """``text_col`` split on single spaces (empty words kept)."""
     return f"split({ident(text_col)}, ' ')"
 
 
-def _hits_sql(text_col: str, code: str) -> str:
-    """Number of ``text_col``'s words in ``STOPWORDS[code]``."""
-    stop = ", ".join(f"'{s}'" for s in STOPWORDS[code])
-    return f"size(filter({_words_sql(text_col)}, x -> array_contains(array({stop}), x)))"
+def _tokens_sql(text_col: str) -> str:
+    """The non-empty words of ``text_col``."""
+    return f"filter({words_sql(text_col)}, x -> x != '')"
 
 
 def token_count_sql(text_col: str) -> str:
     """Whitespace token count; NULL for a NULL text under both ANSI
     settings (``size`` would give -1 with ANSI off)."""
-    return f"array_size({_words_sql(text_col)})"
+    return f"array_size({words_sql(text_col)})"
 
 
-def words_col(text_col: str = "text") -> Column:
-    return F.expr(_words_sql(text_col))
+def _hits_sql(text_col: str, code: str) -> str:
+    """Number of ``text_col``'s words in ``STOPWORDS[code]``."""
+    stop = ", ".join(f"'{s}'" for s in STOPWORDS[code])
+    return f"size(filter({words_sql(text_col)}, x -> array_contains(array({stop}), x)))"
+
+
+def _stopword_ratio_sql(text_col: str) -> str:
+    return f"{_hits_sql(text_col, 'en')} / {token_count_sql(text_col)}"
+
+
+def _byte_ratio_sql(text_col: str, pattern: str) -> str:
+    """Share of ``text_col``'s bytes in characters matching ``pattern``
+    (which holds no quote or backslash); NULL for an empty text."""
+    n = f"nullif(octet_length({ident(text_col)}), 0)"
+    return f"({n} - octet_length(regexp_replace({ident(text_col)}, '{pattern}', ''))) / {n}"
 
 
 def token_count(text_col: str = "text") -> Column:
@@ -67,33 +80,27 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     n_tokens, n_chars, avg_word_len, punct_ratio, stopword_ratio (en),
     upper_ratio — the standard cheap quality gates of a pretraining
-    pipeline, rounded for engine-portable comparison.
+    pipeline, rounded for engine-portable comparison.  A NULL text has
+    NULL features; an empty one NULL byte ratios.
     """
-    w = words_col(text_col)
-    n_tokens = F.size(w)
-    n_chars = F.octet_length(F.col(text_col))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
-    n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x)))
-    n_punct = n_chars - F.octet_length(F.regexp_replace(F.col(text_col), _PUNCT_RE, ""))
-    n_upper = n_chars - F.octet_length(F.regexp_replace(F.col(text_col), r"[A-Z]", ""))
-    return (
-        df.withColumn("n_tokens", n_tokens.cast("long"))
-        .withColumn("n_chars", n_chars.cast("long"))
-        .withColumn("avg_word_len", F.round((n_chars - (n_tokens - 1)) / n_tokens, 4))
-        .withColumn("punct_ratio", F.round(n_punct / n_chars, 4))
-        .withColumn("stopword_ratio", F.round(n_stop / n_tokens, 4))
-        .withColumn("upper_ratio", F.round(n_upper / n_chars, 4))
-    )
+    t, n_tokens = ident(text_col), token_count_sql(text_col)
+    return df.withColumns({name: F.expr(sql) for name, sql in (
+        ("n_tokens", f"CAST({n_tokens} AS BIGINT)"),
+        ("n_chars", f"CAST(octet_length({t}) AS BIGINT)"),
+        ("avg_word_len", f"round((octet_length({t}) - ({n_tokens} - 1)) / {n_tokens}, 4)"),
+        ("punct_ratio", f"round({_byte_ratio_sql(text_col, _PUNCT_RE)}, 4)"),
+        ("stopword_ratio", f"round({_stopword_ratio_sql(text_col)}, 4)"),
+        ("upper_ratio", f"round({_byte_ratio_sql(text_col, '[A-Z]')}, 4)"),
+    )})
 
 
 def quality_score_sql(text_col: str, round_decimals: int | None) -> str:
     """SQL text of :func:`quality_score`."""
     # an empty text has no punctuation ratio: NULL, which ``least`` skips
-    n_tokens, n_chars = token_count_sql(text_col), f"nullif(octet_length({ident(text_col)}), 0)"
-    stripped = f"octet_length(regexp_replace({ident(text_col)}, '{_PUNCT_RE}', ''))"
+    n_tokens = token_count_sql(text_col)
     raw = (f"(0.5D * least({n_tokens} / 64.0D, 1.0D)"
-           f" + 0.3D * least({_hits_sql(text_col, 'en')} / {n_tokens} * 4, 1.0D)"
-           f" + 0.2D * (1.0D - least(({n_chars} - {stripped}) / {n_chars} * 5, 1.0D)))")
+           f" + 0.3D * least({_stopword_ratio_sql(text_col)} * 4, 1.0D)"
+           f" + 0.2D * (1.0D - least({_byte_ratio_sql(text_col, _PUNCT_RE)} * 5, 1.0D)))")
     return raw if round_decimals is None else f"round({raw}, {int(round_decimals)})"
 
 
@@ -157,11 +164,15 @@ def language_mix(df: DataFrame, html_col: str = "html",
                 (-F.col("_top.neg")).cast("long").alias("n_dominant")))
 
 
+def _collapse_ws(c: Column) -> Column:
+    """``c`` with each run of ASCII whitespace as one space, trimmed."""
+    return F.trim(F.regexp_replace(c, F.lit(r"[ \t\n\r\f]+"), F.lit(" ")))
+
+
 def fingerprint(text_col: str = "text") -> Column:
     """Document fingerprint: md5 over whitespace-normalized lowercase
     text — the cheap, engine-portable canonical-content hash."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"[ \t\n\r\f]+", " ")))
-    return F.md5(norm)
+    return F.md5(F.lower(_collapse_ws(F.col(text_col))))
 
 
 def nfc_normalize_udf():
@@ -191,9 +202,7 @@ def normalize_text(
     c = nfc_normalize_udf()(F.col(text_col))
     if lowercase:
         c = F.lower(c)
-    c = F.regexp_replace(c, r"[\x00-\x1f\x7f]", "")
-    c = F.trim(F.regexp_replace(c, r"[ \t\n\r\f]+", " "))
-    return df.withColumn(out_col, c)
+    return df.withColumn(out_col, _collapse_ws(F.regexp_replace(c, r"[\x00-\x1f\x7f]", "")))
 
 
 def top_ngrams(
@@ -313,9 +322,7 @@ def unigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ``(token, n)``.  One explode + one hash aggregation on the token
     key; partial (map-side) aggregation absorbs the stopword skew
     before the shuffle."""
-    toks = docs.select(
-        F.explode(F.split(F.col(text_col), " ")).alias("token")
-    ).where(F.col("token") != "")
+    toks = docs.select(F.expr(f"explode({_tokens_sql(text_col)}) AS token"))
     return toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -323,7 +330,7 @@ def _bigram_pairs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, w1, w2) for every adjacent whitespace-token pair — built
     JVM-side (filter + two slices + arrays_zip + explode), no join and
     no Python.  Docs with < 2 tokens contribute nothing."""
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    w = F.expr(_tokens_sql(text_col))
     n1 = F.greatest(F.size(w) - 1, F.lit(0))
     pairs = F.arrays_zip(F.slice(w, 1, n1).alias("w1"),
                          F.slice(w, 2, n1).alias("w2"))
@@ -425,10 +432,7 @@ def doc_neg_logprob(
         F.sum("n").cast("double").alias("_N"),
         F.count(F.lit(1)).cast("double").alias("_V"),
     )
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), " ")).alias("token"),
-    ).where(F.col("token") != "")
+    toks = docs.select(F.col(id_col), F.expr(f"explode({_tokens_sql(text_col)}) AS token"))
     # LEFT join: a token absent from the model vocabulary (possible
     # when scoring one corpus against another) gets the smoothed floor
     # probability alpha/(N + alpha*V) instead of being silently

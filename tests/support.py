@@ -19,6 +19,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, List, Optional, Sequence, Tuple, Union
 
+import numpy as np
 import pytest
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -27,9 +28,13 @@ from html_parser_spark.kernel.htmlparse import Dom
 from html_parser_spark.kernel.matcher import query_all, query_one
 from html_parser_spark.kernel.selector import Selector, compile_selector
 from html_parser_spark.operators.corpusprep import split_assign
+from html_parser_spark.operators.dedup import _banded_candidate_pairs, plane_sign_matrix
 from html_parser_spark.operators.multimodal import _PNG_CHANNELS, _PNG_SIG
 from html_parser_spark.operators.pii import PII_PATTERNS
-from html_parser_spark.operators.textstats import _PUNCT_RE, STOPWORDS, token_count
+from html_parser_spark.operators.similarity import _probe_udf
+from html_parser_spark.operators.textstats import (
+    _PUNCT_RE, STOPWORDS, nfc_normalize_udf, token_count,
+)
 
 
 # -- multimodal: encoders for the stdlib decoders ----------------------
@@ -254,6 +259,230 @@ def ref_with_packing(docs: DataFrame, by: Sequence[str] = (), id_col: str = "doc
         "seq_id": seq.cast("long"),
         "crosses_cut": F.when(n > 0, (end_seq > seq).cast("int")).otherwise(0),
     })
+
+
+def ref_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+    w = F.split(F.col(text_col), " ")
+    n_tokens = F.size(w)
+    n_chars = F.octet_length(F.col(text_col))
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
+    n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x)))
+    n_punct = n_chars - F.octet_length(F.regexp_replace(F.col(text_col), _PUNCT_RE, ""))
+    n_upper = n_chars - F.octet_length(F.regexp_replace(F.col(text_col), r"[A-Z]", ""))
+    return (
+        df.withColumn("n_tokens", n_tokens.cast("long"))
+        .withColumn("n_chars", n_chars.cast("long"))
+        .withColumn("avg_word_len", F.round((n_chars - (n_tokens - 1)) / n_tokens, 4))
+        .withColumn("punct_ratio", F.round(n_punct / n_chars, 4))
+        .withColumn("stopword_ratio", F.round(n_stop / n_tokens, 4))
+        .withColumn("upper_ratio", F.round(n_upper / n_chars, 4))
+    )
+
+
+def _ref_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return docs.select(
+        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("token"),
+    ).where(F.col("token") != "")
+
+
+def ref_unigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    return (docs.select(F.explode(F.split(F.col(text_col), " ")).alias("token"))
+            .where(F.col("token") != "").groupBy("token").agg(F.count(F.lit(1)).alias("n")))
+
+
+def ref_doc_neg_logprob(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+                        alpha: float = 1.0) -> DataFrame:
+    freq = ref_unigram_counts(docs, text_col)
+    tot = freq.agg(F.sum("n").cast("double").alias("_N"),
+                   F.count(F.lit(1)).cast("double").alias("_V"))
+    nlp = -F.log((F.coalesce(F.col("n"), F.lit(0)) + F.lit(float(alpha)))
+                 / (F.col("_N") + F.lit(float(alpha)) * F.col("_V")))
+    return (_ref_tokens(docs, id_col, text_col).join(freq, "token", "left")
+            .crossJoin(F.broadcast(tot)).groupBy(id_col).agg(F.avg(nlp).alias("nll")))
+
+
+def _ref_bigram_pairs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    n1 = F.greatest(F.size(w) - 1, F.lit(0))
+    pairs = F.arrays_zip(F.slice(w, 1, n1).alias("w1"), F.slice(w, 2, n1).alias("w2"))
+    return (docs.select(F.col(id_col), F.explode(pairs).alias("_bg"))
+            .select(id_col, F.col("_bg.w1").alias("w1"), F.col("_bg.w2").alias("w2")))
+
+
+def ref_bigram_counts(docs: DataFrame, text_col: str = "text",
+                      id_col: str = "doc_id") -> DataFrame:
+    return (_ref_bigram_pairs(docs, id_col, text_col)
+            .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n")))
+
+
+def ref_doc_bigram_nll(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+                       alpha: float = 1.0) -> DataFrame:
+    freq = ref_bigram_counts(docs, text_col, id_col)
+    ctx = freq.groupBy("w1").agg(F.sum("n").cast("double").alias("_cw"))
+    vocab = freq.agg(F.countDistinct("w2").cast("double").alias("_V"))
+    nlp = -F.log((F.coalesce(F.col("n"), F.lit(0)) + F.lit(float(alpha)))
+                 / (F.coalesce(F.col("_cw"), F.lit(0.0)) + F.lit(float(alpha)) * F.col("_V")))
+    return (_ref_bigram_pairs(docs, id_col, text_col).join(freq, ["w1", "w2"], "left")
+            .join(ctx, "w1", "left").crossJoin(F.broadcast(vocab))
+            .groupBy(id_col).agg(F.avg(nlp).alias("nll2")))
+
+
+def ref_bm25_scores(docs: DataFrame, query_terms: Sequence[str], id_col: str = "doc_id",
+                    text_col: str = "text", k1: float = 1.2, b: float = 0.75) -> DataFrame:
+    toks = docs.select(
+        F.col(id_col).alias("id"),
+        F.size(F.split(F.col(text_col), " ")).cast("double").alias("dl"),
+        F.explode(F.split(F.col(text_col), " ")).alias("token"),
+    )
+    stats = docs.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg(F.size(F.split(F.col(text_col), " ")).cast("double")).alias("avgdl"),
+    )
+    tf = toks.where(F.col("token").isin(list(query_terms))).groupBy("id", "token").agg(
+        F.count(F.lit(1)).cast("double").alias("tf"), F.first("dl").alias("dl"))
+    df_t = tf.groupBy("token").agg(F.count(F.lit(1)).cast("double").alias("df"))
+    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+    w = (idf * F.col("tf") * (k1 + 1.0)
+         / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
+    return (tf.join(F.broadcast(df_t), "token").crossJoin(F.broadcast(stats))
+            .groupBy("id").agg(F.sum(w).alias("score")))
+
+
+def ref_chunk_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+                        chunk: int = 64, overlap: int = 16) -> DataFrame:
+    step = chunk - overlap
+    toks = F.split(F.col(text_col), " ")
+    n = F.size(toks)
+    n_chunks = F.greatest(
+        F.lit(1), F.ceil((n.cast("double") - F.lit(float(overlap))) / F.lit(float(step))))
+    base = docs.select(
+        F.col(id_col), toks.alias("_toks"), n.cast("long").alias("n_tokens"),
+        F.explode(F.sequence(F.lit(0), (n_chunks - 1).cast("int"))).alias("chunk_idx"),
+    )
+    piece = F.slice(F.col("_toks"), F.col("chunk_idx") * step + 1, chunk)
+    return base.select(
+        id_col, "n_tokens", F.col("chunk_idx").cast("int").alias("chunk_idx"),
+        F.size(piece).cast("int").alias("chunk_len"), F.array_join(piece, " ").alias("chunk_text"))
+
+
+def ref_word_shingles(text_col: str = "text", n: int = 3) -> Column:
+    words = F.split(F.col(text_col), " ")
+    k = F.size(words) - (n - 1)
+    return F.when(k > 0, F.transform(
+        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
+        lambda i: F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(n)]),
+    )).otherwise(F.array(F.col(text_col)))
+
+
+def ref_simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+                  bits: int = 60) -> DataFrame:
+    wh = (df.select(F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("w"))
+          .withColumn("h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")))
+    agg = wh.groupBy("id").agg(*[
+        F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1))
+        .alias(f"v{b}") for b in range(bits)])
+    fp = None
+    for b in range(bits):
+        bit = F.when(F.col(f"v{b}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
+        term = bit * F.lit(1 << b).cast("long")
+        fp = term if fp is None else fp + term
+    return agg.select("id", fp.alias("simhash"))
+
+
+def ref_exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    w = Window.partitionBy("_h").orderBy(F.col(id_col).asc())
+    return (df.withColumn("_h", F.md5(F.col(text_col)))
+            .withColumn("_rn", F.row_number().over(w))
+            .withColumn("dup_count", F.count("*").over(Window.partitionBy("_h")))
+            .where(F.col("_rn") == 1).drop("_rn", "_h"))
+
+
+def ref_incremental_new_docs(batch: DataFrame, history: DataFrame, text_col: str = "text",
+                             id_col: str = "doc_id") -> DataFrame:
+    seen = history.select(F.md5(F.col(text_col)).alias("content_hash")).distinct()
+    w = Window.partitionBy("content_hash").orderBy(F.col(id_col).asc())
+    return (batch.withColumn("content_hash", F.md5(F.col(text_col)))
+            .withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+            .join(seen, on="content_hash", how="left_anti"))
+
+
+def ref_fingerprint(text_col: str = "text") -> Column:
+    return F.md5(F.lower(F.trim(F.regexp_replace(F.col(text_col), r"[ \t\n\r\f]+", " "))))
+
+
+def ref_normalize_text(df: DataFrame, text_col: str = "text", out_col: str = "norm_text",
+                       lowercase: bool = True) -> DataFrame:
+    c = nfc_normalize_udf()(F.col(text_col))
+    if lowercase:
+        c = F.lower(c)
+    c = F.regexp_replace(c, r"[\x00-\x1f\x7f]", "")
+    return df.withColumn(out_col, F.trim(F.regexp_replace(c, r"[ \t\n\r\f]+", " ")))
+
+
+def _ref_dot(a: Column, b: Column) -> Column:
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _ref_cosine(a: Column, b: Column) -> Column:
+    def norm(c):
+        return F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    return _ref_dot(a, b) / (norm(a) * norm(b))
+
+
+def ref_with_cosine(df: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding",
+                    out_col: str = "cosine", decimals: int = 6) -> DataFrame:
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    return df.withColumn(out_col, F.round(_ref_cosine(F.col(vec_col).cast("array<double>"), q),
+                                          decimals))
+
+
+def ref_ivf_topk_batch(indexed: DataFrame, cents: List, queries: DataFrame, k: int = 5,
+                       nprobe: int = 2) -> DataFrame:
+    cmat = np.asarray([c[1] for c in cents], dtype=np.float64)
+    probe = _probe_udf(queries, cmat, np.linalg.norm(cmat, axis=1), nprobe)
+    qv = F.col("query_vec").cast("array<double>")
+    qcells = queries.select("query_id", qv.alias("_qv"), F.explode(probe(qv)).alias("cell"))
+    scored = indexed.join(F.broadcast(qcells), "cell").withColumn("cosine", F.round(
+        _ref_cosine(F.col("embedding").cast("array<double>"), F.col("_qv")), 6))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+            .select("query_id", "vec_id", "cosine", "rank"))
+
+
+def ref_embedding_lsh_signatures(emb: DataFrame, dim: int, id_col: str = "vec_id",
+                                 vec_col: str = "embedding", bands: int = 4,
+                                 band_bits: int = 8) -> DataFrame:
+    v = F.col(vec_col).cast("array<double>")
+    signs = plane_sign_matrix(bands * band_bits, dim)
+
+    def bit(k: int) -> Column:
+        proj = _ref_dot(v, F.array(*[F.lit(s) for s in signs[k]]))
+        return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
+
+    band_structs = []
+    for b in range(bands):
+        key = None
+        for j in range(band_bits):
+            term = bit(b * band_bits + j) * F.lit(1 << j)
+            key = term if key is None else key + term
+        band_structs.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
+    return (emb.where(F.size(v) == dim)
+            .select(F.col(id_col).alias("id"), F.explode(F.array(*band_structs)).alias("bk"))
+            .select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")))
+
+
+def ref_embedding_near_dups(emb: DataFrame, dim: int, threshold: float = 0.95,
+                            bands: int = 4, band_bits: int = 8) -> DataFrame:
+    sigs = ref_embedding_lsh_signatures(emb, dim, bands=bands, band_bits=band_bits)
+    vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
+    return (
+        _banded_candidate_pairs(sigs)
+        .join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a")
+        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
+        .withColumn("cosine", _ref_cosine(F.col("va"), F.col("vb")))
+        .where(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
 
 
 def ref_pii_counts(text_col: str = "text") -> Sequence[Column]:

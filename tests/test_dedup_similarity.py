@@ -492,6 +492,25 @@ def test_embedding_lsh_literal_planes(spark):
     assert empty.columns == ["id", "band", "key"]
 
 
+def test_plan_build_round_trips(spark, sf_dir):
+    """The per-row rules reach the JVM as SQL text, so building the
+    gated queries' SimHash and embedding near-dup plans takes a few
+    hundred py4j commands (~12,000 and ~8,300 when the 60 votes and the
+    16 plane projections were Column chains, ~12 commands per method)."""
+    from html_parser_spark.operators.dedup import embedding_near_dups
+
+    from support import jvm_round_trips
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(F.col("doc_id") < 200)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(F.col("vec_id") < 200)
+    with jvm_round_trips() as n:
+        simhash64(docs, bits=60)
+    assert 0 < n[0] <= 1000
+    with jvm_round_trips() as n:
+        embedding_near_dups(emb, threshold=0.3, bands=4, band_bits=4, dim=64)
+    assert 0 < n[0] <= 1000
+
+
 def test_embedding_lsh_null_and_ragged_vectors(spark):
     """Review findings: a NULL embedding in the probed first row must
     not crash the dim probe, and ragged vectors must be EXCLUDED (not

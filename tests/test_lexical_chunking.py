@@ -57,6 +57,27 @@ class TestBm25:
         assert "SortMergeJoin" not in p
 
 
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_null_text_counts_no_tokens(spark, ansi):
+    """A NULL text has NULL token counts under both ANSI settings
+    (``size`` of NULL is -1 with ANSI off): one chunk with NULL lengths,
+    and no share in BM25's average document length."""
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, ansi)
+    try:
+        d = _docs(spark, [(1, "x y"), (2, "x y z w"), (3, None)])
+        chunks = sorted(map(tuple, chunk_documents(d, chunk=4, overlap=1).collect()))
+        scores = {r["id"]: r["score"] for r in bm25_scores(d, ["x"]).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert chunks == [(1, 2, 0, 2, "x y"), (2, 4, 0, 4, "x y z w"), (3, None, 0, None, None)]
+    # N=3 docs, df(x)=2, avgdl=(2+4)/2
+    idf = math.log((3 - 2 + 0.5) / (2 + 0.5) + 1.0)
+    for i, dl in ((1, 2), (2, 4)):
+        assert scores[i] == pytest.approx(idf * 2.2 / (1 + 1.2 * (0.25 + 0.75 * dl / 3)), abs=1e-12)
+
+
 class TestChunkDocuments:
     def test_exact_windows(self, spark):
         text = " ".join(f"t{i}" for i in range(10))

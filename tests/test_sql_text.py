@@ -1,10 +1,14 @@
 """The per-row rules written as Spark SQL text give the same rows and
 schemas as their Column-API reference forms (tests/support.py), on
 random frames with null and empty text, quotes, backslashes and
-non-ASCII, under both settings of
+non-ASCII, and on vector frames with NULL, ragged and NULL-element
+vectors, under both settings of
 ``spark.sql.parser.escapedStringLiterals`` (the setting changes how a
 backslash in a SQL string literal parses; the rules keep backslashes
-out of SQL text, so it must change nothing).
+out of SQL text, so it must change nothing).  The two exceptions are
+the rows where the references are wrong: the empty text of
+``quality_features`` and, with ANSI off, the NULL text of the
+token counts (tested on their own below).
 """
 
 import random
@@ -13,14 +17,29 @@ import pytest
 from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
-from html_parser_spark.operators.corpusprep import hash_bucket, split_assign, with_packing
+from html_parser_spark.operators.corpusprep import (
+    chunk_documents, hash_bucket, split_assign, with_packing,
+)
 from html_parser_spark.operators.curate import curate_corpus
+from html_parser_spark.operators.dedup import (
+    embedding_lsh_signatures, embedding_near_dups, exact_dedup, incremental_new_docs, simhash64,
+    word_shingles,
+)
+from html_parser_spark.operators.lexical import bm25_scores
 from html_parser_spark.operators.pii import pii_counts, redact_pii
-from html_parser_spark.operators.textstats import STOPWORDS, lang_id, quality_score
+from html_parser_spark.operators.similarity import build_ivf_index, ivf_topk_batch, with_cosine
+from html_parser_spark.operators.textstats import (
+    STOPWORDS, bigram_counts, doc_bigram_nll, doc_neg_logprob, fingerprint, lang_id,
+    normalize_text, quality_features, quality_score, unigram_counts,
+)
 from html_parser_spark.sql import ident
 from support import (
-    ref_curate_corpus, ref_hash_bucket, ref_lang_id, ref_pii_counts, ref_quality_score,
-    ref_redact_pii, ref_split_assign, ref_with_packing,
+    ref_bigram_counts, ref_bm25_scores, ref_chunk_documents, ref_curate_corpus,
+    ref_doc_bigram_nll, ref_doc_neg_logprob, ref_embedding_lsh_signatures,
+    ref_embedding_near_dups, ref_exact_dedup, ref_fingerprint, ref_hash_bucket,
+    ref_incremental_new_docs, ref_ivf_topk_batch, ref_lang_id, ref_normalize_text,
+    ref_pii_counts, ref_quality_features, ref_quality_score, ref_redact_pii, ref_simhash64,
+    ref_split_assign, ref_unigram_counts, ref_with_cosine, ref_with_packing, ref_word_shingles,
 )
 
 _PIECES = (
@@ -51,6 +70,30 @@ def _frame(spark, seed, n=160):
     return spark.createDataFrame(rows, "doc_id string, text string, lang string, split string")
 
 
+def _vectors(spark, seed, n=90, dim=8):
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        k = rng.random()
+        v = [rng.uniform(-1, 1) for _ in range(dim)]
+        if k < 0.06:
+            v = None
+        elif k < 0.12:
+            v = v + [0.5]  # ragged
+        elif k < 0.16:
+            v[rng.randrange(dim)] = None
+        elif k < 0.4 and rows and rows[-1][1] and len(rows[-1][1]) == dim:
+            v = [x + rng.uniform(-0.05, 0.05) if x is not None else None for x in rows[-1][1]]
+        rows.append((i, v))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _r9(df, col):
+    """``col`` rounded to 9 places: an aggregate's float sum order
+    depends on shuffle fetch order."""
+    return df.withColumn(col, F.round(col, 9))
+
+
 def _outcome(df):
     """(schema, sorted rows), or the error condition when the plan fails."""
     try:
@@ -59,7 +102,7 @@ def _outcome(df):
         return "error", e.getCondition()
 
 
-def _pairs(df):
+def _pairs(df, vec):
     yield "lang_id", ref_lang_id(df), lang_id(df)
     for nd in (4, None):
         yield (f"quality_score/{nd}",
@@ -84,6 +127,47 @@ def _pairs(df):
     for by in ((), ("split",)):
         yield (f"with_packing/{by}", ref_with_packing(df, by, budget=16, n_buckets=3),
                with_packing(df, by, budget=16, n_buckets=3))
+    some = df.where("text IS NULL OR text <> ''")  # "" divides by zero in the reference
+    yield "quality_features", ref_quality_features(some), quality_features(some)
+    yield "unigram_counts", ref_unigram_counts(df), unigram_counts(df)
+    yield "bigram_counts", ref_bigram_counts(df), bigram_counts(df)
+    yield "doc_neg_logprob", _r9(ref_doc_neg_logprob(df), "nll"), _r9(doc_neg_logprob(df), "nll")
+    yield "doc_bigram_nll", _r9(ref_doc_bigram_nll(df), "nll2"), _r9(doc_bigram_nll(df), "nll2")
+    terms = ["the", "it's", "a\\b", "ünïcödé", "'", ""]
+    yield ("bm25_scores", _r9(ref_bm25_scores(df, terms), "score"),
+           _r9(bm25_scores(df, terms), "score"))
+    for chunk, overlap in ((4, 1), (64, 16)):
+        yield (f"chunk_documents/{chunk}", ref_chunk_documents(df, chunk=chunk, overlap=overlap),
+               chunk_documents(df, chunk=chunk, overlap=overlap))
+    for n in (1, 2, 3):
+        yield (f"word_shingles/{n}", df.select("doc_id", ref_word_shingles("text", n).alias("s")),
+               df.select("doc_id", word_shingles("text", n).alias("s")))
+    for bits in (60, 20):
+        yield f"simhash64/{bits}", ref_simhash64(df, bits=bits), simhash64(df, bits=bits)
+    yield "exact_dedup", ref_exact_dedup(df), exact_dedup(df)
+    history = df.where(F.col("doc_id").startswith("d5") | F.col("doc_id").startswith("d'1"))
+    yield ("incremental_new_docs", ref_incremental_new_docs(df, history),
+           incremental_new_docs(df, history))
+    yield ("fingerprint", df.select("doc_id", ref_fingerprint("text").alias("fp")),
+           df.select("doc_id", fingerprint("text").alias("fp")))
+    for lower in (True, False):
+        yield (f"normalize_text/{lower}", ref_normalize_text(df, lowercase=lower),
+               normalize_text(df, lowercase=lower))
+    for q in ([0.5, -0.25, 0.1, 0.0, -0.0, 1.0, 0.3, -0.7],
+              [1e-300, float("inf"), float("-inf"), float("nan"), 1e16, 2, -3, 0.1]):
+        yield f"with_cosine/{q[0]}", ref_with_cosine(vec, q), with_cosine(vec, q)
+    for bands, bits in ((4, 8), (2, 3)):
+        yield (f"embedding_lsh_signatures/{bands}x{bits}",
+               ref_embedding_lsh_signatures(vec, 8, bands=bands, band_bits=bits),
+               embedding_lsh_signatures(vec, bands=bands, band_bits=bits))
+        yield (f"embedding_near_dups/{bands}x{bits}",
+               ref_embedding_near_dups(vec, 8, 0.3, bands, bits),
+               embedding_near_dups(vec, threshold=0.3, bands=bands, band_bits=bits, dim=8))
+    whole = vec.where("size(embedding) = 8 AND NOT exists(embedding, x -> x IS NULL)")
+    indexed, cents = build_ivf_index(whole, 3)
+    queries = whole.where("vec_id < 30").selectExpr("vec_id AS query_id", "embedding AS query_vec")
+    yield ("ivf_topk_batch", ref_ivf_topk_batch(indexed, cents, queries, k=3),
+           ivf_topk_batch(indexed, cents, queries, k=3))
 
 
 @pytest.mark.parametrize("escaped", ["false", "true"])
@@ -93,12 +177,13 @@ def test_sql_text_builders_match_column_reference(spark, escaped):
     spark.conf.set(key, escaped)
     try:
         for seed in (1, 2):
-            df = _frame(spark, seed).cache()
-            for name, ref, new in _pairs(df):
+            df, vec = _frame(spark, seed).cache(), _vectors(spark, seed).cache()
+            for name, ref, new in _pairs(df, vec):
                 want, got = _outcome(ref), _outcome(new)
                 assert got == want, (name, seed)
                 assert want[0] != "error", (name, want)
             df.unpersist()
+            vec.unpersist()
     finally:
         spark.conf.set(key, old)
 
@@ -121,6 +206,25 @@ def test_quality_score_of_empty_text_is_the_oracles(spark, tmp_path):
     con.close()
     assert got == want
     assert dict(got)["e"] is not None
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_quality_features_of_null_and_empty_text(spark, ansi):
+    """A NULL text has NULL features and an empty one NULL byte ratios
+    (DuckDB's 0/0, so the gated query's twin agrees), under both ANSI
+    settings: ANSI on used to fail the collect on the empty text's
+    division by zero, ANSI off to count -1 tokens for a NULL text."""
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, ansi)
+    try:
+        df = spark.createDataFrame([("e", ""), ("n", None), ("h", "Hi there.")],
+                                   "doc_id string, text string")
+        got = {r[0]: tuple(r[2:]) for r in quality_features(df).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == {"e": (1, 0, 0.0, None, 0.0, None), "n": (None,) * 6,
+                   "h": (2, 9, 4.0, 0.1111, 0.0, 0.1111)}
 
 
 def test_ident_quotes_any_column_name(spark):
