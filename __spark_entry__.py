@@ -359,19 +359,15 @@ def q_transcripts_extract_by_role(spark, sf_dir):
     from per_conv
 """)
 def q_transcripts_ordering(spark, sf_dir):
+    from html_parser_spark.plans.pipeline import dense_turns_sql
+
     t = transcripts_from_documents(spark, sf_dir, n_convs=N_CONVS)
     per_conv = t.groupBy("conv_id").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("turn_idx").alias("nd"),
-        F.min("turn_idx").alias("lo"),
-        F.max("turn_idx").alias("hi"),
-    )
-    return per_conv.select(
-        F.count("*").alias("n_convs"),
-        F.sum(
-            F.when((F.col("n") == F.col("nd")) & (F.col("lo") == 0) & (F.col("hi") == F.col("n") - 1), 1).otherwise(0)
-        ).cast("long").alias("n_convs_ok"),
-        F.sum("n").cast("long").alias("n_turns"),
+        F.count("*").alias("n"), F.expr(dense_turns_sql()).alias("ok"))
+    return per_conv.selectExpr(
+        "count(*) AS n_convs",
+        "CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_convs_ok",
+        "CAST(sum(n) AS BIGINT) AS n_turns",
     )
 
 @gated("""
@@ -1470,15 +1466,21 @@ def q_streaming_conv_rollup(spark, sf_dir):
     select asset_id, kind,
            strlen(payload) as n_bytes,
            md5(payload) as content_hash,
-           16 + cast(concat('0x', substr(md5(payload), 1, 2)) as int) % 64 as width,
-           16 + cast(concat('0x', substr(md5(payload), 3, 2)) as int) % 64 as height
+           true as undecoded
     from a
 """)
 def q_multimodal_features(spark, sf_dir):
+    """The feature plumbing over opaque payloads: ``n_bytes`` and
+    ``content_hash`` of every asset, and ``undecoded`` (no format the
+    decoder knows, so NULL width/height/histogram) as a boolean — an
+    all-NULL integer column would lose its type on the oracle's pandas
+    path."""
     from html_parser_spark.operators.multimodal import extract_features, synth_assets
 
     assets = synth_assets(spark, n=64)
-    return extract_features(assets).select("asset_id", "kind", "n_bytes", "content_hash", "width", "height")
+    return extract_features(assets).selectExpr(
+        "asset_id", "kind", "n_bytes", "content_hash",
+        "width IS NULL AND height IS NULL AND histogram IS NULL AS undecoded")
 
 
 @gated("""
@@ -1508,7 +1510,7 @@ def q_multimodal_features(spark, sf_dir):
 def q_multimodal_real_decode(spark, sf_dir):
     """REAL stdlib image decode under the value gate: 64 synthesized P6
     PPMs whose pixel bytes are ASCII (repeated md5 hexdigest), decoded
-    by the actual PPM parser (use_real_codec=True).  The oracle
+    by the actual PPM parser.  The oracle
     reconstructs the identical payload character-for-character in SQL
     and derives width/height/hash plus the digit-bin histogram share in
     closed form."""
@@ -1524,7 +1526,7 @@ def q_multimodal_real_decode(spark, sf_dir):
         "         1, cast((id % 5 + 4) * (id % 4 + 3) * 3 as int))) as binary) as payload",
         "map('src', concat('synth://', cast(id as string))) as meta",
     )
-    feats = extract_features(assets, use_real_codec=True)
+    feats = extract_features(assets)
     # bin 3 of the 16-bin histogram = ASCII '0'-'9' (0x30-0x39): the
     # digit share of the hexdigest pixels, a closed-form SQL quantity
     return feats.select(
@@ -1573,7 +1575,7 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
     all-ones and DC = 8·k make block j decode to the EXACT flat value
     128 + k_j with k_j = byte j of md5(id) % 64 - 32, so the decoded
     histogram is closed-form SQL.  The pipeline runs the actual
-    Huffman + dequant + IDCT decoder (use_real_codec=True); the oracle
+    Huffman + dequant + IDCT decoder; the oracle
     recomputes each block's level and bins it (levels span 96..159 =
     histogram bins 6..9) without ever parsing JPEG.
 
@@ -1598,7 +1600,7 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
         rows.append((i, "image", bytearray(synth(levels, bw_, bh_)),
                      {"src": f"synth://jpeg/{i}"}))
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
-    feats = extract_features(assets, use_real_codec=True)
+    feats = extract_features(assets)
     return feats.select(
         "asset_id", "width", "height",
         F.round(F.element_at("histogram", 7), 6).alias("share_b6"),
@@ -1640,7 +1642,7 @@ def q_multimodal_jpeg_progressive(spark, sf_dir):
         rows.append((i, "image", bytearray(payload),
                      {"src": f"synth://jpeg-prog/{i}"}))
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
-    feats = extract_features(assets, use_real_codec=True)
+    feats = extract_features(assets)
     return feats.select(
         "asset_id", "width", "height",
         F.round(F.element_at("histogram", 7), 6).alias("share_b6"),
@@ -1679,8 +1681,8 @@ def q_multimodal_gif_decode(spark, sf_dir):
     over a 128-entry identity-gray palette (entry k = (k,k,k)), so the
     decoded RGB stream is each hexdigest char exactly three times.
     The pipeline runs the actual LZW + palette + de-interlace decoder
-    (use_real_codec=True; odd ids are interlaced, every third id uses
-    a local color table); the oracle reconstructs the hexdigest pixel
+    (odd ids are interlaced, every third id uses a local color
+    table); the oracle reconstructs the hexdigest pixel
     string in SQL and derives width/height plus the digit ('0'-'9',
     histogram bin 3) and hex-alpha ('a'-'f', bin 6) shares in closed
     form without ever parsing GIF."""
@@ -1692,7 +1694,7 @@ def q_multimodal_gif_decode(spark, sf_dir):
         payload = synth_gif(i, interlace=bool(i % 2), local_palette=(i % 3 == 0))
         rows.append((i, "image", bytearray(payload), {"src": f"synth://gif/{i}"}))
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
-    feats = extract_features(assets, use_real_codec=True)
+    feats = extract_features(assets)
     return feats.select(
         "asset_id", "width", "height",
         F.round(F.element_at("histogram", 4), 6).alias("digit_share"),

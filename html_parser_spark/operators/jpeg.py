@@ -8,11 +8,19 @@ Huffman entropy decode (byte stuffing + restart markers),
 dequantization, inverse zigzag, separable float IDCT (orthonormal
 8×8 DCT basis via numpy), nearest-neighbor chroma upsampling, and the
 JFIF YCbCr→RGB transform.  Both frame types the web actually uses are
-supported: baseline sequential (SOF0/1) and progressive (SOF2, T.81
-Annex G — spectral-selection bands, successive-approximation DC/AC
-refinement with EOB runs and correction bits).  Out of scope (raises
-NotImplementedError, never garbage): arithmetic coding (SOF9+),
-hierarchical, 12-bit precision.
+supported: baseline sequential (SOF0/1, interleaved or one scan per
+component) and progressive (SOF2, T.81 Annex G — spectral-selection
+bands, successive-approximation DC/AC refinement with EOB runs and
+correction bits).  Out of scope (raises NotImplementedError, never
+garbage): arithmetic coding (SOF9+), hierarchical, 12-bit precision.
+
+One decode path serves every frame type.  Each scan writes quantized
+coefficients into one per-component store (``_init_store``), through
+one walker (``_walk``) that visits data units in T.81 A.2 order —
+block-grid order for a one-component scan, MCU order otherwise — and
+owns restart resets.  One render (``_render``) then dequantizes,
+IDCTs and finishes the frame in bands of block rows, with one numpy
+call per component and band.
 
 Hardening mirrors the PNG decoder's contract: a total pixel budget is
 enforced BEFORE any allocation, truncated bitstreams raise ValueError,
@@ -48,6 +56,7 @@ _C = np.array([
 ])
 
 MAX_PIXELS = 1 << 24  # same decode-buffer budget as the PNG path
+_BAND_PIXELS = 1 << 20  # output pixels one render band covers, at most
 
 
 class _BitReader:
@@ -139,10 +148,6 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _idct_block(coeffs: "np.ndarray") -> "np.ndarray":
-    return _C.T @ coeffs @ _C
-
-
 def decode_jpeg(payload: bytes):
     """Decode a baseline-sequential or progressive JPEG; returns
     (width, height, pixel_bytes) where pixel_bytes is the grayscale
@@ -169,8 +174,8 @@ def _decode_markers(payload: bytes):
     restart_interval = 0
     frame = None       # (w, h, [(comp_id, hi, vi, tq)])
     progressive = False
-    store = None       # progressive only: per-comp (nby, nbx, 64) int32
-    base_planes = None  # multi-scan baseline: comp idx -> pixel plane
+    store = None       # per-component (block rows, block cols, 64) int32
+    scanned = set()    # baseline: frame indices whose scan has arrived
     while True:
         if pos + 2 > n:
             raise ValueError("truncated JPEG before SOS")
@@ -185,22 +190,16 @@ def _decode_markers(payload: bytes):
         if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
             continue  # stray SOI / RST outside a scan
         if marker == 0xD9:  # EOI has no length field
-            if store is not None:
-                # progressive: all scans accumulated — render now
-                return _render_progressive(frame, store, qt)
-            if base_planes is not None:
-                # multi-scan baseline: every component must have arrived
-                w, h, comps = frame
-                missing = [c[0] for fi, c in enumerate(comps)
-                           if fi not in base_planes]
-                if missing:
-                    raise ValueError(
-                        f"JPEG EOI with undecoded components {missing}")
-                hmax, vmax, _mx, _my = _geometry(frame)
-                planes = [base_planes[fi] for fi in range(len(comps))]
-                samps = [(hi, vi) for _cid, hi, vi, _tq in comps]
-                return _finish_planes(planes, samps, hmax, vmax, w, h)
-            raise ValueError("JPEG EOI before SOS")
+            if store is None:
+                raise ValueError("JPEG EOI before SOS")
+            if not progressive:
+                # a baseline frame renders as soon as its last component
+                # arrives, so reaching EOI means one never did
+                missing = [c[0] for fi, c in enumerate(frame[2])
+                           if fi not in scanned]
+                raise ValueError(
+                    f"JPEG EOI with undecoded components {missing}")
+            return _render(frame, store, qt)
         (seglen,) = struct.unpack_from(">H", payload, pos)
         seg = payload[pos + 2:pos + seglen]
         if len(seg) != seglen - 2:
@@ -229,6 +228,8 @@ def _decode_markers(payload: bytes):
                 (huff_dc if tc == 0 else huff_ac)[th] = table
                 i += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
+            if store is not None:
+                raise ValueError("JPEG frame header after a scan")
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
             if prec != 8:
                 raise NotImplementedError("non-8-bit JPEG precision")
@@ -247,6 +248,8 @@ def _decode_markers(payload: bytes):
             comps = []
             for ci in range(nc):
                 cid, hv, tq = struct.unpack_from(">BBB", seg, 6 + 3 * ci)
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0xF <= 4):
+                    raise ValueError("JPEG sampling factor outside 1..4")
                 comps.append((cid, hv >> 4, hv & 0xF, tq))
             frame = (w, h, comps)
             progressive = marker == 0xC2
@@ -264,198 +267,47 @@ def _decode_markers(payload: bytes):
             ns = seg[0]
             if len(seg) < 1 + 2 * ns + 3:
                 raise ValueError("truncated JPEG SOS header")
-            scan = []
+            if ns == 0:
+                raise ValueError("JPEG scan with no components")
+            # entropy blocks arrive in SCAN order (T.81 A.2.3), so a file
+            # whose SOS permutes the SOF component list still decodes
+            fidx = {c[0]: fi for fi, c in enumerate(frame[2])}
+            scan = []          # (frame index, DC table id, AC table id)
             for si in range(ns):
                 cs, tt = seg[1 + 2 * si], seg[2 + 2 * si]
-                scan.append((cs, tt >> 4, tt & 0xF))
-            if not progressive:
-                if len(scan) == len(frame[2]):
-                    if base_planes is not None:
-                        raise ValueError(
-                            "interleaved JPEG scan after partial scans")
-                    return _decode_scan(payload, body_at, frame, scan, qt,
-                                        huff_dc, huff_ac, restart_interval)
-                # multi-scan baseline (T.81 SOF0 with separate scans):
-                # common non-interleaved shape is one component per scan
-                if len(scan) != 1:
-                    raise NotImplementedError(
-                        "baseline JPEG scan covering a strict subset of "
-                        ">1 components")
-                cs, dt, at = scan[0]
-                comps = frame[2]
-                fidx = {cid: fi for fi, (cid, _hi, _vi, _tq) in
-                        enumerate(comps)}
-                if cs not in fidx:
+                if cs not in fidx or fidx[cs] in (s[0] for s in scan):
                     raise ValueError("JPEG scan/frame component mismatch")
-                fi = fidx[cs]
-                if base_planes is None:
-                    base_planes = {}
-                if fi in base_planes:
-                    raise ValueError("JPEG component scanned twice")
-                tq = comps[fi][3]
-                if tq not in qt:
+                scan.append((fidx[cs], tt >> 4, tt & 0xF))
+            if progressive:
+                aa = seg[3 + 2 * ns]
+                band = (seg[1 + 2 * ns], seg[2 + 2 * ns], aa >> 4, aa & 0xF)
+                ss, se, ah, al = band
+                if not 0 <= ss <= se <= 63 or al > 13 or ah > 13:
+                    raise ValueError("invalid JPEG progressive band")
+                if ss == 0 and se != 0:
                     raise ValueError(
-                        "JPEG component references missing quant table")
-                if dt not in huff_dc or at not in huff_ac:
+                        "invalid JPEG progressive band (DC+AC mixed scan)")
+                if ss and ns != 1:
                     raise ValueError(
-                        "JPEG scan references missing Huffman table")
-                plane, pos = _decode_single_comp_scan(
-                    payload, body_at, frame, fi, qt[tq], huff_dc[dt],
-                    huff_ac[at], restart_interval)
-                base_planes[fi] = plane
-                continue
-            aa = seg[3 + 2 * ns]
-            band = (seg[1 + 2 * ns], seg[2 + 2 * ns], aa >> 4, aa & 0xF)
+                        "progressive AC scan must be non-interleaved")
+            else:
+                # a baseline scan codes the whole block once; Ss/Se/Ah/Al
+                # carry nothing, and each component gets exactly one scan
+                band = (0, 63, 0, 0)
+                if scanned.intersection(s[0] for s in scan):
+                    raise ValueError(
+                        "JPEG component scanned twice" if ns == 1 else
+                        "interleaved JPEG scan after partial scans")
+                scanned.update(s[0] for s in scan)
             if store is None:
-                store = _init_prog_store(frame)
-            pos = _decode_prog_scan(payload, body_at, frame, scan, band,
-                                    huff_dc, huff_ac, restart_interval,
-                                    store)
+                store = _init_store(frame)
+            br = _BitReader(payload, body_at)
+            _decode_scan(br, frame, scan, band, huff_dc, huff_ac,
+                         restart_interval, store, progressive)
+            if not progressive and len(scanned) == len(frame[2]):
+                return _render(frame, store, qt)
+            pos = _next_marker(payload, br.pos)
         # else: APPn / COM / others — skipped via seglen
-
-
-def _baseline_block(br, quant, hdc, hac, pred, coeffs):
-    """Decode one baseline data unit into ``coeffs`` (zigzag order,
-    dequantized); returns the updated DC predictor."""
-    coeffs[:] = 0.0
-    s = hdc.decode(br)
-    if s > 11:
-        raise ValueError("invalid JPEG DC category")
-    diff = _extend(br.bits(s), s) if s else 0
-    pred += diff
-    coeffs[0] = pred * quant[0]
-    k = 1
-    while k < 64:
-        rs = hac.decode(br)
-        r, size = rs >> 4, rs & 0xF
-        if size == 0:
-            if r == 15:   # ZRL: 16 zeros
-                k += 16
-                continue
-            break         # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run overflow")
-        coeffs[k] = _extend(br.bits(size), size) * quant[k]
-        k += 1
-    return pred
-
-
-def _decode_single_comp_scan(payload, pos, frame, ci, quant, hdc, hac,
-                             restart_interval):
-    """One NON-interleaved baseline scan (T.81 A.2.2): the MCU is a
-    single data unit and the block grid is ceil(component samples / 8)
-    per axis — the multi-scan SOF0 shape (one scan per component) real
-    web encoders emit for separate-plane baseline files.  Returns the
-    component-resolution pixel plane and the next marker position."""
-    nbx, nby = _comp_blocks(frame, ci)
-    plane = np.zeros((nby * 8, nbx * 8), dtype=np.float64)
-    br = _BitReader(payload, pos)
-    pred = 0
-    coeffs = np.zeros(64, dtype=np.float64)
-    n = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if restart_interval and n and n % restart_interval == 0:
-                br.align_to_restart()
-                pred = 0
-            n += 1
-            pred = _baseline_block(br, quant, hdc, hac, pred, coeffs)
-            block = np.zeros((8, 8), dtype=np.float64)
-            block.flat[ZIGZAG] = coeffs
-            plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                _idct_block(block) + 128.0
-    return plane, _next_marker(payload, br.pos)
-
-
-def _decode_scan(payload, pos, frame, scan, qt, huff_dc, huff_ac,
-                 restart_interval):
-    w, h, comps = frame
-    if len(scan) != len(comps):
-        raise NotImplementedError("multi-scan JPEG (non-interleaved)")
-    hmax, vmax, mcux, mcuy = _geometry(frame)
-    # per-component plane buffers at component resolution
-    planes = []
-    meta = []  # (hi, vi, quant, dc_table, ac_table)
-    dc_by_cid = {cid: (dt, at) for cid, dt, at in scan}
-    frame_idx = {}
-    for fi, (cid, hi, vi, tq) in enumerate(comps):
-        if tq not in qt:
-            raise ValueError("JPEG component references missing quant table")
-        if cid not in dc_by_cid:
-            raise ValueError("JPEG scan/frame component mismatch")
-        dt, at = dc_by_cid[cid]
-        if dt not in huff_dc or at not in huff_ac:
-            raise ValueError("JPEG scan references missing Huffman table")
-        planes.append(np.zeros((mcuy * vi * 8, mcux * hi * 8),
-                               dtype=np.float64))
-        meta.append((hi, vi, qt[tq], huff_dc[dt], huff_ac[at]))
-        frame_idx[cid] = fi
-    # entropy blocks arrive in SCAN order (T.81 A.2.3) — decode in that
-    # order, writing each block into ITS component's plane, so a file
-    # whose SOS permutes the SOF component list still decodes correctly
-    scan_indices = []
-    for cs, _dt, _at in scan:
-        if cs not in frame_idx or frame_idx[cs] in scan_indices:
-            raise ValueError("JPEG scan/frame component mismatch")
-        scan_indices.append(frame_idx[cs])
-
-    br = _BitReader(payload, pos)
-    preds = [0] * len(comps)
-    coeffs = np.zeros(64, dtype=np.float64)
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                br.align_to_restart()
-                preds = [0] * len(comps)
-            n_mcu += 1
-            for ci in scan_indices:
-                hi, vi, quant, hdc, hac = meta[ci]
-                for by in range(vi):
-                    for bx in range(hi):
-                        preds[ci] = _baseline_block(
-                            br, quant, hdc, hac, preds[ci], coeffs)
-                        block = np.zeros((8, 8), dtype=np.float64)
-                        block.flat[ZIGZAG] = coeffs
-                        px = _idct_block(block) + 128.0
-                        y0 = (my * vi + by) * 8
-                        x0 = (mx * hi + bx) * 8
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = px
-
-    samps = [(hi, vi) for hi, vi, *_rest in meta]
-    return _finish_planes(planes, samps, hmax, vmax, w, h)
-
-
-def _finish_planes(planes, samps, hmax, vmax, w, h):
-    """Shared render epilogue: clip, nearest-neighbor chroma upsample,
-    crop to declared dims, JFIF YCbCr->RGB when 3 components."""
-    out_planes = []
-    for ci, (hi, vi) in enumerate(samps):
-        p = np.clip(np.round(planes[ci]), 0, 255)
-        # nearest-neighbor upsample to full resolution, then crop
-        p = np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)
-        out_planes.append(p[:h, :w])
-
-    if len(out_planes) == 1:
-        return w, h, out_planes[0].astype(np.uint8).tobytes()
-    if len(out_planes) != 3:
-        raise NotImplementedError("JPEG with 2 or 4+ components")
-    y, cb, cr = out_planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return w, h, np.clip(np.round(rgb), 0, 255).astype(np.uint8).tobytes()
-
-
-# ---------------------------------------------------------------------------
-# Progressive (SOF2) — T.81 Annex G.  Scans accumulate coefficients per
-# component in MCU-padded block grids; rendering happens once, at EOI.
-# The successive-approximation refinement logic mirrors the de-facto
-# standard decoder behavior (libjpeg jdphuff) which real-world encoders
-# target, including the two's-complement `& p1` already-set guard.
-# ---------------------------------------------------------------------------
 
 
 def _geometry(frame):
@@ -476,7 +328,10 @@ def _comp_blocks(frame, ci):
     return -(-(-(-w * hi // hmax)) // 8), -(-(-(-h * vi // vmax)) // 8)
 
 
-def _init_prog_store(frame):
+def _init_store(frame):
+    """Quantized coefficients (zigzag order) per component, over the
+    MCU-padded block grid: interleaved scans fill all of it, a
+    non-interleaved one its component's top-left ``_comp_blocks``."""
     w, h, comps = frame
     _hmax, _vmax, mcux, mcuy = _geometry(frame)
     total = sum(mcux * hi * mcuy * vi * 64 for _cid, hi, vi, _tq in comps)
@@ -499,39 +354,76 @@ def _next_marker(data, p):
             p += 1
         else:
             return p
-    raise ValueError("truncated JPEG after progressive scan")
+    raise ValueError("truncated JPEG after scan")
 
 
-def _decode_prog_scan(payload, pos, frame, scan, band, huff_dc, huff_ac,
-                      restart_interval, store):
+# ---------------------------------------------------------------------------
+# Scans.  Baseline is the one-band case of progressive (Ss..Se = 0..63,
+# Ah = Al = 0) with plain EOBs.  The successive-approximation refinement
+# logic (T.81 Annex G) mirrors the de-facto standard decoder behavior
+# (libjpeg jdphuff) which real-world encoders target, including the
+# two's-complement `& p1` already-set guard.
+# ---------------------------------------------------------------------------
+
+
+def _decode_scan(br, frame, scan, band, huff_dc, huff_ac, restart_interval,
+                 store, progressive):
     ss, se, ah, al = band
-    _w, _h, comps = frame
-    frame_idx = {cid: fi for fi, (cid, _hi, _vi, _tq) in enumerate(comps)}
-    indices = []
-    for cs, _dt, _at in scan:
-        if cs not in frame_idx or frame_idx[cs] in indices:
-            raise ValueError("JPEG scan/frame component mismatch")
-        indices.append(frame_idx[cs])
-    if not 0 <= ss <= se <= 63 or al > 13 or ah > 13:
-        raise ValueError("invalid JPEG progressive band")
-    if ss == 0 and se != 0:
-        raise ValueError("invalid JPEG progressive band (DC+AC mixed scan)")
-    br = _BitReader(payload, pos)
-    if ss == 0:
-        _prog_dc_scan(br, frame, scan, indices, ah, al, huff_dc,
-                      restart_interval, store)
+    # a DC refinement reads raw bits; every other scan Huffman-decodes
+    # (AC refinement too, for its run/EOB symbols)
+    try:
+        dc = {ci: huff_dc[dt] for ci, dt, _at in scan if ss == 0 and ah == 0}
+        ac = {ci: huff_ac[at] for ci, _dt, at in scan if se}
+    except KeyError:
+        raise ValueError("JPEG scan references missing Huffman table") from None
+    lo = max(ss, 1)
+    state = [0] * (len(frame[2]) + 1)  # DC predictor per component, EOB run
+
+    def unit(blk, ci):
+        if ss == 0:
+            _dc_block(br, blk, dc.get(ci), state, ci, ah, al)
+        if se and ah:
+            state[-1] = _ac_refine(br, blk, lo, se, al, state[-1], ac[ci])
+        elif se:
+            state[-1] = _ac_first(br, blk, lo, se, al, state[-1], ac[ci],
+                                  progressive)
+
+    _walk(br, frame, [ci for ci, _dt, _at in scan], restart_interval, store,
+          unit, state)
+
+
+def _walk(br, frame, indices, restart_interval, store, unit, state):
+    """Hand every data unit of one scan to ``unit(block, ci)`` in T.81
+    A.2 order.  A one-component scan is non-interleaved whatever its H
+    and V: one block per MCU, over that component's block grid row by
+    row (A.2.2).  Otherwise each MCU holds Hi×Vi blocks of every scan
+    component in scan order (A.2.3).  Every ``restart_interval`` MCUs
+    an RSTn marker is consumed and ``state`` (DC predictors, EOB run)
+    zeroed."""
+    comps = frame[2]
+    if len(indices) == 1:
+        ci = indices[0]
+        mcux, mcuy = _comp_blocks(frame, ci)
+        units = [(store[ci], 1, 1, 0, 0, ci)]
     else:
-        if len(scan) != 1:
-            raise ValueError("progressive AC scan must be non-interleaved")
-        _cs, _dt, at = scan[0]
-        if at not in huff_ac:  # refinement also Huffman-decodes run/EOB
-            raise ValueError("JPEG scan references missing Huffman table")
-        _prog_ac_scan(br, frame, indices[0], ss, se, ah, al, huff_ac[at],
-                      restart_interval, store)
-    return _next_marker(payload, br.pos)
+        _hmax, _vmax, mcux, mcuy = _geometry(frame)
+        units = []
+        for ci in indices:
+            _cid, hi, vi, _tq = comps[ci]
+            units += [(store[ci], vi, hi, y, x, ci)
+                      for y in range(vi) for x in range(hi)]
+    n = 0
+    for my in range(mcuy):
+        for mx in range(mcux):
+            if restart_interval and n and n % restart_interval == 0:
+                br.align_to_restart()
+                state[:] = [0] * len(state)
+            n += 1
+            for grid, vi, hi, y, x, ci in units:
+                unit(grid[my * vi + y, mx * hi + x], ci)
 
 
-def _prog_dc_block(br, blk, table, preds, ci, ah, al):
+def _dc_block(br, blk, table, preds, ci, ah, al):
     if ah == 0:
         s = table.decode(br)
         if s > 11:
@@ -548,48 +440,7 @@ def _prog_dc_block(br, blk, table, preds, ci, ah, al):
         blk[0] |= 1 << al
 
 
-def _prog_dc_scan(br, frame, scan, indices, ah, al, huff_dc,
-                  restart_interval, store):
-    _w, _h, comps = frame
-    _hmax, _vmax, mcux, mcuy = _geometry(frame)
-    tables = {}
-    if ah == 0:
-        for (cs, dt, _at), ci in zip(scan, indices):
-            if dt not in huff_dc:
-                raise ValueError("JPEG scan references missing Huffman table")
-            tables[ci] = huff_dc[dt]
-    preds = {ci: 0 for ci in indices}
-    n = 0
-    if len(indices) == 1:
-        ci = indices[0]
-        nbx, nby = _comp_blocks(frame, ci)
-        for by in range(nby):
-            for bx in range(nbx):
-                if restart_interval and n and n % restart_interval == 0:
-                    br.align_to_restart()
-                    preds[ci] = 0
-                n += 1
-                _prog_dc_block(br, store[ci][by, bx], tables.get(ci),
-                               preds, ci, ah, al)
-        return
-    if len(indices) != len(comps):
-        raise NotImplementedError("partially interleaved progressive DC scan")
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n and n % restart_interval == 0:
-                br.align_to_restart()
-                preds = {ci: 0 for ci in indices}
-            n += 1
-            for ci in indices:
-                _cid, hi, vi, _tq = comps[ci]
-                for by in range(vi):
-                    for bx in range(hi):
-                        _prog_dc_block(br, store[ci][my * vi + by,
-                                                     mx * hi + bx],
-                                       tables.get(ci), preds, ci, ah, al)
-
-
-def _prog_ac_first(br, blk, ss, se, al, eobrun, table):
+def _ac_first(br, blk, ss, se, al, eobrun, table, progressive):
     if eobrun:
         return eobrun - 1
     k = ss
@@ -597,10 +448,12 @@ def _prog_ac_first(br, blk, ss, se, al, eobrun, table):
         rs = table.decode(br)
         r, s = rs >> 4, rs & 0xF
         if s == 0:
-            if r < 15:      # EOBn: run of (1<<r)+bits(r) EOB blocks
-                eobrun = (1 << r) - 1
-                if r:
-                    eobrun += br.bits(r)
+            if r < 15:
+                # progressive EOBn: this block and the next
+                # (1<<r)-1+bits(r) end here.  Baseline has only EOB
+                # (r = 0), and any other such symbol ends the block.
+                if r and progressive:
+                    eobrun = (1 << r) - 1 + br.bits(r)
                 break
             k += 16         # ZRL
         else:
@@ -612,7 +465,7 @@ def _prog_ac_first(br, blk, ss, se, al, eobrun, table):
     return eobrun
 
 
-def _prog_ac_refine(br, blk, ss, se, al, eobrun, table):
+def _ac_refine(br, blk, ss, se, al, eobrun, table):
     p1 = 1 << al
     m1 = -p1
     k = ss
@@ -658,43 +511,42 @@ def _prog_ac_refine(br, blk, ss, se, al, eobrun, table):
     return eobrun
 
 
-def _prog_ac_scan(br, frame, ci, ss, se, ah, al, table, restart_interval,
-                  store):
-    nbx, nby = _comp_blocks(frame, ci)
-    grid = store[ci]
-    eobrun = 0
-    n = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if restart_interval and n and n % restart_interval == 0:
-                br.align_to_restart()
-                eobrun = 0
-            n += 1
-            if ah == 0:
-                eobrun = _prog_ac_first(br, grid[by, bx], ss, se, al,
-                                        eobrun, table)
-            else:
-                eobrun = _prog_ac_refine(br, grid[by, bx], ss, se, al,
-                                         eobrun, table)
-
-
-def _render_progressive(frame, store, qt):
+def _render(frame, store, qt):
+    """Dequantize, inverse-zigzag and IDCT every stored block, then
+    clip, nearest-neighbor upsample, crop to the declared dims and,
+    with 3 components, apply JFIF YCbCr->RGB.  Works in bands of MCU
+    rows, so the float work space stays near ``_BAND_PIXELS`` samples
+    per component whatever the image size."""
     w, h, comps = frame
-    hmax, vmax, _mcux, _mcuy = _geometry(frame)
-    planes = []
-    samps = []
-    for ci, (_cid, hi, vi, tq) in enumerate(comps):
+    hmax, vmax, mcux, mcuy = _geometry(frame)
+    quant = []
+    for _cid, _hi, _vi, tq in comps:
         if tq not in qt:
             raise ValueError("JPEG component references missing quant table")
-        deq = store[ci].astype(np.float64) * qt[tq][None, None, :]
-        nby, nbx = deq.shape[:2]
-        fblk = np.zeros((nby, nbx, 64))
-        fblk[..., ZIGZAG] = deq    # inverse zigzag, all blocks at once
-        fblk = fblk.reshape(nby, nbx, 8, 8)
-        px = np.einsum("ij,ybjk,kl->ybil", _C.T, fblk, _C) + 128.0
-        planes.append(px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8))
-        samps.append((hi, vi))
-    return _finish_planes(planes, samps, hmax, vmax, w, h)
+        quant.append(qt[tq])
+    out = np.empty((h, w, len(comps)), dtype=np.uint8)
+    step = max(1, _BAND_PIXELS // (64 * hmax * vmax * mcux))
+    for m0 in range(0, mcuy, step):
+        y0 = m0 * vmax * 8
+        y1 = min(y0 + step * vmax * 8, h)
+        planes = []
+        for ci, (_cid, hi, vi, _tq) in enumerate(comps):
+            coef = store[ci][m0 * vi:(m0 + step) * vi]
+            nby, nbx = coef.shape[:2]
+            fblk = np.zeros((nby, nbx, 64))
+            fblk[..., ZIGZAG] = coef * quant[ci]  # all blocks at once
+            px = _C.T @ fblk.reshape(nby, nbx, 8, 8) @ _C + 128.0
+            p = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+            p = np.clip(np.round(p), 0, 255)
+            p = np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)
+            planes.append(p[:y1 - y0, :w])
+        if len(planes) == 3:
+            y, cb, cr = planes
+            planes = [y + 1.402 * (cr - 128.0),
+                      y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
+                      y + 1.772 * (cb - 128.0)]
+        out[y0:y1] = np.clip(np.round(np.stack(planes, axis=-1)), 0, 255)
+    return w, h, out.tobytes()
 
 
 # ---------------------------------------------------------------------------

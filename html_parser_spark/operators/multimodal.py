@@ -8,13 +8,12 @@ progressive JPEG (pure-Python Huffman + dequant + IDCT, see
 interlace, see ``gif.py``), and PCM WAV audio (stdlib ``wave``) —
 and raises
 ``NotImplementedError`` for formats that genuinely need codecs this
-container doesn't ship (arithmetic-coded JPEG, MP3, H.264).  A
-deterministic ``fake_decode`` remains for opaque test payloads.
-Everything Spark-side — schema, the ``html_ops.doc_udf`` Arrow batch
-shape with its ``MAX_DOC_BYTES`` bound, partitioning — is shared by
-both paths; the real-decode path is value-checked end-to-end by the
-driver oracle on synthesized ASCII-pixel PPMs
-(``multimodal_real_decode``).
+container doesn't ship (arithmetic-coded JPEG, MP3, H.264).
+``extract_features`` runs it over the first ``MAX_DOC_BYTES`` of each
+payload through ``html_ops.doc_udf``; a payload it cannot decode gets
+NULL features.  The decode is value-checked end-to-end by the driver
+oracle on synthesized ASCII-pixel PPMs (``multimodal_real_decode``),
+JPEGs and GIFs.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ import io
 import struct
 import wave
 import zlib
-from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,7 +51,7 @@ DECODE_SCHEMA = StructType([
 
 def _byte_histogram(data: bytes):
     """16-bin normalized histogram over a decoded byte stream (pixel
-    bytes / PCM sample bytes), round 6 — same shape as fake_decode.
+    bytes / PCM sample bytes), round 6.
     Counting runs through collections.Counter (C-accelerated), not a
     per-byte Python loop: a 10 MB payload is one C pass, not 10^7
     interpreter iterations inside the extraction kernel."""
@@ -282,24 +280,9 @@ def decode_real(payload: bytes, kind: str):
     )
 
 
-def fake_decode(payload: bytes, kind: str):
-    """Deterministic stand-in decoder: derives pseudo width/height and a
-    16-bin byte histogram from the payload itself."""
-    h = hashlib.md5(payload).digest()
-    width = 16 + h[0] % 64
-    height = 16 + h[1] % 64
-    hist = [0.0] * 16
-    if payload:
-        for b in payload:
-            hist[b >> 4] += 1.0
-        total = float(len(payload))
-        hist = [round(c / total, 6) for c in hist]
-    return width, height, hist
-
-
-def _decoded(decode, data: bytes, kind: str) -> dict:
+def _decoded(data: bytes, kind: str) -> dict:
     try:
-        w, h, hist = decode(data, kind)
+        w, h, hist = decode_real(data, kind)
     except Exception:
         # undecodable payload (unknown/compressed format or truncated
         # data): permissive contract — decode-derived features are NULL
@@ -307,13 +290,13 @@ def _decoded(decode, data: bytes, kind: str) -> dict:
     return {"width": w, "height": h, "histogram": hist}
 
 
-def extract_features(assets: DataFrame, use_real_codec: bool = False) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads: one ``doc_udf`` struct
-    column decoded from the first ``MAX_DOC_BYTES`` of each payload,
-    beside ``n_bytes`` and ``content_hash`` computed JVM-side over the
-    whole payload.  A null payload gives null features."""
-    decode = decode_real if use_real_codec else fake_decode
-    feats = doc_udf(DECODE_SCHEMA, partial(_decoded, decode))("payload", "kind")
+    column that ``decode_real`` decodes from the first ``MAX_DOC_BYTES``
+    of each payload, beside ``n_bytes`` and ``content_hash`` computed
+    JVM-side over the whole payload.  A null or undecodable payload
+    gives null features."""
+    feats = doc_udf(DECODE_SCHEMA, _decoded)("payload", "kind")
     return assets.select(
         "asset_id", "kind",
         F.length("payload").cast("long").alias("n_bytes"),

@@ -85,20 +85,18 @@ def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
         *[f"_ex.{c} AS {c}" for c in ("main_text", "spans", "n_nodes", "n_removed")])
 
 
+def dense_turns_sql() -> str:
+    """Aggregate SQL text, true when one conversation's turns are dense:
+    count == countDistinct == max-min+1 and min == 0, so a duplicated
+    turn, a gap and a non-zero start all make it false."""
+    return ("count(*) = count(DISTINCT turn_idx) AND min(turn_idx) = 0"
+            " AND max(turn_idx) = count(*) - 1")
+
+
 def assert_turn_ordering(df: DataFrame) -> int:
-    """Return number of conversations violating dense turn ordering:
-    one groupBy checking count == countDistinct == max-min+1 and
-    min == 0, so a duplicated turn, a gap and a non-zero start all
-    count."""
-    agg = df.groupBy("conv_id").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("turn_idx").alias("nd"),
-        F.min("turn_idx").alias("lo"),
-        F.max("turn_idx").alias("hi"),
-    )
-    return agg.where(
-        (F.col("n") != F.col("nd")) | (F.col("lo") != 0) | (F.col("hi") != F.col("n") - 1)
-    ).count()
+    """Return number of conversations violating dense turn ordering
+    (``dense_turns_sql``), in one groupBy."""
+    return df.groupBy("conv_id").agg(F.expr(dense_turns_sql()).alias("ok")).where("NOT ok").count()
 
 
 CONTROL_COLUMNS = [

@@ -212,23 +212,25 @@ def test_lang_id_heuristic(spark, corpus):
 
 
 def test_multimodal_feature_plumbing(spark):
+    """Opaque payloads (``synth_assets``) keep ``n_bytes`` and
+    ``content_hash`` of the whole payload and get NULL decode features:
+    the operator runs the real decoder, and it knows no such format."""
+    import hashlib
+
     from html_parser_spark.operators.multimodal import (
         decode_real, extract_features, synth_assets,
     )
 
     assets = synth_assets(spark, n=32)
-    feats = extract_features(assets)
-    rows = feats.collect()
-    assert len(rows) == 32
-    for r in rows:
-        assert r["n_bytes"] > 0 and len(r["content_hash"]) == 32
-        assert 16 <= r["width"] < 80 and 16 <= r["height"] < 80
-        assert abs(sum(r["histogram"]) - 1.0) < 1e-3
-    # determinism: same input → same features
-    again = {r["asset_id"]: r["content_hash"] for r in extract_features(assets).collect()}
-    assert again == {r["asset_id"]: r["content_hash"] for r in rows}
-    with pytest.raises(NotImplementedError):
-        decode_real(b"bytes", "image")          # unknown magic still raises
+    payloads = {r["asset_id"]: bytes(r["payload"]) for r in assets.collect()}
+    rows = {r["asset_id"]: r for r in extract_features(assets).collect()}
+    assert set(rows) == set(payloads) and len(rows) == 32
+    for i, r in rows.items():
+        assert r["n_bytes"] == len(payloads[i])
+        assert r["content_hash"] == hashlib.md5(payloads[i]).hexdigest()
+        assert (r["width"], r["height"], r["histogram"]) == (None, None, None)
+        with pytest.raises(NotImplementedError):
+            decode_real(payloads[i], r["kind"])    # unknown magic raises
 
 
 def test_multimodal_real_stdlib_decoders(spark):
@@ -309,7 +311,7 @@ def test_multimodal_real_stdlib_decoders(spark):
     ]
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
     got = {r["asset_id"]: r for r in
-           extract_features(assets, use_real_codec=True).collect()}
+           extract_features(assets).collect()}
     assert got[0]["width"] == 4 and got[0]["height"] == 3
     assert got[1]["width"] == 3 and got[1]["height"] == 3
     assert got[2]["width"] == 8000 and got[2]["height"] == 1

@@ -16,7 +16,7 @@ from html_parser_spark.operators import html_ops, layout
 from html_parser_spark.operators.boilerplate import text_blocks_udf
 from html_parser_spark.operators.html_ops import MAX_DOC_BYTES
 from html_parser_spark.operators.mediaprobe import probe_media, synth_mp4
-from html_parser_spark.operators.multimodal import extract_features, fake_decode
+from html_parser_spark.operators.multimodal import decode_real, extract_features
 
 HEAD = '<p id="head">'
 #: everything here lies past the cut; the table feeds table_cells_udf
@@ -149,12 +149,25 @@ def test_truncates_at_max_doc_bytes_and_propagates_null(docs, name):
     assert rows[1]["null_out"] in ("[null]", "[{}]")
 
 
-def test_extract_features_hashes_whole_payload_decodes_prefix(docs):
+def test_extract_features_hashes_whole_payload_decodes_prefix(spark):
     """``n_bytes`` and ``content_hash`` describe the whole payload;
-    the decoded features come from its first ``MAX_DOC_BYTES``."""
-    row = extract_features(_assets(docs)).where("asset_id = 0").first()
-    full = (HEAD + "x" * MAX_DOC_BYTES + TAIL).encode()
-    assert row["n_bytes"] == GIANT_LEN
-    assert row["content_hash"] == hashlib.md5(full).hexdigest()
-    w, h, hist = fake_decode(full[:MAX_DOC_BYTES], "image")
-    assert (row["width"], row["height"], row["histogram"]) == (w, h, hist)
+    the decoded features come from its first ``MAX_DOC_BYTES``.  Row 0
+    is a PGM whose declared pixels end past the cut: whole, it
+    decodes, but its first ``MAX_DOC_BYTES`` are a truncated PGM, so
+    its features are NULL.  Row 1, a small PGM, decodes."""
+    header = "P5\n4096 4097\n255\n"
+    full = header.encode() + b"x" * (4096 * 4097)
+    assert len(full) > MAX_DOC_BYTES > len(header)
+    assert decode_real(full, "image")[:2] == (4096, 4097)
+    with pytest.raises(ValueError, match="truncated"):
+        decode_real(full[:MAX_DOC_BYTES], "image")
+    small = "P5\n3 2\n255\n" + "x" * 6
+    payload = F.when(F.col("id") == 0, F.concat(F.lit(header), F.repeat(F.lit("x"), 4096 * 4097))
+                     ).otherwise(F.lit(small)).cast("binary")
+    assets = spark.range(2).select(F.col("id").alias("asset_id"), F.lit("image").alias("kind"),
+                                   payload.alias("payload"))
+    big, pgm = extract_features(assets).orderBy("asset_id").collect()
+    assert big["n_bytes"] == len(full)
+    assert big["content_hash"] == hashlib.md5(full).hexdigest()
+    assert (big["width"], big["height"], big["histogram"]) == (None, None, None)
+    assert (pgm["width"], pgm["height"]) == (3, 2) and pgm["histogram"][7] == 1.0

@@ -208,7 +208,7 @@ def test_gif_through_spark_feature_path(spark):
     rows.append((12, "image", bytearray(synth_gif(12)[:20]), {}))
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
     out = {r["asset_id"]: r for r in
-           extract_features(assets, use_real_codec=True).collect()}
+           extract_features(assets).collect()}
     for i in range(12):
         assert out[i]["width"] == 8 + i % 5
         assert out[i]["height"] == 6 + i % 4

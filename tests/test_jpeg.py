@@ -230,6 +230,23 @@ def test_hostile_payloads():
     with pytest.raises(ValueError, match="oversubscribed"):
         decode_jpeg(b"\xff\xd8" + _dqt_unit() + bad_dht)
 
+    # a zero sampling factor (H or V of a chroma component) is rejected
+    # with the SOF, never a ZeroDivisionError from the upsampling ratio
+    color = synth_jpeg_color([0, 10, -20, 31, -32, 5, 7, 8], 4, 2)
+    hv_at = color.index(b"\xff\xc0") + 2 + 2 + 6 + 3 + 1  # component 2's H/V
+    for hv in (0x10, 0x01):
+        bad = bytearray(color)
+        bad[hv_at] = hv
+        with pytest.raises(ValueError, match="sampling factor"):
+            decode_jpeg(bytes(bad))
+
+    # a second frame header after a scan would re-shape the coefficient
+    # store under the scans already decoded
+    prog = synth_jpeg_gray_progressive(levels, 2, 2)
+    sof2 = prog[prog.index(b"\xff\xc2"):prog.index(b"\xff\xda")]
+    with pytest.raises(ValueError, match="frame header after a scan"):
+        decode_jpeg(prog[:-2] + sof2 + b"\xff\xd9")
+
     # truncated entropy stream: fewer blocks than the frame declares
     short = synth_jpeg_gray([5], 1, 1)
     i = short.index(b"\xff\xc0")
@@ -274,7 +291,7 @@ def test_jpeg_through_spark_feature_path(spark):
     rows.append((99, "image", arith, None))
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
     got = {r["asset_id"]: r for r in
-           extract_features(assets, use_real_codec=True).collect()}
+           extract_features(assets).collect()}
     for i in range(8):
         assert got[i]["width"] == 16 and got[i]["height"] == 16
         assert abs(sum(got[i]["histogram"]) - 1.0) < 1e-3
@@ -460,3 +477,152 @@ def test_multiscan_hostile_contracts():
     mixed = good[:scans[1]] + inter[sos_i:]
     with pytest.raises(ValueError, match="after partial"):
         decode_jpeg(mixed)
+
+
+# canonical AC table of the random-coefficient encoder below: EOB, ZRL
+# and every (run, size) with size 1..10, each an 8-bit code (its index)
+_AC_SYMS = [0x00, 0xF0] + [(r << 4) | s for r in range(16) for s in range(1, 11)]
+_AC_CODE = {rs: i for i, rs in enumerate(_AC_SYMS)}
+
+_420 = [(2, 2), (1, 1), (1, 1)]
+#: layout -> per-component (H, V), and the components of each scan
+LAYOUTS = {
+    "gray 1x1": ([(1, 1)], [(0,)]),
+    "gray 2x2": ([(2, 2)], [(0,)]),
+    "gray 2x1": ([(2, 1)], [(0,)]),
+    "gray 1x2": ([(1, 2)], [(0,)]),
+    "4:4:4 interleaved": ([(1, 1)] * 3, [(0, 1, 2)]),
+    "4:4:4 multi-scan": ([(1, 1)] * 3, [(0,), (1,), (2,)]),
+    "4:2:0 interleaved": (_420, [(0, 1, 2)]),
+    "4:2:0 multi-scan": (_420, [(0,), (1,), (2,)]),
+    "4:2:0 Y, then CbCr interleaved": (_420, [(0,), (1, 2)]),
+}
+
+
+def _put(bw, v):
+    """The T.81 F.1.2.1 value bits of ``v`` (its magnitude category
+    ``abs(v).bit_length()`` is coded before them)."""
+    s = abs(v).bit_length()
+    if s:
+        bw.write(v if v > 0 else v + (1 << s) - 1, s)
+
+
+def _random_baseline(rng, samp, groups, ri):
+    """A baseline JPEG of random quantized coefficients, one scan per
+    group of components, encoded in T.81 A.2 order (block-grid order
+    for a one-component scan, MCU order otherwise), and the coefficient
+    grids it holds."""
+    w, h = (int(v) for v in rng.integers(1, 41, size=2))
+    hmax, vmax = max(s[0] for s in samp), max(s[1] for s in samp)
+    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    single = {g[0] for g in groups if len(g) == 1}
+    grids = []
+    for ci, (hi, vi) in enumerate(samp):
+        if ci in single:
+            nbx = -(-(-(-w * hi // hmax)) // 8)
+            nby = -(-(-(-h * vi // vmax)) // 8)
+        else:
+            nbx, nby = mcux * hi, mcuy * vi
+        coef = np.zeros((nby, nbx, 64), dtype=np.int64)
+        coef[..., 0] = rng.integers(-600, 601, size=(nby, nbx))
+        for blk in coef.reshape(-1, 64):
+            k = rng.integers(0, 7)
+            blk[rng.choice(np.arange(1, 64), size=k, replace=False)] = \
+                rng.choice([-1, 1], size=k) * rng.integers(1, 301, size=k)
+        grids.append(coef)
+    quants = [rng.integers(1, 17, size=64) for _ in samp]
+
+    def scan(cis, units):
+        bw = _BitWriter()
+        preds = [0] * len(samp)
+        for j, mcu in enumerate(units):
+            if ri and j and j % ri == 0:
+                bw.restart(j // ri - 1)
+                preds = [0] * len(samp)
+            for ci, by, bx in mcu:
+                blk = [int(v) for v in grids[ci][by, bx]]
+                diff = blk[0] - preds[ci]
+                bw.write(abs(diff).bit_length(), 4)  # synth DC code: 4 bits
+                _put(bw, diff)
+                preds[ci] = blk[0]
+                run = 0
+                for k in range(1, 64):
+                    if blk[k] == 0:
+                        run += 1
+                        continue
+                    while run > 15:
+                        bw.write(_AC_CODE[0xF0], 8)
+                        run -= 16
+                    bw.write(_AC_CODE[(run << 4) | abs(blk[k]).bit_length()], 8)
+                    _put(bw, blk[k])
+                    run = 0
+                if blk[63] == 0:
+                    bw.write(_AC_CODE[0x00], 8)
+        head = bytes([len(cis)]) + b"".join(bytes([ci + 1, 0x00]) for ci in cis)
+        return _segment(0xDA, head + bytes([0, 63, 0])) + bw.flush()
+
+    scans = b""
+    for cis in groups:
+        if len(cis) == 1:
+            nby, nbx = grids[cis[0]].shape[:2]
+            scans += scan(cis, [[(cis[0], by, bx)] for by in range(nby)
+                                for bx in range(nbx)])
+        else:
+            scans += scan(cis, [
+                [(ci, my * samp[ci][1] + y, mx * samp[ci][0] + x)
+                 for ci in cis
+                 for y in range(samp[ci][1]) for x in range(samp[ci][0])]
+                for my in range(mcuy) for mx in range(mcux)])
+    dqt = _segment(0xDB, b"".join(bytes([ci]) + bytes(int(v) for v in q)
+                                  for ci, q in enumerate(quants)))
+    dht = _segment(0xC4, bytes([0x00]) + bytes(_SYNTH_DC_BITS)
+                   + bytes(_SYNTH_DC_VALS) + bytes([0x10])
+                   + bytes([0] * 7 + [len(_AC_SYMS)] + [0] * 8) + bytes(_AC_SYMS))
+    sof = _segment(0xC0, struct.pack(">BHHB", 8, h, w, len(samp)) + b"".join(
+        bytes([ci + 1, (hi << 4) | vi, ci]) for ci, (hi, vi) in enumerate(samp)))
+    dri = _segment(0xDD, struct.pack(">H", ri)) if ri else b""
+    payload = b"\xff\xd8" + dqt + dht + dri + sof + scans + b"\xff\xd9"
+    return payload, (w, h, samp, grids, quants)
+
+
+def _direct_decode(w, h, samp, grids, quants):
+    """Reference pixels: per block dequant -> inverse zigzag ->
+    ``_C.T @ F @ _C``, then clip, upsample, crop and YCbCr->RGB."""
+    hmax, vmax = max(s[0] for s in samp), max(s[1] for s in samp)
+    planes = []
+    for (hi, vi), coef, q in zip(samp, grids, quants):
+        nby, nbx = coef.shape[:2]
+        plane = np.zeros((nby * 8, nbx * 8))
+        for by in range(nby):
+            for bx in range(nbx):
+                F = np.zeros((8, 8))
+                F.flat[ZIGZAG] = coef[by, bx] * q
+                plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = _C.T @ F @ _C + 128.0
+        p = np.clip(np.round(plane), 0, 255)
+        p = np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)
+        planes.append(p[:h, :w])
+    if len(planes) == 3:
+        y, cb, cr = planes
+        planes = [y + 1.402 * (cr - 128.0),
+                  y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
+                  y + 1.772 * (cb - 128.0)]
+    return np.clip(np.round(np.stack(planes, axis=-1)), 0, 255).astype(np.uint8).tobytes()
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_random_coefficients_vs_direct_idct(layout):
+    """Property test: random DC/AC coefficients, encoded in T.81 A.2
+    order, decode to the direct per-block IDCT of those coefficients,
+    for every sampling layout, interleaved, one scan per component or
+    a scan of a subset of them, and restart intervals 0..3.  A
+    one-component scan is non-interleaved whatever its H and V, so a
+    gray 2x2 frame is read in block-grid order, never in 2x2-block
+    MCUs."""
+    samp, groups = LAYOUTS[layout]
+    rng = np.random.default_rng(sorted(LAYOUTS).index(layout))
+    for ri in range(4):
+        for _ in range(3):
+            payload, ref = _random_baseline(rng, samp, groups, ri)
+            w, h, pix = decode_jpeg(payload)
+            assert (w, h) == ref[:2]
+            assert pix == _direct_decode(*ref), (layout, ri, w, h)

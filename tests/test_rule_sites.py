@@ -3,13 +3,16 @@ in its builder: Spark SQL text (``*_sql``), or one Column helper for
 the whitespace-collapse regex, which holds backslashes.  Operators call
 the builder; a copy of a rule anywhere else in the package fails here.
 Patterns match a function's code with docstrings and comments left
-out, so prose may still name a rule."""
+out, so prose may still name a rule.  The gated queries of
+``__spark_entry__.py`` are scanned for the rules in ``GATED_RULES``
+(their DuckDB twins write other column names, so they never match)."""
 
 import ast
 import re
 from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parent.parent / "html_parser_spark"
+ENTRY = PACKAGE.parent / "__spark_entry__.py"
 
 _WORDS = r"""(?:\{words_sql\(|split\(.*,\s*(['"]) \1\))"""
 
@@ -25,6 +28,8 @@ RULES = {
         r"(?s)\bmd5\(.*\b(?:row_number|OVER|partitionBy|PARTITION BY)\b"
         r"|\b(?:row_number|OVER|partitionBy|PARTITION BY)\b.*\bmd5\("),
     "whitespace collapse": re.compile(r"\[ \\\\t\\\\n\\\\r\\\\f\]"),
+    "dense turn ordering": re.compile(
+        r"(?i)count_?distinct\(\s*['\"`]?turn_idx|count\(\s*DISTINCT\s+`?turn_idx"),
 }
 
 #: rule -> (module, top-level function) of its one definition
@@ -37,7 +42,11 @@ BUILDERS = {
     "dot product": ("operators/similarity.py", "dot_sql"),
     "md5 dedup window": ("operators/dedup.py", "_same_text_sql"),
     "whitespace collapse": ("operators/textstats.py", "_collapse_ws"),
+    "dense turn ordering": ("plans/pipeline.py", "dense_turns_sql"),
 }
+
+#: rules whose gated queries call the builder too
+GATED_RULES = {"dense turn ordering"}
 
 
 def _sites_in(module, source):
@@ -59,6 +68,7 @@ def _sites_in(module, source):
 def test_each_rule_has_one_builder():
     sites = set().union(*(_sites_in(path.relative_to(PACKAGE).as_posix(), path.read_text())
                           for path in sorted(PACKAGE.rglob("*.py"))))
+    sites |= {s for s in _sites_in(ENTRY.name, ENTRY.read_text()) if s[2] in GATED_RULES}
     assert sites == {(m, f, rule) for rule, (m, f) in BUILDERS.items()}
 
 
@@ -83,9 +93,14 @@ def g(t):
     return f"octet_length(regexp_replace({t}, '[A-Z]', ''))"
 def h(df):
     return F.md5(F.col("text")), F.split(F.col("q"), "&"), F.size(F.col("v")), Window
+def i(df):
+    return df.groupBy("conv_id").agg(F.countDistinct("turn_idx"), F.countDistinct("role"))
+def j(t):
+    return "count(DISTINCT turn_idx) = count(*)", "count(DISTINCT conv_id)"
 '''
     found = {(owner, rule) for _, owner, rule in _sites_in("m.py", src)}
     assert found == {
         ("a", "whitespace words"), ("a", "token count"), ("b", "non-empty tokens"),
         ("c", "dot product"), ("d", "md5 dedup window"), ("e", "md5 dedup window"),
-        ("f", "whitespace collapse"), ("f", "stopword hits"), ("g", "byte ratio")}
+        ("f", "whitespace collapse"), ("f", "stopword hits"), ("g", "byte ratio"),
+        ("i", "dense turn ordering"), ("j", "dense turn ordering")}
