@@ -302,7 +302,7 @@ def _decode_markers(payload: bytes):
             if store is None:
                 store = _init_store(frame)
             br = _BitReader(payload, body_at)
-            _decode_scan(br, frame, scan, band, huff_dc, huff_ac,
+            _read_scan(br, frame, scan, band, huff_dc, huff_ac,
                          restart_interval, store, progressive)
             if not progressive and len(scanned) == len(frame[2]):
                 return _render(frame, store, qt)
@@ -366,8 +366,10 @@ def _next_marker(data, p):
 # ---------------------------------------------------------------------------
 
 
-def _decode_scan(br, frame, scan, band, huff_dc, huff_ac, restart_interval,
-                 store, progressive):
+def _read_scan(br, frame, scan, band, huff_dc, huff_ac, restart_interval,
+               store, progressive):
+    """Decode one scan's entropy data, band ``(Ss, Se, Ah, Al)`` of the
+    ``scan`` components, into ``store``."""
     ss, se, ah, al = band
     # a DC refinement reads raw bits; every other scan Huffman-decodes
     # (AC refinement too, for its run/EOB symbols)

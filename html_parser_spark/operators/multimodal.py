@@ -11,9 +11,9 @@ and raises
 container doesn't ship (arithmetic-coded JPEG, MP3, H.264).
 ``extract_features`` runs it over the first ``MAX_DOC_BYTES`` of each
 payload through ``html_ops.doc_udf``; a payload it cannot decode gets
-NULL features.  The decode is value-checked end-to-end by the driver
-oracle on synthesized ASCII-pixel PPMs (``multimodal_real_decode``),
-JPEGs and GIFs.
+NULL features.  Gated queries value-check the decode end to end
+against closed-form oracles: synthesized ASCII-pixel PPMs
+(``multimodal_real_decode``), JPEGs and GIFs.
 """
 
 from __future__ import annotations
