@@ -861,11 +861,11 @@ def q_embedding_neardup(spark, sf_dir):
 
 
 def _ivf_oracle_sql() -> str:
-    """IVF top-k replica: centroids = 8 lowest ids; assignment by
-    rank over (round-9 cosine desc, centroid index asc) — identical to
-    build_ivf_index's greatest(struct(...)) tie-break; probe the 2
-    centroids nearest the query; exact top-5 inside probed cells with
-    cosine rounded to 6 before ordering (with_cosine semantics)."""
+    """IVF top-k replica: centroids = 8 lowest ids; assignment and the
+    probe of the 2 centroids nearest the query both rank by (round-9
+    cosine desc, centroid index asc), as ``similarity._rank_cells``;
+    exact top-5 inside probed cells with cosine rounded to 6 before
+    ordering (with_cosine semantics)."""
     return f"""
     with v as (
       select vec_id as id, list_transform(embedding, x -> cast(x as double)) as vv
@@ -889,7 +889,7 @@ def _ivf_oracle_sql() -> str:
     ),
     probe as (
       select ci from (
-        select c.ci, row_number() over (order by {_cos_sql('c.cv', 'q.qv')} desc, c.ci asc) as rn
+        select c.ci, row_number() over (order by round({_cos_sql('c.cv', 'q.qv')}, 9) desc, c.ci asc) as rn
         from c, q
       ) where rn <= 2
     ),

@@ -9,13 +9,17 @@ logic, deterministic and pinned by tests):
 3. structural strip: subtrees matching ``remove_selector`` (default:
    script/style/title/textarea raw-text containers + classic chrome
    nav/header/footer/aside/form + opaque svg) are masked out;
-4. link-density strip: block containers with text whose *link
-   density* (text under ``<a>`` descendants / total text) exceeds
-   ``LINK_DENSITY_THRESHOLD`` are masked — catches link-farms the
-   structural pass missed;
-5. surviving TEXT nodes under root are gathered in preorder, entity
-   decoded, whitespace-normalized across node boundaries; their raw
-   byte spans (into the original document bytes) are reported.
+4. one reverse pass over root's subtree (preorder storage: a node is
+   reached after all of its descendants) decodes each surviving TEXT
+   node once, keeps its decoded segment, and totals per node the text
+   and the text under ``<a>`` descendants.  A block container whose
+   *link density* (link text / total text) exceeds
+   ``LINK_DENSITY_THRESHOLD`` is masked there — catches link-farms the
+   structural pass missed — dropping the segments and inner masked
+   blocks it holds, so only topmost blocks count as removed;
+5. the kept segments, in preorder, are joined and whitespace-normalized
+   across node boundaries; their raw byte spans (into the original
+   document bytes) are reported.
 """
 
 from __future__ import annotations
@@ -24,7 +28,7 @@ from dataclasses import dataclass
 from typing import List, Optional, Tuple
 
 from .entities import decode_entities
-from .htmlparse import Dom, ELEMENT, TEXT, parse
+from .htmlparse import ELEMENT, TEXT, find_first_tag, parse
 from .matcher import iter_query
 from .selector import Selector, compile_selector
 from .text import normalize_ws
@@ -47,32 +51,6 @@ class ExtractResult:
     n_removed: int
 
 
-def _link_text_lengths(dom: Dom, root: int, removed: List[bool]) -> Tuple[List[int], List[int]]:
-    """Per-node cumulative (text_len, link_text_len) over the subtree.
-
-    Single reverse pass: because storage is preorder and subtrees are
-    contiguous, children always have higher indexes than parents, so a
-    right-to-left accumulation into ``parent`` totals each subtree in
-    O(n) without recursion.
-    """
-    n = len(dom.kind)
-    text_len = [0] * n
-    link_len = [0] * n
-    lo, hi = root, dom.subtree_end[root]
-    for idx in range(hi, lo, -1):
-        if removed[idx]:
-            continue
-        if dom.kind[idx] == TEXT:
-            seg = len(decode_entities(dom.text_bytes(idx)).strip(b" \t\n\r\x0c"))
-            text_len[idx] += seg
-        p = dom.parent[idx]
-        if p != 0xFFFFFFFF and p >= lo:
-            text_len[p] += text_len[idx]
-            is_link = dom.kind[idx] == ELEMENT and dom.name_lower[idx] == b"a"
-            link_len[p] += text_len[idx] if is_link else link_len[idx]
-    return text_len, link_len
-
-
 def extract_main(source, remove_selector: Optional[Selector] = None) -> ExtractResult:
     """Extract main content text + contributing raw text spans.
 
@@ -82,48 +60,52 @@ def extract_main(source, remove_selector: Optional[Selector] = None) -> ExtractR
         remove_selector = _DEFAULT_REMOVE_COMPILED
     dom = parse(source)
     n = len(dom.kind)
+    root = find_first_tag(dom, "body") or 0
+    kind, parent, name, end = dom.kind, dom.parent, dom.name_lower, dom.subtree_end
+    src, start, stop = dom.source, dom.start, dom.end
+
     removed = [False] * n
-
-    # Root: first <body> if any (findFirstTag semantics), else document.
-    root = 0
-    for idx in range(1, n):
-        if dom.kind[idx] == ELEMENT and dom.name_lower[idx] == b"body":
-            root = idx
-            break
-
     n_removed = 0
-    for idx in iter_query(dom, remove_selector, None if root == 0 else root):
-        if not removed[idx]:
+    for idx in iter_query(dom, remove_selector, root or None):
+        if not removed[idx]:  # topmost match: its descendants follow it
             n_removed += 1
-        for j in range(idx, dom.subtree_end[idx] + 1):
-            removed[j] = True
+            removed[idx:end[idx] + 1] = [True] * (end[idx] + 1 - idx)
 
-    text_len, link_len = _link_text_lengths(dom, root, removed)
-    hi = dom.subtree_end[root]
-    idx = root + 1
-    while idx <= hi:
-        if (
-            not removed[idx]
-            and dom.kind[idx] == ELEMENT
-            and dom.name_lower[idx] in _BLOCK_TAGS
-            and text_len[idx] > 0
-            and link_len[idx] / text_len[idx] > LINK_DENSITY_THRESHOLD
-        ):
-            n_removed += 1
-            for j in range(idx, dom.subtree_end[idx] + 1):
-                removed[j] = True
-            idx = dom.subtree_end[idx] + 1
+    # Step 4: when ``idx`` is reached its totals are complete, and the
+    # kept segments and masked blocks inside it are the tails of the stacks.
+    text_len = [0] * n
+    link_len = [0] * n
+    kept: List[int] = []  # kept TEXT nodes, reverse preorder
+    segs: List[bytes] = []  # their decoded bytes
+    blocks: List[int] = []
+    for idx in range(end[root], root, -1):
+        if removed[idx]:
             continue
-        idx += 1
+        k = kind[idx]
+        if k == TEXT:
+            seg = decode_entities(src[start[idx]:stop[idx]])
+            kept.append(idx)
+            segs.append(seg)
+            text_len[idx] = len(seg.strip(b" \t\n\r\x0c"))
+        elif (k == ELEMENT and name[idx] in _BLOCK_TAGS and text_len[idx]
+              and link_len[idx] / text_len[idx] > LINK_DENSITY_THRESHOLD):
+            last = end[idx]
+            while kept and kept[-1] <= last:
+                kept.pop()
+                segs.pop()
+            while blocks and blocks[-1] <= last:
+                blocks.pop()
+            blocks.append(idx)
+        t = text_len[idx]
+        if t:
+            p = parent[idx]
+            text_len[p] += t
+            link_len[p] += t if k == ELEMENT and name[idx] == b"a" else link_len[idx]
 
-    spans: List[Tuple[int, int]] = []
-    segs: List[bytes] = []
-    for idx in range(root + 1, dom.subtree_end[root] + 1):
-        if dom.kind[idx] == TEXT and not removed[idx]:
-            spans.append((dom.start[idx], dom.end[idx]))
-            segs.append(decode_entities(dom.text_bytes(idx)))
-    main_text = normalize_ws(b"".join(segs)).decode("utf-8", errors="replace")
-    return ExtractResult(main_text=main_text, spans=spans, n_nodes=n, n_removed=n_removed)
+    spans = [(start[idx], stop[idx]) for idx in reversed(kept)]
+    main_text = normalize_ws(b"".join(reversed(segs))).decode("utf-8", errors="replace")
+    return ExtractResult(main_text=main_text, spans=spans, n_nodes=n,
+                         n_removed=n_removed + len(blocks))
 
 
 _DEFAULT_REMOVE_COMPILED = compile_selector(DEFAULT_REMOVE_SELECTOR)

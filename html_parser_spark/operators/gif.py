@@ -34,7 +34,7 @@ import struct
 
 import numpy as np
 
-MAX_PIXELS = 1 << 24  # same decode-buffer budget as the PNG/JPEG paths
+from .jpeg import MAX_PIXELS
 
 _MAX_TABLE = 4096  # LZW table ceiling fixed by the GIF spec
 

@@ -55,7 +55,8 @@ _C = np.array([
     for u in range(8)
 ])
 
-MAX_PIXELS = 1 << 24  # same decode-buffer budget as the PNG path
+#: the decode-buffer budget of every image decoder (PNG, JPEG, GIF)
+MAX_PIXELS = 1 << 24
 _BAND_PIXELS = 1 << 20  # output pixels one render band covers, at most
 
 

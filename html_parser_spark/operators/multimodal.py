@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from .html_ops import doc_udf
+from .jpeg import MAX_PIXELS
 
 ASSET_SCHEMA = StructType([
     StructField("asset_id", LongType(), False),
@@ -225,9 +226,9 @@ def _decode_png(payload: bytes):
     # allow ~10^12 declared pixels, so a small IDAT zlib bomb declaring
     # huge dims could inflate to terabytes below.  16 Mpix × RGBA bounds
     # the decode buffer at ~68 MB regardless of what the payload claims.
-    if width * height > 1 << 24:
+    if width * height > MAX_PIXELS:
         raise ValueError(
-            f"PNG pixel budget exceeded: {width}x{height} > {1 << 24} pixels")
+            f"PNG pixel budget exceeded: {width}x{height} > {MAX_PIXELS} pixels")
     # Bounded inflate: a zlib bomb in IDAT must not allocate beyond what
     # the declared dimensions can hold (the NULL-features contract means
     # a crafted payload gets caught, never OOM-kills the executor).
@@ -247,7 +248,7 @@ def _decode_wav(payload: bytes):
         return w.getframerate(), w.getnchannels(), _byte_histogram(frames)
 
 
-def decode_real(payload: bytes, kind: str):
+def decode_real(payload: bytes):
     """Codec-free real decode: PPM/PGM, 24bpp BMP, 8-bit PNG
     (zlib inflate + filter reconstruction), baseline + progressive JPEG
     (pure-Python Huffman + dequant + IDCT), GIF87a/89a (LZW + palette),
@@ -280,9 +281,9 @@ def decode_real(payload: bytes, kind: str):
     )
 
 
-def _decoded(data: bytes, kind: str) -> dict:
+def _decoded(data: bytes) -> dict:
     try:
-        w, h, hist = decode_real(data, kind)
+        w, h, hist = decode_real(data)
     except Exception:
         # undecodable payload (unknown/compressed format or truncated
         # data): permissive contract — decode-derived features are NULL
@@ -296,7 +297,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
     of each payload, beside ``n_bytes`` and ``content_hash`` computed
     JVM-side over the whole payload.  A null or undecodable payload
     gives null features."""
-    feats = doc_udf(DECODE_SCHEMA, _decoded)("payload", "kind")
+    feats = doc_udf(DECODE_SCHEMA, _decoded)("payload")
     return assets.select(
         "asset_id", "kind",
         F.length("payload").cast("long").alias("n_bytes"),

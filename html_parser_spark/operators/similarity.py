@@ -76,25 +76,34 @@ def cosine_topk(
     )
 
 
-def _assign_udf(df: DataFrame, cmat: "np.ndarray", cnorm: "np.ndarray"):
-    """Arrow-batched argmax over a broadcast centroid matrix — one
-    (batch × cells) GEMM per batch, O(1) Catalyst expression size.
-    Ties: round(cosine, 9) then lowest centroid index."""
-    bc = df.sparkSession.sparkContext.broadcast((cmat, cnorm))
+def _rank_cells(vm: "np.ndarray", cmat: "np.ndarray") -> "np.ndarray":
+    """Cell indexes for each row of ``vm``, nearest first: round(cosine,
+    9) descending, a NaN score (zero-norm vector or centroid) last, ties
+    to the lower cell index.  The one ranking rule of assignment and
+    probing; the DuckDB twins rank by the same (round-9 cosine, index)."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        scores = (vm @ cmat.T) / np.outer(np.linalg.norm(vm, axis=1),
+                                           np.linalg.norm(cmat, axis=1))
+    # numpy sorts NaN last; the stable sort keeps ties in cell order
+    return np.argsort(-np.round(scores, 9), axis=1, kind="stable")
 
-    @F.pandas_udf("int")
-    def assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        cm, cn = bc.value
+
+def _cells_udf(df: DataFrame, cmat: "np.ndarray", n: int):
+    """Arrow-batched ``_rank_cells`` over a broadcast centroid matrix:
+    each vector's ``n`` nearest cells, from one (batch × cells) GEMM per
+    batch, with O(1) Catalyst expression size."""
+    bc = df.sparkSession.sparkContext.broadcast(cmat)
+
+    @F.pandas_udf("array<int>")
+    def cells(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in it:
             if len(s) == 0:
-                yield pd.Series([], dtype="int32")
+                yield pd.Series([], dtype=object)
                 continue
             vm = np.stack([np.asarray(x, dtype=np.float64) for x in s])
-            vn = np.linalg.norm(vm, axis=1)
-            scores = (vm @ cm.T) / (vn[:, None] * cn[None, :])
-            yield pd.Series(np.argmax(np.round(scores, 9), axis=1).astype("int32"))
+            yield pd.Series(_rank_cells(vm, bc.value)[:, :n].tolist())
 
-    return assign
+    return cells
 
 
 def build_ivf_index(
@@ -111,13 +120,12 @@ def build_ivf_index(
     [(id, vector)] of the centroids in cell order); write partitioned
     by ``cell`` for pruning.
 
-    Assignment is a map-only Arrow-batched argmax over a broadcast
-    centroid matrix: one numpy matmul per batch, no shuffle, and no
-    per-centroid Catalyst expression — expression size is O(1) in
-    ``num_cells``, so 4k–64k cells (a 10^9-vector corpus) cost one
-    (batch × cells) GEMM instead of a 64k-deep ``greatest`` nest.
-    Ties break as round(cosine, 9) then lowest centroid index, matching
-    the DuckDB oracle's rank expression.
+    A vector's cell is the first of its ``_rank_cells`` ranking, from a
+    map-only Arrow-batched UDF over a broadcast centroid matrix: one
+    numpy matmul per batch, no shuffle, and no per-centroid Catalyst
+    expression — expression size is O(1) in ``num_cells``, so 4k–64k
+    cells (a 10^9-vector corpus) cost one (batch × cells) GEMM instead
+    of a 64k-deep ``greatest`` nest.
     """
     cents = [
         (int(r[0]), [float(x) for x in r[1]])
@@ -126,38 +134,11 @@ def build_ivf_index(
     if not cents:
         raise ValueError("build_ivf_index: input DataFrame is empty")
     cmat = np.asarray([c[1] for c in cents], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    assign = _assign_udf(df, cmat, cnorm)(F.col(vec_col).cast("array<double>"))
+    assign = _cells_udf(df, cmat, 1)(F.col(vec_col).cast("array<double>"))[0]
     # The UDF never returns null; the coalesce tells Catalyst so.  With a
     # nullable ``cell``, a join on it infers ``cell IS NOT NULL``, and
     # that filter, pushed under this projection, evaluates the UDF twice.
     return df.withColumn("cell", F.coalesce(assign, F.lit(-1))), cents
-
-
-def _probe_udf(df: DataFrame, cmat: "np.ndarray", cnorm: "np.ndarray", nprobe: int):
-    """Arrow-batched per-query probe-cell selection over a broadcast
-    centroid matrix: one (batch × cells) GEMM per batch yields each
-    query's ``nprobe`` nearest cell indices.  Ties: round(cosine, 9)
-    then lowest centroid index — identical to ``_assign_udf`` and the
-    driver-side ranking in ``ivf_topk``."""
-    bc = df.sparkSession.sparkContext.broadcast((cmat, cnorm))
-
-    @F.pandas_udf("array<int>")
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        cm, cn = bc.value
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            vm = np.stack([np.asarray(x, dtype=np.float64) for x in s])
-            vn = np.linalg.norm(vm, axis=1)
-            scores = np.round((vm @ cm.T) / (vn[:, None] * cn[None, :]), 9)
-            # stable argsort on -scores: ties keep ascending cell index
-            order = np.argsort(-scores, axis=1, kind="stable")
-            yield pd.Series([row[:nprobe].astype("int32").tolist()
-                             for row in order])
-
-    return probe
 
 
 def ivf_topk_batch(
@@ -197,8 +178,7 @@ def ivf_topk_batch(
     from pyspark.sql.window import Window
 
     cmat = np.asarray([c[1] for c in cents], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    probe = _probe_udf(queries, cmat, cnorm, nprobe)
+    probe = _cells_udf(queries, cmat, nprobe)
     qv = F.col(query_vec_col).cast("array<double>")
     qcells = queries.select(
         F.col(query_id_col),
@@ -226,17 +206,10 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe the ``nprobe`` nearest cells only, then exact top-k inside."""
-    import math
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
+    """Probe the ``nprobe`` nearest cells only (``_rank_cells``, on the
+    driver), then exact top-k inside."""
     q = [float(x) for x in query_vec]
-    ranked = sorted(range(len(cents)), key=lambda ci: (-cos(cents[ci][1], q), ci))
-    probe = ranked[:nprobe]
+    cmat = np.asarray([c[1] for c in cents], dtype=np.float64)
+    probe = _rank_cells(np.asarray([q]), cmat)[0, :nprobe].tolist()
     pruned = indexed.where(F.col("cell").isin(probe))
     return cosine_topk(pruned, q, k=k, id_col=id_col, vec_col=vec_col)

@@ -187,12 +187,8 @@ def run_extraction(
         .withColumn("wall_sec", F.lit(round(finished - started, 3)))
         .select(*CONTROL_COLUMNS)
     )
-    # Control rows append (Iceberg append when dst is a table ident).
-    from ..sources.catalog import _is_table_ident, iceberg_available
-    if _is_table_ident(control_dir) and iceberg_available(spark):
-        done.writeTo(control_dir).append()
-    else:
-        done.write.mode("append").parquet(control_dir)
+    # Control rows append, unpartitioned (Iceberg append for a table ident).
+    write_table(done, control_dir, partition_col=None, mode="append")
 
     n_rows = read_table(spark, out_dir).count()
     return {

@@ -18,6 +18,8 @@ maps 1:1:
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sql import ident
@@ -84,26 +86,26 @@ def read_table(spark: SparkSession, src: str) -> DataFrame:
 def write_table(
     df: DataFrame,
     dst: str,
-    partition_col: str = "bucket",
+    partition_col: Optional[str] = "bucket",
     mode: str = "overwrite",
 ) -> None:
-    """Write partitioned output idempotently.
+    """Write partitioned output idempotently, or append.
 
     Iceberg identifier → ``writeTo(...).overwritePartitions()`` (atomic
-    dynamic partition replace); path → parquet ``partitionBy`` with the
-    per-write ``partitionOverwriteMode=dynamic`` option, so overwrite
-    replaces ONLY the partitions present in ``df`` regardless of the
-    session conf — the Iceberg-parity contract holds unconditionally
-    (a static overwrite here would silently drop untouched partitions
-    for any caller that didn't set the session conf).
+    dynamic partition replace) or ``.append()``; path → parquet
+    ``partitionBy`` with the per-write ``partitionOverwriteMode=dynamic``
+    option, so overwrite replaces ONLY the partitions present in ``df``
+    regardless of the session conf — the Iceberg-parity contract holds
+    unconditionally (a static overwrite here would silently drop
+    untouched partitions for any caller that didn't set the session
+    conf).  ``partition_col=None`` writes unpartitioned parquet.
     """
     spark = df.sparkSession
     if _is_table_ident(dst) and iceberg_available(spark):
         _write_iceberg(df, dst, mode)
         return
-    (df.write.mode(mode)
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(partition_col).parquet(dst))
+    w = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+    (w.partitionBy(partition_col) if partition_col else w).parquet(dst)
 
 
 TRANSCRIPT_DDL = (

@@ -1,7 +1,8 @@
 """Helpers only the tests call: synthetic image/audio encoders for the
 stdlib decoders, thin compositions over production operators, a py4j
 round-trip counter, the Column-API reference forms of the operators'
-SQL-text rules, and the query-hook twins of
+SQL-text rules, the three-pass reference form of ``extract_main``,
+and the query-hook twins of
 ``kernel.instrumentation.parse_with_hooks``.  The
 encoders that feed gated queries (JPEG, GIF, media, PDF) live in the
 package."""
@@ -24,14 +25,20 @@ import pytest
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from html_parser_spark.kernel.htmlparse import Dom
+from html_parser_spark.kernel.entities import decode_entities
+from html_parser_spark.kernel.extract import (
+    _BLOCK_TAGS, _DEFAULT_REMOVE_COMPILED, LINK_DENSITY_THRESHOLD, ExtractResult,
+)
+from html_parser_spark.kernel.htmlparse import ELEMENT, TEXT, Dom, parse
+from html_parser_spark.kernel.matcher import iter_query
+from html_parser_spark.kernel.text import normalize_ws
 from html_parser_spark.kernel.matcher import query_all, query_one
 from html_parser_spark.kernel.selector import Selector, compile_selector
 from html_parser_spark.operators.corpusprep import split_assign
 from html_parser_spark.operators.dedup import _banded_candidate_pairs, plane_sign_matrix
 from html_parser_spark.operators.multimodal import _PNG_CHANNELS, _PNG_SIG
 from html_parser_spark.operators.pii import PII_PATTERNS
-from html_parser_spark.operators.similarity import _probe_udf
+from html_parser_spark.operators.similarity import _cells_udf
 from html_parser_spark.operators.textstats import (
     _PUNCT_RE, STOPWORDS, nfc_normalize_udf, token_count,
 )
@@ -439,7 +446,7 @@ def ref_with_cosine(df: DataFrame, query_vec: Sequence[float], vec_col: str = "e
 def ref_ivf_topk_batch(indexed: DataFrame, cents: List, queries: DataFrame, k: int = 5,
                        nprobe: int = 2) -> DataFrame:
     cmat = np.asarray([c[1] for c in cents], dtype=np.float64)
-    probe = _probe_udf(queries, cmat, np.linalg.norm(cmat, axis=1), nprobe)
+    probe = _cells_udf(queries, cmat, nprobe)
     qv = F.col("query_vec").cast("array<double>")
     qcells = queries.select("query_id", qv.alias("_qv"), F.explode(probe(qv)).alias("cell"))
     scored = indexed.join(F.broadcast(qcells), "cell").withColumn("cosine", F.round(
@@ -578,3 +585,71 @@ def query_all_with_hooks(
             matched=True,
         ))
     return out
+
+
+# -- extract: the three-pass reference form of ``extract_main`` ---------
+
+def _ref_link_text_lengths(dom: Dom, root: int, removed: List[bool]) -> Tuple[List[int], List[int]]:
+    n = len(dom.kind)
+    text_len = [0] * n
+    link_len = [0] * n
+    lo, hi = root, dom.subtree_end[root]
+    for idx in range(hi, lo, -1):
+        if removed[idx]:
+            continue
+        if dom.kind[idx] == TEXT:
+            seg = len(decode_entities(dom.text_bytes(idx)).strip(b" \t\n\r\x0c"))
+            text_len[idx] += seg
+        p = dom.parent[idx]
+        if p != 0xFFFFFFFF and p >= lo:
+            text_len[p] += text_len[idx]
+            is_link = dom.kind[idx] == ELEMENT and dom.name_lower[idx] == b"a"
+            link_len[p] += text_len[idx] if is_link else link_len[idx]
+    return text_len, link_len
+
+
+def ref_extract_main(source, remove_selector: Optional[Selector] = None) -> ExtractResult:
+    """``extract_main`` as separate passes: a body search, the
+    structural strip, a reverse link-length pass, a forward link-density
+    strip and an emit loop (each surviving text node decoded twice)."""
+    if remove_selector is None:
+        remove_selector = _DEFAULT_REMOVE_COMPILED
+    dom = parse(source)
+    n = len(dom.kind)
+    removed = [False] * n
+    root = 0
+    for idx in range(1, n):
+        if dom.kind[idx] == ELEMENT and dom.name_lower[idx] == b"body":
+            root = idx
+            break
+    n_removed = 0
+    for idx in iter_query(dom, remove_selector, None if root == 0 else root):
+        if not removed[idx]:
+            n_removed += 1
+        for j in range(idx, dom.subtree_end[idx] + 1):
+            removed[j] = True
+    text_len, link_len = _ref_link_text_lengths(dom, root, removed)
+    hi = dom.subtree_end[root]
+    idx = root + 1
+    while idx <= hi:
+        if (
+            not removed[idx]
+            and dom.kind[idx] == ELEMENT
+            and dom.name_lower[idx] in _BLOCK_TAGS
+            and text_len[idx] > 0
+            and link_len[idx] / text_len[idx] > LINK_DENSITY_THRESHOLD
+        ):
+            n_removed += 1
+            for j in range(idx, dom.subtree_end[idx] + 1):
+                removed[j] = True
+            idx = dom.subtree_end[idx] + 1
+            continue
+        idx += 1
+    spans: List[Tuple[int, int]] = []
+    segs: List[bytes] = []
+    for idx in range(root + 1, dom.subtree_end[root] + 1):
+        if dom.kind[idx] == TEXT and not removed[idx]:
+            spans.append((dom.start[idx], dom.end[idx]))
+            segs.append(decode_entities(dom.text_bytes(idx)))
+    main_text = normalize_ws(b"".join(segs)).decode("utf-8", errors="replace")
+    return ExtractResult(main_text=main_text, spans=spans, n_nodes=n, n_removed=n_removed)

@@ -19,8 +19,7 @@ UDF_APIS = {
 #: (module, enclosing top-level function, API)
 ALLOWED = {
     ("operators/html_ops.py", "doc_udf", "pandas_udf"),
-    ("operators/similarity.py", "_assign_udf", "pandas_udf"),
-    ("operators/similarity.py", "_probe_udf", "pandas_udf"),
+    ("operators/similarity.py", "_cells_udf", "pandas_udf"),
     ("operators/textstats.py", "nfc_normalize_udf", "pandas_udf"),
     ("streaming/stateful.py", "conversation_rollup_stream",
      "applyInPandasWithState"),

@@ -67,6 +67,19 @@ def test_iceberg_branch_routing(spark, monkeypatch, tmp_path):
                      ("write", "cat.db.out", "overwrite"),
                      ("write", "cat.db.out", "append")]
 
+    # run_extraction appends its control rows through the same routing
+    from html_parser_spark.plans.pipeline import CONTROL_COLUMNS, run_extraction
+
+    sent = []
+    monkeypatch.setattr(catalog, "_write_iceberg", lambda d, dst, mode: sent.append(
+        (dst, mode, d.columns, {r["run_id"] for r in d.collect()})))
+    turns = spark.createDataFrame(
+        [("c1", 0, "user", "<p>hello</p>", None, None),
+         ("c1", 1, "assistant", "<p>world</p>", None, None)], catalog.TRANSCRIPT_DDL)
+    run_extraction(spark, turns, str(tmp_path / "out"), "cat.db.control", "r1",
+                   resume=False)
+    assert sent == [("cat.db.control", "append", CONTROL_COLUMNS, {"r1"})]
+
     # probe false: idents fall back to the parquet reader
     monkeypatch.setattr(catalog, "iceberg_available", lambda s: False)
     monkeypatch.setattr(catalog, "_read_iceberg",

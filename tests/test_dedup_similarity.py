@@ -230,7 +230,7 @@ def test_multimodal_feature_plumbing(spark):
         assert r["content_hash"] == hashlib.md5(payloads[i]).hexdigest()
         assert (r["width"], r["height"], r["histogram"]) == (None, None, None)
         with pytest.raises(NotImplementedError):
-            decode_real(payloads[i], r["kind"])    # unknown magic raises
+            decode_real(payloads[i])    # unknown magic raises
 
 
 def test_multimodal_real_stdlib_decoders(spark):
@@ -243,21 +243,21 @@ def test_multimodal_real_stdlib_decoders(spark):
     from support import synth_bmp, synth_ppm, synth_wav
 
     # PPM: dims from the synth formula; histogram = digit/letter bins only
-    w, h, hist = decode_real(synth_ppm(5), "image")
+    w, h, hist = decode_real(synth_ppm(5))
     assert (w, h) == (4 + 5 % 5, 3 + 5 % 4)
     assert abs(sum(hist) - 1.0) < 1e-3
     assert hist[3] + hist[6] > 0.999          # ASCII hexdigest pixels
     # PGM variant with a comment line
     pgm = b"P5\n# a comment\n3 2\n255\n" + bytes(range(6))
-    assert decode_real(pgm, "image")[:2] == (3, 2)
+    assert decode_real(pgm)[:2] == (3, 2)
 
     # BMP: padded bottom-up rows, padding excluded from the histogram
-    w, h, hist = decode_real(synth_bmp(7), "image")
+    w, h, hist = decode_real(synth_bmp(7))
     assert (w, h) == (2 + 7 % 4, 2 + 7 % 3)
     assert abs(sum(hist) - 1.0) < 1e-3
 
     # WAV: width=rate, height=channels
-    rate, ch, hist = decode_real(synth_wav(3), "audio")
+    rate, ch, hist = decode_real(synth_wav(3))
     assert (rate, ch) == (8000, 1)
     assert abs(sum(hist) - 1.0) < 1e-3
 
@@ -267,10 +267,10 @@ def test_multimodal_real_stdlib_decoders(spark):
     from support import synth_png
 
     for color in (0, 2, 4, 6):
-        base = decode_real(synth_png(9, color=color, filter_type=0), "image")
+        base = decode_real(synth_png(9, color=color, filter_type=0))
         assert base[0] == 3 + 9 % 5 and base[1] == 2 + 9 % 4
         for ft in (1, 2, 3, 4):
-            got = decode_real(synth_png(9, color=color, filter_type=ft), "image")
+            got = decode_real(synth_png(9, color=color, filter_type=ft))
             assert got == base, (color, ft)
     # interlaced / 16-bit PNGs are declared out of scope, not mis-decoded
     import struct as _s
@@ -280,7 +280,7 @@ def test_multimodal_real_stdlib_decoders(spark):
            + _s.pack(">I", len(ihdr)) + b"IHDR" + ihdr
            + _s.pack(">I", _z.crc32(b"IHDR" + ihdr)))
     with pytest.raises(NotImplementedError):
-        decode_real(bad, "image")
+        decode_real(bad)
 
     # zlib bomb: tiny IDAT inflating to 10 MB with 2x2 declared dims
     # must decode bounded (only the declared pixels are inflated)
@@ -291,7 +291,7 @@ def test_multimodal_real_stdlib_decoders(spark):
     bomb = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", bomb_ihdr)
             + chunk(b"IDAT", _z.compress(bytes(10_000_000)))
             + chunk(b"IEND", b""))
-    w, h, hist = decode_real(bomb, "image")
+    w, h, hist = decode_real(bomb)
     assert (w, h) == (2, 2) and hist[0] == 1.0   # zeros, bounded inflate
 
     # malformed BMP header (negative width) raises -> NULL features,
@@ -299,7 +299,7 @@ def test_multimodal_real_stdlib_decoders(spark):
     bad_bmp = bytearray(synth_bmp(1))
     _s.pack_into("<i", bad_bmp, 18, -5)
     with pytest.raises(ValueError):
-        decode_real(bytes(bad_bmp), "image")
+        decode_real(bytes(bad_bmp))
 
     # Spark path: mixed decodable + junk payloads → junk gets NULL dims
     rows = [
@@ -318,6 +318,21 @@ def test_multimodal_real_stdlib_decoders(spark):
     for bad in (3, 4):
         assert got[bad]["width"] is None and got[bad]["histogram"] is None
         assert got[bad]["n_bytes"] > 0 and got[bad]["content_hash"]
+
+
+def test_extract_features_decodes_payload_whatever_its_kind(spark):
+    """The decode reads the payload alone: a NULL ``kind`` neither
+    nulls the features of a payload that decodes nor is consulted."""
+    from html_parser_spark.operators.multimodal import extract_features
+    from support import synth_ppm
+
+    assets = spark.createDataFrame(
+        [(0, None, bytearray(synth_ppm(0))), (1, "audio", bytearray(synth_ppm(1)))],
+        "asset_id long, kind string, payload binary")
+    got = {r["asset_id"]: r for r in extract_features(assets).collect()}
+    assert (got[0]["kind"], got[0]["width"], got[0]["height"]) == (None, 4, 3)
+    assert (got[1]["width"], got[1]["height"]) == (4 + 1 % 5, 3 + 1 % 4)
+    assert abs(sum(got[0]["histogram"]) - 1.0) < 1e-3
 
 
 def test_normalize_text(spark):
@@ -569,7 +584,7 @@ def test_multimodal_hardening_round4():
     lf = synth_ppm(5)
     header_end = lf.index(b"255\n") + 4
     crlf = lf[:header_end - 1] + b"\r\n" + lf[header_end:]
-    assert decode_real(crlf, "image") == decode_real(lf, "image")
+    assert decode_real(crlf) == decode_real(lf)
 
     # non-whitespace after maxval: malformed header raises (never a
     # silently wrong histogram) — the junk byte merges into the maxval
@@ -577,9 +592,9 @@ def test_multimodal_hardening_round4():
     # (i == n) hits the explicit missing-delimiter check
     bad = lf[:header_end - 1] + b"X" + lf[header_end:]
     with pytest.raises(ValueError):
-        decode_real(bad, "image")
+        decode_real(bad)
     with pytest.raises(ValueError, match="whitespace|truncated"):
-        decode_real(lf[:header_end - 1], "image")
+        decode_real(lf[:header_end - 1])
 
     # zlib bomb with huge DECLARED dims (1<<20 x 1<<20 passes the
     # per-axis caps; expected would be ~4e12 bytes): the pixel budget
@@ -592,7 +607,7 @@ def test_multimodal_hardening_round4():
             + chunk(b"IDAT", _z.compress(bytes(1 << 20)))
             + chunk(b"IEND", b""))
     with pytest.raises(ValueError, match="pixel budget"):
-        decode_real(bomb, "image")
+        decode_real(bomb)
 
 
 def test_correctness_gate_nan_vs_null_asymmetry():
@@ -651,6 +666,35 @@ def test_ivf_topk_batch_matches_single_and_brute(spark, sf_dir):
         rows.sort()
         brute = [r["vec_id"] for r in cosine_topk(corpus, qvecs[qid], k=3).collect()]
         assert [vid for _, vid in rows] == brute, qid
+
+
+def test_ivf_ranks_cells_one_way_with_a_zero_centroid(spark):
+    """Assignment and both probes rank cells by one rule (round-9
+    cosine, NaN last, lower cell on ties).  With the lowest-id vector
+    all zeros, its centroid scores NaN against every vector: each
+    vector's first probed cell must still be its own cell, and both
+    searches must return k rows."""
+    import numpy as np
+
+    from html_parser_spark.operators.similarity import ivf_topk_batch
+
+    vecs = np.random.default_rng(7).standard_normal((200, 8))
+    vecs[0] = 0.0
+    df = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(vecs)],
+                               "vec_id long, embedding array<double>")
+    indexed, cents = build_ivf_index(df, num_cells=4)
+    queries = df.where("vec_id > 0").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    # with one probe a vector finds itself only in its own cell
+    top1 = ivf_topk_batch(indexed, cents, queries, k=1, nprobe=1).collect()
+    assert sorted((r["query_id"], r["vec_id"]) for r in top1) == \
+        [(i, i) for i in range(1, 200)]
+    for i in (1, 99, 199):
+        assert [r["vec_id"] for r in
+                ivf_topk(indexed, cents, vecs[i].tolist(), k=1, nprobe=1).collect()] == [i]
+    assert ivf_topk_batch(indexed, cents, queries.where("query_id <= 3"),
+                          k=5, nprobe=2).count() == 15
+    assert ivf_topk(indexed, cents, vecs[1].tolist(), k=5, nprobe=2).count() == 5
 
 
 def test_ivf_index_cell_partition_pruning(spark, sf_dir, tmp_path):

@@ -158,9 +158,9 @@ def test_extract_features_hashes_whole_payload_decodes_prefix(spark):
     header = "P5\n4096 4097\n255\n"
     full = header.encode() + b"x" * (4096 * 4097)
     assert len(full) > MAX_DOC_BYTES > len(header)
-    assert decode_real(full, "image")[:2] == (4096, 4097)
+    assert decode_real(full)[:2] == (4096, 4097)
     with pytest.raises(ValueError, match="truncated"):
-        decode_real(full[:MAX_DOC_BYTES], "image")
+        decode_real(full[:MAX_DOC_BYTES])
     small = "P5\n3 2\n255\n" + "x" * 6
     payload = F.when(F.col("id") == 0, F.concat(F.lit(header), F.repeat(F.lit("x"), 4096 * 4097))
                      ).otherwise(F.lit(small)).cast("binary")

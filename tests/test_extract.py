@@ -1,9 +1,17 @@
 """Main-content extraction: structural strip + link-density strip."""
 
-from html_parser_spark.kernel.extract import extract_main
+import random
+
+from html_parser_spark.kernel import extract
+from html_parser_spark.kernel.extract import _DEFAULT_REMOVE_COMPILED, extract_main
+from html_parser_spark.kernel.htmlparse import TEXT, find_first_tag, parse
+from html_parser_spark.kernel.matcher import query_all
+from html_parser_spark.kernel.selector import compile_selector
 from html_parser_spark.sources.transcripts import (
     MAIN_TEXT_START, PAGE_PREFIX, PAGE_SUFFIX,
 )
+from perfbench.gen import fixture_documents, web_pages
+from support import ref_extract_main
 
 FULL_PAGE = (
     "<html><head><title>T</title><script>var a=1;</script><style>.x{}</style></head>"
@@ -75,3 +83,76 @@ def test_link_density_threshold_is_exclusive():
     more = "<body><div><a href='/x'>abcde</a>efgh</div><p>kept</p></body>"
     r = extract_main(more)
     assert (r.main_text, r.n_removed) == ("kept", 1)
+
+
+_SOUP_TAGS = ("div", "p", "a", "ul", "li", "ol", "section", "article", "table", "td",
+              "span", "script", "nav", "header", "footer", "aside", "form", "svg",
+              "b", "body", "html", "title", "textarea", "style", "br", "DIV", "A")
+_SOUP_WORDS = ("x", "hello", "world", "&amp;", "&lt;b&gt;", "&#233;", "&nbsp;", " ",
+               "\n", "R&D", "&bogus;", "a  b", "café", "link text here")
+
+
+def _tag_soup(rng):
+    """Unbalanced random markup: stray end tags, links, chrome and
+    block tags in any nesting, entity-bearing and blank text."""
+    out = []
+    for _ in range(rng.randint(0, 60)):
+        r, tag = rng.random(), rng.choice(_SOUP_TAGS)
+        if r < 0.35:
+            out.append(f"<{tag} href='/x'>" if tag in ("a", "A") else f"<{tag}>")
+        elif r < 0.6:
+            out.append(f"</{tag}>")
+        else:
+            out.append(" ".join(rng.choice(_SOUP_WORDS) for _ in range(rng.randint(1, 5))))
+    return "".join(out)
+
+
+def _pages():
+    rng = random.Random(17)
+    docs = fixture_documents(5, 20).column("text").to_pylist()
+    return ([_tag_soup(rng) for _ in range(600)]
+            + [PAGE_PREFIX + t + PAGE_SUFFIX for t in docs]
+            + [p.html for p in web_pages(3, 3)]
+            # 3,000 nested link-dense blocks: only the topmost counts
+            + ["<body>" + "<div>y<a href='/'>xx</a>" * 3000 + "</div>" * 3000 + "tail</body>"])
+
+
+def test_one_walk_matches_three_pass_reference():
+    """The one reverse pass gives the reference's four fields on every
+    page, with the default strip and with the link-density strip alone."""
+    no_structural = compile_selector("q")
+    n_dense = 0
+    for page in _pages():
+        for sel in (None, no_structural):
+            got, ref = extract_main(page, sel), ref_extract_main(page, sel)
+            assert (got.main_text, got.spans, got.n_nodes, got.n_removed) == \
+                (ref.main_text, ref.spans, ref.n_nodes, ref.n_removed), page[:200]
+            n_dense += sel is no_structural and got.n_removed > 0
+    assert n_dense > 50  # the link-density strip is exercised
+
+
+def test_each_text_node_is_decoded_once(monkeypatch):
+    """Every text node under the root outside a structurally stripped
+    subtree is entity-decoded exactly once, kept or link-stripped."""
+    calls = []
+    real = extract.decode_entities
+    monkeypatch.setattr(extract, "decode_entities", lambda b: calls.append(b) or real(b))
+    link_farm = ("<body><div><a href='/1'>one</a> <a href='/2'>two</a></div>"
+                 "<p>real &amp; content</p></body>")
+    for page in (FULL_PAGE, link_farm, web_pages(4, 1)[0].html):
+        calls.clear()
+        extract_main(page)
+        dom = parse(page)
+        root = find_first_tag(dom, "body") or 0
+        stripped = set(query_all(dom, _DEFAULT_REMOVE_COMPILED, root or None))
+
+        def outside_strips(idx):
+            while idx != root:
+                if idx in stripped:
+                    return False
+                idx = dom.parent[idx]
+            return True
+
+        texts = [i for i in range(root + 1, dom.subtree_end[root] + 1)
+                 if dom.kind[i] == TEXT and outside_strips(i)]
+        assert texts and len(calls) == len(texts)

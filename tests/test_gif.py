@@ -169,7 +169,7 @@ def test_hostile_payloads():
 
 
 def test_decode_real_dispatch_and_histogram():
-    w, h, hist = decode_real(synth_gif(11), "image")
+    w, h, hist = decode_real(synth_gif(11))
     assert (w, h) == (8 + 11 % 5, 6 + 11 % 4)
     assert abs(sum(hist) - 1.0) < 1e-6
     # pixels are hex-ASCII chars tripled: only bins 3 (0x30-0x39) and

@@ -358,13 +358,13 @@ def test_ppm_cr_delimiter_with_newline_first_pixel():
     # for a 6-pixel image and raise 'truncated'
     pixels = bytes([0x0A, 0x20, 0x21, 0x22, 0x23, 0x24])
     cr_exact = b"P5\n3 2\n255\r" + pixels
-    w, h, hist = decode_real(cr_exact, "image")
+    w, h, hist = decode_real(cr_exact)
     assert (w, h) == (3, 2)
     assert hist[0] == round(1 / 6, 6) and hist[2] == round(5 / 6, 6)
 
     # with trailing slack, CRLF is preferred (Windows-written file)
     crlf_slack = b"P5\n3 2\n255\r\n" + bytes(range(6)) + b"extra"
-    w2, h2, hist2 = decode_real(crlf_slack, "image")
+    w2, h2, hist2 = decode_real(crlf_slack)
     assert (w2, h2) == (3, 2) and hist2[0] == 1.0
 
 
