@@ -42,17 +42,11 @@ from .kernel.text import inner_text
 SelectorLike = Union[str, Selector]
 
 
-def _compiled(sel: SelectorLike) -> Selector:
-    return sel if isinstance(sel, Selector) else compile_selector(sel)
-
-
 def _compile_debug(sel: SelectorLike) -> Selector:
     """Compile for the debug query family: parse failures raise
     SelectorError carrying a report with ``runtime_parse_error`` set
     (the reference both errors AND fills the report —
     document.zig:1911-1923)."""
-    if isinstance(sel, Selector):
-        return sel
     try:
         return compile_selector(sel)
     except SelectorError as e:
@@ -169,12 +163,12 @@ class Node:
 
     # -- scoped queries ----------------------------------------------------
     def query_one(self, sel: SelectorLike) -> Optional["Node"]:
-        idx = query_one(self.doc.dom, _compiled(sel), scope_root=self.index)
+        idx = query_one(self.doc.dom, compile_selector(sel), scope_root=self.index)
         return None if idx is None else Node(self.doc, idx)
 
     def query_all(self, sel: SelectorLike) -> List["Node"]:
         return [Node(self.doc, i)
-                for i in query_all(self.doc.dom, _compiled(sel), scope_root=self.index)]
+                for i in query_all(self.doc.dom, compile_selector(sel), scope_root=self.index)]
 
     def query_one_debug(self, sel: SelectorLike):
         """Scoped debug query: (first match in this subtree or None,
@@ -186,7 +180,7 @@ class Node:
 
     def matches(self, sel: SelectorLike) -> bool:
         """matchesSelectorAt (matcher.zig:34-41)."""
-        return matches_at(self.doc.dom, _compiled(sel), self.index)
+        return matches_at(self.doc.dom, compile_selector(sel), self.index)
 
 
 class Document:
@@ -207,11 +201,11 @@ class Document:
 
     # -- queries -----------------------------------------------------------
     def query_one(self, sel: SelectorLike) -> Optional[Node]:
-        idx = query_one(self.dom, _compiled(sel))
+        idx = query_one(self.dom, compile_selector(sel))
         return None if idx is None else Node(self, idx)
 
     def query_all(self, sel: SelectorLike) -> List[Node]:
-        return [Node(self, i) for i in query_all(self.dom, _compiled(sel))]
+        return [Node(self, i) for i in query_all(self.dom, compile_selector(sel))]
 
     def query_one_debug(self, sel: SelectorLike):
         """(first match or None, QueryDebugReport) — the

@@ -7,6 +7,14 @@ module cites the reference file/lines it models (citations are into the
 read-only survey copy at /root/reference).
 """
 
+#: Poison-pill guard on one document's bytes: ``html_ops.doc_udf``
+#: truncates every operator's input to it (outputs are ~input-sized; an
+#: Arrow batch holds thousands of rows), and the PDF kernel inflates at
+#: most this much per document (deflate expands ~1000:1).  Truncation
+#: is safe because the permissive parsers treat it as EOF: open
+#: elements close, a cut UTF-8 character becomes U+FFFD.
+MAX_DOC_BYTES = 16 * 1024 * 1024
+
 from .htmlparse import Dom, parse  # noqa: F401
 from .selector import Selector, SelectorError, compile_selector  # noqa: F401
 from .matcher import query_all, query_one, matches_at  # noqa: F401

@@ -29,7 +29,7 @@ from typing import List, Optional, Tuple
 
 from .entities import decode_entities
 from .htmlparse import ELEMENT, TEXT, find_first_tag, parse
-from .matcher import iter_query
+from .matcher import iter_topmost
 from .selector import Selector, compile_selector
 from .text import normalize_ws
 
@@ -66,10 +66,9 @@ def extract_main(source, remove_selector: Optional[Selector] = None) -> ExtractR
 
     removed = [False] * n
     n_removed = 0
-    for idx in iter_query(dom, remove_selector, root or None):
-        if not removed[idx]:  # topmost match: its descendants follow it
-            n_removed += 1
-            removed[idx:end[idx] + 1] = [True] * (end[idx] + 1 - idx)
+    for idx in iter_topmost(dom, remove_selector, root or None):
+        n_removed += 1
+        removed[idx:end[idx] + 1] = [True] * (end[idx] + 1 - idx)
 
     # Step 4: when ``idx`` is reached its totals are complete, and the
     # kept segments and masked blocks inside it are the tails of the stacks.

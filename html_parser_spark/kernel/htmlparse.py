@@ -75,6 +75,8 @@ VOID_TAGS = frozenset(
     )
 )
 RAW_TEXT_TAGS = frozenset((b"script", b"style", b"title", b"textarea"))
+# Elements whose whole content is one opaque text child.
+_OPAQUE_TAGS = RAW_TEXT_TAGS | frozenset((b"svg", b"plaintext"))
 
 # Tags whose appearance auto-closes an open <p>.
 _P_CLOSERS = frozenset(
@@ -308,7 +310,7 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
     nd = dom.name_disp
     nl = dom.name_lower
 
-    def append_text(p: int, s: int, e: int) -> int:
+    def append_text(p: int, s: int, e: int) -> None:
         # Inlined text-node append (hot path; no sibling links —
         # parser.zig:384 links elements only).
         idx = len(kind)
@@ -322,23 +324,6 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
         sub_a.append(idx)
         nd.append(None)
         nl.append(None)
-        return idx
-
-    def append_element(p: int, s: int, e: int, ae: int, disp: bytes, low: bytes) -> int:
-        idx = len(kind)
-        kind.append(ELEMENT)
-        start_a.append(s)
-        end_a.append(e)
-        attr_end_a.append(ae)
-        parent_a.append(p)
-        # prev_sibling == parent's previous last element child (or INVALID).
-        prev_a.append(lastc_a[p])
-        lastc_a[p] = idx
-        lastc_a.append(INVALID)
-        sub_a.append(idx)
-        nd.append(disp)
-        nl.append(low)
-        return idx
 
     # Document root.
     kind.append(DOCUMENT)
@@ -352,6 +337,9 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
     nd.append(None)
     nl.append(None)
     stack = [0]
+    # name → how many open elements on ``stack`` carry it: a close tag
+    # with nothing open by its name is dropped without a stack scan
+    open_n: dict = {}
 
     find = source.find
     i = 0
@@ -376,26 +364,19 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
             continue
 
         c2 = source[i + 1]
-        if c2 == 0x2F:  # '</' — closing tag
+        if c2 == 0x2F:  # '</' — closing tag: pop to the nearest open match
             m = _CLOSE_FAST.match(source, i + 2)
             cname = m.group(1).lower()
             i = m.end() if m.group(2) else n
-            if not cname:
-                continue
-            if len(stack) > 1 and nl[stack[-1]] == cname:
-                idx = stack.pop()
-                sub_a[idx] = len(kind) - 1
-                continue
-            found = -1
-            for s in range(len(stack) - 1, 0, -1):
-                if nl[stack[s]] == cname:
-                    found = s
-                    break
-            if found > 0:
+            if open_n.get(cname):
                 last = len(kind) - 1
-                while len(stack) > found:
+                while True:
                     idx = stack.pop()
                     sub_a[idx] = last
+                    top_l = nl[idx]
+                    open_n[top_l] -= 1
+                    if top_l == cname:
+                        break
             continue
 
         if c2 == 0x3F:  # '<?' — processing instruction, skipped
@@ -444,6 +425,7 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
                     break
                 idx = stack.pop()
                 sub_a[idx] = len(kind) - 1
+                open_n[top_l] -= 1
 
         attr_start = i
         if m.group(3):  # fused scan found the unquoted '>'
@@ -461,31 +443,7 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
                 gt, a_end = te
                 i = gt + 1
 
-        self_close = len(raw_name) <= 6 and name_l in VOID_TAGS
-
-        if name_l == b"svg":
-            svg_self_close = is_explicit_self_closing(source, attr_start, gt)
-            node_idx = append_element(stack[-1], name_start, name_start + len(raw_name), a_end, name_disp, name_l)
-            if svg_self_close:
-                continue
-            content_start = i
-            close_end = find_svg_subtree_end(source, i)
-            if close_end is not None:
-                content_end = close_end
-                while content_end > content_start and source[content_end - 1] != 0x3C:
-                    content_end -= 1
-                if content_end > content_start:
-                    append_text(node_idx, content_start, content_end - 1)
-                sub_a[node_idx] = len(kind) - 1
-                i = close_end
-            else:
-                if n > content_start:
-                    append_text(node_idx, content_start, n)
-                sub_a[node_idx] = len(kind) - 1
-                i = n
-            continue
-
-        # inlined append_element (hottest allocation site)
+        # inlined element append (hottest allocation site)
         p_idx = stack[-1]
         node_idx = len(kind)
         kind.append(ELEMENT)
@@ -500,31 +458,30 @@ def parse(source, drop_whitespace_text_nodes: bool = False) -> Dom:
         nd.append(name_disp)
         nl.append(name_l)
 
-        if not self_close and len(raw_name) == 9 and name_l == b"plaintext":
-            if n > i:
-                append_text(node_idx, i, n)
-            sub_a[node_idx] = len(kind) - 1
-            i = n
+        if len(raw_name) <= 6 and name_l in VOID_TAGS:
             continue
-
-        if not self_close and name_l in RAW_TEXT_TAGS:
-            close = _find_raw_text_close(source, name_l, i)
-            if close is not None:
-                content_end, close_end = close
-                if content_end > i:
-                    append_text(node_idx, i, content_end)
-                sub_a[node_idx] = len(kind) - 1
-                i = close_end
-            else:
-                if n > i:
-                    append_text(node_idx, i, n)
-                sub_a[node_idx] = len(kind) - 1
-                i = n
+        if name_l not in _OPAQUE_TAGS:
+            open_n[name_l] = open_n.get(name_l, 0) + 1
+            stack.append(node_idx)
             continue
-
-        if self_close:
-            continue
-        stack.append(node_idx)
+        if name_l == b"svg":
+            if is_explicit_self_closing(source, attr_start, gt):
+                continue
+            close_end = find_svg_subtree_end(source, i)
+            if close_end is None:
+                content_end = close_end = n
+            else:  # the content ends at the '<' of the closing </svg>
+                content_end = source.rfind(b"<", i, close_end)
+        elif name_l == b"plaintext":
+            content_end = close_end = n
+        else:
+            content_end, close_end = _find_raw_text_close(source, name_l, i) or (n, n)
+        # the content is one text child (a closed svg keeps an empty
+        # one: <svg></svg> is 3 nodes), then the element closes
+        if content_end > i or (close_end > content_end and name_l == b"svg"):
+            append_text(node_idx, i, content_end)
+        sub_a[node_idx] = len(kind) - 1
+        i = close_end
 
     # EOF: close everything still open.
     last = len(kind) - 1

@@ -270,6 +270,17 @@ def iter_query(dom: Dom, selector: Selector, scope_root: Optional[int] = None) -
             yield idx
 
 
+def iter_topmost(dom: Dom, selector: Selector, scope_root: Optional[int] = None) -> Iterator[int]:
+    """Preorder matches that are not inside an earlier match: the
+    subtree of each match yielded is skipped."""
+    end = dom.subtree_end
+    last = 0  # last index inside the latest match yielded
+    for idx in iter_query(dom, selector, scope_root):
+        if idx > last:
+            yield idx
+            last = end[idx]
+
+
 def query_all(dom: Dom, selector: Selector, scope_root: Optional[int] = None) -> List[int]:
     return list(iter_query(dom, selector, scope_root))
 

@@ -33,7 +33,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import List, NamedTuple, Optional, Tuple
+from bisect import bisect_right
+from itertools import groupby
+from typing import List, NamedTuple, Optional
+
+from . import MAX_DOC_BYTES
 
 _OBJ_START_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 _STREAM_START_RE = re.compile(rb"stream\r?\n")
@@ -144,16 +148,11 @@ def _iter_objects(data: bytes):
         pos = em2 + len(b"endobj")
 
 
-#: decompression output cap — the deflate-bomb guard (deflate can
-#: expand ~1000:1, so a 16 MB stream could otherwise demand ~16 GB and
-#: OOM the executor; the analog of the HTML operators' ``MAX_DOC_BYTES``
-#: poison-pill truncation).  Beyond the cap the stream truncates and
-#: the permissive contract continues with what decoded.
-MAX_STREAM_BYTES = 64 * 1024 * 1024
-
-
-def _decode_stream(dict_part: bytes, body: bytes,
-                   max_bytes: int = MAX_STREAM_BYTES) -> Optional[bytes]:
+def _decode_stream(dict_part: bytes, body: bytes, max_bytes: int) -> Optional[bytes]:
+    """At most ``max_bytes`` (> 0) of the stream's content: the
+    deflate-bomb guard, as deflate can expand ~1000:1.  Beyond it the
+    stream truncates and the permissive contract continues with what
+    decoded."""
     if b"/FlateDecode" in dict_part:
         # decompressobj tolerates truncated streams and trailing
         # garbage (returns the prefix that decoded) — the permissive
@@ -276,46 +275,36 @@ def extract_pdf_text(data: bytes, y_quantum: float = 2.0,
     """Extract layout-ordered text from a PDF byte payload.
 
     Never raises on malformed input (mirrors the HTML kernel's
-    permissive contract): unparseable streams contribute nothing.
+    permissive contract): unparseable streams contribute nothing.  The
+    document's streams inflate to ``MAX_DOC_BYTES`` in total; the
+    streams past that budget contribute nothing either.
     """
     runs: List[PdfRun] = []
     n_objects = 0
     n_streams = 0
+    budget = MAX_DOC_BYTES
     for dict_part, body in _iter_objects(data):
         n_objects += 1
         if body is None:
             continue
         n_streams += 1
-        decoded = _decode_stream(dict_part, body)
-        if decoded is None or b"BT" not in decoded:
+        decoded = _decode_stream(dict_part, body, budget) if budget > 0 else None
+        if decoded is None:
             continue
-        runs.extend(_runs_of_stream(decoded, encoding))
+        budget -= len(decoded)
+        if b"BT" in decoded:
+            runs.extend(_runs_of_stream(decoded, encoding))
 
     # ---- layout pass ----
     # column segmentation: sort run x positions; a gap > column_gap
-    # splits reading order into column-major segments.
-    def col_of(x: float, col_edges: List[float]) -> int:
-        c = 0
-        for e in col_edges:
-            if x >= e:
-                c += 1
-        return c
-
+    # splits reading order into column-major segments.  A line joins
+    # its non-empty runs left to right.
     xs = sorted({r.x for r in runs})
     col_edges = [b for a, b in zip(xs, xs[1:]) if b - a > column_gap]
-    keyed: List[Tuple[int, float, float, str]] = [
-        (col_of(r.x, col_edges), -round(r.y / y_quantum), r.x, r.text) for r in runs
-    ]
-    keyed.sort(key=lambda k: (k[0], k[1], k[2]))
-    lines: List[str] = []
-    last_key: Optional[Tuple[int, float]] = None
-    for col, ny, _x, text in keyed:
-        if last_key == (col, ny):
-            if text:  # empty run on an existing line adds no stray space
-                lines[-1] = (lines[-1] + " " + text) if lines[-1] else text
-        else:
-            lines.append(text)
-            last_key = (col, ny)
+    keyed = sorted(((bisect_right(col_edges, r.x), -round(r.y / y_quantum), r.x, r.text)
+                    for r in runs), key=lambda k: k[:3])
+    lines = [" ".join(k[3] for k in line if k[3])
+             for _, line in groupby(keyed, key=lambda k: k[:2])]
     return PdfExtract("\n".join(lines), lines, n_objects, n_streams, len(runs))
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import lru_cache
 from typing import Optional, Tuple
 
 
@@ -386,8 +387,18 @@ def _parse_signed_int(s: str, p: _Parser) -> int:
     return value
 
 
-def compile_selector(source: str) -> Selector:
-    """Compile ``source`` or raise :class:`SelectorError`."""
+def compile_selector(source) -> Selector:
+    """Compile ``source`` or raise :class:`SelectorError`; a compiled
+    :class:`Selector` passes through unchanged."""
+    if isinstance(source, Selector):
+        return source
+    return _compile_cached(source)
+
+
+@lru_cache(maxsize=1024)
+def _compile_cached(source) -> Selector:
+    """Compiles are cached per process: a SQL function's selector column
+    repeats one string per row."""
     if isinstance(source, bytes):
         source = source.decode("utf-8")
     return _Parser(source).parse()

@@ -56,7 +56,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.htmlparse import parse
-from ..kernel.matcher import query_all
+from ..kernel.matcher import iter_topmost
 from ..kernel.selector import compile_selector
 from ..kernel.text import inner_text
 from .html_ops import doc_udf
@@ -83,16 +83,8 @@ def text_blocks_udf(selector: str = BLOCK_SELECTOR):
 
     def one(data: bytes):
         dom = parse(data)
-        idxs = query_all(dom, sel)
-        matched = set(idxs)
         out: List[tuple] = []
-        parent = dom.parent
-        for i in idxs:
-            p = parent[i]
-            while p > 0 and p not in matched:
-                p = parent[p]
-            if p in matched:
-                continue  # nested inside another block: outermost wins
+        for i in iter_topmost(dom, sel):  # outermost wins
             t = inner_text(dom, i, True).decode("utf-8", "replace")
             if t:
                 out.append((len(out), t))

@@ -14,7 +14,7 @@ equivalent of the reference's "compile once, query cached" API
 
 from __future__ import annotations
 
-from functools import lru_cache, partial
+from functools import partial
 from typing import Iterator, Optional, Tuple
 
 import pandas as pd
@@ -23,10 +23,11 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from ..kernel import MAX_DOC_BYTES
 from ..kernel.extract import extract_main
 from ..kernel.htmlparse import INVALID, parse
 from ..kernel.matcher import query_all, query_one
-from ..kernel.selector import Selector, compile_selector
+from ..kernel.selector import compile_selector
 from ..kernel.text import inner_text
 from ..kernel.attrs import get_attr
 
@@ -43,14 +44,6 @@ EXTRACT_SCHEMA = StructType([
     StructField("n_nodes", IntegerType(), True),
     StructField("n_removed", IntegerType(), True),
 ])
-
-
-#: Poison-pill guard that ``doc_udf`` applies to every HTML operator: a
-#: pathological multi-hundred-MB document must not blow up executor
-#: memory (outputs are ~input-sized; an Arrow batch holds thousands of
-#: rows).  Truncation is safe because the permissive parser treats it
-#: as EOF: open elements close, a cut UTF-8 character becomes U+FFFD.
-MAX_DOC_BYTES = 16 * 1024 * 1024
 
 
 def doc_udf(schema, fn):
@@ -91,26 +84,20 @@ def _apply(fn, null, batch) -> list:
             for h in batch]
 
 
-def _compiled(selector) -> Selector:
-    return selector if isinstance(selector, Selector) else compile_selector(selector)
-
-
-@lru_cache(maxsize=1024)
-def _compile_cached(source: str) -> Selector:
-    """Worker-side cache for dynamic (per-row) selector columns."""
-    return compile_selector(source)
+def _first(dom, sel, render):
+    """``render(dom, idx)`` of the first ``sel`` match, or None."""
+    idx = query_one(dom, sel)
+    return None if idx is None else render(dom, idx)
 
 
 def _first_text(dom, sel) -> Optional[str]:
     """Normalized innerText of the first ``sel`` match, or None."""
-    idx = query_one(dom, sel)
-    return None if idx is None else inner_text(dom, idx, True).decode("utf-8", errors="replace")
+    return _first(dom, sel, lambda d, i: inner_text(d, i, True).decode("utf-8", errors="replace"))
 
 
 def _first_attr(dom, sel, attr_name: str) -> Optional[str]:
     """Decoded ``attr_name`` of the first ``sel`` match, or None."""
-    idx = query_one(dom, sel)
-    v = None if idx is None else get_attr(dom, idx, attr_name)
+    v = _first(dom, sel, lambda d, i: get_attr(d, i, attr_name))
     return None if v is None else v.decode("utf-8", errors="replace")
 
 
@@ -122,14 +109,14 @@ def node_count_udf():
 
 def query_count_udf(selector):
     """count(queryAll(selector)) per document."""
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
     return doc_udf(LongType(), lambda data: len(query_all(parse(data), sel)))
 
 
 def inner_text_udf(selector, normalize_whitespace: bool = True, joiner: str = "\x1f"):
     """innerText of every match, joined by ``joiner`` (empty string when
     no match) — queryAll → innerText composition."""
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
 
     def one(data: bytes) -> str:
         dom = parse(data)
@@ -144,7 +131,7 @@ def attr_value_udf(selector, attr_name: str):
     """Decoded attribute value of the FIRST match (null when the
     selector misses or the attribute is absent) — queryOne →
     getAttributeValue composition."""
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
     return doc_udf(StringType(), lambda data: _first_attr(parse(data), sel, attr_name))
 
 
@@ -156,12 +143,11 @@ def to_markdown_udf(selector=None):
     Arrow-batch shape as every other kernel operator."""
     from ..kernel.markdown import to_markdown
 
-    sel = _compiled(selector) if selector is not None else None
+    sel = compile_selector(selector) if selector is not None else None
 
     def one(data: bytes) -> Optional[str]:
         dom = parse(data)
-        idx = 0 if sel is None else query_one(dom, sel)
-        return None if idx is None else to_markdown(dom, idx)
+        return to_markdown(dom, 0) if sel is None else _first(dom, sel, to_markdown)
 
     return doc_udf(StringType(), one)
 
@@ -192,7 +178,7 @@ def table_cells_udf(selector: str = "table"):
     outermost tables are wanted."""
     from ..kernel.markdown import table_rows
 
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
 
     def one(data: bytes):
         dom = parse(data)
@@ -220,7 +206,7 @@ def fields_udf(fields):
     compiled = []
     for name, spec in fields.items():
         sel, attr = (spec, None) if isinstance(spec, str) else spec
-        compiled.append((name, _compiled(sel), attr))
+        compiled.append((name, compile_selector(sel), attr))
     schema = StructType([StructField(n, StringType(), True) for n, _, _ in compiled])
 
     def one(data: bytes):
@@ -265,7 +251,7 @@ def links_udf(selector: str = "a[href], img[src], script[src], link[href]",
     with its (normalized) innerText — the standard link-graph /
     crawl-frontier extraction of a web pipeline, expressed as
     queryAll → getAttributeValue → innerText over the kernel."""
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
 
     def one(data: bytes):
         dom = parse(data)
@@ -302,7 +288,7 @@ def explain_udf(selector):
     near-miss (tag|id|class|attr|pseudo|not_simple|combinator|scope)."""
     from ..kernel.matcher_debug import explain_first_match
 
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
 
     def one(data: bytes):
         rpt = explain_first_match(parse(data), sel)
@@ -353,23 +339,22 @@ def register_sql_functions(spark) -> None:
     compile is likewise cheap and cacheable, document.zig:439-462)."""
     spark.udf.register("html_node_count", node_count_udf())
     spark.udf.register("html_query_count", doc_udf(
-        LongType(), lambda data, q: len(query_all(parse(data), _compile_cached(q)))))
+        LongType(), lambda data, q: len(query_all(parse(data), compile_selector(q)))))
     spark.udf.register("html_inner_text", doc_udf(
-        StringType(), lambda data, q: _first_text(parse(data), _compile_cached(q))))
+        StringType(), lambda data, q: _first_text(parse(data), compile_selector(q))))
     spark.udf.register("html_attr", doc_udf(
-        StringType(), lambda data, q, a: _first_attr(parse(data), _compile_cached(q), a)))
+        StringType(), lambda data, q, a: _first_attr(parse(data), compile_selector(q), a)))
     spark.udf.register("html_markdown", to_markdown_udf())
 
 
 def serialize_html_udf(selector):
     """Re-serialize the first matching subtree (writeHtml semantics for
     a pristine parse: raw attrs verbatim, void tags unclosed)."""
-    sel = _compiled(selector)
+    sel = compile_selector(selector)
     from ..kernel.serialize import write_html
 
     def one(data: bytes) -> Optional[str]:
-        dom = parse(data)
-        idx = query_one(dom, sel)
-        return None if idx is None else write_html(dom, idx).decode("utf-8", errors="replace")
+        return _first(parse(data), sel,
+                      lambda d, i: write_html(d, i).decode("utf-8", errors="replace"))
 
     return doc_udf(StringType(), one)

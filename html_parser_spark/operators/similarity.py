@@ -42,8 +42,10 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """Cosine similarity of two ``array<double>`` expressions."""
-    return f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
+    """Cosine similarity of two ``array<double>`` expressions; NULL when
+    either has norm 0 (``try_divide``: a plain ``/`` fails the query
+    under ANSI mode)."""
+    return f"try_divide({dot_sql(a, b)}, sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
 
 
 def with_cosine(df: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding",

@@ -43,7 +43,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.html_ops import extract_struct_udf
@@ -113,17 +113,23 @@ CONTROL_COLUMNS = [
 _NO_CONTROL_TABLE = {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
 
 
-def completed_buckets(spark: SparkSession, control_dir: str, run_id: str):
+def completed_buckets(spark: SparkSession, control_dir: str, run_id: str) -> set:
+    return set(_completed_rows(spark, control_dir, run_id))
+
+
+def _completed_rows(spark: SparkSession, control_dir: str, run_id: str) -> dict:
+    """bucket → ``n_rows`` of its latest control row for ``run_id``."""
     from ..sources.catalog import read_table
 
     try:
         ctl = read_table(spark, control_dir)
     except AnalysisException as e:
         if e.getCondition() in _NO_CONTROL_TABLE:
-            return set()
+            return {}
         raise
-    rows = ctl.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
-    return {r[0] for r in rows}
+    rows = (ctl.where(F.col("run_id") == run_id).groupBy("bucket")
+            .agg(F.max_by("n_rows", "finished_at")).collect())
+    return {bucket: n_rows for bucket, n_rows in rows}
 
 
 def run_extraction(
@@ -142,14 +148,16 @@ def run_extraction(
     written with dynamic partition overwrite; the control table is the
     commit record — a bucket counts as done only once its control row
     exists, and the control row is appended only after the bucket's
-    data write completed.
+    data write completed.  Control rows name only the buckets this run
+    wrote, and ``rows_total`` counts the rows of this run's buckets,
+    written now or done at resume.
     """
     started = time.time()
 
     df = with_bucket(transcripts, cfg.n_buckets)
-    skipped = set()
+    skipped = {}
     if resume:
-        skipped = completed_buckets(spark, control_dir, run_id)
+        skipped = _completed_rows(spark, control_dir, run_id)
         if skipped:
             df = df.where(~F.col("bucket").isin(sorted(skipped)))
 
@@ -166,15 +174,21 @@ def run_extraction(
     # writing a sliver of every bucket partition (small-files blowup).
     # write_table: Iceberg overwritePartitions when dst is a table
     # identifier and the runtime is present, parquet dynamic partition
-    # overwrite otherwise (same idempotency either way).
+    # overwrite otherwise (same idempotency either way).  The buckets
+    # written are observed above the shuffle, in the write's own stage.
+    written = Observation("run_extraction")
     write_table(
-        extracted.repartition(cfg.n_buckets, F.col("bucket")), out_dir)
+        extracted.repartition(cfg.n_buckets, F.col("bucket"))
+        .observe(written, F.array_sort(F.collect_set("bucket")).alias("buckets")),
+        out_dir)
+    buckets = written.get["buckets"]
 
     finished = time.time()
-    # Lineage/metrics per bucket, computed from the committed output.
+    # Lineage/metrics of the buckets this run wrote, from the committed
+    # output: another run's buckets in a shared out_dir are not ours.
     done = (
         read_table(spark, out_dir)
-        .where(~F.col("bucket").isin(sorted(skipped)) if skipped else F.lit(True))
+        .where(F.col("bucket").isin(buckets))
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_rows"),
@@ -187,10 +201,13 @@ def run_extraction(
         .withColumn("wall_sec", F.lit(round(finished - started, 3)))
         .select(*CONTROL_COLUMNS)
     )
-    # Control rows append, unpartitioned (Iceberg append for a table ident).
-    write_table(done, control_dir, partition_col=None, mode="append")
-
-    n_rows = read_table(spark, out_dir).count()
+    # Control rows append, unpartitioned (Iceberg append for a table
+    # ident), their row total observed above the aggregate's shuffle.
+    appended = Observation("run_extraction_control")
+    write_table(done.observe(appended, F.sum("n_rows").alias("n_rows")),
+                control_dir, partition_col=None, mode="append")
+    # This run's rows: the buckets written now plus those done at resume.
+    n_rows = (appended.get["n_rows"] or 0) + sum(skipped.values())
     return {
         "run_id": run_id,
         "rows_total": n_rows,

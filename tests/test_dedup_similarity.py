@@ -746,3 +746,32 @@ def test_ivf_index_cell_partition_pruning(spark, sf_dir, tmp_path):
     got_disk = sorted(map(tuple, ivf_topk_batch(disk, cents, queries).collect()))
     got_mem = sorted(map(tuple, ivf_topk_batch(indexed, cents, queries).collect()))
     assert got_disk == got_mem
+
+
+def test_cosine_of_a_zero_vector_is_null(spark):
+    """A zero-norm vector's cosine is NULL (0/0, as the DuckDB twins
+    compute it), not a DIVIDE_BY_ZERO failure under ANSI mode, in every
+    operator that scores cosine.  The two zero vectors are the IVF
+    centroids, so every vector, zero or not, lands in one cell and is
+    scored; they also share every LSH band key, so they are a near-dup
+    candidate pair."""
+    from html_parser_spark.operators.dedup import embedding_near_dups
+    from html_parser_spark.operators.similarity import ivf_topk_batch, with_cosine
+
+    rows = [(0, [0.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
+            (3, [0.0, 1.0, 0.0]), (4, [1.0, 1.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = [1.0, 0.0, 0.0]
+    cos = {r["vec_id"]: r["cosine"] for r in with_cosine(df, q).collect()}
+    assert cos == {0: None, 1: None, 2: 1.0, 3: 0.0, 4: 0.707107}
+    order = [2, 4, 3, 0, 1]  # NULL last, ties by id
+    assert [r["vec_id"] for r in cosine_topk(df, q, k=5).collect()] == order
+    indexed, cents = build_ivf_index(df, num_cells=2)
+    assert [r["vec_id"] for r in ivf_topk(indexed, cents, q, k=5, nprobe=2).collect()] == order
+    queries = spark.createDataFrame([(7, q), (8, [0.0, 0.0, 0.0])],
+                                    "query_id long, query_vec array<double>")
+    top = ivf_topk_batch(indexed, cents, queries, k=5, nprobe=2).collect()
+    assert [r["vec_id"] for r in top if r["query_id"] == 7] == order
+    assert {r["cosine"] for r in top if r["query_id"] == 8} == {None}
+    pairs = embedding_near_dups(df, threshold=0.5, bands=2, band_bits=4).collect()
+    assert all(r["cosine"] is not None for r in pairs)

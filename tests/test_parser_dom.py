@@ -95,6 +95,16 @@ def test_self_closing_svg_has_no_text_child():
     assert q1(dom, "#after") is not None
 
 
+def test_closed_svg_keeps_an_empty_text_child():
+    # a closed svg always holds one text child, an empty one included;
+    # raw-text elements and an unclosed svg hold none when empty
+    dom = parse("<svg></svg>")
+    assert dom.kind == [DOCUMENT, ELEMENT, TEXT]
+    assert dom.text_bytes(2) == b"" and dom.subtree_end[1] == 2
+    assert len(parse("<script></script>")) == 2
+    assert len(parse("<svg>")) == 2
+
+
 def test_explicit_self_close_does_not_close_regular_elements():
     # only void tags self-close (parser.zig:191)
     dom = parse("<div id='a'/><span id='b'></span>")
@@ -147,6 +157,9 @@ def test_unmatched_close_ignored_and_stack_scan_close():
     # </div> closes span AND div (stack scan); p is top-level
     c = q1(dom2, "#c")
     assert dom2.parent[c] == 0
+    # an implicit close leaves nothing of its name open: </p> is dropped
+    dom3 = parse("<div><p>a<p>b</p></p><i id='d'></i></div>")
+    assert dom3.name_lower[dom3.parent[q1(dom3, "#d")]] == b"div"
 
 
 def test_mixed_case_tags_attrs():

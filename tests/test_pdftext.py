@@ -153,18 +153,17 @@ def test_spark_pdf_udfs(spark):
 
 def test_flate_bomb_output_capped():
     """Deflate expands up to ~1000:1 — a 1 MB stream claiming ~1 GB of
-    output must decode bounded (MAX_STREAM_BYTES), not OOM the
+    output must decode bounded (MAX_DOC_BYTES), not OOM the
     executor.  The permissive contract continues with the decoded
     prefix."""
     import zlib
 
-    from html_parser_spark.kernel.pdftext import (
-        MAX_STREAM_BYTES, _decode_stream, extract_pdf_text,
-    )
+    from html_parser_spark.kernel import MAX_DOC_BYTES
+    from html_parser_spark.kernel.pdftext import _decode_stream, extract_pdf_text
 
     bomb = zlib.compress(b"\x00" * (256 * 1024 * 1024), 9)
-    out = _decode_stream(b"<< /Filter /FlateDecode >>", bomb)
-    assert len(out) == MAX_STREAM_BYTES  # capped, not 256 MB
+    out = _decode_stream(b"<< /Filter /FlateDecode >>", bomb, MAX_DOC_BYTES)
+    assert len(out) == MAX_DOC_BYTES  # capped, not 256 MB
     pdf = (b"%PDF-1.4\n1 0 obj\n<< /Filter /FlateDecode /Length "
            + str(len(bomb)).encode() + b" >>\nstream\n" + bomb
            + b"\nendstream\nendobj\n")

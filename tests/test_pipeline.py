@@ -105,6 +105,21 @@ def test_partial_resume_processes_only_missing_buckets(spark, transcripts, tmp_p
     assert spark.read.parquet(out_dir).count() == src.count()
 
 
+def test_control_rows_name_only_the_buckets_a_run_wrote(spark, transcripts, tmp_path):
+    """Two runs write disjoint buckets into one output directory: the
+    second run's control rows name only its own buckets, and its
+    rows_total counts only its own rows."""
+    out_dir, ctl_dir = str(tmp_path / "out"), str(tmp_path / "ctl")
+    cfg = PipelineConfig(n_buckets=4)
+    src = with_bucket(transcripts.drop("doc_id", "expected_main_text"), 4)
+    first = src.where(F.col("bucket") < 2).drop("bucket")
+    second = src.where(F.col("bucket") >= 2).drop("bucket")
+    run_extraction(spark, first, out_dir, ctl_dir, run_id="a", cfg=cfg)
+    m = run_extraction(spark, second, out_dir, ctl_dir, run_id="b", cfg=cfg)
+    assert completed_buckets(spark, ctl_dir, "b") == {2, 3}
+    assert m["rows_total"] == second.count()
+
+
 def test_mid_bucket_crash_overwrites_partial_output(spark, transcripts, tmp_path):
     """The idempotency contract's hardest case: a run crashed MID-bucket
     — the bucket's output partition holds a partial write, but its

@@ -12,6 +12,7 @@ import zlib
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from html_parser_spark.kernel import MAX_DOC_BYTES
 from html_parser_spark.kernel.pdftext import (
     _decode_stream, extract_pdf_text, synth_pdf,
 )
@@ -50,7 +51,7 @@ def test_pdf_never_raises_on_pdf_shaped_garbage(body):
     # the predicate must mirror _decode_stream (strict decompress PLUS
     # the partial-decode fallback): only when both fail can no runs
     # possibly be produced — a truncated-but-valid prefix is decodable
-    if _decode_stream(b"/FlateDecode", body) is None:
+    if _decode_stream(b"/FlateDecode", body, MAX_DOC_BYTES) is None:
         assert r.n_runs == 0
 
 
