@@ -3015,9 +3015,9 @@ def q_streaming_dedup(spark, sf_dir):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: extraction pipeline over sf0.001 transcripts."""
     t = transcripts_from_documents(spark, "/root/testdata/sf0.001", n_convs=N_CONVS)
-    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+    from html_parser_spark.plans.pipeline import extract_turns
 
-    out = extract_turns(t.drop("doc_id", "expected_main_text"), PipelineConfig(n_buckets=8))
+    out = extract_turns(t.drop("doc_id", "expected_main_text"))
     return out.select("conv_id", "turn_idx", "role", "main_text", "n_nodes", "n_removed")
 
 

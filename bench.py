@@ -159,12 +159,10 @@ def extraction_throughput(spark, input_dir: str, n_turns: int, timed_runs: int =
     contamination in the JSON."""
     from pyspark.sql import functions as F
 
-    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
-
-    cfg = PipelineConfig(n_buckets=4 * max(spark.sparkContext.defaultParallelism, 8))
+    from html_parser_spark.plans.pipeline import extract_turns
 
     def run_once():
-        out = extract_turns(spark.read.parquet(input_dir), cfg)
+        out = extract_turns(spark.read.parquet(input_dir))
         return out.agg(
             F.count("*").alias("n"),
             F.sum(F.octet_length("main_text")).alias("chars"),

@@ -18,9 +18,10 @@ stack:
                    similarity, text stats, multimodal plumbing).
 * ``sources``    — input-table builders (synthetic transcripts per
                    BASELINE.json ``input_hint``) and readers.
-* ``plans``      — the end-to-end extraction pipeline: partitioning +
-                   skew salting, ordering assertion, per-partition
-                   checkpoint/lineage control table, idempotent resume.
+* ``plans``      — the end-to-end extraction pipeline: map-only kernel
+                   stage, stable bucketing, ordering assertion,
+                   per-partition checkpoint/lineage control table,
+                   idempotent resume.
 * ``streaming``  — Structured Streaming variant of the extraction
                    stage with watermarked windowed metrics.
 """

@@ -35,7 +35,7 @@ import re
 import zlib
 from bisect import bisect_right
 from itertools import groupby
-from typing import List, NamedTuple, Optional
+from typing import List, NamedTuple, Optional, Tuple
 
 from . import MAX_DOC_BYTES
 
@@ -184,17 +184,23 @@ def _decode_text(raw: bytes, encoding: str) -> str:
     return raw.decode(encoding, errors="replace")
 
 
-def _runs_of_stream(data: bytes, encoding: str = "auto") -> List[PdfRun]:
+def _runs_of_stream(data: bytes, encoding: str = "auto") -> Tuple[List[PdfRun], int]:
     """Walk one content stream's text operators; returns show-runs with
-    their device-space baseline positions.
+    their device-space baseline positions, and the number of shows.
 
     Cursor model: ``Tm`` sets (x, y) from its last two operands;
     ``Td``/``TD`` translate the LINE matrix (we track line start, and
     ``T*`` repeats the last ``TD`` leading, default 14); horizontal
     advance within a line is not modeled (run x = line-start x, which
     is enough for line assembly + left-to-right ordering of distinct
-    columns)."""
+    columns).  A show at the previous show's exact (y, x) joins that
+    run, its non-empty pieces joined with a space as the layout would
+    join them, so a stream of shows at one position holds one run, not
+    one object per show."""
     runs: List[PdfRun] = []
+    pieces: List[str] = []  # non-empty texts of the open run at `at`
+    at = None
+    n_shows = 0
     in_text = False
     x = y = 0.0
     leading = 14.0
@@ -227,11 +233,16 @@ def _runs_of_stream(data: bytes, encoding: str = "auto") -> List[PdfRun]:
                 pending = [s]
             continue
         if tok in (b"Tj", b"TJ"):
-            raw = b"".join(pending)
-            text = _decode_text(raw, encoding)
+            text = _decode_text(b"".join(pending), encoding)
+            n_shows += 1
             # empty shows still mark a baseline: keep them so blank
             # lines survive (dropping them breaks line counting)
-            runs.append(PdfRun(y, x, text))
+            if at != (y, x):
+                if at is not None:
+                    runs.append(PdfRun(*at, " ".join(pieces)))
+                at, pieces = (y, x), []
+            if text:
+                pieces.append(text)
             pending = []
             stack_nums.clear()
             continue
@@ -266,7 +277,9 @@ def _runs_of_stream(data: bytes, encoding: str = "auto") -> List[PdfRun]:
                 stack_nums.append(float(tok))
             except ValueError:
                 pass
-    return runs
+    if at is not None:
+        runs.append(PdfRun(*at, " ".join(pieces)))
+    return runs, n_shows
 
 
 def extract_pdf_text(data: bytes, y_quantum: float = 2.0,
@@ -280,8 +293,7 @@ def extract_pdf_text(data: bytes, y_quantum: float = 2.0,
     streams past that budget contribute nothing either.
     """
     runs: List[PdfRun] = []
-    n_objects = 0
-    n_streams = 0
+    n_objects = n_streams = n_shows = 0
     budget = MAX_DOC_BYTES
     for dict_part, body in _iter_objects(data):
         n_objects += 1
@@ -293,7 +305,9 @@ def extract_pdf_text(data: bytes, y_quantum: float = 2.0,
             continue
         budget -= len(decoded)
         if b"BT" in decoded:
-            runs.extend(_runs_of_stream(decoded, encoding))
+            stream_runs, shows = _runs_of_stream(decoded, encoding)
+            runs.extend(stream_runs)
+            n_shows += shows
 
     # ---- layout pass ----
     # column segmentation: sort run x positions; a gap > column_gap
@@ -305,7 +319,7 @@ def extract_pdf_text(data: bytes, y_quantum: float = 2.0,
                     for r in runs), key=lambda k: k[:3])
     lines = [" ".join(k[3] for k in line if k[3])
              for _, line in groupby(keyed, key=lambda k: k[:2])]
-    return PdfExtract("\n".join(lines), lines, n_objects, n_streams, len(runs))
+    return PdfExtract("\n".join(lines), lines, n_objects, n_streams, n_shows)
 
 
 # ---------------------------------------------------------------------------

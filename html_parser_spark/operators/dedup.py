@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sql import ident
@@ -312,22 +312,20 @@ def _banded_candidate_pairs(
     wide multi-stage pipeline can additionally ``persist()`` it before
     calling (measured a wash at bench scale — 0.94× — so not done
     unconditionally here)."""
+    band, key = ident(band_col), ident(key_col)
     if max_bucket_size is not None:
-        w = Window.partitionBy(band_col, key_col)
         exploded = (
-            exploded.withColumn("_bn", F.count("*").over(w))
-            .where(F.col("_bn") <= max_bucket_size)
+            exploded.withColumn("_bn", F.expr(f"count(*) OVER (PARTITION BY {band}, {key})"))
+            .where(f"_bn <= {int(max_bucket_size)}")
             .drop("_bn")
         )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    sel = [F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")]
+    sel = ["a.id AS id_a", "b.id AS id_b"]
     for c in carry:
-        sel += [F.col(f"a.{c}").alias(f"{c}_a"), F.col(f"b.{c}").alias(f"{c}_b")]
+        sel += [f"a.{ident(c)} AS {ident(c + '_a')}", f"b.{ident(c)} AS {ident(c + '_b')}"]
     return (
-        a.join(b, (F.col(f"a.{band_col}") == F.col(f"b.{band_col}"))
-               & (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(*sel)
+        exploded.alias("a").join(exploded.alias("b"), F.expr(
+            f"a.{band} = b.{band} AND a.{key} = b.{key} AND a.id < b.id"))
+        .selectExpr(*sel)
         .distinct()
     )
 
@@ -455,8 +453,8 @@ def embedding_lsh_signatures(
     bands_sql = ", ".join(f"struct({b} AS band, {key} AS key)" for b, key in enumerate(keys))
     return (
         emb.where(f"size({v}) = {int(dim)}")
-        .select(F.col(id_col).alias("id"), F.expr(f"explode(array({bands_sql})) AS bk"))
-        .select("id", "bk.band", "bk.key")
+        .selectExpr(f"{ident(id_col)} AS id", f"explode(array({bands_sql})) AS bk")
+        .selectExpr("id", "bk.band", "bk.key")
     )
 
 
@@ -484,12 +482,12 @@ def embedding_near_dups(
     """
     sigs = embedding_lsh_signatures(emb, id_col, vec_col, bands, band_bits, dim=dim)
     pairs = _banded_candidate_pairs(sigs, max_bucket_size=max_bucket_size)
-    vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    v = f"CAST({ident(vec_col)} AS ARRAY<DOUBLE>)"
     return (
-        pairs.join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a")
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
+        pairs.join(emb.selectExpr(f"{ident(id_col)} AS id_a", f"{v} AS va"), "id_a")
+        .join(emb.selectExpr(f"{ident(id_col)} AS id_b", f"{v} AS vb"), "id_b")
         .withColumn("cosine", F.expr(cosine_sql("va", "vb")))
-        .where(F.col("cosine") >= threshold)
+        .where(f"cosine >= {float(threshold)!r}D")
         .select("id_a", "id_b", "cosine")
     )
 

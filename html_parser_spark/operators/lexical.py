@@ -29,6 +29,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sql import ident
 from .textstats import token_count_sql, words_sql
 
 
@@ -45,38 +46,30 @@ def bm25_scores(
     score is 0 by definition)."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    terms = [t for t in query_terms]
+    # the query terms are caller-supplied values: literals, not SQL text
+    terms = F.array(*[F.lit(str(t)) for t in query_terms])
 
     dl = f"CAST({token_count_sql(text_col)} AS DOUBLE)"
-    toks = docs.select(F.col(id_col).alias("id"), F.expr(f"{dl} AS dl"),
-                       F.expr(f"explode({words_sql(text_col)}) AS token"))
+    toks = docs.selectExpr(f"{ident(id_col)} AS id", f"{dl} AS dl",
+                           f"explode({words_sql(text_col)}) AS token")
     # corpus stats: N docs, average doc length — two scalar aggregates
-    stats = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
-                     F.expr(f"avg({dl}) AS avgdl"))
+    stats = docs.selectExpr("CAST(count(1) AS DOUBLE) AS n_docs", f"avg({dl}) AS avgdl")
     # only query-term postings survive past this map-side filter
-    hits = toks.where(F.col("token").isin(terms))
+    hits = toks.where(F.array_contains(terms, F.expr("token")))
     tf = hits.groupBy("id", "token").agg(
-        F.count(F.lit(1)).cast("double").alias("tf"),
-        F.first("dl").alias("dl"),
-    )
-    df_t = tf.groupBy("token").agg(
-        F.count(F.lit(1)).cast("double").alias("df"))
+        F.expr("CAST(count(1) AS DOUBLE) AS tf"), F.expr("first(dl) AS dl"))
+    df_t = tf.groupBy("token").agg(F.expr("CAST(count(1) AS DOUBLE) AS df"))
+    # double literals; (k1 + 1) and (1 - b) are folded in Python, so the
+    # weights keep the bits of the Column-arithmetic form
+    k1_1, k1_d, one_b, b_d = (f"{float(x)!r}D" for x in (k1 + 1.0, k1, 1.0 - b, b))
     scored = (
         tf.join(F.broadcast(df_t), "token")
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "w",
-            F.col("idf") * F.col("tf") * (k1 + 1.0)
-            / (F.col("tf")
-               + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
+        .withColumn("idf", F.expr("ln((n_docs - df + 0.5D) / (df + 0.5D) + 1.0D)"))
+        .withColumn("w", F.expr(
+            f"idf * tf * {k1_1} / (tf + {k1_d} * ({one_b} + {b_d} * dl / avgdl))"))
     )
-    return scored.groupBy("id").agg(F.sum("w").alias("score"))
+    return scored.groupBy("id").agg(F.expr("sum(w) AS score"))
 
 
 def bm25_topk(
@@ -96,9 +89,9 @@ def bm25_topk(
     so the quantized rank is deterministic."""
     s = bm25_scores(docs, query_terms, id_col, text_col, k1, b)
     if quantize is not None:
-        q = 10 ** quantize
-        s = s.withColumn("score", F.floor(F.col("score") * q) / q)
-    return s.orderBy(F.col("score").desc(), F.col("id").asc()).limit(k)
+        q = 10 ** int(quantize)
+        s = s.withColumn("score", F.expr(f"floor(score * {q}) / {q}"))
+    return s.orderBy(F.desc("score"), F.asc("id")).limit(k)
 
 
 def rrf_fuse(

@@ -1,6 +1,5 @@
-"""End-to-end extraction pipeline: partitioning, skew salting, ordering
-assertion, per-partition checkpoint/lineage control table, idempotent
-resume.
+"""End-to-end extraction pipeline: partitioning, ordering assertion,
+per-partition checkpoint/lineage control table, idempotent resume.
 
 Design for the 10^12-turn target (north_rule):
 
@@ -9,7 +8,8 @@ Design for the 10^12-turn target (north_rule):
   across runs and cluster sizes, unlike ``spark_partition_id()``.
   Output is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-processing a bucket is idempotent (task retries and
-  resumed runs overwrite, never duplicate).
+  resumed runs overwrite, never duplicate).  ``run_extraction`` is the
+  one place the bucket is computed.
 * **Shuffle AFTER the kernel, not before.**  Extraction is row-parallel
   (map-only), so the kernel runs directly on the scan partitions with
   ZERO data movement; the only shuffle is the repartition of the
@@ -19,14 +19,9 @@ Design for the 10^12-turn target (north_rule):
   pages and shuffling the ~20 TB of main text.  (Measured on this box:
   pre-kernel shuffle capped 4→16-core scaling efficiency at 0.62;
   map-only extraction restores 0.87.)
-* **Skew salting (opt-in).**  When the input layout is pathological (a
-  few monster files clustering one conversation), ``n_salts > 0``
-  redistributes the input on ``(bucket, salt)`` before the kernel, where
-  ``salt = pmod(xxhash64(conv_id, turn_idx), n_salts)`` — a single
-  monster conversation spreads over ``n_salts`` tasks instead of
-  stalling one.  For ordinary appends-of-many-files layouts the scan
-  partitioning already balances, and AQE skew handling is the backstop,
-  so the default ``n_salts = 0`` stays map-only.
+* **No skew fix-up before the kernel.**  Row-parallel extraction cannot
+  see conversation-length skew; an input with fewer scan splits than
+  cores is fixed where it is written (row-group size), not by a plan.
 * **Ordering assertion.**  Correctness is defined under stable turn
   ordering; ``assert_turn_ordering`` verifies per-conversation
   turn_idx density (count == distinct == max-min+1, min == 0) with
@@ -40,49 +35,31 @@ Design for the 10^12-turn target (north_rule):
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.html_ops import extract_struct_udf
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    n_buckets: int = 32
-    # 0: map-only extraction; > 0: salted (bucket, salt) shuffle before the kernel
-    n_salts: int = 0
-
-    def __post_init__(self):
-        if self.n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
-        if self.n_salts < 0:
-            raise ValueError(f"n_salts must be >= 0, got {self.n_salts}")
+from ..operators.html_ops import EXTRACT_SCHEMA, extract_struct_udf
+from ..sql import ident
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.expr(f"CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)"))
 
 
-def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
-    """The kernel stage: text → (main_text, spans, n_nodes, n_removed).
+def extract_turns(df: DataFrame) -> DataFrame:
+    """The kernel stage: ``text`` → (main_text, spans, n_nodes, n_removed).
 
-    Row-parallel and map-only by default; with ``n_salts > 0`` the input
-    is first redistributed on (bucket, salt) to even out skewed
-    conversations.
-    Works on batch and streaming frames alike; a null ``text`` gives
-    null extraction columns.
+    Row-parallel and map-only: the kernel runs on the scan partitions.
+    Every other input column passes through, and the four extraction
+    columns follow them in place of ``text``.  Works on batch and
+    streaming frames alike; a null ``text`` gives null extraction
+    columns.
     """
-    df = with_bucket(df, cfg.n_buckets)
-    if cfg.n_salts:
-        df = df.repartition(
-            "bucket", F.expr(f"CAST(pmod(xxhash64(conv_id, turn_idx), {cfg.n_salts}) AS INT)"))
-    out = df.withColumn("_ex", extract_struct_udf()("text"))
-    return out.selectExpr(
-        "conv_id", "turn_idx", "role", "tool", "ts", "bucket",
-        *[f"_ex.{c} AS {c}" for c in ("main_text", "spans", "n_nodes", "n_removed")])
+    keep = [ident(c) for c in df.columns if c != "text"]
+    return df.withColumn("_ex", extract_struct_udf()("text")).selectExpr(
+        *keep, *[f"_ex.{c} AS {c}" for c in EXTRACT_SCHEMA.names])
 
 
 def dense_turns_sql() -> str:
@@ -138,7 +115,7 @@ def run_extraction(
     out_dir: str,
     control_dir: str,
     run_id: str,
-    cfg: PipelineConfig = PipelineConfig(),
+    n_buckets: int = 32,
     resume: bool = True,
     check_ordering: bool = True,
 ) -> dict:
@@ -152,9 +129,11 @@ def run_extraction(
     wrote, and ``rows_total`` counts the rows of this run's buckets,
     written now or done at resume.
     """
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     started = time.time()
 
-    df = with_bucket(transcripts, cfg.n_buckets)
+    df = with_bucket(transcripts, n_buckets)
     skipped = {}
     if resume:
         skipped = _completed_rows(spark, control_dir, run_id)
@@ -168,7 +147,7 @@ def run_extraction(
 
     from ..sources.catalog import read_table, write_table
 
-    extracted = extract_turns(df, cfg)
+    extracted = extract_turns(df)
     # One shuffle, of the (much smaller) extracted columns only: groups
     # each bucket into one task's output files instead of every task
     # writing a sliver of every bucket partition (small-files blowup).
@@ -178,7 +157,7 @@ def run_extraction(
     # written are observed above the shuffle, in the write's own stage.
     written = Observation("run_extraction")
     write_table(
-        extracted.repartition(cfg.n_buckets, F.col("bucket"))
+        extracted.repartition(n_buckets, F.col("bucket"))
         .observe(written, F.array_sort(F.collect_set("bucket")).alias("buckets")),
         out_dir)
     buckets = written.get["buckets"]

@@ -48,42 +48,19 @@ def transcripts_from_documents(
     sf_dir: str,
     n_convs: int = 50,
     replicate: int = 1,
-    skew_pct: int = 0,
-    skew_factor: int = 1,
 ) -> DataFrame:
     """Deterministic transcripts: doc_id → (conv, turn) round-robin.
 
     ``replicate`` multiplies volume for benchmarking (rep index keeps
-    conv_ids distinct); ``skew_pct``/``skew_factor`` give a fraction of
-    conversations ``skew_factor``× the turns to exercise salting.
+    conv_ids distinct).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if replicate > 1:
         docs = docs.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))))
     else:
         docs = docs.withColumn("rep", F.lit(0))
-    conv_num = F.pmod(F.col("doc_id"), F.lit(n_convs))
-    base_turn = F.floor(F.col("doc_id") / F.lit(n_convs)).cast("int")
-    if skew_pct > 0 and skew_factor > 1:
-        # The first ceil(n_convs*skew_pct/100) conversations get
-        # skew_factor copies of every turn IN THE SAME conversation
-        # (turn indexes stay dense: base_turn*factor + copy), so a few
-        # conversations are genuinely skew_factor× longer — the
-        # monster-conversation shape the salting path exists for.
-        n_skewed = max((n_convs * skew_pct + 99) // 100, 1)
-        is_skewed = conv_num < F.lit(n_skewed)
-        docs = docs.withColumn("conv_num", conv_num).withColumn(
-            "skew",
-            F.explode(F.sequence(
-                F.lit(0), F.when(is_skewed, skew_factor - 1).otherwise(0))),
-        )
-        turn = F.when(
-            F.col("conv_num") < n_skewed,
-            base_turn * skew_factor + F.col("skew"),
-        ).otherwise(base_turn).cast("int")
-    else:
-        docs = docs.withColumn("conv_num", conv_num).withColumn("skew", F.lit(0))
-        turn = base_turn
+    docs = docs.withColumn("conv_num", F.pmod(F.col("doc_id"), F.lit(n_convs)))
+    turn = F.floor(F.col("doc_id") / F.lit(n_convs)).cast("int")
 
     conv = F.concat(
         F.lit("conv"),

@@ -92,7 +92,7 @@ def run(spark, args) -> dict:
     from html_parser_spark.operators.corpusprep import split_assign, with_packing
     from html_parser_spark.operators.curate import DROP_REASONS, curate_corpus
     from html_parser_spark.operators.pii import pii_total, redact_pii
-    from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+    from html_parser_spark.plans.pipeline import extract_turns
     from html_parser_spark.sources.catalog import read_transcripts
 
     t = read_transcripts(spark, args.input)
@@ -101,7 +101,7 @@ def run(spark, args) -> dict:
     # null exactly when the input text is, so the null filter goes on
     # the input (down to the scan): a filter on the UDF output would be
     # pushed under the projection and evaluate the kernel twice.
-    ex = extract_turns(t.where("text IS NOT NULL"), PipelineConfig())
+    ex = extract_turns(t.where("text IS NOT NULL"))
     docs = ex.selectExpr(
         "concat_ws(':', conv_id, CAST(turn_idx AS STRING)) AS doc_id",
         "conv_id", "turn_idx", "role", "main_text AS text")

@@ -10,7 +10,7 @@ Deployment shape required by the north rule::
         --output <extracted table dir> \
         --control <control table dir> \
         --run-id  <stable id for resume> \
-        [--buckets 4096] [--salts N] [--no-resume] [--no-ordering-check]
+        [--buckets 4096] [--no-resume] [--no-ordering-check]
 
 The job is idempotent per (run-id, bucket): re-submitting after a
 partial failure skips completed buckets (anti-join against the control
@@ -35,10 +35,6 @@ def parse_args(argv):
     ap.add_argument("--run-id", required=True, help="stable run id for resume")
     ap.add_argument("--buckets", type=int, default=256,
                     help="stable conv_id hash buckets (output partitions)")
-    ap.add_argument("--salts", type=int, default=0,
-                    help="N > 0 redistributes the input on (bucket, salt) over N "
-                         "salts before the kernel (only for pathological input "
-                         "layouts); 0, the default, keeps extraction map-only")
     ap.add_argument("--no-resume", action="store_true",
                     help="reprocess all buckets even if control rows exist")
     ap.add_argument("--no-ordering-check", action="store_true")
@@ -50,7 +46,7 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from html_parser_spark.plans.pipeline import PipelineConfig, run_extraction
+    from html_parser_spark.plans.pipeline import run_extraction
     from html_parser_spark.sources.catalog import read_transcripts
 
     spark = SparkSession.builder.appName(f"extract-{args.run_id}").getOrCreate()
@@ -59,14 +55,13 @@ def main(argv=None) -> int:
     # schema-enforced read; resolves Iceberg table identifiers too,
     # matching the --input help text and the pipeline's output handling
     transcripts = read_transcripts(spark, args.input)
-    cfg = PipelineConfig(n_buckets=args.buckets, n_salts=args.salts)
     metrics = run_extraction(
         spark,
         transcripts,
         out_dir=args.output,
         control_dir=args.control,
         run_id=args.run_id,
-        cfg=cfg,
+        n_buckets=args.buckets,
         resume=not args.no_resume,
         check_ordering=not args.no_ordering_check,
     )

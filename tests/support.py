@@ -35,7 +35,7 @@ from html_parser_spark.kernel.text import normalize_ws
 from html_parser_spark.kernel.matcher import query_all, query_one
 from html_parser_spark.kernel.selector import Selector, compile_selector
 from html_parser_spark.operators.corpusprep import split_assign
-from html_parser_spark.operators.dedup import _banded_candidate_pairs, plane_sign_matrix
+from html_parser_spark.operators.dedup import plane_sign_matrix
 from html_parser_spark.operators.multimodal import _PNG_CHANNELS, _PNG_SIG
 from html_parser_spark.operators.pii import PII_PATTERNS
 from html_parser_spark.operators.similarity import _cells_udf
@@ -478,12 +478,29 @@ def ref_embedding_lsh_signatures(emb: DataFrame, dim: int, id_col: str = "vec_id
             .select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")))
 
 
+def ref_banded_candidate_pairs(exploded: DataFrame, band_col: str = "band",
+                              key_col: str = "key", carry: tuple = (),
+                              max_bucket_size: Optional[int] = None) -> DataFrame:
+    if max_bucket_size is not None:
+        w = Window.partitionBy(band_col, key_col)
+        exploded = (exploded.withColumn("_bn", F.count("*").over(w))
+                    .where(F.col("_bn") <= max_bucket_size).drop("_bn"))
+    a, b = exploded.alias("a"), exploded.alias("b")
+    sel = [F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")]
+    for c in carry:
+        sel += [F.col(f"a.{c}").alias(f"{c}_a"), F.col(f"b.{c}").alias(f"{c}_b")]
+    return (a.join(b, (F.col(f"a.{band_col}") == F.col(f"b.{band_col}"))
+                   & (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
+                   & (F.col("a.id") < F.col("b.id")))
+            .select(*sel).distinct())
+
+
 def ref_embedding_near_dups(emb: DataFrame, dim: int, threshold: float = 0.95,
                             bands: int = 4, band_bits: int = 8) -> DataFrame:
     sigs = ref_embedding_lsh_signatures(emb, dim, bands=bands, band_bits=band_bits)
     vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     return (
-        _banded_candidate_pairs(sigs)
+        ref_banded_candidate_pairs(sigs)
         .join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a")
         .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
         .withColumn("cosine", _ref_cosine(F.col("va"), F.col("vb")))

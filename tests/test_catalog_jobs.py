@@ -129,12 +129,12 @@ def test_job_arg_parsing():
         "--input", "/in", "--output", "/out", "--control", "/ctl",
         "--run-id", "r1",
     ])
-    assert (a.buckets, a.salts, a.no_resume, a.no_ordering_check) == (256, 0, False, False)
+    assert (a.buckets, a.no_resume, a.no_ordering_check) == (256, False, False)
     b = parse_args([
         "--input", "i", "--output", "o", "--control", "c", "--run-id", "r",
-        "--buckets", "4096", "--salts", "8", "--no-resume",
+        "--buckets", "4096", "--no-resume",
     ])
-    assert b.buckets == 4096 and b.salts == 8 and b.no_resume
+    assert b.buckets == 4096 and b.no_resume
 
 
 def test_pyfiles_zip_is_self_contained(tmp_path):

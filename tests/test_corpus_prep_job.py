@@ -167,8 +167,8 @@ def null_run(spark, prep):
         seen.add(len(s))
         return s
 
-    def counted(df, cfg=pipeline.PipelineConfig()):
-        return real(df, cfg).withColumn("main_text", count_rows("main_text"))
+    def counted(df):
+        return real(df).withColumn("main_text", count_rows("main_text"))
 
     # a frame cached by another module must not mask a leak from run()
     spark.catalog.clearCache()
@@ -317,7 +317,7 @@ def outputs(name):
 
 clean = outputs("clean")
 extract, pack = pipeline.extract_turns, corpusprep.with_packing
-pipeline.extract_turns = lambda df, cfg: extract(df, cfg).withColumn(
+pipeline.extract_turns = lambda df: extract(df).withColumn(
     "main_text", fail_once("kernel")("main_text"))
 corpusprep.with_packing = lambda *a, **kw: pack(*a, **kw).withColumn(
     "text", fail_once("result")("text"))

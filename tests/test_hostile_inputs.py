@@ -7,6 +7,7 @@ loaded machine slows a case down without failing it.
 """
 
 import time
+import tracemalloc
 import zlib
 
 from html_parser_spark.kernel import MAX_DOC_BYTES, pdftext
@@ -48,6 +49,23 @@ def test_pdf_layout_of_one_huge_stream_is_linear():
     r = pdftext.extract_pdf_text(_pdf([stream]))
     assert time.process_time() - t0 < 15.0
     assert r.lines == [" ".join(["a"] * r.n_runs)]
+
+
+def test_pdf_shows_at_one_position_hold_one_run():
+    """A 2 MiB stream of one-letter shows at one position: one run
+    object per show peaks at ~34 bytes per inflated byte (~600 MiB for
+    a document at the 16 MiB inflate budget); merged into one run, the
+    peak stays under 4, most of it the inflate itself."""
+    body = b"BT\n" + b"(a) Tj\n" * (2 * 1024 * 1024 // 7) + b"ET"
+    doc = _pdf([zlib.compress(body, 9)])
+    tracemalloc.start()
+    try:
+        r = pdftext.extract_pdf_text(doc)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 * len(body)
+    assert r.n_runs == len(body) // 7 and r.lines == [" ".join(["a"] * r.n_runs)]
 
 
 def test_pdf_inflates_at_most_max_doc_bytes_per_document(monkeypatch):

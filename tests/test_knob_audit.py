@@ -51,7 +51,6 @@ KEPT = {
     ("operators/textstats.py", "normalize_text"): {"lowercase"},
     ("operators/textstats.py", "subword_estimate"): {"chars_per_token"},
     ("sources/catalog.py", "read_transcripts"): {"fmt"},
-    ("sources/transcripts.py", "transcripts_from_documents"): {"skew_factor", "skew_pct"},
     ("streaming/stream.py", "dedup_events_stream"): {"keys", "watermark"},
 }
 

@@ -56,6 +56,17 @@ class TestBm25:
         assert "TakeOrderedAndProject" in p
         assert "SortMergeJoin" not in p
 
+    def test_plan_build_round_trips(self, spark, sf_dir):
+        """The scoring formula, aggregates and joins reach the JVM as SQL
+        text: building the gated top-k plan takes ~140 py4j commands
+        (~620 when idf and the weight were Column arithmetic)."""
+        from support import jvm_round_trips
+
+        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        with jvm_round_trips() as n:
+            bm25_topk(d, ["hash", "merge", "customer"], k=20)
+        assert 0 < n[0] <= 250
+
 
 @pytest.mark.parametrize("ansi", ["false", "true"])
 def test_null_text_counts_no_tokens(spark, ansi):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.plans.pipeline import (
-    PipelineConfig, assert_turn_ordering, completed_buckets, run_extraction,
+    assert_turn_ordering, completed_buckets, extract_turns, run_extraction,
     with_bucket,
 )
 from html_parser_spark.sources.transcripts import transcripts_from_documents
@@ -25,11 +25,8 @@ def transcripts(spark, sf_dir):
 def test_per_turn_text_equality(spark, transcripts):
     """The north-rule invariant: extracted main_text equals the known
     main content for EVERY turn, joined on (conv_id, turn_idx)."""
-    from html_parser_spark.plans.pipeline import extract_turns
-
     expected = transcripts.select("conv_id", "turn_idx", "expected_main_text")
-    out = extract_turns(transcripts.drop("expected_main_text", "doc_id"),
-                        PipelineConfig(n_buckets=8))
+    out = extract_turns(transcripts.drop("expected_main_text", "doc_id"))
     joined = out.join(expected, ["conv_id", "turn_idx"])
     total = joined.count()
     mismatches = joined.where(F.col("main_text") != F.col("expected_main_text")).count()
@@ -53,17 +50,16 @@ def test_ordering_assertion_passes_and_detects_violations(spark, transcripts):
 def test_run_and_resume(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out")
     ctl_dir = str(tmp_path / "control")
-    cfg = PipelineConfig(n_buckets=4)
 
     m1 = run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
-                        out_dir, ctl_dir, run_id="r1", cfg=cfg)
+                        out_dir, ctl_dir, run_id="r1", n_buckets=4)
     assert m1["rows_total"] == transcripts.count()
     assert m1["buckets_skipped"] == 0
     assert completed_buckets(spark, ctl_dir, "r1") == {0, 1, 2, 3}
 
     # resume same run: everything skipped, output unchanged, control grows idempotently
     m2 = run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
-                        out_dir, ctl_dir, run_id="r1", cfg=cfg)
+                        out_dir, ctl_dir, run_id="r1", n_buckets=4)
     assert m2["buckets_skipped"] == 4
     assert m2["rows_total"] == m1["rows_total"]
 
@@ -83,23 +79,22 @@ def test_run_extraction_leaves_session_conf_unchanged(spark, transcripts, tmp_pa
     before = spark.conf.get(key)
     run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
                    str(tmp_path / "out"), str(tmp_path / "control"), run_id="conf",
-                   cfg=PipelineConfig(n_buckets=2), check_ordering=False)
+                   n_buckets=2, check_ordering=False)
     assert spark.conf.get(key) == before
 
 
 def test_partial_resume_processes_only_missing_buckets(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out2")
     ctl_dir = str(tmp_path / "control2")
-    cfg = PipelineConfig(n_buckets=4)
     src = transcripts.drop("doc_id", "expected_main_text")
 
     # Simulate a crashed run: process buckets {0,1} only, with control rows.
     part = with_bucket(src, 4).where(F.col("bucket") < 2)
-    run_extraction(spark, part.drop("bucket"), out_dir, ctl_dir, run_id="r2", cfg=cfg)
+    run_extraction(spark, part.drop("bucket"), out_dir, ctl_dir, run_id="r2", n_buckets=4)
     pre = completed_buckets(spark, ctl_dir, "r2")
     assert pre == {0, 1}
 
-    m = run_extraction(spark, src, out_dir, ctl_dir, run_id="r2", cfg=cfg)
+    m = run_extraction(spark, src, out_dir, ctl_dir, run_id="r2", n_buckets=4)
     assert m["buckets_skipped"] == 2
     assert completed_buckets(spark, ctl_dir, "r2") == {0, 1, 2, 3}
     assert spark.read.parquet(out_dir).count() == src.count()
@@ -110,12 +105,11 @@ def test_control_rows_name_only_the_buckets_a_run_wrote(spark, transcripts, tmp_
     second run's control rows name only its own buckets, and its
     rows_total counts only its own rows."""
     out_dir, ctl_dir = str(tmp_path / "out"), str(tmp_path / "ctl")
-    cfg = PipelineConfig(n_buckets=4)
     src = with_bucket(transcripts.drop("doc_id", "expected_main_text"), 4)
     first = src.where(F.col("bucket") < 2).drop("bucket")
     second = src.where(F.col("bucket") >= 2).drop("bucket")
-    run_extraction(spark, first, out_dir, ctl_dir, run_id="a", cfg=cfg)
-    m = run_extraction(spark, second, out_dir, ctl_dir, run_id="b", cfg=cfg)
+    run_extraction(spark, first, out_dir, ctl_dir, run_id="a", n_buckets=4)
+    m = run_extraction(spark, second, out_dir, ctl_dir, run_id="b", n_buckets=4)
     assert completed_buckets(spark, ctl_dir, "b") == {2, 3}
     assert m["rows_total"] == second.count()
 
@@ -127,28 +121,26 @@ def test_mid_bucket_crash_overwrites_partial_output(spark, transcripts, tmp_path
     bucket is not in completed_buckets, so it re-extracts, and dynamic
     partition overwrite must REPLACE the partial partition, not append
     beside it — otherwise every mid-write crash duplicates rows."""
-    from html_parser_spark.plans.pipeline import extract_turns
     from html_parser_spark.sources.catalog import write_table
 
     out_dir, ctl_dir = str(tmp_path / "out3"), str(tmp_path / "ctl3")
-    cfg = PipelineConfig(n_buckets=4)
     src = transcripts.drop("doc_id", "expected_main_text")
 
     # bucket 0 committed cleanly (data + control row)
     b0 = with_bucket(src, 4).where(F.col("bucket") == 0)
-    run_extraction(spark, b0.drop("bucket"), out_dir, ctl_dir, run_id="r3", cfg=cfg)
+    run_extraction(spark, b0.drop("bucket"), out_dir, ctl_dir, run_id="r3", n_buckets=4)
     assert completed_buckets(spark, ctl_dir, "r3") == {0}
 
     # crash mid-bucket-1: half its extracted rows reach the output
     # partition through the same writer, control row never appended
     b1 = with_bucket(src, 4).where(F.col("bucket") == 1)
-    partial = extract_turns(b1, cfg).where(F.col("turn_idx") % 2 == 0)
+    partial = extract_turns(b1).where(F.col("turn_idx") % 2 == 0)
     n_partial = partial.count()
     assert 0 < n_partial < b1.count()
     write_table(partial.repartition(1, F.col("bucket")), out_dir)
     assert completed_buckets(spark, ctl_dir, "r3") == {0}  # still uncommitted
 
-    m = run_extraction(spark, src, out_dir, ctl_dir, run_id="r3", cfg=cfg)
+    m = run_extraction(spark, src, out_dir, ctl_dir, run_id="r3", n_buckets=4)
     assert m["buckets_skipped"] == 1  # only the committed bucket 0
     out = spark.read.parquet(out_dir)
     assert out.count() == src.count()  # partial partition replaced, not appended
@@ -156,50 +148,10 @@ def test_mid_bucket_crash_overwrites_partial_output(spark, transcripts, tmp_path
     assert completed_buckets(spark, ctl_dir, "r3") == {0, 1, 2, 3}
 
 
-def test_skewed_conversations_are_salted(spark, sf_dir):
-    t = transcripts_from_documents(spark, sf_dir, n_convs=50, skew_pct=2, skew_factor=20)
-    counts = t.groupBy("conv_id").count()
-    mx = counts.agg(F.max("count")).collect()[0][0]
-    med = counts.approxQuantile("count", [0.5], 0.01)[0]
-    assert mx >= 5 * med  # the generator really makes skew
-    from html_parser_spark.plans.pipeline import extract_turns, with_bucket
-
-    out = extract_turns(t.drop("doc_id", "expected_main_text"),
-                        PipelineConfig(n_buckets=4))
-    assert out.count() == t.count()
-
-    # The salted shuffle really spreads a monster conversation over
-    # multiple tasks: its rows land in >1 physical partition, while the
-    # unsalted repartition(bucket) would pin each conv to exactly one.
-    # Explicit partition count: plain repartition(cols) lets AQE
-    # coalesce this tiny shuffle into ONE partition, which is correct
-    # behavior at test scale but would hide what salting does at real
-    # scale (where partitions are ~64 MB and never collapse).
-    monster = counts.orderBy(F.col("count").desc()).first()["conv_id"]
-    salted = with_bucket(t, 4).repartition(
-        8,
-        F.col("bucket"),
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4)).cast("int"),
-    ).withColumn("pid", F.spark_partition_id())
-    n_parts = (salted.where(F.col("conv_id") == monster)
-               .select("pid").distinct().count())
-    assert n_parts > 1
-
-    # And the salted path produces byte-identical extraction output.
-    out_salted = extract_turns(
-        t.drop("doc_id", "expected_main_text"),
-        PipelineConfig(n_buckets=4, n_salts=4))
-    a = out.select("conv_id", "turn_idx", "main_text")
-    b = out_salted.select("conv_id", "turn_idx", "main_text")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_null_text_rows_survive_extraction(spark):
     """Rows with null text keep their place in the output with null
-    extraction columns, on the map-only and the salted plan alike."""
+    extraction columns."""
     import datetime
-
-    from html_parser_spark.plans.pipeline import extract_turns
 
     ts = datetime.datetime(2026, 1, 1)
     rows = [
@@ -209,20 +161,45 @@ def test_null_text_rows_survive_extraction(spark):
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, "
                                      "text string, tool string, ts timestamp")
-    for cfg in (PipelineConfig(n_buckets=2), PipelineConfig(n_buckets=2, n_salts=2)):
-        got = {(r["conv_id"], r["turn_idx"]): r for r in extract_turns(df, cfg).collect()}
-        assert len(got) == 3, cfg
-        null_row = got[("c1", 1)]
-        assert null_row["main_text"] is None and null_row["n_nodes"] is None, cfg
-        assert got[("c1", 0)]["main_text"] == "hello" and got[("c2", 0)]["main_text"] == "hello"
+    got = {(r["conv_id"], r["turn_idx"]): r for r in extract_turns(df).collect()}
+    assert len(got) == 3
+    null_row = got[("c1", 1)]
+    assert null_row["main_text"] is None and null_row["n_nodes"] is None
+    assert got[("c1", 0)]["main_text"] == "hello" and got[("c2", 0)]["main_text"] == "hello"
 
 
-def test_pipeline_config_rejects_bad_values():
-    assert PipelineConfig() == PipelineConfig(n_buckets=32, n_salts=0)
-    PipelineConfig(n_buckets=1, n_salts=3)
-    for bad in ({"n_buckets": 0}, {"n_buckets": -4}, {"n_salts": -1}):
-        with pytest.raises(ValueError):
-            PipelineConfig(**bad)
+def test_extract_turns_passes_columns_through_and_adds_no_bucket(spark):
+    """The kernel stage replaces ``text`` with the four extraction
+    columns and keeps every other column; the bucket is
+    run_extraction's, not the kernel stage's."""
+    df = spark.createDataFrame([("c1", 0, "<p>hi</p>", 7)],
+                               "conv_id string, turn_idx int, text string, extra int")
+    out = extract_turns(df)
+    assert out.columns == ["conv_id", "turn_idx", "extra",
+                           "main_text", "spans", "n_nodes", "n_removed"]
+    assert out.first()["extra"] == 7
+
+
+def test_run_extraction_rejects_bad_bucket_counts(spark, tmp_path):
+    """A bucket count below one fails before run_extraction reads,
+    extracts or writes anything, from the API and from the job's
+    ``--buckets``."""
+    import datetime
+
+    from jobs.extract_job import main
+
+    df = spark.createDataFrame(
+        [("c1", 0, "user", "<p>hi</p>", "", datetime.datetime(2026, 1, 1))],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
+    for bad in (0, -4):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_extraction(spark, df, str(tmp_path / "o"), str(tmp_path / "c"),
+                           run_id="r", n_buckets=bad)
+    df.write.parquet(str(tmp_path / "in"))
+    with pytest.raises(ValueError, match="n_buckets"):
+        main(["--input", str(tmp_path / "in"), "--output", str(tmp_path / "o"),
+              "--control", str(tmp_path / "c"), "--run-id", "r", "--buckets", "0"])
+    assert not (tmp_path / "o").exists() and not (tmp_path / "c").exists()
 
 
 def test_resume_raises_on_corrupt_control_table(spark, transcripts, tmp_path):
@@ -239,5 +216,5 @@ def test_resume_raises_on_corrupt_control_table(spark, transcripts, tmp_path):
     with pytest.raises(Exception):
         run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
                        str(tmp_path / "out_corrupt"), str(ctl_dir), run_id="r",
-                       cfg=PipelineConfig(n_buckets=4), resume=True)
+                       n_buckets=4, resume=True)
     assert not (tmp_path / "out_corrupt").exists()

@@ -22,8 +22,8 @@ from html_parser_spark.operators.corpusprep import (
 )
 from html_parser_spark.operators.curate import curate_corpus
 from html_parser_spark.operators.dedup import (
-    embedding_lsh_signatures, embedding_near_dups, exact_dedup, incremental_new_docs, simhash64,
-    word_shingles,
+    _banded_candidate_pairs, embedding_lsh_signatures, embedding_near_dups, exact_dedup,
+    incremental_new_docs, simhash64, word_shingles,
 )
 from html_parser_spark.operators.lexical import bm25_scores
 from html_parser_spark.operators.pii import pii_counts, redact_pii
@@ -34,7 +34,7 @@ from html_parser_spark.operators.textstats import (
 )
 from html_parser_spark.sql import ident
 from support import (
-    ref_bigram_counts, ref_bm25_scores, ref_chunk_documents, ref_curate_corpus,
+    ref_banded_candidate_pairs, ref_bigram_counts, ref_bm25_scores, ref_chunk_documents, ref_curate_corpus,
     ref_doc_bigram_nll, ref_doc_neg_logprob, ref_embedding_lsh_signatures,
     ref_embedding_near_dups, ref_exact_dedup, ref_fingerprint, ref_hash_bucket,
     ref_incremental_new_docs, ref_ivf_topk_batch, ref_lang_id, ref_normalize_text,
@@ -163,6 +163,11 @@ def _pairs(df, vec):
         yield (f"embedding_near_dups/{bands}x{bits}",
                ref_embedding_near_dups(vec, 8, 0.3, bands, bits),
                embedding_near_dups(vec, threshold=0.3, bands=bands, band_bits=bits, dim=8))
+    sigs = embedding_lsh_signatures(vec, bands=2, band_bits=3, dim=8)
+    for cap in (None, 3):
+        yield (f"banded_candidate_pairs/{cap}",
+               ref_banded_candidate_pairs(sigs, carry=("key",), max_bucket_size=cap),
+               _banded_candidate_pairs(sigs, carry=("key",), max_bucket_size=cap))
     whole = vec.where("size(embedding) = 8 AND NOT exists(embedding, x -> x IS NULL)")
     indexed, cents = build_ivf_index(whole, 3)
     queries = whole.where("vec_id < 30").selectExpr("vec_id AS query_id", "embedding AS query_vec")

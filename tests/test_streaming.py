@@ -4,7 +4,7 @@ watermarked windowed metrics equal the batch equivalents."""
 import pytest
 from pyspark.sql import functions as F
 
-from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+from html_parser_spark.plans.pipeline import extract_turns
 from html_parser_spark.sources.catalog import read_transcripts
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 from html_parser_spark.streaming.stream import (
@@ -23,24 +23,21 @@ def stream_src(spark, sf_dir, tmp_path_factory):
 
 
 def test_stream_extraction_equals_batch(spark, stream_src, tmp_path):
-    """The batch extraction plan runs unchanged on a stream, map-only
-    and with the salted shuffle before the kernel."""
+    """The batch extraction plan runs unchanged on a stream."""
     src_dir, batch_df = stream_src
     # one transcript schema for the batch and the streaming readers
     assert (read_transcript_stream(spark, src_dir).schema
             == read_transcripts(spark, src_dir).schema)
     batch = extract_turns(batch_df).select("conv_id", "turn_idx", "main_text")
-    for n_salts in (0, 2):
-        stream = read_transcript_stream(spark, src_dir, max_files_per_trigger=2)
-        out = extract_turns(stream, PipelineConfig(n_salts=n_salts))
-        run_available_now(out, f"ex_stream_{n_salts}", str(tmp_path / f"ck1_{n_salts}"))
-        got = spark.sql(f"select * from ex_stream_{n_salts}")
-        assert got.count() == batch_df.count()
-        # per-turn equality vs batch kernel output
-        j = got.select("conv_id", "turn_idx", F.col("main_text").alias("s_text")).join(
-            batch, ["conv_id", "turn_idx"])
-        assert j.count() == batch_df.count()
-        assert j.where(~F.col("s_text").eqNullSafe(F.col("main_text"))).count() == 0
+    stream = read_transcript_stream(spark, src_dir, max_files_per_trigger=2)
+    run_available_now(extract_turns(stream), "ex_stream", str(tmp_path / "ck1"))
+    got = spark.sql("select * from ex_stream")
+    assert got.count() == batch_df.count()
+    # per-turn equality vs batch kernel output
+    j = got.select("conv_id", "turn_idx", F.col("main_text").alias("s_text")).join(
+        batch, ["conv_id", "turn_idx"])
+    assert j.count() == batch_df.count()
+    assert j.where(~F.col("s_text").eqNullSafe(F.col("main_text"))).count() == 0
 
 
 def test_windowed_metrics_with_watermark(spark, stream_src, tmp_path):

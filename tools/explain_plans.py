@@ -11,7 +11,8 @@ Checks per query (recorded in PLANS.md):
 * **whole-stage codegen** — JVM-side expressions run inside
   WholeStageCodegen spans;
 * **no input shuffle for extraction** — the extraction job has no
-  Exchange before ArrowEvalPython.
+  Exchange before ArrowEvalPython, and computes no bucket
+  (``run_extraction`` adds it, once).
 
 Usage::
 
@@ -44,12 +45,11 @@ def plan_frame(spark, name: str, sf_dir: str):
     that name, or for ``extract_pipeline`` the extraction plan over
     transcripts built from the documents table."""
     if name == "extract_pipeline":
-        from html_parser_spark.plans.pipeline import PipelineConfig, extract_turns
+        from html_parser_spark.plans.pipeline import extract_turns
         from html_parser_spark.sources.transcripts import transcripts_from_documents
 
         t = transcripts_from_documents(spark, sf_dir, n_convs=50)
-        return extract_turns(t.drop("doc_id", "expected_main_text"),
-                             PipelineConfig())
+        return extract_turns(t.drop("doc_id", "expected_main_text"))
     import __spark_entry__ as m
 
     return m.queries()[name](spark, sf_dir)
@@ -91,6 +91,8 @@ CHECKS = {
         # a filter on the kernel output inside extract_turns would be
         # pushed under the projection and evaluate the kernel twice
         "single_arrow_pass": lambda p: _single_arrow_pass(p),
+        # the output bucket is run_extraction's, computed once there
+        "no_bucket": lambda p: "xxhash64" not in p,
     },
     "ann_cosine_topk": {
         "takeordered": lambda p: "TakeOrderedAndProject" in p,
