@@ -31,6 +31,7 @@ external PDF dependency.
 
 from __future__ import annotations
 
+import io
 import re
 import zlib
 from bisect import bisect_right
@@ -194,12 +195,12 @@ def _runs_of_stream(data: bytes, encoding: str = "auto") -> Tuple[List[PdfRun], 
     advance within a line is not modeled (run x = line-start x, which
     is enough for line assembly + left-to-right ordering of distinct
     columns).  A show at the previous show's exact (y, x) joins that
-    run, its non-empty pieces joined with a space as the layout would
-    join them, so a stream of shows at one position holds one run, not
-    one object per show."""
+    run, its non-empty text appended after a space as the layout would
+    join them, so a stream of shows at one position holds one run and
+    one text buffer, not one object per show."""
     runs: List[PdfRun] = []
-    pieces: List[str] = []  # non-empty texts of the open run at `at`
     at = None
+    run_text = io.StringIO()  # the open run's non-empty texts, space-joined
     n_shows = 0
     in_text = False
     x = y = 0.0
@@ -239,10 +240,12 @@ def _runs_of_stream(data: bytes, encoding: str = "auto") -> Tuple[List[PdfRun], 
             # lines survive (dropping them breaks line counting)
             if at != (y, x):
                 if at is not None:
-                    runs.append(PdfRun(*at, " ".join(pieces)))
-                at, pieces = (y, x), []
+                    runs.append(PdfRun(*at, run_text.getvalue()))
+                at, run_text = (y, x), io.StringIO()
             if text:
-                pieces.append(text)
+                if run_text.tell():
+                    run_text.write(" ")
+                run_text.write(text)
             pending = []
             stack_nums.clear()
             continue
@@ -278,7 +281,7 @@ def _runs_of_stream(data: bytes, encoding: str = "auto") -> Tuple[List[PdfRun], 
             except ValueError:
                 pass
     if at is not None:
-        runs.append(PdfRun(*at, " ".join(pieces)))
+        runs.append(PdfRun(*at, run_text.getvalue()))
     return runs, n_shows
 
 

@@ -8,8 +8,8 @@ Design for the 10^12-turn target (north_rule):
   across runs and cluster sizes, unlike ``spark_partition_id()``.
   Output is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-processing a bucket is idempotent (task retries and
-  resumed runs overwrite, never duplicate).  ``run_extraction`` is the
-  one place the bucket is computed.
+  resumed runs overwrite, never duplicate).  ``run_extraction``
+  computes it once, on its input.
 * **Shuffle AFTER the kernel, not before.**  Extraction is row-parallel
   (map-only), so the kernel runs directly on the scan partitions with
   ZERO data movement; the only shuffle is the repartition of the
@@ -44,6 +44,9 @@ from ..operators.html_ops import EXTRACT_SCHEMA, extract_struct_udf
 from ..sql import ident
 
 
+N_BUCKETS = 32
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.expr(f"CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)"))
 
@@ -53,10 +56,13 @@ def extract_turns(df: DataFrame) -> DataFrame:
 
     Row-parallel and map-only: the kernel runs on the scan partitions.
     Every other input column passes through, and the four extraction
-    columns follow them in place of ``text``.  Works on batch and
-    streaming frames alike; a null ``text`` gives null extraction
-    columns.
+    columns follow them in place of ``text``.  An input without a
+    ``bucket`` column gets ``with_bucket(df, N_BUCKETS)``, the stable
+    bucket its output is partitioned by.  Works on batch and streaming
+    frames alike; a null ``text`` gives null extraction columns.
     """
+    if "bucket" not in df.columns:
+        df = with_bucket(df, N_BUCKETS)
     keep = [ident(c) for c in df.columns if c != "text"]
     return df.withColumn("_ex", extract_struct_udf()("text")).selectExpr(
         *keep, *[f"_ex.{c} AS {c}" for c in EXTRACT_SCHEMA.names])
@@ -115,7 +121,7 @@ def run_extraction(
     out_dir: str,
     control_dir: str,
     run_id: str,
-    n_buckets: int = 32,
+    n_buckets: int = N_BUCKETS,
     resume: bool = True,
     check_ordering: bool = True,
 ) -> dict:
@@ -147,7 +153,7 @@ def run_extraction(
 
     from ..sources.catalog import read_table, write_table
 
-    extracted = extract_turns(df)
+    extracted = extract_turns(df)  # passes df's bucket through
     # One shuffle, of the (much smaller) extracted columns only: groups
     # each bucket into one task's output files instead of every task
     # writing a sliver of every bucket partition (small-files blowup).

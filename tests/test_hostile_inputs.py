@@ -41,31 +41,39 @@ def test_unmatched_close_tags_parse_in_linear_time():
 
 
 def test_pdf_layout_of_one_huge_stream_is_linear():
-    """One 12 KB stream inflating to 8 MiB of one-letter shows on one
-    baseline: joining a line's runs by repeated concatenation is
-    quadratic (~150 s)."""
-    stream = zlib.compress(b"BT\n" + b"(a) Tj\n" * (8 * 1024 * 1024 // 7) + b"ET", 9)
+    """One stream inflating to 8 MiB of one-letter shows on one
+    baseline, each a step to the right of the last, so each is its own
+    run: joining a line's ~600k runs by repeated concatenation is
+    quadratic."""
+    show = b"(a) Tj 1 0 Td\n"
+    stream = zlib.compress(b"BT\n" + show * (8 * 1024 * 1024 // len(show)) + b"ET", 9)
     t0 = time.process_time()
     r = pdftext.extract_pdf_text(_pdf([stream]))
     assert time.process_time() - t0 < 15.0
+    assert r.n_runs == 8 * 1024 * 1024 // len(show)
     assert r.lines == [" ".join(["a"] * r.n_runs)]
 
 
 def test_pdf_shows_at_one_position_hold_one_run():
-    """A 2 MiB stream of one-letter shows at one position: one run
-    object per show peaks at ~34 bytes per inflated byte (~600 MiB for
-    a document at the 16 MiB inflate budget); merged into one run, the
-    peak stays under 4, most of it the inflate itself."""
-    body = b"BT\n" + b"(a) Tj\n" * (2 * 1024 * 1024 // 7) + b"ET"
-    doc = _pdf([zlib.compress(body, 9)])
-    tracemalloc.start()
-    try:
-        r = pdftext.extract_pdf_text(doc)
-        peak = tracemalloc.get_traced_memory()[1]
-    finally:
-        tracemalloc.stop()
-    assert peak < 4 * len(body)
-    assert r.n_runs == len(body) // 7 and r.lines == [" ".join(["a"] * r.n_runs)]
+    """2 MiB content streams of shows at one position, one-letter,
+    multi-letter and kerned.  One run object per show peaks at 7 to 12
+    bytes per stream byte in the walk (~34 for the whole document with
+    its layout: ~600 MiB at the 16 MiB inflate budget); a str per show
+    kept in one run peaks at up to 5.3.  One run with one text buffer
+    peaks at 0.7 to 2.4.  The inflate's own buffers are zlib's and are
+    not measured here."""
+    for show, text in ((b"(a) Tj\n", "a"), (b"(abcdefgh) Tj\n", "abcdefgh"),
+                       (b"[(ab) -20 (cd)] TJ\n", "abcd")):
+        n = 2 * 1024 * 1024 // len(show)
+        body = b"BT\n" + show * n + b"ET"
+        tracemalloc.start()
+        try:
+            runs, n_shows = pdftext._runs_of_stream(body)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 4 * len(body), (show, peak / len(body))
+        assert n_shows == n and runs == [(0.0, 0.0, " ".join([text] * n))]
 
 
 def test_pdf_inflates_at_most_max_doc_bytes_per_document(monkeypatch):

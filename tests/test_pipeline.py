@@ -7,8 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.plans.pipeline import (
-    assert_turn_ordering, completed_buckets, extract_turns, run_extraction,
-    with_bucket,
+    N_BUCKETS, assert_turn_ordering, completed_buckets, extract_turns,
+    run_extraction, with_bucket,
 )
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 
@@ -168,16 +168,21 @@ def test_null_text_rows_survive_extraction(spark):
     assert got[("c1", 0)]["main_text"] == "hello" and got[("c2", 0)]["main_text"] == "hello"
 
 
-def test_extract_turns_passes_columns_through_and_adds_no_bucket(spark):
+def test_extract_turns_passes_columns_through(spark):
     """The kernel stage replaces ``text`` with the four extraction
-    columns and keeps every other column; the bucket is
-    run_extraction's, not the kernel stage's."""
+    columns and keeps every other column.  An input bucket passes
+    through, as run_extraction's does; an input without one gets the
+    stable default bucket."""
     df = spark.createDataFrame([("c1", 0, "<p>hi</p>", 7)],
                                "conv_id string, turn_idx int, text string, extra int")
     out = extract_turns(df)
-    assert out.columns == ["conv_id", "turn_idx", "extra",
+    assert out.columns == ["conv_id", "turn_idx", "extra", "bucket",
                            "main_text", "spans", "n_nodes", "n_removed"]
-    assert out.first()["extra"] == 7
+    row = out.first()
+    assert row["extra"] == 7 and row["main_text"] == "hi"
+    assert row["bucket"] == with_bucket(df, N_BUCKETS).first()["bucket"]
+    kept = extract_turns(df.withColumn("bucket", F.lit(3)))
+    assert kept.columns == out.columns and kept.first()["bucket"] == 3
 
 
 def test_run_extraction_rejects_bad_bucket_counts(spark, tmp_path):

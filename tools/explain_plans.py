@@ -11,8 +11,7 @@ Checks per query (recorded in PLANS.md):
 * **whole-stage codegen** — JVM-side expressions run inside
   WholeStageCodegen spans;
 * **no input shuffle for extraction** — the extraction job has no
-  Exchange before ArrowEvalPython, and computes no bucket
-  (``run_extraction`` adds it, once).
+  Exchange before ArrowEvalPython.
 
 Usage::
 
@@ -91,8 +90,6 @@ CHECKS = {
         # a filter on the kernel output inside extract_turns would be
         # pushed under the projection and evaluate the kernel twice
         "single_arrow_pass": lambda p: _single_arrow_pass(p),
-        # the output bucket is run_extraction's, computed once there
-        "no_bucket": lambda p: "xxhash64" not in p,
     },
     "ann_cosine_topk": {
         "takeordered": lambda p: "TakeOrderedAndProject" in p,
